@@ -61,14 +61,7 @@ def with_row_ids(df: DataFrame, id_col: str, order_by: list[str]) -> DataFrame:
     repartitionings.
     """
     key = F.concat_ws("", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in order_by])
-    import os
-
-    # SPARK_GRAFT_ETL_V=2 (r13 experiment): skip the per-domain input
-    # checkpoint — the typed-layer checkpoint (plans/pipeline._typing_step)
-    # already gives the range sampler a materialized boundary, so only the
-    # broadcast map-joins re-execute for the sample pass.
-    mat = os.environ.get("SPARK_GRAFT_ETL_V", "0") != "2"
     return assign_dense_ids(
         df.withColumn("__nk", key), "__nk", id_col, strategy="partitioned",
-        materialize_input=mat,
+        materialize_input=True,
     ).drop("__nk")

@@ -45,18 +45,6 @@ def exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles as an array<string> (empty if < n tokens)."""
-    toks = tokens(col)
-    k = F.size(toks) - F.lit(n - 1)
-    return F.when(k <= 0, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-    )
-
-
 def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
     """MinHash signature: per permutation i, min over mod-P shingle hashes
     of ``(a_i * s + b_i) mod P`` (universal hashing, hashing.py).

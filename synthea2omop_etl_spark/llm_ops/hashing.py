@@ -67,15 +67,6 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def perm(t: Column, a: int, b: int) -> Column:
-    """One MinHash permutation of an already-mod-P hash (Spark side)."""
-    return (F.lit(a) * t + F.lit(b)) % P
-
-
-def duck_perm(expr: str, a: int, b: int) -> str:
-    return f"(({a} * {expr} + {b}) % {P})"
-
-
 def poly2(x: Column, y: Column) -> Column:
     """Ordered combine of two mod-P values: ``(x*B + y) mod P``."""
     return (x * B + y) % P

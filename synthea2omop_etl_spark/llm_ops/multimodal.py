@@ -71,12 +71,55 @@ RLE_SCHEMA = T.StructType(
 )
 
 
+def _rle_kernels():
+    """The RLE numpy kernels shared by ``rle_encode``, ``rle_decode`` and
+    ``rle_roundtrip``. Built in a factory (numpy imported inside) so
+    cloudpickle ships them BY VALUE inside each mapInPandas closure: a
+    module-level function would be pickled as an import of this module,
+    which Python workers cannot resolve when the driver runs from outside
+    the repo (see sources/readers.py ``_make_repairer``)."""
+    import numpy as np
+
+    def _rle_encode_arr(arr):
+        """uint8 payload → (run_length, value) pair stream, runs longer
+        than 255 split into 255-byte chunks. Run boundaries via
+        flatnonzero/diff, chunk splitting via repeat + cumsum-indexed
+        remainders — no per-byte Python loop."""
+        if arr.size == 0:
+            return np.empty(0, dtype=np.uint8)
+        change = np.flatnonzero(arr[1:] != arr[:-1]) + 1
+        starts = np.concatenate(([0], change))
+        lens = np.diff(np.concatenate((starts, [arr.size])))
+        vals = arr[starts]
+        reps = (lens + 254) // 255
+        out_vals = np.repeat(vals, reps)
+        out_lens = np.full(out_vals.size, 255, dtype=np.int64)
+        # last chunk of each run carries the remainder (1..255)
+        out_lens[np.cumsum(reps) - 1] = lens - (reps - 1) * 255
+        enc = np.empty(out_vals.size * 2, dtype=np.uint8)
+        enc[0::2] = out_lens.astype(np.uint8)  # 255 fits
+        enc[1::2] = out_vals
+        return enc
+
+    def _rle_decode_arr(enc, doc_id):
+        """Pair stream → bytes with one vectorized ``np.repeat``; rejects
+        a corrupt (odd-length) stream instead of guessing."""
+        if enc.size % 2:
+            raise ValueError(
+                f"corrupt RLE stream for doc {doc_id}: odd length"
+            )
+        return np.repeat(enc[1::2], enc[0::2].astype(np.int64))
+
+    return _rle_encode_arr, _rle_decode_arr
+
+
+_rle_encode_arr, _rle_decode_arr = _rle_kernels()
+
+
 def rle_encode(df: DataFrame) -> DataFrame:
     """Byte-level RLE ENCODER over Arrow batches: payload → a stream of
     (run_length, value) byte pairs, runs longer than 255 split into
-    255-byte chunks. Vectorized numpy (run boundaries via
-    flatnonzero/diff, chunk splitting via repeat + cumsum-indexed
-    remainders) — no per-byte Python loop.
+    255-byte chunks (``_rle_encode_arr``).
 
     Input: (doc_id, payload). Output: (doc_id, n_bytes, encoded,
     encoded_n). Partition-local, one output row per input row.
@@ -88,21 +131,7 @@ def rle_encode(df: DataFrame) -> DataFrame:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 arr = np.frombuffer(payload, dtype=np.uint8)
-                if arr.size == 0:
-                    enc = np.empty(0, dtype=np.uint8)
-                else:
-                    change = np.flatnonzero(arr[1:] != arr[:-1]) + 1
-                    starts = np.concatenate(([0], change))
-                    lens = np.diff(np.concatenate((starts, [arr.size])))
-                    vals = arr[starts]
-                    reps = (lens + 254) // 255
-                    out_vals = np.repeat(vals, reps)
-                    out_lens = np.full(out_vals.size, 255, dtype=np.int64)
-                    # last chunk of each run carries the remainder (1..255)
-                    out_lens[np.cumsum(reps) - 1] = lens - (reps - 1) * 255
-                    enc = np.empty(out_vals.size * 2, dtype=np.uint8)
-                    enc[0::2] = out_lens.astype(np.uint8)  # 255 fits
-                    enc[1::2] = out_vals
+                enc = _rle_encode_arr(arr)
                 rows.append(
                     (int(doc_id), int(arr.size), enc.tobytes(), int(enc.size))
                 )
@@ -124,12 +153,14 @@ DECODED_SCHEMA = T.StructType(
     ]
 )
 
+_DECODED_COLS = [f.name for f in DECODED_SCHEMA.fields]
+
 
 def rle_decode(df: DataFrame) -> DataFrame:
     """Byte-level RLE DECODER over Arrow batches — a real decoder, not a
     pass-through: parses the (run_length, value) pair stream and expands
-    it with one vectorized ``np.repeat``. Rejects corrupt streams (odd
-    length) instead of guessing.
+    it (``_rle_decode_arr``). Rejects corrupt streams (odd length)
+    instead of guessing.
 
     Input: ``rle_encode`` output (doc_id, n_bytes, encoded, encoded_n).
     Output adds (decoded, decoded_n, decoded_sum); the graded contract
@@ -146,29 +177,14 @@ def rle_decode(df: DataFrame) -> DataFrame:
                 pdf["doc_id"], pdf["n_bytes"], pdf["encoded"],
                 pdf["encoded_n"],
             ):
-                enc = np.frombuffer(encoded, dtype=np.uint8)
-                if enc.size % 2:
-                    raise ValueError(
-                        f"corrupt RLE stream for doc {doc_id}: odd length"
-                    )
-                out = np.repeat(enc[1::2], enc[0::2].astype(np.int64))
-                rows.append(
-                    (
-                        int(doc_id),
-                        int(n_bytes),
-                        int(encoded_n),
-                        out.tobytes(),
-                        int(out.size),
-                        int(out.sum()),
-                    )
+                out = _rle_decode_arr(
+                    np.frombuffer(encoded, dtype=np.uint8), doc_id
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_bytes", "encoded_n", "decoded",
-                    "decoded_n", "decoded_sum",
-                ],
-            )
+                rows.append(
+                    (int(doc_id), int(n_bytes), int(encoded_n),
+                     out.tobytes(), int(out.size), int(out.sum()))
+                )
+            yield pd.DataFrame(rows, columns=_DECODED_COLS)
 
     return df.select(
         "doc_id", "n_bytes", "encoded", "encoded_n"
@@ -182,13 +198,13 @@ def rle_roundtrip(df: DataFrame) -> DataFrame:
     transposes and the encoded stream crossed the boundary twice. The
     fused kernel runs the SAME two numpy kernels back to back inside one
     crossing — the encoder emits the capped (run, value) pair stream and
-    the decoder re-parses that stream with the same odd-length check and
-    ``np.repeat`` expansion, so neither side becomes a pass-through and
-    the graded contract (sha256 of decoded bytes + independently
-    recomputed encoded_n) still pins both. Output is column-for-column
-    identical to ``rle_decode(rle_encode(df))``; the public encode /
-    decode APIs are unchanged and remain the composition points for
-    callers that need the encoded stream itself.
+    the decoder re-parses that stream with the same odd-length check, so
+    neither side becomes a pass-through and the graded contract (sha256
+    of decoded bytes + independently recomputed encoded_n) still pins
+    both. Output is column-for-column identical to
+    ``rle_decode(rle_encode(df))``; the public encode / decode APIs remain
+    the composition points for callers that need the encoded stream
+    itself.
     """
     import numpy as np
 
@@ -197,44 +213,13 @@ def rle_roundtrip(df: DataFrame) -> DataFrame:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 arr = np.frombuffer(payload, dtype=np.uint8)
-                # --- encode (identical to rle_encode's kernel) ---
-                if arr.size == 0:
-                    enc = np.empty(0, dtype=np.uint8)
-                else:
-                    change = np.flatnonzero(arr[1:] != arr[:-1]) + 1
-                    starts = np.concatenate(([0], change))
-                    lens = np.diff(np.concatenate((starts, [arr.size])))
-                    vals = arr[starts]
-                    reps = (lens + 254) // 255
-                    out_vals = np.repeat(vals, reps)
-                    out_lens = np.full(out_vals.size, 255, dtype=np.int64)
-                    out_lens[np.cumsum(reps) - 1] = lens - (reps - 1) * 255
-                    enc = np.empty(out_vals.size * 2, dtype=np.uint8)
-                    enc[0::2] = out_lens.astype(np.uint8)
-                    enc[1::2] = out_vals
-                # --- decode (identical to rle_decode's kernel) ---
-                if enc.size % 2:
-                    raise ValueError(
-                        f"corrupt RLE stream for doc {doc_id}: odd length"
-                    )
-                out = np.repeat(enc[1::2], enc[0::2].astype(np.int64))
+                enc = _rle_encode_arr(arr)
+                out = _rle_decode_arr(enc, doc_id)
                 rows.append(
-                    (
-                        int(doc_id),
-                        int(arr.size),
-                        int(enc.size),
-                        out.tobytes(),
-                        int(out.size),
-                        int(out.sum()),
-                    )
+                    (int(doc_id), int(arr.size), int(enc.size),
+                     out.tobytes(), int(out.size), int(out.sum()))
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_bytes", "encoded_n", "decoded",
-                    "decoded_n", "decoded_sum",
-                ],
-            )
+            yield pd.DataFrame(rows, columns=_DECODED_COLS)
 
     return df.select("doc_id", "payload").mapInPandas(
         roundtrip, DECODED_SCHEMA

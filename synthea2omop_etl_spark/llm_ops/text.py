@@ -38,24 +38,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """BPE-approximating count: word-pieces + digits + punctuation runs.
-
-    A cheap proxy for tokenizer budgeting: splits on the boundaries a
-    byte-pair tokenizer almost always splits on.
-    """
-    pieces = F.split(
-        F.trim(_c(col)), r"(?=[^\w\s])|(?<=[^\w\s])|\s+|(?<=[a-z])(?=[A-Z])"
-    )
-    return F.size(F.filter(pieces, lambda p: p != ""))
-
-
-def stopword_hits(col: Column | str) -> Column:
-    return F.size(
-        F.filter(tokens(col), lambda t: F.lower(t).isin(*STOPWORDS))
-    )
-
-
 def _bind_once(bound: Column, body) -> Column:
     """Let-binding for expression trees (the llm_ops/dedup.py:93 idiom):
     evaluate ``bound`` ONCE per row, let ``body`` reference it freely.

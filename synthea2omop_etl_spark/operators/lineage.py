@@ -31,7 +31,7 @@ Escape hatch: set ``SPARK_GRAFT_CHECKPOINT_DIR=<fault-tolerant path>``
 and every ``cut_lineage`` call becomes a RELIABLE ``checkpoint()`` into
 that directory — recomputable after executor loss, at the cost of a
 write+read per cut. The knob is read per call, so a long-running
-session can switch modes between queries.
+session can switch modes (or directories) between queries.
 """
 
 from __future__ import annotations
@@ -55,7 +55,24 @@ def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckdir:
         sc = df.sparkSession.sparkContext
-        if not sc.getCheckpointDir():
+        if not _checkpoint_dir_is(sc, ckdir):
             sc.setCheckpointDir(ckdir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def _checkpoint_dir_is(sc, ckdir: str) -> bool:
+    """Whether the context checkpoints into ``ckdir`` already.
+    ``setCheckpointDir(ckdir)`` records a fully qualified random
+    subdirectory of ``ckdir``, so compare that record's parent with the
+    qualified ``ckdir``."""
+    current = sc.getCheckpointDir()
+    if not current:
+        return False
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    want = Path(ckdir)
+    fs = want.getFileSystem(sc._jsc.hadoopConfiguration())
+    return (
+        Path(current).getParent().toString()
+        == fs.makeQualified(want).toString()
+    )

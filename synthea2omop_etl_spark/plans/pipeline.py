@@ -52,14 +52,24 @@ from synthea2omop_etl_spark.schemas import TYPING_SPECS
 
 
 class Checkpoint:
-    """JSON step-completion ledger (etl_setup.py:199-227 equivalent)."""
+    """JSON step-completion ledger (etl_setup.py:199-227 equivalent).
+
+    A missing, torn or corrupt ledger file loads as an empty ledger: every
+    step and write then re-runs, which is safe because layer writes use
+    overwrite mode.
+    """
 
     def __init__(self, path: str | None):
         self.path = path
         self.state: dict[str, dict] = {}
         if path and os.path.exists(path):
-            with open(path) as f:
-                self.state = json.load(f)
+            try:
+                with open(path) as f:
+                    state = json.load(f)
+            except (OSError, ValueError):
+                state = None
+            if isinstance(state, dict):
+                self.state = state
 
     def is_done(self, step: str) -> bool:
         return self.state.get(step, {}).get("completed", False)
@@ -95,15 +105,7 @@ def _typing_step(table: str):
             # CSV (the reference's loader likewise skips absent files).
             return {}
         raw = ctx[f"raw_{table}"]
-        typed = apply_typing(raw, TYPING_SPECS[table])
-        # SPARK_GRAFT_ETL_V in (1, 2) (r13 experiment): materialize the
-        # typed layer once (lazy localCheckpoint) so every consumer —
-        # domain transforms, id maps, cost — reads one typed copy instead
-        # of re-running scan+regex typing per consumer, and the per-domain
-        # planning below happens over a shallow LogicalRDD.
-        if os.environ.get("SPARK_GRAFT_ETL_V", "0") in ("1", "2"):
-            typed = typed.localCheckpoint(eager=False)
-        return {f"typed_{table}": typed}
+        return {f"typed_{table}": apply_typing(raw, TYPING_SPECS[table])}
 
     return run
 
@@ -563,31 +565,11 @@ def run_pipeline(
     # layers it reads (STEP_READS), so e.g. the derived step's cost build
     # starts while care_site/provider/payer/device writes are still
     # running — the step barrier was ~1/4 of wall time at 50k patients.
-    n_workers = int(os.environ.get("SPARK_GRAFT_ETL_POOL", "8"))
-    pool = ThreadPoolExecutor(max_workers=n_workers) if output_dir else None
+    pool = ThreadPoolExecutor(max_workers=8) if output_dir else None
     futures: dict[str, Future] = {}
     bucketed: set[str] = set()
 
-    # optional wall-clock trace (SPARK_GRAFT_ETL_TRACE=1): per-write and
-    # per-step spans relative to run start, for pool/overlap profiling
-    trace_on = os.environ.get("SPARK_GRAFT_ETL_TRACE") == "1"
-    t_run = time.perf_counter()
-
-    def trace(kind: str, name: str, t0: float) -> None:
-        if trace_on:
-            now = time.perf_counter()
-            print(
-                f"[etl-trace] {kind:5} {name:35} "
-                f"start={t0 - t_run:7.2f}s dur={now - t0:6.2f}s",
-                flush=True,
-            )
-
     def write_one(key: str, df: DataFrame) -> None:
-        t0 = time.perf_counter()
-        _write_one_inner(key, df)
-        trace("write", key, t0)
-
-    def _write_one_inner(key: str, df: DataFrame) -> None:
         path = os.path.join(output_dir, key)
         if not ckpt.is_done(f"write_{key}"):
             spec = list(partition_specs.get(key, [])) if partition_specs else []
@@ -658,14 +640,9 @@ def run_pipeline(
         # scan of the same files would lose the bucket spec and
         # reintroduce the shuffle bucketing exists to remove
         def reread(key: str) -> tuple[str, DataFrame]:
-            t0 = time.perf_counter()
-            df = (
-                spark.table(key)
-                if key in bucketed
-                else spark.read.parquet(os.path.join(output_dir, key))
-            )
-            trace("read", key, t0)
-            return key, df
+            if key in bucketed:
+                return key, spark.table(key)
+            return key, spark.read.parquet(os.path.join(output_dir, key))
 
         # the re-reads are DRIVER-side footer/schema resolution (~0.1-0.6s
         # each, no executor job) — run them on a transient thread pool
@@ -694,9 +671,7 @@ def run_pipeline(
                     # step's plan construction and its own writes
                     settle([k for k in STEP_READS.get(step.name, ())
                             if k in futures])
-                    t_step = time.perf_counter()
                     produced = step.run(ctx)
-                    trace("step", step.name, t_step)
                     ctx.update(produced)
                     materialize(list(produced))
                     ckpt.mark_done(step.name)

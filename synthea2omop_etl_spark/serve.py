@@ -174,20 +174,11 @@ def _etl_status(checkpoint_path: str | None) -> dict:
     shape of the reference's /api/etl/status (backend/src/index.js:40-86,
     which returns hard-coded mock data; here the checkpoint ledger IS the
     live state, since run_pipeline rewrites it after every step/write)."""
-    import os
+    from synthea2omop_etl_spark.plans.pipeline import ETL_STEPS, Checkpoint
 
-    from synthea2omop_etl_spark.plans.pipeline import ETL_STEPS
-
-    state: dict[str, dict] = {}
-    if checkpoint_path and os.path.exists(checkpoint_path):
-        try:
-            with open(checkpoint_path) as f:
-                state = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            # mark_done replaces the file atomically, but belt-and-braces:
-            # a torn read degrades to the not-started shape, never a 500
-            # from a monitoring endpoint
-            state = {}
+    # a missing or torn ledger reads as empty: the not-started shape,
+    # never a 500 from a monitoring endpoint
+    state = Checkpoint(checkpoint_path).state
     expected = [s.name for s in ETL_STEPS]
     steps = []
     for name in expected:

@@ -127,13 +127,6 @@ def _make_repairer(header: list[str]):
     return repair
 
 
-def _repair_lines(
-    lines: Iterator[str], header: list[str]
-) -> Iterator[list[str]]:
-    """Unit-test surface for the repairer (see :func:`_make_repairer`)."""
-    return _make_repairer(header)(lines)
-
-
 def read_csv_repaired(spark: SparkSession, path: str) -> DataFrame:
     """CSV reader with malformed-row repair (operator S3).
 
@@ -158,41 +151,6 @@ def read_csv_repaired(spark: SparkSession, path: str) -> DataFrame:
     # createDataFrame run an extra type-inference job over the RDD.
     schema = StructType([StructField(c, StringType()) for c in header])
     return spark.createDataFrame(rdd, schema=schema)
-
-
-def read_with_provenance(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read with ingest provenance columns attached:
-    (..., source_file, source_file_size, source_file_mtime).
-
-    Uses Spark's hidden ``_metadata`` struct — resolved at scan time from
-    the file index, so it costs nothing per row and survives projection
-    and filtering. The provenance surface a 100 TB layer needs for
-    quarantine-and-replay: when a bad upstream shard is found, its rows
-    are identifiable (and deletable / re-loadable) by source_file without
-    any bookkeeping table. Pair with overwrite_partitions or
-    insert_if_absent for the replay itself.
-    """
-    df = spark.read.parquet(path)
-    return df.select(
-        "*",
-        F.col("_metadata.file_name").alias("source_file"),
-        F.col("_metadata.file_size").alias("source_file_size"),
-        F.col("_metadata.file_modification_time").alias("source_file_mtime"),
-    )
-
-
-def read_merged_schema(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read across schema waves (``mergeSchema=true``).
-
-    Long-lived layers accrete columns: wave-1 files lack columns added in
-    wave 2. The merged read unions the schemas (missing columns read as
-    NULL) instead of silently projecting wave-1's schema from whichever
-    footer Spark samples first — the difference between a schema-evolved
-    table and a corrupted one. Cost: one footer read per file at plan
-    time (at 100 TB use a fixed schema from the catalog instead;
-    mergeSchema is the migration-window tool).
-    """
-    return spark.read.option("mergeSchema", "true").parquet(path)
 
 
 INTERCHANGE_FORMATS = ("parquet", "orc", "json", "csv")

@@ -73,8 +73,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in names}
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for the SQL surface."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

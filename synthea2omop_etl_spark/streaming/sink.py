@@ -71,11 +71,6 @@ def _txn_state(V, table_path: str, txn_app_id: str) -> tuple[int | None, dict]:
     return None, {}
 
 
-def _already_committed(V, table_path: str, batch_id: int, txn_app_id: str) -> bool:
-    hwm, _ = _txn_state(V, table_path, txn_app_id)
-    return hwm is not None and batch_id <= hwm
-
-
 def stream_versioned_sink(
     stream: DataFrame,
     table_path: str,

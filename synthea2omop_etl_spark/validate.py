@@ -1,10 +1,9 @@
-"""Post-ETL validation suite — the reference's 5 weighted checks
+"""Post-ETL validation suite — the reference's weighted checks
 (etl_pipeline/etl_validation.py:54-537) as DataFrame assertions.
 
 Checks: (1) record counts non-zero; (2) referential integrity (FK orphans
 via left-join-is-null); (3) date ranges (end ≥ start, no future dates);
-(4) demographics (valid gender concepts, plausible birth years);
-(5) concept-mapping completeness (>20% unmapped ⇒ FAIL).
+(4) demographics (valid gender concepts, plausible birth years).
 
 Each check returns (name, passed, weight, details); ``validate`` aggregates
 a weighted score and a JSON-able report, like the reference's report writer
@@ -83,31 +82,14 @@ def check_demographics(person: DataFrame) -> Check:
     )
 
 
-def check_mapping_completeness(
-    mapped: dict[str, tuple[DataFrame, str]], threshold: float = 0.2
-) -> Check:
-    """mapped: {table: (df, concept_id_col)} — fraction of concept_id==0."""
-    stats = {}
-    for name, (df, col) in mapped.items():
-        agg = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col(col) == 0, 1).otherwise(0)).alias("unmapped"),
-        ).collect()[0]
-        frac = (agg.unmapped or 0) / agg.n if agg.n else 0.0
-        stats[name] = {"rows": agg.n, "unmapped": agg.unmapped, "fraction": round(frac, 4)}
-    ok = all(v["fraction"] <= threshold for v in stats.values())
-    return ("mapping_completeness", ok, 0.15, stats)
-
-
 def dqd_results(checks: list[Check], spark=None) -> DataFrame:
     """Render validation checks in the reference's
     ``dataqualitydashboard_results`` shape (issue_id, issue_description,
     prevalence, record_count, failed — query_achilles_results.sh:236-239),
     so a dashboard built against the reference reads this table unchanged.
 
-    prevalence: the failing fraction where a check reports one (mapping
-    completeness), else 0/1 by pass state; record_count: the failing row
-    count the check counted, where available.
+    prevalence: 0/1 by pass state; record_count: the failing row count the
+    check counted, where available.
     """
     import json as _json
 
@@ -125,12 +107,6 @@ def dqd_results(checks: list[Check], spark=None) -> DataFrame:
             record_count = details.get("invalid_gender", 0) + details.get(
                 "invalid_birth_year", 0
             )
-        elif name == "mapping_completeness":
-            record_count = sum(
-                v.get("unmapped") or 0 for v in details.values()
-            )
-            fracs = [v["fraction"] for v in details.values()]
-            prevalence = round(max(fracs), 4) if fracs else 0.0
         rows.append(
             (
                 issue_id,

@@ -136,7 +136,31 @@ def test_validation_suite(omop):
     assert details["invalid_gender"] == 1
 
 
-def test_pipeline_checkpoint_resume(spark, tmp_path):
+def test_pipeline_checkpoint_resume(spark, tmp_path, monkeypatch):
+    import json
+    import os
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    # every layer write goes through DataFrameWriter.parquet (on the
+    # writer pool's threads): record each written layer, and raise on
+    # the fail_at-th call to inject a write that dies mid-run
+    real_parquet = DataFrameWriter.parquet
+    lock = threading.Lock()
+    written: list[str] = []
+    fail_at = 0
+
+    def parquet(self, path, *args, **kwargs):
+        with lock:
+            written.append(os.path.basename(path))
+            n = len(written)
+        if n == fail_at:
+            raise OSError("injected write failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
     ckpt = str(tmp_path / "ckpt.json")
     out = str(tmp_path / "omop")
     ctx = run_pipeline(
@@ -144,12 +168,53 @@ def test_pipeline_checkpoint_resume(spark, tmp_path):
     )
     n_person = spark.read.parquet(f"{out}/omop_person").count()
     assert n_person == 3
+    layers = sorted(written)
+    assert layers == sorted(k for k in ctx if k.startswith("omop_"))
     # resume: writes skipped (checkpoint marks write_* done), no error
+    written.clear()
     ctx2 = run_pipeline(
         spark, raw_tables(spark), checkpoint_path=ckpt, output_dir=out
     )
     assert spark.read.parquet(f"{out}/omop_person").count() == 3
     assert set(ctx2) == set(ctx)
+    assert written == []
+
+    # a write dies mid-run: the ledger keeps the writes settled before it
+    ckpt2 = str(tmp_path / "ckpt2.json")
+    out2 = str(tmp_path / "omop2")
+    written.clear()
+    fail_at = len(layers) - 1
+    with pytest.raises(OSError, match="injected"):
+        run_pipeline(
+            spark, raw_tables(spark), checkpoint_path=ckpt2, output_dir=out2
+        )
+    with open(ckpt2) as f:
+        done = {k[len("write_"):] for k in json.load(f) if k.startswith("write_")}
+    assert 0 < len(done) < len(layers)
+    # re-run on the same ledger: only the writes not marked done re-run,
+    # and every layer then equals the clean run's
+    written.clear()
+    fail_at = 0
+    run_pipeline(
+        spark, raw_tables(spark), checkpoint_path=ckpt2, output_dir=out2
+    )
+    assert sorted(written) == sorted(set(layers) - done)
+    for key in layers:
+        clean = spark.read.parquet(f"{out}/{key}").collect()
+        resumed = spark.read.parquet(f"{out2}/{key}").collect()
+        assert sorted(resumed, key=repr) == sorted(clean, key=repr), key
+
+    # a torn ledger reads as empty: every write re-runs, then the ledger
+    # is whole again
+    ckpt3 = tmp_path / "ckpt3.json"
+    ckpt3.write_text('{"write_omop_person": {"completed": tr')
+    written.clear()
+    run_pipeline(
+        spark, raw_tables(spark), checkpoint_path=str(ckpt3), output_dir=out
+    )
+    assert sorted(written) == layers
+    state = json.loads(ckpt3.read_text())
+    assert all(state[f"write_{k}"]["completed"] for k in layers)
 
 
 def test_pipeline_minimal_sources(spark):

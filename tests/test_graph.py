@@ -185,31 +185,45 @@ def test_cut_lineage_reliable_checkpoint_knob(spark, tmp_path, monkeypatch):
     """r13 (VERDICT r12 item 10): SPARK_GRAFT_CHECKPOINT_DIR flips every
     cut_lineage call from executor-local localCheckpoint to a RELIABLE
     checkpoint into the given directory — same results, recomputable
-    after executor loss. Default (env unset) stays localCheckpoint."""
+    after executor loss. Default (env unset) stays localCheckpoint.
+    Changing the directory mid-session moves the next cut to the new
+    directory. Whatever checkpoint directory the session had at start is
+    restored, so the test holds in any run order."""
+    import os
+
     from synthea2omop_etl_spark.llm_ops.cluster import connected_components
     from synthea2omop_etl_spark.operators.lineage import cut_lineage
 
+    sc = spark.sparkContext
+    found = sc.getCheckpointDir()
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
     base = sorted(
         tuple(r) for r in connected_components(edges).collect()
     )
-
-    ckdir = str(tmp_path / "reliable_ckpt")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckdir)
-    reliable = sorted(
-        tuple(r) for r in connected_components(edges).collect()
-    )
-    assert reliable == base and base
-    # the knob actually engaged: the checkpoint dir was claimed and the
-    # reliable checkpoint wrote RDD state under it
-    import os
-
-    assert spark.sparkContext.getCheckpointDir().startswith("file:") or \
-        ckdir in spark.sparkContext.getCheckpointDir()
-    assert any(os.scandir(ckdir)), "reliable checkpoint wrote nothing"
-    # direct-call shape: a plain frame survives the cut identically
-    df = spark.range(5)
-    assert sorted(r.id for r in cut_lineage(df, eager=True).collect()) == \
-        list(range(5))
+    try:
+        # the second directory is a change mid-session: the context's
+        # directory is then stale and must be re-set
+        for name in ("reliable_ckpt", "moved_ckpt"):
+            ckdir = str(tmp_path / name)
+            monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckdir)
+            reliable = sorted(
+                tuple(r) for r in connected_components(edges).collect()
+            )
+            assert reliable == base and base
+            # the knob actually engaged: the checkpoint dir was claimed
+            # under ckdir and the reliable checkpoint wrote RDD state there
+            assert os.path.dirname(sc.getCheckpointDir()).endswith(ckdir)
+            assert any(os.scandir(ckdir)), "reliable checkpoint wrote nothing"
+        # direct-call shape: a plain frame survives the cut identically
+        df = spark.range(5)
+        assert sorted(r.id for r in cut_lineage(df, eager=True).collect()) == \
+            list(range(5))
+    finally:
+        # restore the exact directory found (None included);
+        # setCheckpointDir would append a fresh random subdirectory
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(found)
+        )

@@ -294,36 +294,6 @@ def test_srp_never_fabricates(spark):
     assert all(-1.0 <= r.cosine <= 1.0 for r in approx)
 
 
-def test_ml_lsh_variants(spark, docs_with_planted):
-    """MLlib-backed LSH finds the planted near-dups too (ecosystem parity)."""
-    from synthea2omop_etl_spark.llm_ops.ml_lsh import (
-        brp_near_duplicates,
-        minhash_ml_pairs,
-    )
-
-    pairs = minhash_ml_pairs(
-        docs_with_planted, "text", "doc_id", jaccard_threshold=0.5
-    ).collect()
-    found = {(r.id_a, r.id_b) for r in pairs}
-    planted = {(i, i + 100000) for i in range(20)}
-    assert len(planted & found) >= 16
-
-    emb = load_table(spark, SF, "embeddings").limit(300)
-    brp = brp_near_duplicates(
-        emb, "embedding", "vec_id", cosine_threshold=0.35
-    ).collect()
-    # exact blocked variant is ground truth at the same threshold
-    from synthea2omop_etl_spark.llm_ops.dedup import embedding_near_duplicates
-
-    exact = embedding_near_duplicates(
-        emb, "embedding", "vec_id", threshold=0.35, allow_full_pairs=True
-    ).collect()
-    exact_pairs = {(r.id_a, r.id_b) for r in exact}
-    got_pairs = {(r.id_a, r.id_b) for r in brp}
-    # no fabricated pairs beyond rounding; recall is approximate
-    assert got_pairs <= exact_pairs or len(got_pairs - exact_pairs) <= 2
-
-
 def test_all_pairs_footgun_fenced(spark):
     """The unblocked cartesian paths must be explicit opt-ins: a missing
     blocking key is the one mistake that silently kills a 100 TB run."""

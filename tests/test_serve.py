@@ -87,15 +87,19 @@ def test_etl_status(api):
     ]
 
 
-def test_etl_status_no_checkpoint():
-    """No checkpoint file → clean 'not started' status, never an error."""
+def test_etl_status_no_checkpoint(tmp_path):
+    """No checkpoint file, or a torn one → clean 'not started' status,
+    never an error."""
     from synthea2omop_etl_spark.serve import _etl_status
 
-    body = _etl_status(None)
-    assert body["isRunning"] is False
-    assert body["completedSteps"] == 0
-    assert body["overallProgress"] == 0.0
-    assert body["tableProgress"] == []
+    torn = tmp_path / "torn.json"
+    torn.write_text('{"typing_patients": {"completed": tr')
+    for path in (None, str(torn)):
+        body = _etl_status(path)
+        assert body["isRunning"] is False
+        assert body["completedSteps"] == 0
+        assert body["overallProgress"] == 0.0
+        assert body["tableProgress"] == []
 
 
 def test_data_page(api):
