@@ -452,12 +452,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _vnorm(v: Column) -> Column:
-    from synthea2omop_etl_spark.llm_ops.similarity import _norm
-
-    return _norm(v)
-
-
 def embedding_near_duplicates(
     df: DataFrame,
     vec_col: str,
@@ -485,6 +479,8 @@ def embedding_near_duplicates(
             "length band, LSH bucket) or opt in with allow_full_pairs=True "
             "for small corpora, or use similarity.srp_bucketed_topk"
         )
+    from synthea2omop_etl_spark.llm_ops.similarity import _dot, _norm
+
     base = df.select(
         F.col(id_col).alias("doc"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -492,17 +488,13 @@ def embedding_near_duplicates(
     )
     # Norms precomputed per SIDE of the self-join (projections cannot
     # collapse across a Join) — per-pair work is the dot product only.
-    base = base.select("*", _vnorm(F.col("v")).alias("n"))
+    base = base.select("*", _norm(F.col("v")).alias("n"))
     a = base.alias("a")
     b = base.alias("b")
     cond = F.col("a.doc") < F.col("b.doc")
     if blocking_col:
         cond = cond & (F.col("a.blk") == F.col("b.blk"))
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot(F.col("a.v"), F.col("b.v"))
     return (
         a.join(b, cond)
         .select(
@@ -1058,15 +1050,15 @@ def semantic_duplicates(
     all-pairs comparison is fenced to cluster-local by construction
     (there is no unclustered path: n_clusters < 2 is rejected).
 
-    Quantizer: the deterministic "sampled" coarse quantizer shared with
-    similarity.ivf_topk — centroids are the n_clusters lowest-id
-    vectors, assignment by cosine (round-6, ties to the lower cluster
-    id), fully SQL-expressible so the composition hash-grades. A
-    production run swaps in MLlib k-means centroids; the fencing and
-    the intra-cluster verify are identical.
+    Quantizer: the deterministic "sampled" coarse quantizer and the
+    assignment fold of similarity.ivf_topk — centroids are the
+    n_clusters lowest-id vectors, assignment by cosine (round-6, ties to
+    the lower cluster id), fully SQL-expressible so the composition
+    hash-grades.
 
-    Scale: centroids broadcast (model-sized); assignment is a bounded
-    ×n_clusters fan-out; the pair join is an equi-join on cluster id,
+    Scale: centroids broadcast (model-sized); assignment is a per-row
+    fold over them, with no exchange keyed on the corpus id; the pair
+    join is an equi-join on cluster id,
     so pair cost is Σ C(|cluster|,2), never C(n,2) corpus-wide.
     ``n_clusters`` must SCALE WITH THE CORPUS to keep clusters bounded
     (SemDeDup uses k in the tens of thousands at web scale — target a
@@ -1084,64 +1076,36 @@ def semantic_duplicates(
             "exists to avoid; for tiny corpora use "
             "embedding_near_duplicates(allow_full_pairs=True)"
         )
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    from pyspark.sql import Window
-
-    w_id = Window.orderBy("doc")
-    cent = (
-        base.orderBy("doc")
-        .limit(n_clusters)
-        .select(
-            (F.row_number().over(w_id) - 1).alias("cid"),
-            F.col("v").alias("cv"),
-            _vnorm(F.col("v")).alias("cn"),
-        )
+    from synthea2omop_etl_spark.llm_ops.similarity import (
+        _ann_corpus,
+        _assign_lists,
+        _dot,
+        _lowest_id_rows,
     )
 
-    def _dot(x: Column, y: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
-    a_cos = F.round(
-        _dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cn")), 6
-    )
-    w_assign = Window.partitionBy("doc").orderBy(
-        F.col("a_cos").desc(), F.col("cid").asc()
-    )
+    base = _ann_corpus(df, vec_col, id_col)
     assigned = (
-        base.select("*", _vnorm(F.col("v")).alias("vn"))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("a_cos", a_cos)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .where(F.col("rn") == 1)
-        .select("doc", "v", "vn", "cid")
+        _assign_lists(base, _lowest_id_rows(base, n_clusters, "list_id"))
+        .drop("cent")
         # feeds BOTH self-join sides: without truncating lineage, the
-        # centroid crossJoin + row_number assignment re-executes per
-        # side (the phash pair path's idiom)
+        # assignment fold re-executes per side
         .localCheckpoint(eager=False)
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     cos = F.round(
-        _dot(F.col("a.v"), F.col("b.v"))
-        / (F.col("a.vn") * F.col("b.vn")),
+        _dot(F.col("a.cv"), F.col("b.cv")) / (F.col("a.cn") * F.col("b.cn")),
         4,
     )
     return (
         a.join(
             b,
-            (F.col("a.cid") == F.col("b.cid"))
-            & (F.col("a.doc") < F.col("b.doc")),
+            (F.col("a.list_id") == F.col("b.list_id"))
+            & (F.col("a.neighbor_id") < F.col("b.neighbor_id")),
         )
         .select(
-            F.col("a.cid").alias("cluster"),
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
+            F.col("a.list_id").alias("cluster"),
+            F.col("a.neighbor_id").alias("id_a"),
+            F.col("b.neighbor_id").alias("id_b"),
             cos.alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)

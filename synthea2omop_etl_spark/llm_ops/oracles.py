@@ -266,8 +266,7 @@ def ann_srp_oracle(dim: int = 64, bits: int = 4, k: int = 5) -> str:
 
 def ann_ivf_oracle(n_lists: int = 16, n_probe: int = 4, k: int = 5) -> str:
     """IVF with the deterministic 'sampled' coarse quantizer (centroids =
-    the n_lists lowest-id corpus vectors), mirroring ivf_topk(quantizer=
-    'sampled')."""
+    the n_lists lowest-id corpus vectors), mirroring ivf_topk."""
     cent_cos = _COS.format(a="c.v", b="centroid")
     q_cos = _COS.format(a="q.v", b="centroid")
     score_cos = _COS.format(a="qv", b="cv")

@@ -1,5 +1,7 @@
 """Similarity search over embedding columns.
 
+Exact and LSH operators:
+
 - ``brute_force_topk`` — exact cosine top-k: broadcast the (small) query
   set against the candidate corpus; one pass over candidates, then a
   two-stage rank (per-partition window top-k, global rank over the
@@ -9,14 +11,44 @@
   bucket plus 1-bit-flip neighbors). At 100 TB this turns a full scan per
   query into a bucket-join; recall is tunable via bits/probes.
 
+Quantized operators (the FAISS family) are compositions of one set of
+stages, each written once:
+
+- ``_ann_corpus`` / ``_ann_queries`` — the ``(neighbor_id, cv, cn)`` and
+  ``(query_id, qv, qn)`` frames, norms precomputed per side;
+- ``_lowest_id_rows`` — the deterministic "sampled" model: the n lowest-id
+  rows are the IVF centroids and the PQ codebook seeds;
+- ``_assign_lists`` — each corpus row's nearest centroid, a map-side fold
+  over the broadcast 1-row centroid array;
+- ``_probe_lists`` — each query's ``n_probe`` nearest lists;
+- ``_pq_codebook`` / ``_pq_encode`` / ``_pq_tables`` — the per-subspace
+  codebook array, the corpus codes and the per-query ADC lookup tables;
+- ``_adc`` — the asymmetric distance, a fixed-order fold of table lookups;
+- ``_topk`` — the final per-query rank.
+
+``ivf_topk`` is assign + probe + exact cosine; ``pq_topk`` is encode +
+tables + ADC; ``ivfpq_topk`` is assign + residual encode + per-probe
+tables + ADC; ``dedup.semantic_duplicates`` reuses the sampled centroids
+and the assignment. Every stage keeps one determinism contract, so each
+operator hash-grades against a DuckDB oracle: model scores round to 6 dp
+before every argmax/argmin, ties go to the lower list id or code, output
+scores round to 4 dp, and rank ties go to the lower neighbor_id. Only
+model-sized frames (centroids, codebook) and query-sized frames are
+broadcast; the corpus is never shuffled on its own id.
+
 All vector math is double-precision array-lambda expressions (JVM codegen);
 no Python in the scoring loop.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from synthea2omop_etl_spark.llm_ops.dedup import bind_once
+from synthea2omop_etl_spark.operators.skew import spread_if_narrow
 
 
 def _as_double(vec: Column) -> Column:
@@ -33,8 +65,13 @@ def _norm(v: Column) -> Column:
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
 
 
-def _cosine(va: Column, vb: Column) -> Column:
-    return _dot(va, vb) / (_norm(va) * _norm(vb))
+def _sqdist(va: Column, vb: Column) -> Column:
+    """Squared L2 between two double arrays (JVM fold, no Python)."""
+    return F.aggregate(
+        F.zip_with(va, vb, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda a, x: a + x,
+    )
 
 
 def _paired_cosine() -> Column:
@@ -43,8 +80,258 @@ def _paired_cosine() -> Column:
     their own side of the join, and CollapseProject cannot merge
     projections across a Join, so each norm is evaluated once per input
     row instead of once per scored pair (~3× less interpreted-HOF work
-    in the scoring loop). Same FP operations/order as _cosine."""
+    in the scoring loop)."""
     return _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+
+
+def _ann_corpus(corpus: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """``(neighbor_id, cv, cn)``. Every operator's per-row corpus work
+    (scoring, signatures, assignment and encode folds) runs on this
+    frame's task count, and a single-row-group parquet file decodes in
+    ONE task — so a narrow scan is widened first (round-robin; every
+    stage downstream is partitioning-independent, and wide 100 TB
+    sources pass through untouched)."""
+    c = spread_if_narrow(
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            _as_double(F.col(vec_col)).alias("cv"),
+        )
+    )
+    return c.select("neighbor_id", "cv", _norm(F.col("cv")).alias("cn"))
+
+
+def _ann_queries(queries: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """``(query_id, qv, qn)``, the query-side twin of :func:`_ann_corpus`
+    (query sets are small and broadcast, so no spread)."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+    )
+    return q.select("query_id", "qv", _norm(F.col("qv")).alias("qn"))
+
+
+def _lowest_id_rows(frame: DataFrame, n: int, code_col: str) -> DataFrame:
+    """The ``n`` lowest-``neighbor_id`` rows of ``frame`` numbered 0..n-1
+    in ``code_col``, with the frame's other columns: the sampled coarse
+    quantizer (centroids) and PQ codebook seeds. FAISS accepts any fixed
+    quantizer; this one is SQL-expressible, so every operator built on it
+    hash-grades. A frame with fewer than ``n`` rows gives a short model."""
+    code = F.row_number().over(Window.orderBy("neighbor_id")) - 1
+    rest = [c for c in frame.columns if c != "neighbor_id"]
+    return (
+        frame.orderBy("neighbor_id").limit(n).select(code.alias(code_col), *rest)
+    )
+
+
+def _argmax_centroid(cv: Column, cn: Column, cents: Column) -> Column:
+    """struct(cos, list_id, cent): the centroid maximizing the 6-dp-rounded
+    cosine against ``cv`` (norm ``cn``), ties to the lower list_id — the
+    selection of a crossJoin + row_number()==1 window (cosine DESC NULLS
+    LAST, list_id ASC), computed in place instead of shuffling corpus ×
+    n_lists rows through an Exchange + Sort. Iteration is ascending
+    list_id (``cents`` is array_sort'ed), acceptance strict, a non-NULL
+    cosine beats NULL, and the first element seeds."""
+    init = F.struct(
+        F.lit(None).cast("double").alias("cos"),
+        F.lit(-1).alias("list_id"),
+        F.lit(None).cast("array<double>").alias("cent"),
+    )
+
+    def step(acc, e):
+        # the cosine is let-bound: pick references it three times and
+        # interpreted HOF evaluation has no subexpression elimination —
+        # unbound, the 64-dim fold ran 3× per centroid
+        def pick(cos):
+            better = (
+                (acc["list_id"] == -1)
+                | (acc["cos"].isNull() & cos.isNotNull())
+                | (cos > acc["cos"])
+            )
+            return F.when(
+                better,
+                F.struct(
+                    cos.alias("cos"),
+                    e["list_id"].alias("list_id"),
+                    e["cv"].alias("cent"),
+                ),
+            ).otherwise(acc)
+
+        return bind_once(F.round(_dot(cv, e["cv"]) / (cn * e["cn"]), 6), pick)
+
+    return F.aggregate(cents, init, step)
+
+
+def _assign_lists(c: DataFrame, cent: DataFrame) -> DataFrame:
+    """``c``'s rows plus ``(list_id, cent)``: each row's nearest centroid
+    of ``cent`` (``list_id, cv, cn`` rows), folded map-side over the
+    centroid table broadcast as ONE ascending-list_id array value.
+    F.inline evaluates the fold once per row (a generator is a projection
+    boundary CollapseProject cannot re-inline through); list_id and cent
+    then project from its fields."""
+    entries = F.collect_list(F.struct("list_id", "cv", "cn"))
+    cents = cent.agg(F.array_sort(entries).alias("__cents"))
+    fold = _argmax_centroid(F.col("cv"), F.col("cn"), F.col("__cents"))
+    return (
+        c.crossJoin(F.broadcast(cents))
+        .select(*c.columns, F.inline(F.array(fold)))
+        .drop("cos")
+    )
+
+
+def _probe_lists(q: DataFrame, cent: DataFrame, n_probe: int) -> DataFrame:
+    """``(query_id, qv, qn, probe_list, centroid)``: each query's
+    ``n_probe`` nearest lists by 6-dp-rounded cosine, ties to the lower
+    list_id. Queries × n_lists rows, both sides bounded."""
+    scored = q.crossJoin(F.broadcast(cent)).withColumn(
+        "c_cos",
+        F.round(
+            _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
+        ),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("c_cos").desc(), F.col("list_id").asc()
+    )
+    return (
+        scored.withColumn("c_rank", F.row_number().over(w))
+        .where(F.col("c_rank") <= n_probe)
+        .select(
+            "query_id",
+            "qv",
+            "qn",
+            F.col("list_id").alias("probe_list"),
+            F.col("cv").alias("centroid"),
+        )
+    )
+
+
+def _sub_dim(dim: int, m: int) -> int:
+    if dim % m:
+        raise ValueError(f"m={m} must divide dim={dim}")
+    return dim // m
+
+
+def _pq_codebook(seeds: DataFrame, vec_col: str, m: int, sub_d: int) -> DataFrame:
+    """1-row frame whose ``__cb`` is the codebook indexed by subspace:
+    ``__cb[mi]`` holds subspace ``mi``'s ascending-code struct(code,
+    subvec) entries, one per seed row ``(code, vec_col)``. Every block has
+    one entry per seed, so a corpus with fewer than ``ksub`` vectors gives
+    m equally short blocks that stay aligned by construction."""
+    seeds_arr = seeds.agg(
+        F.array_sort(F.collect_list(F.struct("code", vec_col))).alias("__s")
+    )
+    return seeds_arr.select(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            lambda mi: F.transform(
+                F.col("__s"),
+                lambda e: F.struct(
+                    e["code"].alias("code"),
+                    F.slice(e[vec_col], mi * sub_d + 1, sub_d).alias("subvec"),
+                ),
+            ),
+        ).alias("__cb")
+    )
+
+
+def _by_subspace(vec: Column, m: int, sub_d: int, fn) -> Column:
+    """``[fn(subvector mi of vec, codebook block mi) for mi < m]`` in
+    ascending subspace order, each subvector let-bound (bind_once)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda mi: bind_once(
+            F.slice(vec, mi * sub_d + 1, sub_d),
+            lambda sv: fn(sv, F.element_at(F.col("__cb"), mi + 1)),
+        ),
+    )
+
+
+def _argmin_code(sv: Column, block: Column) -> Column:
+    """int code minimizing the 6-dp-rounded sub-distance over an
+    ascending-code codebook block — the fold twin of a broadcast join +
+    groupBy + min(struct(d, code)) (struct min sorts a NULL distance FIRST
+    ascending, mirrored by the NULL arm; ties keep the lower code because
+    iteration is ascending and acceptance strict)."""
+    init = F.struct(
+        F.lit(None).cast("double").alias("d"), F.lit(-1).alias("code")
+    )
+
+    def step(acc, e):
+        # let-bound for the same 3-reference reason as _argmax_centroid
+        def pick(d):
+            better = (
+                (acc["code"] == -1)
+                | (d.isNull() & acc["d"].isNotNull())
+                | (d < acc["d"])
+            )
+            return F.when(
+                better, F.struct(d.alias("d"), e["code"].alias("code"))
+            ).otherwise(acc)
+
+        return bind_once(F.round(_sqdist(sv, e["subvec"]), 6), pick)
+
+    return F.aggregate(block, init, step)["code"]
+
+
+def _pq_encode(
+    rows: DataFrame, cb: DataFrame, vec_col: str, m: int, sub_d: int, *keep: str
+) -> DataFrame:
+    """``keep`` + ``codes``: per subspace, the nearest code to the row's
+    subvector, folded map-side over the broadcast 1-row codebook (no
+    corpus × m rows through an aggregation Exchange)."""
+    return rows.crossJoin(F.broadcast(cb)).select(
+        *keep, _by_subspace(F.col(vec_col), m, sub_d, _argmin_code).alias("codes")
+    )
+
+
+def _pq_tables(
+    rows: DataFrame, cb: DataFrame, vec_col: str, m: int, sub_d: int, *keep: str
+) -> DataFrame:
+    """``keep`` + ``partials``: the ADC lookup table, ``partials[mi][code]``
+    = the squared distance from the row's subvector ``mi`` to that
+    codeword (m·ksub values per query row)."""
+    return rows.crossJoin(F.broadcast(cb)).select(
+        *keep,
+        _by_subspace(
+            F.col(vec_col),
+            m,
+            sub_d,
+            lambda sv, block: F.transform(
+                block, lambda e: _sqdist(sv, e["subvec"])
+            ),
+        ).alias("partials"),
+    )
+
+
+def _adc() -> Column:
+    """Σ_mi ``partials[mi][codes[mi]]`` rounded to 4 dp: m array lookups per
+    (query, neighbor) pair, summed in the join projection in FIXED
+    ascending sub_m order. The DuckDB oracle's list_sum also sums
+    ascending; an engine summing in another order could differ in the
+    last ulp before rounding, which would only matter for a sum landing
+    exactly on a 4-dp boundary (accepted risk: m is small and no graded
+    corpus has produced one — grade with a 1-ulp tolerance, not a
+    reordered fold, if one ever does)."""
+    return F.round(
+        F.aggregate(
+            F.zip_with(
+                "codes", "partials", lambda cd, row: F.element_at(row, cd + 1)
+            ),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        ),
+        4,
+    )
+
+
+def _topk(scored: DataFrame, score_col: str, ascending: bool, k: int) -> DataFrame:
+    """(query_id, neighbor_id, score_col, rank): rank 1..k per query by
+    ``score_col``, ties broken by neighbor id for determinism."""
+    score = F.col(score_col).asc() if ascending else F.col(score_col).desc()
+    w = Window.partitionBy("query_id").orderBy(score, F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score_col, "rank")
+    )
 
 
 def brute_force_topk(
@@ -72,25 +359,10 @@ def brute_force_topk(
     ranking is exact. Degenerate vectors (zero norm / null elements)
     score NULL and are excluded before ranking.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).select("query_id", "qv", _norm(F.col("qv")).alias("qn"))
-    # the corpus side carries ALL the scoring work (|corpus| × |queries|
-    # interpreted cosine folds) and a single-row-group parquet file
-    # decodes in ONE task — widen a narrow scan first (round-robin; the
-    # two-stage rank is partitioning-independent by construction, so
-    # results are unchanged). Wide sources (the 100 TB case) pass
-    # through untouched (r12, guide §2.5 input skew).
-    from synthea2omop_etl_spark.operators.skew import spread_if_narrow
-
-    c = spread_if_narrow(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(F.col(vec_col)).alias("cv"),
-        )
-    ).select("neighbor_id", "cv", _norm(F.col("cv")).alias("cn"))
+    q = _ann_queries(queries, vec_col, id_col)
     scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+        _ann_corpus(corpus, vec_col, id_col)
+        .join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", F.round(_paired_cosine(), 4))
         # Zero-norm / null-element vectors score NULL (x/0 → NULL with
         # ANSI off): drop them — a NULL cosine is not a neighbor, and in
@@ -110,14 +382,7 @@ def brute_force_topk(
         .where(F.col("lrank") <= k)
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local_top.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(local_top, "cosine", False, k)
 
 
 def srp_signature(vec: Column, dim: int, bits: int = 16) -> Column:
@@ -162,29 +427,11 @@ def srp_bucketed_topk(
     Output schema matches brute_force_topk. Recall < 1 by design; tests
     measure overlap vs the exact baseline rather than asserting equality.
     """
-    from synthea2omop_etl_spark.operators.skew import spread_if_narrow
-
-    # per-row signature work (bits × dim sign folds) inherits the scan's
-    # task count — widen a narrow source first (results partitioning-
-    # independent; wide 100 TB sources pass through)
-    c = (
-        spread_if_narrow(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                _as_double(F.col(vec_col)).alias("cv"),
-            )
-        )
-        .withColumn("cn", _norm(F.col("cv")))
-        .withColumn("bucket", srp_signature(F.col("cv"), dim, bits))
+    c = _ann_corpus(corpus, vec_col, id_col).withColumn(
+        "bucket", srp_signature(F.col("cv"), dim, bits)
     )
-
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(F.col(vec_col)).alias("qv"),
-        )
-        .withColumn("qn", _norm(F.col("qv")))
-        .withColumn("qbucket", srp_signature(F.col("qv"), dim, bits))
+    q = _ann_queries(queries, vec_col, id_col).withColumn(
+        "qbucket", srp_signature(F.col("qv"), dim, bits)
     )
     # Multi-probe: exact bucket + all 1-bit flips.
     probes = F.array(
@@ -209,14 +456,7 @@ def srp_bucketed_topk(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, "cosine", False, k)
 
 
 def ivf_topk(
@@ -227,9 +467,6 @@ def ivf_topk(
     k: int = 5,
     n_lists: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    max_iter: int = 10,
-    quantizer: str = "kmeans",
 ) -> DataFrame:
     """IVF (inverted-file) ANN: a coarse quantizer assigns every corpus
     vector to one inverted list; queries score exactly only within their
@@ -240,95 +477,16 @@ def ivf_topk(
     is broadcast. Output schema matches brute_force_topk; recall measured
     against it in tests.
 
-    Quantizers:
-    - ``"kmeans"``: seeded MLlib k-means — the quality choice, but its
-      centroids depend on MLlib internals, so results are engine-specific.
-    - ``"sampled"``: centroids are the ``n_lists`` lowest-id corpus vectors
-      (any fixed deterministic sample works; FAISS likewise accepts an
-      arbitrary coarse quantizer). Fully SQL-expressible, so this mode is
-      hash-verified against a DuckDB oracle; centroid ranking rounds the
-      cosine to 6 decimals (ties → list_id) for cross-engine stability.
+    Quantizer: the ``n_lists`` lowest-id corpus vectors
+    (:func:`_lowest_id_rows`), assignment and probe ranking by 6-dp-rounded
+    cosine, ties → lower list_id — hash-verified against a DuckDB oracle.
     """
-    from synthea2omop_etl_spark.operators.skew import spread_if_narrow
-
-    # the assignment fold (n_lists cosines/row) and probe scoring run on
-    # the scan's task count — widen a narrow source first (results
-    # partitioning-independent; wide 100 TB sources pass through)
-    c = spread_if_narrow(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(F.col(vec_col)).alias("cv"),
-        )
-    )
-    spark = corpus.sparkSession
-    if quantizer == "kmeans":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        cml = c.withColumn("mlvec", array_to_vector(F.col("cv")))
-        km = KMeans(k=n_lists, seed=seed, maxIter=max_iter, featuresCol="mlvec")
-        model = km.fit(cml)
-        c_assigned = model.transform(cml).select(
-            "neighbor_id", "cv", F.col(km.getPredictionCol()).alias("list_id")
-        )
-        centroids = [
-            (i, [float(x) for x in ctr])
-            for i, ctr in enumerate(model.clusterCenters())
-        ]
-        cent_df = spark.createDataFrame(
-            centroids, "list_id int, centroid array<double>"
-        )
-    elif quantizer == "sampled":
-        w_id = Window.orderBy("neighbor_id")
-        cent_df = (
-            c.orderBy("neighbor_id")
-            .limit(n_lists)
-            .select(
-                (F.row_number().over(w_id) - 1).alias("list_id"),
-                F.col("cv").alias("centroid"),
-            )
-        )
-        # assignment as a map-side fold over the broadcast 1-row centroid
-        # array (r12, guide §2.4): the previous crossJoin + per-id window
-        # shuffled corpus × n_lists fat rows (cv AND centroid, 128
-        # doubles each) through an Exchange + Sort to pick a per-row
-        # argmax the fold computes in place. Selection is identical
-        # (round 6dp desc, ties → lower list_id).
-        c_assigned = c.crossJoin(
-            F.broadcast(_centroid_array(cent_df))
-        ).select(
-            "neighbor_id",
-            "cv",
-            _argmax_centroid(F.col("cv"), F.col("__cents"))["list"].alias(
-                "list_id"
-            ),
-        )
-    else:
-        raise ValueError(f"unknown quantizer: {quantizer!r}")
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    # rank centroids per query by cosine, keep n_probe lists
-    q_cent = q.crossJoin(F.broadcast(cent_df)).withColumn(
-        "c_cos", F.round(_cosine(F.col("qv"), F.col("centroid")), 6)
-    )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.col("c_cos").desc(), F.col("list_id").asc()
-    )
-    probes = (
-        q_cent.withColumn("c_rank", F.row_number().over(w_c))
-        .where(F.col("c_rank") <= n_probe)
-        .select(
-            "query_id",
-            "qv",
-            _norm(F.col("qv")).alias("qn"),
-            F.col("list_id").alias("probe_list"),
-        )
-    )
-
+    c = _ann_corpus(corpus, vec_col, id_col)
+    cent = _lowest_id_rows(c, n_lists, "list_id")
+    probes = _probe_lists(_ann_queries(queries, vec_col, id_col), cent, n_probe)
     scored = (
-        c_assigned.withColumn("cn", _norm(F.col("cv"))).join(
+        _assign_lists(c, cent)
+        .join(
             F.broadcast(probes),
             (F.col("list_id") == F.col("probe_list"))
             & (F.col("query_id") != F.col("neighbor_id")),
@@ -339,131 +497,7 @@ def ivf_topk(
             F.round(_paired_cosine(), 4).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _sqdist(va: Column, vb: Column) -> Column:
-    """Squared L2 between two double arrays (JVM fold, no Python)."""
-    return F.aggregate(
-        F.zip_with(va, vb, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-
-
-def _argmax_centroid(cv: Column, cents: Column) -> Column:
-    """struct(cos, list, cent): the centroid maximizing the 6-dp-rounded
-    cosine against ``cv``, ties to the lower list_id — the map-side fold
-    twin of the crossJoin + row_number()==1 window the assignment stages
-    used before r12 (guide §2.4: that window shuffled corpus × n_lists
-    rows, each carrying BOTH 64-double vectors, through an Exchange +
-    Sort just to pick a per-row max). Iteration is ascending list_id
-    (``cents`` is array_sort'ed), acceptance strict, a non-NULL cosine
-    beats NULL (the window's DESC NULLS LAST), and the first element
-    seeds — the selected row is identical on every input."""
-    init = F.struct(
-        F.lit(None).cast("double").alias("cos"),
-        F.lit(-1).alias("list"),
-        F.lit(None).cast("array<double>").alias("cent"),
-    )
-
-    def step(acc, e):
-        # the cosine is let-bound: the step references it three times
-        # (NULL probe, compare, result) and interpreted HOF evaluation
-        # has no subexpression elimination — unbound, the 64-dim fold
-        # ran 3× per centroid (measured 1.7× query slowdown)
-        from synthea2omop_etl_spark.llm_ops.dedup import bind_once
-
-        def pick(cos):
-            better = (
-                (acc["list"] == -1)
-                | (acc["cos"].isNull() & cos.isNotNull())
-                | (cos > acc["cos"])
-            )
-            return F.when(
-                better,
-                F.struct(
-                    cos.alias("cos"),
-                    e["list_id"].alias("list"),
-                    e["centroid"].alias("cent"),
-                ),
-            ).otherwise(acc)
-
-        return bind_once(F.round(_cosine(cv, e["centroid"]), 6), pick)
-
-    return F.aggregate(cents, init, step)
-
-
-def _argmin_code(sv: Column, cbs: Column) -> Column:
-    """int code minimizing the 6-dp-rounded sub-distance over an
-    ascending-code codebook slice — the fold twin of the broadcast-join
-    + groupBy + min(struct(d, code)) encode stage (struct min sorts a
-    NULL distance FIRST ascending, mirrored by the NULL arm; ties keep
-    the lower code because iteration is ascending and acceptance
-    strict)."""
-    init = F.struct(
-        F.lit(None).cast("double").alias("d"), F.lit(-1).alias("code")
-    )
-
-    def step(acc, e):
-        # let-bound for the same 3-reference reason as _argmax_centroid
-        from synthea2omop_etl_spark.llm_ops.dedup import bind_once
-
-        def pick(d):
-            better = (
-                (acc["code"] == -1)
-                | (d.isNull() & acc["d"].isNotNull())
-                | (d < acc["d"])
-            )
-            return F.when(
-                better, F.struct(d.alias("d"), e["code"].alias("code"))
-            ).otherwise(acc)
-
-        return bind_once(F.round(_sqdist(sv, e["subvec"]), 6), pick)
-
-    return F.aggregate(cbs, init, step)["code"]
-
-
-def _centroid_array(cent_df: DataFrame) -> DataFrame:
-    """1-row frame holding the whole centroid table as an ascending-
-    list_id array of (list_id, centroid) — the broadcastable form every
-    corpus row folds over (n_lists rows → one array value)."""
-    return cent_df.agg(
-        F.array_sort(
-            F.collect_list(F.struct("list_id", "centroid"))
-        ).alias("__cents")
-    )
-
-
-def _codebook_array(cb: DataFrame) -> DataFrame:
-    """1-row frame holding the (sub_m, code, subvec) codebook sorted so
-    equal-width subspace blocks are contiguous ascending-code runs
-    (m·n_codes rows → one array value); :func:`_cb_block` slices them."""
-    return cb.agg(
-        F.array_sort(
-            F.collect_list(F.struct("sub_m", "code", "subvec"))
-        ).alias("__cb")
-    )
-
-
-def _cb_block(cb: Column, mi: Column, m: int) -> Column:
-    """Subspace ``mi``'s ascending-code block of the sorted codebook
-    array. Block width is derived from the array itself (size / m):
-    every seed row contributes exactly one entry per subspace, so a
-    corpus with fewer than ``ksub`` vectors yields a short but still
-    aligned codebook. (ADVICE r12: the previous constant-``ksub`` slice
-    misaligned every block past the first on short codebooks — code -1
-    → element_at(row, 0) crashes on tiny corpora, silently wrong codes
-    on near-miss sizes.)"""
-    bs = (F.size(cb) / F.lit(m)).cast("int")
-    return F.slice(cb, mi * bs + F.lit(1), bs)
+    return _topk(scored, "cosine", False, k)
 
 
 def pq_topk(
@@ -486,140 +520,30 @@ def pq_topk(
     the original vectors — each (query, neighbor) distance is ``m``
     table lookups + adds.
 
-    Plan shape at 100 TB: the codebook is m×ksub rows (BROADCAST
-    everywhere); encoding is one broadcast join + a min(struct) aggregate
-    per (vector, subspace) — embarrassingly parallel, done once and
-    materialized; the per-query distance TABLE is m×ksub partials
-    (broadcast); the ADC join is codes ⨝ broadcast(table) with a
-    map-side-combinable sum — no shuffle of the corpus beyond its own
-    code layout. Queries stream through in batches.
+    Plan shape at 100 TB: the codebook (m×ksub entries) is one broadcast
+    array value; encoding is a per-row fold over it, done once; the
+    per-query tables are query-sized (broadcast); the ADC distance is
+    computed in the join projection — no shuffle of the corpus.
 
-    Codebook: deterministic "sampled" training — per subspace, the
-    ``ksub`` lowest-id corpus vectors' subvectors, code = id rank (the
-    same FAISS-accepts-any-quantizer position as ivf_topk's sampled
-    mode), so the whole operator is SQL-expressible and hash-graded
-    against a DuckDB oracle. Assignment ties (argmin on the 6-dp-rounded
-    subdistance) break toward the lower code; output distances round to
-    4 dp; rank ties break on neighbor_id. Requires ``m`` divide ``dim``.
-
-    Determinism note (ADVICE r12, accepted risk): ``adist`` sums the m
-    partials in FIXED ascending sub_m order (a fold), while an engine
-    summing in arbitrary hash-agg order could differ in the last ulp
-    BEFORE the 4-dp rounding — a sum landing exactly on a rounding
-    boundary could flip the 4th decimal and reorder a rank tie. The
-    DuckDB oracle's list_sum also evaluates ascending, m is small (4),
-    and the graded corpora have never produced such a boundary; if one
-    ever does, grade adist with a 1-ulp-at-4dp tolerance rather than
-    reordering the fold.
+    Codebook: per subspace, the ``ksub`` lowest-id corpus vectors'
+    subvectors, code = id rank. Assignment ties (argmin on the
+    6-dp-rounded subdistance) break toward the lower code; output
+    distances round to 4 dp; rank ties break on neighbor_id. Requires
+    ``m`` divide ``dim``.
     """
-    if dim % m:
-        raise ValueError(f"m={m} must divide dim={dim}")
-    sub_d = dim // m
-
-    def subvecs(v: Column) -> Column:
-        return F.array(
-            *[F.slice(v, i * sub_d + 1, sub_d) for i in range(m)]
-        )
-
-    from synthea2omop_etl_spark.operators.skew import spread_if_narrow
-
-    # the encode fold (m·ksub subdistances/row) runs on the scan's task
-    # count — widen a narrow source first (results partitioning-
-    # independent; wide 100 TB sources pass through)
-    c = spread_if_narrow(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(F.col(vec_col)).alias("cv"),
-        )
-    )
-    # codebook: per subspace, the ksub lowest-id vectors' subvectors
-    w_seed = Window.orderBy("neighbor_id")
-    seeds = (
-        c.orderBy("neighbor_id")
-        .limit(ksub)
-        .select((F.row_number().over(w_seed) - 1).alias("code"), "cv")
-    )
-    cb = seeds.select(
-        "code",
-        F.posexplode(subvecs(F.col("cv"))).alias("sub_m", "subvec"),
-    )
-
-    # encode: argmin sub-distance per (vector, subspace) as a map-side
-    # fold over the broadcast 1-row codebook array (r12, guide §2.4):
-    # the previous posexplode → broadcast join → groupBy(min(struct))
-    # shuffled corpus × m rows through an aggregation Exchange to pick
-    # per-(row, subspace) argmins the fold computes in place. Argmin
-    # semantics identical (round 6dp, ties → lower code).
-    from synthea2omop_etl_spark.llm_ops.dedup import bind_once
-
-    cb_arr = _codebook_array(cb)
-    codes_row = c.crossJoin(F.broadcast(cb_arr)).select(
-        "neighbor_id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda mi: bind_once(
-                F.slice(F.col("cv"), mi * sub_d + 1, sub_d),
-                lambda sv: _argmin_code(
-                    sv, _cb_block(F.col("__cb"), mi, m)
-                ),
-            ),
-        ).alias("codes"),
-    )
-
-    # per-query ADC lookup table: one array<array<double>> of partial
-    # sqdists per query — partials[mi][code] — built from the same
-    # broadcast codebook array (m·ksub values per query)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    qtab = q.crossJoin(F.broadcast(cb_arr)).select(
-        "query_id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda mi: bind_once(
-                F.slice(F.col("qv"), mi * sub_d + 1, sub_d),
-                lambda sv: F.transform(
-                    _cb_block(F.col("__cb"), mi, m),
-                    lambda e: _sqdist(sv, e["subvec"]),
-                ),
-            ),
-        ).alias("partials"),
-    )
-
-    # ADC: adist = Σ_mi partials[mi][codes[mi]] computed in the join
-    # projection — the previous shape shuffled corpus × m joined rows
-    # through a groupBy-sum Exchange; here the per-pair distance is m
-    # array lookups folded map-side (sum order fixed ascending sub_m;
-    # the old hash-agg sum order was arbitrary — both round to 4dp).
-    scored = (
-        codes_row.join(
-            F.broadcast(qtab), F.col("query_id") != F.col("neighbor_id")
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        "codes",
-                        "partials",
-                        lambda cd, row: F.element_at(row, cd + 1),
-                    ),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                ),
-                4,
-            ).alias("adist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adist", "rank")
-    )
+    sub_d = _sub_dim(dim, m)
+    c = _ann_corpus(corpus, vec_col, id_col)
+    # raw-vector PQ stays its own composition rather than a single-list
+    # ivfpq_topk: the residual path would encode (v − c) − (s − c), which
+    # is not bit-equal to v − s, and the graded hashes would move
+    cb = _pq_codebook(_lowest_id_rows(c, ksub, "code"), "cv", m, sub_d)
+    codes = _pq_encode(c, cb, "cv", m, sub_d, "neighbor_id")
+    q = _ann_queries(queries, vec_col, id_col)
+    qtab = _pq_tables(q, cb, "qv", m, sub_d, "query_id")
+    scored = codes.join(
+        F.broadcast(qtab), F.col("query_id") != F.col("neighbor_id")
+    ).select("query_id", "neighbor_id", _adc().alias("adist"))
+    return _topk(scored, "adist", True, k)
 
 
 def ivfpq_topk(
@@ -634,190 +558,57 @@ def ivfpq_topk(
     m: int = 4,
     ksub: int = 8,
 ) -> DataFrame:
-    """IVF-PQ (r12): the FAISS IndexIVFPQ composition — a coarse
-    quantizer partitions the corpus into inverted lists, PQ encodes each
-    vector's RESIDUAL (v − its list centroid), and queries run ADC only
-    inside their ``n_probe`` nearest lists with a per-(query, probe)
-    residual lookup table. This is the production web-scale recipe:
-    IVF bounds the scan (n_probe/n_lists of the corpus), PQ bounds the
-    memory (m sub-codes per vector), and residual encoding keeps the
-    quantization error centered — smaller than raw-vector PQ at the
-    same code budget.
+    """IVF-PQ: the FAISS IndexIVFPQ composition — a coarse quantizer
+    partitions the corpus into inverted lists, PQ encodes each vector's
+    RESIDUAL (v − its list centroid), and queries run ADC only inside
+    their ``n_probe`` nearest lists with a per-(query, probe) residual
+    lookup table. IVF bounds the scan (n_probe/n_lists of the corpus), PQ
+    bounds the memory (m sub-codes per vector), and residual encoding
+    keeps the quantization error centered — smaller than raw-vector PQ at
+    the same code budget.
 
-    Plan shape at 100 TB: centroids (n_lists rows) and the residual
-    codebook (m×ksub rows) broadcast; corpus-side assignment and
-    encoding are one bounded crossJoin + argmin each, done once; the
-    per-query table is n_queries×n_probe×m×ksub rows (broadcast); the
-    ADC join is codes ⨝ broadcast(table) on (list, subspace, code) with
-    a map-side-combinable sum — the corpus shuffles only on its own
-    code layout, never per query.
+    Plan shape at 100 TB: centroids and the residual codebook broadcast as
+    1-row arrays; corpus-side assignment and encoding are per-row folds,
+    done once; the per-(query, probe) tables are query-sized (broadcast);
+    the ADC join is an equi-join on list id — a neighbor meets exactly the
+    queries probing its list — so the corpus is never shuffled per query.
 
-    Determinism contract (the 'sampled' position shared with ivf_topk /
-    pq_topk, so the whole operator hash-grades against DuckDB):
-    centroids = n_lists lowest-id vectors (assignment by 6-dp-rounded
-    cosine, ties → lower list); codebook per subspace = the ksub
-    lowest-id vectors' RESIDUAL subvectors (code = id rank); encoding
-    argmin on the 6-dp-rounded subdistance, ties → lower code; adist
-    rounds to 4 dp; rank ties → lower neighbor_id.
+    Determinism contract (shared with ivf_topk / pq_topk): centroids =
+    n_lists lowest-id vectors; codebook per subspace = the ksub lowest-id
+    vectors' RESIDUAL subvectors (code = id rank); encoding argmin on the
+    6-dp-rounded subdistance, ties → lower code; adist rounds to 4 dp;
+    rank ties → lower neighbor_id.
     """
-    if dim % m:
-        raise ValueError(f"m={m} must divide dim={dim}")
-    sub_d = dim // m
-
-    def subvecs(v: Column) -> Column:
-        return F.array(
-            *[F.slice(v, i * sub_d + 1, sub_d) for i in range(m)]
-        )
-
-    from synthea2omop_etl_spark.operators.skew import spread_if_narrow
-
-    # the assignment + encode folds run on the scan's task count —
-    # widen a narrow source first (results partitioning-independent;
-    # wide 100 TB sources pass through)
-    c = spread_if_narrow(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(F.col(vec_col)).alias("cv"),
-        )
-    )
-    w_id = Window.orderBy("neighbor_id")
-    cent = (
-        c.orderBy("neighbor_id")
-        .limit(n_lists)
-        .select(
-            (F.row_number().over(w_id) - 1).alias("list_id"),
-            F.col("cv").alias("centroid"),
-        )
-    )
-    # assignment as a map-side fold over the broadcast 1-row centroid
-    # array (r12, guide §2.4): the previous crossJoin + per-id window
-    # shuffled corpus × n_lists rows — each carrying cv AND centroid,
-    # 128 doubles — through an Exchange + Sort to pick a per-row argmax
-    # the fold computes in place (selection identical: round 6dp desc,
-    # ties → lower list_id). F.inline evaluates the fold ONCE per row
-    # (a generator is a projection boundary CollapseProject cannot
-    # re-inline through), then list_id/rv project from its fields.
-    # The residual frame still feeds TWO branches (codebook seeds and
-    # encoding) — the lazy localCheckpoint keeps it computed once.
+    sub_d = _sub_dim(dim, m)
+    c = _ann_corpus(corpus, vec_col, id_col)
+    cent = _lowest_id_rows(c, n_lists, "list_id")
+    # the residual frame feeds TWO branches (codebook seeds and encoding);
+    # the lazy localCheckpoint keeps the assignment fold computed once
     assigned = (
-        c.crossJoin(F.broadcast(_centroid_array(cent)))
+        _assign_lists(c, cent)
         .select(
             "neighbor_id",
-            "cv",
-            F.inline(
-                F.array(_argmax_centroid(F.col("cv"), F.col("__cents")))
-            ),
-        )
-        .select(
-            "neighbor_id",
-            F.col("list").alias("list_id"),
+            "list_id",
             F.zip_with("cv", "cent", lambda x, y: x - y).alias("rv"),
         )
         .localCheckpoint(eager=False)
     )
-    # residual codebook: per subspace, the ksub lowest-id vectors'
-    # residual subvectors (code = id rank)
-    seeds = (
-        assigned.orderBy("neighbor_id")
-        .limit(ksub)
-        .select((F.row_number().over(w_id) - 1).alias("code"), "rv")
-    )
-    cb = seeds.select(
-        "code", F.posexplode(subvecs(F.col("rv"))).alias("sub_m", "subvec")
-    )
-    # encode: argmin residual subdistance per (vector, subspace) as a
-    # map-side fold over the broadcast 1-row codebook array (guide §2.4:
-    # the posexplode → join → groupBy(min(struct)) form shuffled
-    # corpus × m rows through an aggregation Exchange; argmin semantics
-    # identical — round 6dp, ties → lower code)
-    from synthea2omop_etl_spark.llm_ops.dedup import bind_once
-
-    cb_arr = _codebook_array(cb)
-    codes = assigned.crossJoin(F.broadcast(cb_arr)).select(
-        "neighbor_id",
-        "list_id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda mi: bind_once(
-                F.slice(F.col("rv"), mi * sub_d + 1, sub_d),
-                lambda sv: _argmin_code(
-                    sv, _cb_block(F.col("__cb"), mi, m)
-                ),
-            ),
-        ).alias("codes"),
-    )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-    )
-    q_cent = q.crossJoin(F.broadcast(cent)).withColumn(
-        "c_cos", F.round(_cosine(F.col("qv"), F.col("centroid")), 6)
-    )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.col("c_cos").desc(), F.col("list_id").asc()
-    )
-    probes = (
-        q_cent.withColumn("c_rank", F.row_number().over(w_c))
-        .where(F.col("c_rank") <= n_probe)
-        .select(
-            "query_id",
-            F.col("list_id").alias("probe_list"),
-            F.zip_with("qv", "centroid", lambda x, y: x - y).alias("qrv"),
-        )
-    )
-    # per-(query, probe) residual lookup tables as one nested array —
-    # partials[mi][code] — from the same broadcast codebook array
-    qtab = probes.crossJoin(F.broadcast(cb_arr)).select(
+    cb = _pq_codebook(_lowest_id_rows(assigned, ksub, "code"), "rv", m, sub_d)
+    codes = _pq_encode(assigned, cb, "rv", m, sub_d, "neighbor_id", "list_id")
+    probes = _probe_lists(
+        _ann_queries(queries, vec_col, id_col), cent, n_probe
+    ).select(
         "query_id",
         "probe_list",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda mi: bind_once(
-                F.slice(F.col("qrv"), mi * sub_d + 1, sub_d),
-                lambda sv: F.transform(
-                    _cb_block(F.col("__cb"), mi, m),
-                    lambda e: _sqdist(sv, e["subvec"]),
-                ),
-            ),
-        ).alias("partials"),
+        F.zip_with("qv", "centroid", lambda x, y: x - y).alias("qrv"),
     )
-    # ADC: the equi-join on (list_id == probe_list) stays — a neighbor
-    # meets exactly the queries probing its list — and the per-pair
-    # distance is m array lookups folded in the join projection (the
-    # previous shape shuffled corpus × m joined rows through a
-    # groupBy-sum Exchange; sum order now fixed ascending sub_m — the
-    # old hash-agg order was arbitrary — both round to 4dp).
+    qtab = _pq_tables(probes, cb, "qrv", m, sub_d, "query_id", "probe_list")
     scored = (
-        codes.join(
-            F.broadcast(qtab), F.col("list_id") == F.col("probe_list")
-        )
+        codes.join(F.broadcast(qtab), F.col("list_id") == F.col("probe_list"))
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        "codes",
-                        "partials",
-                        lambda cd, row: F.element_at(row, cd + 1),
-                    ),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                ),
-                4,
-            ).alias("adist"),
-        )
+        .select("query_id", "neighbor_id", _adc().alias("adist"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adist", "rank")
-    )
+    return _topk(scored, "adist", True, k)
 
 
 def ann_recall_eval(
@@ -833,23 +624,22 @@ def ann_recall_eval(
     m: int = 4,
     ksub: int = 8,
 ) -> DataFrame:
-    """Recall@k evaluation harness for the ANN family (r11; r12 adds
-    PQ): each approximate method's top-k is joined against the exact
-    brute-force ground truth and scored per query — the quality gate a
-    production index rollout runs before switching retrieval paths. PQ
-    belongs here most of all: its compression (sub-code reconstruction
-    error) is exactly where recall loss bites in production, and it
-    ranks by L2-via-codebook while the truth ranks by cosine, so its
-    row is the honest measure of BOTH losses.
+    """Recall@k evaluation harness for the ANN family: each approximate
+    method's top-k is joined against the exact brute-force ground truth
+    and scored per query — the quality gate a production index rollout
+    runs before switching retrieval paths. PQ belongs here most of all:
+    its compression (sub-code reconstruction error) is exactly where
+    recall loss bites in production, and it ranks by L2-via-codebook
+    while the truth ranks by cosine, so its row is the honest measure of
+    BOTH losses.
 
     Output: (method, query_id, hits, recall) with method ∈
     {'ivf', 'ivfpq', 'pq', 'srp'}, hits = |ANN top-k ∩ exact top-k|,
-    recall =
-    hits/k (floor-half-up 4dp — exact cross-engine). EVERY
+    recall = hits/k (floor-half-up 4dp — exact cross-engine). EVERY
     (method, query) pair is scored: a query for which a method returns
-    zero candidates (possible for SRP when a bucket holds no
-    neighbors) appears as recall 0.0 instead of silently missing —
-    otherwise averaging the output overstates recall (r11 ADVICE).
+    zero candidates (possible for SRP when a bucket holds no neighbors)
+    appears as recall 0.0 instead of silently missing — otherwise
+    averaging the output overstates recall.
 
     Scale: ground truth is the expensive side (one corpus scan per
     query batch via the broadcast two-stage brute_force_topk), which is
@@ -864,37 +654,28 @@ def ann_recall_eval(
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=False)
     )
-    ivf = ivf_topk(
-        queries, corpus, vec_col, id_col, k=k,
-        n_lists=n_lists, n_probe=n_probe, quantizer="sampled",
-    )
-    srp = srp_bucketed_topk(
-        queries, corpus, vec_col, id_col, dim=dim, k=k, bits=bits
-    )
-    pq = pq_topk(
-        queries, corpus, vec_col, id_col, dim=dim, k=k, m=m, ksub=ksub
-    )
-    ivfpq = ivfpq_topk(
-        queries, corpus, vec_col, id_col, dim=dim, k=k,
-        n_lists=n_lists, n_probe=n_probe, m=m, ksub=ksub,
-    )
-    meth = (
-        ivf.select(F.lit("ivf").alias("method"), "query_id", "neighbor_id")
-        .unionByName(
-            srp.select(
-                F.lit("srp").alias("method"), "query_id", "neighbor_id"
-            )
-        )
-        .unionByName(
-            pq.select(
-                F.lit("pq").alias("method"), "query_id", "neighbor_id"
-            )
-        )
-        .unionByName(
-            ivfpq.select(
-                F.lit("ivfpq").alias("method"), "query_id", "neighbor_id"
-            )
-        )
+    methods = {
+        "ivf": ivf_topk(
+            queries, corpus, vec_col, id_col, k=k,
+            n_lists=n_lists, n_probe=n_probe,
+        ),
+        "srp": srp_bucketed_topk(
+            queries, corpus, vec_col, id_col, dim=dim, k=k, bits=bits
+        ),
+        "pq": pq_topk(
+            queries, corpus, vec_col, id_col, dim=dim, k=k, m=m, ksub=ksub
+        ),
+        "ivfpq": ivfpq_topk(
+            queries, corpus, vec_col, id_col, dim=dim, k=k,
+            n_lists=n_lists, n_probe=n_probe, m=m, ksub=ksub,
+        ),
+    }
+    meth = reduce(
+        DataFrame.unionByName,
+        [
+            top.select(F.lit(name).alias("method"), "query_id", "neighbor_id")
+            for name, top in methods.items()
+        ],
     )
     hits = (
         meth.join(
@@ -915,12 +696,7 @@ def ann_recall_eval(
         .distinct()
         .select(
             "query_id",
-            F.explode(
-                F.array(
-                    F.lit("ivf"), F.lit("ivfpq"),
-                    F.lit("pq"), F.lit("srp"),
-                )
-            ).alias("method"),
+            F.explode(F.array(*map(F.lit, sorted(methods)))).alias("method"),
         )
     )
     full = grid.join(hits, ["method", "query_id"], "left").select(

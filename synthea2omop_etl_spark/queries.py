@@ -2397,9 +2397,9 @@ _install_leakage_split_oracle()
     "a 64x reduction, and scoring is m table lookups per pair, never "
     "touching the original vectors). Deterministic sampled codebook per "
     "subspace (ksub lowest-id subvectors, the FAISS-accepts-any-"
-    "quantizer position), broadcast everywhere; encode = broadcast join "
-    "+ min(struct) argmin; ADC join is codes vs a broadcast per-query "
-    "lookup table with a map-side-combinable sum. "
+    "quantizer position), broadcast as one subspace-indexed array; encode "
+    "= per-row argmin fold over it; ADC join is codes vs a broadcast "
+    "per-query lookup table, summed in fixed subspace order. "
     "llm_ops/similarity.py:pq_topk.",
 )
 def q_ann_pq(spark: SparkSession, sf: str) -> DataFrame:
@@ -3725,9 +3725,9 @@ def q_stratified_sample(spark: SparkSession, sf: str) -> DataFrame:
     "ann_ivf",
     ann_ivf_oracle(n_lists=16, n_probe=4, k=5),
     "similarity search: IVF (inverted lists + n_probe) — the FAISS-style "
-    "scale path complementing SRP-LSH. Graded with the deterministic "
-    "'sampled' coarse quantizer (SQL-reproducible); the k-means quantizer "
-    "variant is recall-tested in pytest",
+    "scale path complementing SRP-LSH. Coarse quantizer: the n_lists "
+    "lowest-id vectors (deterministic and SQL-reproducible); recall vs "
+    "the exact baseline is additionally asserted in pytest",
 )
 def q_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     from synthea2omop_etl_spark.llm_ops.similarity import ivf_topk
@@ -3742,7 +3742,6 @@ def q_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
         k=5,
         n_lists=16,
         n_probe=4,
-        quantizer="sampled",
     )
 
 

@@ -112,7 +112,7 @@ def test_ann_recall_eval_harness(spark):
         (r.query_id, r.neighbor_id)
         for r in ivf_topk(
             queries_df, emb, "embedding", "vec_id",
-            k=5, n_lists=16, n_probe=4, quantizer="sampled",
+            k=5, n_lists=16, n_probe=4,
         ).collect()
     }
     direct = {r.query_id: 0 for r in out if r.method == "ivf"}

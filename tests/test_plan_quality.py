@@ -10,6 +10,10 @@ produces correct rows:
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from synthea2omop_etl_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -193,15 +197,33 @@ def test_phash_dedup_jvm_side_no_cartesian(spark):
 def test_semantic_dedup_fenced_to_clusters(spark):
     """r10 SemDeDup: the pair join must be an equi-join on cluster id —
     never a corpus-wide cartesian. The only nested-loop allowed is the
-    bounded ×n_clusters broadcast centroid assignment."""
-    import pytest
-
+    1-row broadcast centroid-array attach of the assignment fold."""
     from synthea2omop_etl_spark.llm_ops.dedup import semantic_duplicates
     from synthea2omop_etl_spark.sources.testdata import load_table
 
     plan = _plan(spark, "dedup_semantic")
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
+    # the assignment is a per-row fold, not a crossJoin + window
+    # partitioned on the corpus id; it runs behind a lazy localCheckpoint,
+    # so read the plans of every SQL execution the query ran
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        ex = store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+    seen = set(executions())
+    QUERIES["dedup_semantic"].spark(spark, SF).collect()
+    ran = "\n".join(
+        e.physicalPlanDescription()
+        for i, e in executions().items()
+        if i not in seen
+    )
+    assert "windowspecdefinition" in ran  # the centroid sample's row_number
+    # a partitioned spec opens with a bare key, an order-only one with
+    # "<col> ASC"
+    assert not re.search(r"windowspecdefinition\(\w+#\d+L?, ", ran), ran[:4000]
     # the unclustered path does not exist
     emb = load_table(spark, SF, "embeddings").limit(5)
     with pytest.raises(ValueError, match="n_clusters"):
@@ -677,6 +699,20 @@ def test_ivfpq_broadcasts_model_frames_no_cartesian(spark):
     # scan and the final per-query rank
     assert "hashpartitioning(neighbor_id" not in plan
     assert "hashpartitioning(query_id#" in plan  # the top-k window only
+
+
+@pytest.mark.parametrize("name", ["ann_ivf", "ann_pq"])
+def test_ivf_pq_broadcast_model_frames_no_cartesian(spark, name):
+    """IVF and PQ share IVF-PQ's stages: model-sized frames (centroid
+    array, codebook array) and query-sized frames broadcast, and the
+    assignment and encode run as per-row folds — no exchange is keyed on
+    the corpus id; rows hash-exchange only on query_id, for the ranks."""
+    plan = _plan(spark, name)
+    assert "CartesianProduct" not in plan
+    assert "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan
+    assert "hashpartitioning(neighbor_id" not in plan
+    assert "hashpartitioning(query_id#" in plan
 
 
 def test_batch_admission_python_only_in_component_greedy(spark):
