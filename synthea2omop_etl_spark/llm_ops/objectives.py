@@ -14,8 +14,8 @@ Determinism contract: token ``pos`` of document ``id`` is masked iff
 — pure integer arithmetic on the md5-derived hash family
 (llm_ops/hashing.py), so Spark and the DuckDB oracle agree bit-for-bit
 with no floating point anywhere in the decision. Adjacent masked tokens
-merge into spans (the pos − running-count run detection shared with the
-BPE trainer); span k of a document is replaced by the sentinel
+merge into spans (the pos − running-count run detection the BPE
+oracle also uses); span k of a document is replaced by the sentinel
 ``<extra_id_k>`` in the corrupted text, and the target is the
 sentinel-delimited concatenation of the masked spans — exactly the T5
 serialization.

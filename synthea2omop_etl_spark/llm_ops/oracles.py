@@ -370,12 +370,14 @@ def ann_pq_oracle(dim: int = 64, m: int = 4, ksub: int = 8, k: int = 5) -> str:
 
 
 def _bpe_round_ctes(num_merges: int) -> tuple[list[str], list[str], str]:
-    """Shared CTE builder for the BPE oracles: each merge round is the
-    same window algebra as llm_ops/vocab.py learn_bpe_merges (lead-
-    pairing, argmax winner, run detection via pos − running-candidate-
-    count, odd-rank greedy picks, renumber) chained over the documents
-    table. Returns (cte_parts, per-round winner selects, final syms CTE
-    name). The candidate join is LEFT JOIN ON TRUE, not CROSS JOIN: when
+    """Shared CTE builder for the BPE oracles: each merge round is
+    window algebra over one row per symbol (lead-pairing, argmax winner,
+    run detection via pos − running-candidate-count, odd-rank greedy
+    picks, renumber) chained over the documents table. llm_ops/vocab.py
+    learn_bpe folds per-word symbol arrays instead; the oracle keeps the
+    window formulation as an independent twin, so parity checks the fold
+    against a different derivation of the same greedy rule. Returns
+    (cte_parts, per-round winner selects, final syms CTE name). The candidate join is LEFT JOIN ON TRUE, not CROSS JOIN: when
     a round has no pairs left its winner CTE is empty, and the symbol
     state must pass through unchanged — exactly the Spark loop's early
     break, which keeps the last state."""

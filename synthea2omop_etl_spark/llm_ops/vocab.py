@@ -101,28 +101,33 @@ def learn_bpe(
     tokenizers — are feasible at all): only the initial word-frequency
     count touches the corpus (ONE map-side-combinable aggregate over the
     exploded tokens). Every merge round then operates on the *vocabulary*
-    — distinct words × word length symbol rows, 10⁴-10⁶ rows regardless
-    of corpus size — so per-round cost is independent of the 100 TB input.
+    — one ``(word, freq, s array<string>)`` symbol-state row per distinct
+    word, 10⁴-10⁶ rows regardless of corpus size — so per-round cost is
+    independent of the 100 TB input.
 
-    Greedy left-to-right non-overlapping application (the BPE convention:
-    ``aaaa`` under pair (a,a) → [aa, aa], ``aaa`` → [aa, a]) is computed
-    relationally, no per-row loop: candidate positions chain into maximal
-    runs via the pos − running-count trick, and odd ranks within a run are
-    exactly the greedy picks. The same window algebra runs verbatim in the
-    DuckDB oracle (llm_ops/oracles.py duck_bpe_merges), and the output is
-    pure integer/string — no float can diverge between engines.
+    A round is one pair-count aggregate and one row-local fold. The
+    count explodes the ``(s[i-1], s[i])`` structs of every word with
+    ``size(s) > 1`` (the guard matters: Spark's ``sequence(2, 1)`` is
+    ``[2, 1]``, not empty), sums ``freq`` per pair and keeps the top row.
+    The merge is an ``aggregate`` fold over ``s`` with accumulator
+    ``(o, open)``: if ``open`` and ``x = rhs``, the last element of ``o``
+    becomes ``lhs || rhs`` and ``open`` closes; otherwise ``x`` is
+    appended and ``open = (x = lhs)``. That is greedy left-to-right
+    non-overlapping application (``aaaa`` under pair (a,a) → [aa, aa],
+    ``aaa`` → [aa, a]) with no window and no shuffle keyed by word. The
+    DuckDB oracle (llm_ops/oracles.py bpe_merges_oracle) keeps the
+    row-per-symbol window formulation as an independent twin, and the
+    output is pure integer/string — no float can diverge between engines.
 
-    Per round: the symbol table is lineage-cut (vocabulary-sized), else
-    round N's lazy plan re-executes rounds 1..N-1 (the
-    operators/graph.py pagerank pattern). The checkpoints are LAZY (r12,
-    guide §1/§2.4 — fewer jobs): each round runs exactly ONE driver-paced
-    action — the winner's ``take(1)`` — which materializes the previous
-    round's merge update, this round's pairing window, and the winner
-    checkpoint in a single job; the eager form paid three jobs per round.
-    (r13 tried removing even that probe — see the measured-dead-end note
-    in the loop body.) The winning pair enters the merge step as a
-    broadcast 1-row aggregate — never a driver-side constant — so every
-    emitted value is engine-computed.
+    Per round the winner and the symbol state are lineage-cut (both
+    vocabulary-sized), else round N's lazy plan re-executes rounds
+    1..N-1 (the operators/graph.py pagerank pattern). The cuts are lazy:
+    under AQE a cut runs its upstream shuffle and broadcast stages when
+    it is called and leaves only its final stage to the first action.
+    The one driver-paced probe per round is the winner's ``take(1)``
+    early stop. The winning pair enters the fold as a broadcast 1-row
+    frame — never a driver-side constant — so every emitted value is
+    engine-computed.
 
     Returns ``(merges, segments)``: the merge table plus the word →
     (space-joined subwords, n_sub) segmentation map — the final symbol
@@ -141,25 +146,56 @@ def learn_bpe(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    # initial symbols: one row per character of each distinct word
-    syms = (
-        words.select(
-            "word",
-            "freq",
-            F.explode(F.sequence(F.lit(1), F.length("word"))).alias("pos"),
-        )
-        .withColumn("sym", F.expr("substring(word, pos, 1)"))
-        .transform(cut_lineage)
+    state = words.select(
+        "word",
+        "freq",
+        F.expr(
+            "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
+        ).alias("s"),
+    ).transform(cut_lineage)
+    pairs = F.transform(
+        F.sequence(F.lit(2), F.size("s")),
+        lambda i: F.struct(
+            F.element_at("s", i - 1).alias("lhs"),
+            F.element_at("s", i).alias("rhs"),
+        ),
     )
-    w_ord = Window.partitionBy("word").orderBy("pos")
+
+    def _fold(acc, x):
+        # open implies o is non-empty, so the slice length is >= 0
+        merge = acc["open"] & (x == F.col("rhs"))
+        o = acc["o"]
+        return F.when(
+            merge,
+            F.struct(
+                F.concat(
+                    F.slice(o, 1, F.size(o) - 1),
+                    F.array(F.concat("lhs", "rhs")),
+                ).alias("o"),
+                F.lit(False).alias("open"),
+            ),
+        ).otherwise(
+            F.struct(
+                F.concat(o, F.array(x)).alias("o"),
+                (x == F.col("lhs")).alias("open"),
+            )
+        )
+
+    merged = F.aggregate(
+        "s",
+        F.struct(
+            F.expr("CAST(array() AS ARRAY<STRING>)").alias("o"),
+            F.lit(False).alias("open"),
+        ),
+        _fold,
+        lambda acc: acc["o"],
+    )
     winners: list[DataFrame] = []
     for rank in range(1, num_merges + 1):
-        paired = syms.withColumn("nxt", F.lead("sym").over(w_ord))
         winner = (
-            paired.where(F.col("nxt").isNotNull())
-            .groupBy(
-                F.col("sym").alias("lhs"), F.col("nxt").alias("rhs")
-            )
+            state.where(F.size("s") > 1)  # sequence(2, 1) is [2, 1]
+            .select("freq", F.inline(pairs))
+            .groupBy("lhs", "rhs")
             .agg(F.sum("freq").alias("pair_count"))
             .orderBy(F.col("pair_count").desc(), "lhs", "rhs")
             .limit(1)
@@ -171,65 +207,25 @@ def learn_bpe(
             )
             .transform(cut_lineage)
         )
-        # the ONE action this round runs: materializes the winner (and,
-        # through its lineage, the previous round's lazy merge update).
         # r13 MEASURED DEAD END (kept out, recorded so it isn't retried):
-        # deleting this probe — empty-safe merge algebra via a left join
-        # on TRUE against the ≤1-row winner, whole learn as one lazy
-        # plan — cut jobs 44→36/run but benched NEUTRAL at sf1
-        # (6.97/5.02/6.52 vs 6.70/6.00/5.86) and slightly WORSE at sf0.1
-        # (4.84/4.49/5.56 vs 4.44/4.50/4.73, 3 alternating pairs,
-        # median-of-5): the probe jobs it removes are the same stage
-        # materializations the one final action then pays serially, and
-        # the BNLJ left join costs a little more than the inner
-        # crossJoin. Output was row-identical (parity green) — the
-        # revert is purely on measurement.
+        # deleting this probe — empty-safe merge via a left join on TRUE
+        # against the ≤1-row winner, whole learn as one lazy plan — cut
+        # jobs 44→36/run but benched NEUTRAL at sf1 and slightly WORSE at
+        # sf0.1 (3 alternating pairs, median-of-5): the probe jobs it
+        # removes are the same stage materializations the one final
+        # action then pays serially. Output was row-identical.
         if not winner.take(1):  # no pairs left: every word fully merged
             break
         winners.append(winner)
-        cand = paired.crossJoin(
-            F.broadcast(winner.select("lhs", "rhs"))
-        ).withColumn(
-            "is_cand",
-            F.coalesce(
-                (F.col("sym") == F.col("lhs"))
-                & (F.col("nxt") == F.col("rhs")),
-                F.lit(False),
-            ),
-        )
-        # maximal runs of consecutive candidate positions share
-        # pos - running_candidate_count; odd rank within a run = greedy pick
-        cand = cand.withColumn(
-            "run", F.col("pos") - F.sum(F.col("is_cand").cast("int")).over(w_ord)
-        )
-        w_run = Window.partitionBy("word", "run").orderBy("pos")
-        cand = cand.withColumn(
-            "head",
-            F.col("is_cand")
-            & (F.sum(F.col("is_cand").cast("int")).over(w_run) % 2 == 1),
-        ).withColumn("prev_head", F.lag("head").over(w_ord))
-        syms = (
-            cand.where(~F.coalesce(F.col("prev_head"), F.lit(False)))
-            .select(
-                "word",
-                "freq",
-                "pos",
-                F.when(F.col("head"), F.concat("sym", "nxt"))
-                .otherwise(F.col("sym"))
-                .alias("sym"),
-            )
-            .withColumn("pos", F.row_number().over(w_ord))
+        state = (
+            state.crossJoin(F.broadcast(winner.select("lhs", "rhs")))
+            .select("word", "freq", merged.alias("s"))
             .transform(cut_lineage)
         )
-    segments = syms.groupBy("word").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "sym"))),
-                lambda s: s["sym"],
-            ),
-            " ",
-        ).alias("seg"),
-        F.count(F.lit(1)).alias("n_sub"),
+    segments = state.select(
+        "word",
+        F.array_join("s", " ").alias("seg"),
+        F.size("s").cast("bigint").alias("n_sub"),
     )
     if not winners:  # empty corpus or num_merges == 0
         merges = df.sparkSession.createDataFrame(

@@ -133,11 +133,13 @@ def pagerank(
             )
         # LAZY checkpoint (r12, guide §1/§2.4 — fewer jobs): the loop is
         # fixed-length with no driver-side probe, so nothing needs the
-        # round materialized eagerly. All K rounds execute inside the ONE
-        # action the caller runs; each round's RDD still persists (and its
-        # lineage truncates) as that job sweeps through it, so the plan
-        # never re-derives earlier rounds — where the eager form paid K
-        # driver-paced jobs plus their scheduling gaps.
+        # round materialized eagerly. Under AQE each cut still runs the
+        # round's upstream shuffle and broadcast stages when it is called,
+        # and those stages compute (and persist) the previous round's
+        # state; only the last round's final stage waits for the caller's
+        # action. Lineage truncates per round, so the plan never
+        # re-derives earlier rounds. The eager form paid one more
+        # driver-paced job per round.
         ranks = stepped.select(
             "node", "n", new_rank.alias("rank")
         ).transform(cut_lineage)

@@ -12,8 +12,8 @@ no distributed sequence; the engine offers two strategies:
   tiny per-partition summary (one row per partition, fully lazy — no driver
   collect), then ``row_number`` within each partition plus the partition's
   offset. Deterministic (range partitioning + in-partition ordering is a
-  total order), dense, fully parallel, and single-execution: both branches
-  reuse the same range-shuffle Exchange — this is the 100 TB path.
+  total order), dense and fully parallel — this is the 100 TB path. See
+  ``assign_dense_ids`` for when its two branches share one range Exchange.
 
 Both produce identical results; tests assert so.
 """
@@ -62,11 +62,16 @@ def assign_dense_ids(
     # (The classic zipWithIndex two-pass, expressed FULLY LAZILY: the
     # per-partition counts and their prefix sum are a tiny window over one
     # row per partition — no driver collect(), no eager job at plan-build
-    # time. Both the counts branch and the main branch consume the SAME
-    # range-shuffle Exchange, which Spark reuses (ReusedExchange): the
-    # upstream fact pipeline executes once, where the old eager-collect
-    # form paid it twice — once for the count job at plan time, once for
-    # the real action.)
+    # time.) The counts branch and the main branch share ONE range-shuffle
+    # Exchange (ReusedExchange) only when ``df`` is the order key alone,
+    # as in build_id_map. For a wider frame (with_row_ids) column pruning
+    # narrows the counts branch to the key, so it plans its own range
+    # Exchange and its own sampling job: two ``Exchange rangepartitioning``
+    # nodes with different plan ids. The ids stay correct only because
+    # both exchanges assign every row the same SPARK_PARTITION_ID()
+    # (test_with_row_ids_dense_on_wide_frame guards it); a rewrite must
+    # take the per-partition counts and the within-partition index from
+    # ONE materialization.
     part = df.repartitionByRange(F.col(order_by)).withColumn(
         "__pid", F.spark_partition_id()
     )

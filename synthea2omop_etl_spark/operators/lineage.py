@@ -44,12 +44,14 @@ from pyspark.sql import DataFrame
 def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     """Truncate ``df``'s lineage (see module docstring for the contract).
 
-    ``eager=False`` defers materialization to the first downstream
-    action (the r12 one-job-per-round pattern: the convergence probe or
-    winner take(1) materializes the round's state); note that BOTH
-    checkpoint flavors still pay optimizer + physical planning at call
-    time even when lazy — keep cuts off per-row paths and out of
-    per-round inner loops where a cheaper mechanism (broadcast of the
+    ``eager=False`` defers only the FINAL stage to the first downstream
+    action: under AQE, building the checkpoint RDD runs every upstream
+    shuffle and broadcast stage at call time (a ``groupBy`` plus a
+    broadcast join measured 2 jobs at the call). The first action — a
+    convergence probe or a winner ``take(1)`` — then runs the last stage
+    and stores the blocks. BOTH checkpoint flavors also pay optimizer +
+    physical planning at call time — keep cuts off per-row paths and out
+    of per-round inner loops where a cheaper mechanism (broadcast of the
     small side) works.
     """
     ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")

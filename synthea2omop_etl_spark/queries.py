@@ -7179,8 +7179,8 @@ from synthea2omop_etl_spark.llm_ops.oracles import (  # noqa: E402
     "T5-style span-corruption objective prep (Raffel et al. 2020; "
     "llm_ops/objectives.py span_corruption): every token's mask decision "
     "is integer arithmetic on the md5 hash family (no floats anywhere), "
-    "adjacent masks merge into sentinel-numbered spans via the BPE "
-    "trainer's run-detection algebra, and corrupted/target sequences "
+    "adjacent masks merge into sentinel-numbered spans via pos − "
+    "running-count run detection, and corrupted/target sequences "
     "reassemble per document — reproducible, shardable objective "
     "preparation in-engine. ONE posexplode, doc-partitioned windows, two "
     "per-doc reassembly aggregates.",
@@ -7422,13 +7422,15 @@ def q_dsir_weights(spark: SparkSession, sf: str) -> DataFrame:
     "learn_bpe_merges) — the iterative half of subword tokenization the "
     "vocab module previously only applied: 8 rounds of count-adjacent-"
     "pairs → merge-argmax over the word-frequency table. Only the initial "
-    "word count touches the corpus (one combinable aggregate); every "
-    "round is vocabulary-sized window algebra (lead-pairing, run "
-    "detection via pos − running-candidate-count, odd-rank greedy picks "
-    "= leftmost non-overlapping BPE application), localCheckpoint'ed per "
-    "round. Winners enter the merge step as broadcast 1-row aggregates; "
-    "output is pure integer/string so the hash gate is float-free. The "
-    "oracle unrolls the identical rounds as chained CTEs.",
+    "word count touches the corpus (one combinable aggregate); the symbol "
+    "state is one (word, freq, symbol array) row per distinct word, and "
+    "every round is one pair-count aggregate over the exploded adjacent "
+    "pairs plus one row-local aggregate fold that applies the winner "
+    "greedily leftmost non-overlapping — no window, no word-keyed "
+    "shuffle — localCheckpoint'ed per round. Winners enter the fold as "
+    "broadcast 1-row aggregates; output is pure integer/string so the "
+    "hash gate is float-free. The oracle unrolls the rounds as chained "
+    "CTEs in the independent row-per-symbol window formulation.",
 )
 def q_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
     from synthea2omop_etl_spark.llm_ops.vocab import learn_bpe_merges

@@ -957,6 +957,39 @@ def test_bpe_stops_when_fully_merged(spark):
     assert [tuple(r) for r in rows] == [(1, "a", "b", 2)]
 
 
+def test_bpe_single_character_words(spark):
+    """Words of one character have no adjacent pair: the trainer returns
+    the typed empty merge table and every word segments to itself. Spark's
+    sequence(2, 1) is [2, 1], not empty, so an unguarded pair explode
+    over a size-1 symbol array would read the pair (s[0], s[1])."""
+    from synthea2omop_etl_spark.llm_ops.vocab import learn_bpe
+
+    docs = spark.createDataFrame([(1, "a b a c")], "doc_id long, text string")
+    merges, segments = learn_bpe(docs, "text", num_merges=3)
+    assert merges.schema.simpleString() == (
+        "struct<merge_rank:int,lhs:string,rhs:string,pair_count:bigint>"
+    )
+    assert merges.collect() == []
+    assert sorted(tuple(r) for r in segments.collect()) == [
+        ("a", "a", 1), ("b", "b", 1), ("c", "c", 1)
+    ]
+
+
+def test_bpe_segments_schema(spark):
+    from synthea2omop_etl_spark.llm_ops.vocab import learn_bpe
+
+    docs = spark.createDataFrame(
+        [(1, "low lower lowest a")], "doc_id long, text string"
+    )
+    _, segments = learn_bpe(docs, "text", num_merges=1)
+    assert segments.dtypes == [
+        ("word", "string"), ("seg", "string"), ("n_sub", "bigint")
+    ]
+    got = {r["word"]: (r["seg"], r["n_sub"]) for r in segments.collect()}
+    assert got["a"] == ("a", 1)
+    assert got["low"] == ("lo w", 2)
+
+
 # ------------------------------------------------------------------- DSIR
 
 

@@ -79,6 +79,40 @@ def test_assign_dense_ids_materialize_input_identical(spark):
     assert sorted(rm.values()) == list(range(1, 501))
 
 
+def test_with_row_ids_dense_on_wide_frame(spark):
+    """On a frame wider than its key, the dense-id counts branch is pruned
+    to the key and plans its own range exchange apart from the main
+    branch; the ids must stay exactly 1..n with small advisory partitions
+    too."""
+    from synthea2omop_etl_spark.domains._common import with_row_ids
+
+    n = 200_000
+    wide = spark.range(n).select(
+        F.col("id").cast("string").alias("k"),
+        *[
+            F.sha2(F.concat(F.col("id").cast("string"), F.lit(str(j))), 256)
+            .alias(f"pad{j}")
+            for j in range(4)
+        ],
+    )
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "256k")
+    try:
+        got = with_row_ids(wide, "rid", ["k"]).agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.countDistinct("rid").alias("ids"),
+            F.min("rid").alias("lo"),
+            F.max("rid").alias("hi"),
+        ).first()
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    assert tuple(got) == (n, n, 1, n)
+
+
 def test_build_id_map_incremental(spark):
     df1 = spark.createDataFrame([("u1",), ("u2",), ("u3",)], ["uuid"])
     m1 = build_id_map(df1, "uuid", "pid")

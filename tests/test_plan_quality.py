@@ -30,6 +30,25 @@ def _formatted(spark, name: str) -> str:
     )
 
 
+def _plans_run(spark, action) -> str:
+    """Physical plans of every SQL execution ``action()`` runs, read from
+    the status store. Lazy lineage cuts hide a query's inner stages behind
+    ``Scan ExistingRDD`` in its final plan; their executions are here."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        ex = store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+    seen = set(executions())
+    action()
+    return "\n".join(
+        e.physicalPlanDescription()
+        for i, e in executions().items()
+        if i not in seen
+    )
+
+
 def test_filter_pushdown_reaches_scan(spark):
     plan = _formatted(spark, "pricing_summary")
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
@@ -207,18 +226,8 @@ def test_semantic_dedup_fenced_to_clusters(spark):
     # the assignment is a per-row fold, not a crossJoin + window
     # partitioned on the corpus id; it runs behind a lazy localCheckpoint,
     # so read the plans of every SQL execution the query ran
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        ex = store.executionsList()
-        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
-
-    seen = set(executions())
-    QUERIES["dedup_semantic"].spark(spark, SF).collect()
-    ran = "\n".join(
-        e.physicalPlanDescription()
-        for i, e in executions().items()
-        if i not in seen
+    ran = _plans_run(
+        spark, lambda: QUERIES["dedup_semantic"].spark(spark, SF).collect()
     )
     assert "windowspecdefinition" in ran  # the centroid sample's row_number
     # a partitioned spec opens with a bare key, an order-only one with
@@ -602,6 +611,31 @@ def test_bpe_segment_map_join_broadcast(spark):
     plan = _plan(spark, "bpe_segment")
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_bpe_rounds_run_no_window(spark):
+    """Each BPE merge round is one pair-count aggregate plus a row-local
+    array fold over one symbol-state row per word: no execution of the
+    trainer (the rounds run behind lazy lineage cuts) may plan a window,
+    and the 8 rounds stay within a fixed job budget."""
+    from synthea2omop_etl_spark.llm_ops.vocab import learn_bpe_merges
+    from synthea2omop_etl_spark.sources.testdata import load_table
+
+    docs = load_table(spark, SF, "documents")
+    sc = spark.sparkContext
+    sc.setJobGroup("bpe_rounds", "bpe_rounds")
+    try:
+        ran = _plans_run(
+            spark,
+            lambda: learn_bpe_merges(docs, "text", num_merges=8).collect(),
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup("bpe_rounds")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert "HashAggregate" in ran
+    assert "windowspecdefinition" not in ran, ran[:4000]
+    assert len(jobs) <= 30, len(jobs)
 
 
 def test_ngram_repetition_partial_aggregation(spark):
