@@ -16,9 +16,28 @@ Scale design notes (the 100 TB story):
   after LSH.
 - **embedding cosine**: blocked pairwise; the ANN module (similarity.py) is
   the scale path.
+
+Banded LSH is one set of stages, composed by the batch operators here and
+by the streaming admission filters (streaming/dedup.py):
+
+- signatures: ``_minhash_pack`` (hash→shingle→MinHash in one let-bound
+  expression) and ``perceptual_signatures`` (the one aHash/dHash
+  projection);
+- band entries: ``_minhash_band_entries`` (r-row polynomial band digests);
+- candidates: ``_band_candidates`` (the (band_idx, key) self-join, or the
+  probe against an admitted store);
+- verify: ``_pair_payloads`` plus ``_jaccard`` (rounded to 4 places, as
+  every oracle compares it) or ``_hamming``;
+- the perceptual pair stage ``_hamming_pairs`` (hot-bucket cap, (slot,
+  word) self-join, every Hamming check before the pair dedup).
+
+The greedy admission over a verified pair graph lives with its callers in
+streaming/dedup.py (``_greedy_rejects``).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -140,6 +159,100 @@ def word_shingle_hashes(col: Column | str, n: int = 3) -> Column:
     return bind_once(token_hashes(col), lambda th: shingle_hashes_from(th, n))
 
 
+def _minhash_pack(txt: Column, num_hashes: int, shingle_n: int) -> Column:
+    """struct(sh, sig): hash→shingle→signature as ONE expression with
+    nested let-bindings (bind_once). The per-token md5 transform and the
+    shingle combine each appear exactly once in the tree, so no optimizer
+    rewrite can re-inline them (the collapsed two-projection form re-ran
+    md5 8× per row)."""
+    return bind_once(
+        token_hashes(txt),
+        lambda th: bind_once(
+            shingle_hashes_from(th, shingle_n),
+            lambda sh: F.struct(
+                sh.alias("sh"),
+                minhash_signature(sh, num_hashes).alias("sig"),
+            ),
+        ),
+    )
+
+
+def _minhash_band_entries(
+    packed: DataFrame, num_hashes: int, bands: int
+) -> DataFrame:
+    """(doc, band_idx, band_hash) LSH postings from a (doc, sh, sig)
+    frame: band b folds signature rows b*r .. b*r+r-1 (r =
+    num_hashes/bands) into one polynomial digest. A doc with an empty
+    shingle set (fewer than shingle_n tokens) gets no postings — its
+    all-sentinel signature would put every such doc in one bucket — so
+    it pairs with nothing."""
+    r = num_hashes // bands
+
+    def band_digest(b: int) -> Column:
+        out = F.col("sig")[b * r]
+        for j in range(1, r):
+            out = poly2(out, F.col("sig")[b * r + j])
+        return out
+
+    return packed.where(F.size("sh") > 0).select(
+        "doc",
+        F.posexplode(
+            F.array(*[band_digest(b) for b in range(bands)])
+        ).alias("band_idx", "band_hash"),
+    )
+
+
+def _band_candidates(
+    entries: DataFrame,
+    key: str = "band_hash",
+    store: DataFrame | None = None,
+) -> DataFrame:
+    """Distinct (id_a, id_b) doc pairs sharing a (band_idx, ``key``)
+    bucket. Without ``store`` this is the candidate self-join, id_a <
+    id_b. With ``store`` (the postings of already admitted docs) it is
+    the probe: every (entry doc, stored doc) pair of DIFFERENT docs, so
+    a replayed doc never pairs with its own earlier admission."""
+    a = entries.alias("a")
+    b = (entries if store is None else store).alias("b")
+    other = (
+        F.col("a.doc") < F.col("b.doc")
+        if store is None
+        else F.col("a.doc") != F.col("b.doc")
+    )
+    return (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & other,
+        )
+        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        .distinct()
+    )
+
+
+def _pair_payloads(
+    cands: DataFrame, a_side: DataFrame, b_side: DataFrame, col: str
+) -> DataFrame:
+    """(id_a, id_b) candidates with the exact-verify payload ``col`` of
+    each side attached as ``pa`` (from ``a_side``) and ``pb``."""
+    return cands.join(
+        a_side.select(F.col("doc").alias("id_a"), F.col(col).alias("pa")),
+        "id_a",
+    ).join(
+        b_side.select(F.col("doc").alias("id_b"), F.col(col).alias("pb")),
+        "id_b",
+    )
+
+
+def _jaccard(a: Column | str, b: Column | str) -> Column:
+    """Set Jaccard rounded to 4 places — the value every Jaccard
+    operator and its DuckDB oracle compare (``ROUND(jac, 4) >= t``)."""
+    return F.round(
+        F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)), 4
+    )
+
+
 #: most-recent cached packed-signature layer (bounded at ONE entry): each
 #: minhash_lsh_candidates call releases its predecessor's cache, so repeated
 #: invocations in a long-lived session hold flat storage instead of
@@ -187,7 +300,6 @@ def minhash_lsh_candidates(
     """
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
-    r = num_hashes // bands
 
     # The hashing map-work is CPU-bound: if the source arrived in fewer
     # partitions than cores (one big parquet file locally; a handful of
@@ -201,27 +313,14 @@ def minhash_lsh_candidates(
     n_files = len(df.inputFiles())
     if 0 < n_files < max(2, par // 2):
         narrow = narrow.repartition(par, "doc")
-    # ONE projection computes hash→shingle→signature with nested
-    # let-bindings (bind_once): the per-token md5 transform and the shingle
-    # combine each appear exactly once in the expression tree, so no
-    # optimizer rewrite can re-inline them (see bind_once — the collapsed
-    # two-projection form re-ran md5 8× per row). The packed struct is
-    # cached BEFORE field extraction: one fill evaluates everything once,
-    # and all four consumers (band a/b sides + the Jaccard verify) read
-    # struct fields from the cache. At 100 TB persist this layer to parquet
-    # instead — same DAG shape.
+    # ONE projection computes hash→shingle→signature (_minhash_pack).
+    # The packed struct is cached BEFORE field extraction: one fill
+    # evaluates everything once, and all four consumers (band a/b sides +
+    # the Jaccard verify) read struct fields from the cache. At 100 TB
+    # persist this layer to parquet instead — same DAG shape.
     packed = narrow.select(
         "doc",
-        bind_once(
-            token_hashes(F.col("__text")),
-            lambda th: bind_once(
-                shingle_hashes_from(th, shingle_n),
-                lambda sh: F.struct(
-                    sh.alias("sh"),
-                    minhash_signature(sh, num_hashes).alias("sig"),
-                ),
-            ),
-        ).alias("pack"),
+        _minhash_pack(F.col("__text"), num_hashes, shingle_n).alias("pack"),
     )
     if persist_path:
         packed.write.mode("overwrite").parquet(persist_path)
@@ -232,52 +331,15 @@ def minhash_lsh_candidates(
         "doc",
         F.col("pack.sh").alias("sh"),
         F.col("pack.sig").alias("sig"),
-    ).where(F.size("sh") > 0)
-    sig = base
-
-    def band_digest(b: int) -> Column:
-        out = F.col("sig")[b * r]
-        for j in range(1, r):
-            out = poly2(out, F.col("sig")[b * r + j])
-        return out
-
-    band_entries = sig.select(
-        "doc",
-        F.posexplode(
-            F.array(*[band_digest(b) for b in range(bands)])
-        ).alias("band_idx", "band_hash"),
     )
-
-    a = band_entries.alias("a")
-    b = band_entries.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .distinct()
-    )
-
-    sh = base.select(
-        F.col("doc"), F.array_distinct("sh").alias("shd")
-    )
-    verified = (
-        cands.join(sh.withColumnsRenamed({"doc": "id_a", "shd": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"doc": "id_b", "shd": "sh_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ),
-        )
+    cands = _band_candidates(_minhash_band_entries(base, num_hashes, bands))
+    sh = base.select("doc", F.array_distinct("sh").alias("sh"))
+    return (
+        _pair_payloads(cands, sh, sh, "sh")
+        .withColumn("jaccard", _jaccard("pa", "pb"))
         .where(F.col("jaccard") >= jaccard_threshold)
+        .select("id_a", "id_b", "jaccard")
     )
-    return verified.select("id_a", "id_b", "jaccard")
 
 
 def substring_duplicate_pairs(
@@ -442,11 +504,7 @@ def ngram_jaccard_pairs(
         .select(
             F.col("a.doc").alias("id_a"),
             F.col("b.doc").alias("id_b"),
-            F.round(
-                F.size(F.array_intersect("a.toks", "b.toks"))
-                / F.size(F.array_union("a.toks", "b.toks")),
-                4,
-            ).alias("jaccard"),
+            _jaccard("a.toks", "b.toks").alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
@@ -578,15 +636,10 @@ def set_similarity_pairs(
     )
     ta = pre.select(F.col("doc").alias("id_a"), F.col("stoks").alias("ta"))
     tb = pre.select(F.col("doc").alias("id_b"), F.col("stoks").alias("tb"))
-    jac = F.round(
-        F.size(F.array_intersect("ta", "tb"))
-        / F.size(F.array_union("ta", "tb")),
-        4,
-    )
     return (
         cand.join(ta, "id_a")
         .join(tb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
+        .select("id_a", "id_b", _jaccard("ta", "tb").alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -656,46 +709,29 @@ def _dhash_words(g: Column, cells: int, bands: int) -> Column:
     return F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), band_word)
 
 
-def phash_band_signatures(
+def perceptual_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     cells: int = 64,
     bands: int = 4,
 ) -> DataFrame:
-    """Perceptual-hash (aHash-family) signature over the payload BYTE
-    GRID, banded for LSH — the image-by-content dedup modality (r10;
-    the one the embedding path doesn't cover). dHash/aHash recipe:
-    downsample the payload to ``cells`` samples (the same nearest-
-    neighbor gather as multimodal.resize_nearest: sample k = byte at
-    ``k*n div cells``), threshold each sample against the grid mean
-    (bit = sample*cells > sum — integer-exact, no float mean), and pack
-    the bits into ``bands`` band words of ``cells/bands`` bits each.
+    """ONE-scan (id, phash_bands, dhash_bands) frame — the only
+    perceptual signature projection. The single-family signatures and
+    every perceptual pair stage select from it; Catalyst prunes the
+    family a caller does not read, so a single-family caller pays one
+    fold, and the combined gate pays one corpus pass instead of two
+    scans + an id join.
 
     Everything is JVM-side Column algebra (transform/aggregate/slice
     over a bounded ``cells``-element array — whole-stage codegen, no
-    Python), and the band words ARE the LSH keys: two payloads whose
-    signatures agree on any band become a candidate pair, exactly the
-    MinHash banding scheme. A real image deployment feeds the DECODED
-    pixel grid through the same column algebra; here the payload bytes
-    stand in for pixels (the multimodal stub contract — ASCII text, so
+    Python), and the band words ARE the LSH keys. A real image
+    deployment feeds the DECODED pixel grid through the same column
+    algebra; here the payload bytes stand in for pixels (ASCII text, so
     ``ascii(substr)`` IS the byte value, same as multimodal_resize).
-
-    Output: (id_col, phash_bands array<int>) — one row per non-empty
-    payload. Bit order is big-endian within a band (first sample =
-    highest bit), bands ordered low grid positions first.
-
-    Caveat (inherent to the aHash family, not this implementation):
-    payloads with a FLAT byte profile (constant bytes, or shorter than
-    the mean can discriminate) all hash to the all-zero signature and
-    land in one bucket — the image analogue is aHash collapsing flat/
-    solid images. On a corpus with many such payloads, pre-filter them
-    (octet_length / entropy gate) or pair this with dHash bits
-    (adjacent-sample comparisons), exactly as production perceptual
-    pipelines do. The recall cost is theirs alone; the JOIN cost is
-    not — that attractor bucket would make the candidate self-join
-    quadratic, which is why the pair stage drops buckets beyond
-    ``max_bucket_size`` (:func:`_cap_hot_buckets`, r12).
+    One row per non-empty payload; bits are big-endian within a band
+    (first sample = highest bit), bands ordered low grid positions
+    first.
     """
     if cells % bands:
         raise ValueError("cells must be divisible by bands")
@@ -719,8 +755,47 @@ def phash_band_signatures(
                 _byte_grid(txt, cells),
                 lambda g: _ahash_words(g, cells, bands),
             ).alias("phash_bands"),
+            bind_once(
+                _byte_grid(txt, cells + 1),
+                lambda g: _dhash_words(g, cells, bands),
+            ).alias("dhash_bands"),
         )
     )
+
+
+def phash_band_signatures(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    cells: int = 64,
+    bands: int = 4,
+) -> DataFrame:
+    """Perceptual-hash (aHash-family) signature over the payload BYTE
+    GRID, banded for LSH — the image-by-content dedup modality (r10;
+    the one the embedding path doesn't cover). Downsample the payload to
+    ``cells`` samples (the same nearest-neighbor gather as
+    multimodal.resize_nearest: sample k = byte at ``k*n div cells``),
+    threshold each sample against the grid mean (bit = sample*cells >
+    sum — integer-exact, no float mean), and pack the bits into
+    ``bands`` band words of ``cells/bands`` bits each.
+
+    Output: (id_col, phash_bands array<int>), the aHash column of
+    :func:`perceptual_signatures`.
+
+    Caveat (inherent to the aHash family, not this implementation):
+    payloads with a FLAT byte profile (constant bytes, or shorter than
+    the mean can discriminate) all hash to the all-zero signature and
+    land in one bucket — the image analogue is aHash collapsing flat/
+    solid images. Pre-filter them (octet_length / entropy gate) or pair
+    this with dHash bits, exactly as production perceptual pipelines
+    do. The recall cost is theirs alone; the JOIN cost is not — that
+    attractor bucket would make the candidate self-join quadratic,
+    which is why the pair stage drops buckets beyond
+    ``max_bucket_size`` (:func:`_cap_hot_buckets`, r12).
+    """
+    return perceptual_signatures(
+        df, text_col, id_col, cells, bands
+    ).select(id_col, "phash_bands")
 
 
 def dhash_band_signatures(
@@ -731,72 +806,20 @@ def dhash_band_signatures(
     bands: int = 4,
 ) -> DataFrame:
     """dHash (difference-hash) banded signature — the gradient twin of
-    :func:`phash_band_signatures`, closing its documented flat-profile
-    caveat: bit k compares ADJACENT samples (grid[k] < grid[k+1], a
-    ``cells+1``-sample gather), so the signature encodes the byte-
-    profile SHAPE rather than its level. A constant payload hashes to
-    all-zero under BOTH, but payloads aHash collapses (same mean,
-    different shape) separate here — production perceptual pipelines
-    run the pair for exactly this reason.
+    :func:`phash_band_signatures`, closing its flat-profile caveat: bit
+    k compares ADJACENT samples (grid[k] < grid[k+1], a ``cells+1``-
+    sample gather), so the signature encodes the byte-profile SHAPE
+    rather than its level. A constant payload hashes to all-zero under
+    BOTH, but payloads aHash collapses (same mean, different shape)
+    separate here. Strict ``<`` keeps ties at 0 — integer-exact,
+    identical in DuckDB (``ord(substr) < ord(substr)``).
 
-    Same contract as the aHash variant: pure JVM column algebra,
-    bind_once-bound grid (no per-bit re-evaluation), round-robin spread
-    gate, output (id_col, dhash_bands array<int>) with big-endian bits
-    per band. Strict ``<`` keeps ties at 0 — integer-exact, identical
-    in DuckDB (``ord(substr) < ord(substr)``).
+    Output: (id_col, dhash_bands array<int>), the dHash column of
+    :func:`perceptual_signatures`.
     """
-    if cells % bands:
-        raise ValueError("cells must be divisible by bands")
-    txt = F.col(text_col)
-
-    from synthea2omop_etl_spark.operators.skew import spread_if_narrow
-
-    return (
-        spread_if_narrow(df)
-        .where(F.length(txt) > 0)
-        .select(
-            F.col(id_col).alias(id_col),
-            bind_once(
-                _byte_grid(txt, cells + 1),
-                lambda g: _dhash_words(g, cells, bands),
-            ).alias("dhash_bands"),
-        )
-    )
-
-
-def phash_duplicate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cells: int = 64,
-    bands: int = 4,
-    hamming_max: int = 6,
-    max_bucket_size: int | None = 1024,
-) -> DataFrame:
-    """Perceptual near-duplicate pairs: banded phash candidates,
-    Hamming-verified — MinHash-LSH's structure with aHash bits.
-
-    Candidate generation is BUCKETED (posexplode the band words, equi-
-    join on (band, word), smaller id first): pair fan-out is bounded by
-    band-bucket collisions, never all-pairs — the same 100 TB fence as
-    ``minhash_lsh_candidates``. Verification recomputes the exact
-    Hamming distance over the full ``cells``-bit signature
-    (zip_with + bit_count, still JVM-side) and keeps pairs at most
-    ``hamming_max`` bits apart.
-
-    Output: (id_a, id_b, hamming) with id_a < id_b, one row per
-    verified pair.
-    """
-    # the signature frame feeds BOTH self-join sides — left lazy, each
-    # side re-runs the per-doc hash fold over the corpus (and the
-    # dropDuplicates a third time); a lazy localCheckpoint computes it
-    # once (the funnel-stage idiom)
-    sigs = phash_band_signatures(
+    return perceptual_signatures(
         df, text_col, id_col, cells, bands
-    ).localCheckpoint(eager=False)
-    return _banded_hamming_pairs(
-        sigs, id_col, "phash_bands", hamming_max, max_bucket_size
-    )
+    ).select(id_col, "dhash_bands")
 
 
 def _hamming(xa, xb) -> Column:
@@ -856,52 +879,96 @@ def oversized_band_buckets(
     )
 
 
-def _banded_hamming_pairs(
-    sigs: DataFrame,
+def _hamming_pairs(
+    df: DataFrame,
+    text_col: str,
     id_col: str,
-    sig_col: str,
-    hamming_max: int,
-    max_bucket_size: int | None = 1024,
+    cells: int,
+    bands: int,
+    checks: list[tuple[str, str, int]],
+    max_bucket_size: int | None,
 ) -> DataFrame:
-    """Band-bucketed candidates + exact Hamming verify over a
-    (id, ``sig_col`` array<int>) signature frame — the shared pair stage
-    behind phash/dhash duplicate pairs. Candidates are BUCKETED
-    (posexplode band words, equi-join on (band, word), smaller id
-    first): fan-out bounded by band collisions, never all-pairs — and
-    buckets beyond ``max_bucket_size`` entries are dropped entirely
-    (see :func:`_cap_hot_buckets`: the flat-payload attractor bucket
-    would otherwise go quadratic on a degenerate corpus)."""
-    banded = sigs.select(
-        F.col(id_col).alias("doc"),
-        F.col(sig_col).alias("sig"),
-        F.posexplode(sig_col).alias("band", "word"),
+    """The perceptual pair stage: banded candidates + exact Hamming
+    verify over :func:`perceptual_signatures`. ``checks`` lists
+    ``(sig_col, out_col, hamming_max)``; a pair survives only if every
+    check's distance is within its bound.
+
+    Candidates are BUCKETED: one posexplode over the concatenated band
+    words of every checked signature (slot = position in the
+    concatenation, so the candidates are the UNION of the bandings),
+    buckets beyond ``max_bucket_size`` entries dropped
+    (:func:`_cap_hot_buckets` — the flat-payload attractor would
+    otherwise go quadratic), then an equi-join on (slot, word) with
+    id_a < id_b. Fan-out is bounded by band collisions, never
+    all-pairs.
+
+    Output: (id_a, id_b, *out_cols), one row per verified pair."""
+    cols = [c for c, _, _ in checks]
+    # the signature frame feeds BOTH self-join sides — left lazy, each
+    # side re-runs the per-doc hash fold over the corpus (and the
+    # dropDuplicates a third time); a lazy localCheckpoint computes it
+    # once (the funnel-stage idiom)
+    sigs = (
+        perceptual_signatures(df, text_col, id_col, cells, bands)
+        .select(F.col(id_col).alias("doc"), *cols)
+        .localCheckpoint(eager=False)
     )
-    banded = _cap_hot_buckets(banded, ["band", "word"], max_bucket_size)
-    a, b = banded.alias("a"), banded.alias("b")
+    entries = sigs.select(
+        "doc", *cols, F.posexplode(F.concat(*cols)).alias("slot", "word")
+    )
+    entries = _cap_hot_buckets(entries, ["slot", "word"], max_bucket_size)
+    a, b = entries.alias("a"), entries.alias("b")
+    within = reduce(Column.__and__, [F.col(o) <= h for _, o, h in checks])
     # Hamming verify BEFORE the pair dedup (r12, guide §2.3 — shuffle
     # keys, not payloads): the old shape dropDuplicate'd the raw
     # candidates first, so the dedup Exchange carried every candidate
-    # occurrence WITH both signature arrays (event-logged 166 MB shuffle
+    # occurrence WITH the signature arrays (event-logged 166 MB shuffle
     # at sf1 for a 5 MB corpus — ~1M candidate rows × ~150 B). The
-    # verify is a 4-int zip_with fold — re-running it per duplicate
+    # verify is a small zip_with fold — re-running it per duplicate
     # occurrence costs microseconds, after which the dedup Exchange
-    # carries only the VERIFIED pairs (3 narrow columns, ~1% of the
-    # rows). hamming is deterministic per (id_a, id_b), so dedup after
-    # verify keeps the identical pair set and values.
+    # carries only the VERIFIED pairs (narrow columns, ~1% of the
+    # rows). Distances are deterministic per (id_a, id_b), so dedup
+    # after verify keeps the identical pair set and values.
     return (
         a.join(
             b,
-            (F.col("a.band") == F.col("b.band"))
+            (F.col("a.slot") == F.col("b.slot"))
             & (F.col("a.word") == F.col("b.word"))
             & (F.col("a.doc") < F.col("b.doc")),
         )
         .select(
             F.col("a.doc").alias("id_a"),
             F.col("b.doc").alias("id_b"),
-            _hamming(F.col("a.sig"), F.col("b.sig")).alias("hamming"),
+            *[
+                _hamming(F.col(f"a.{c}"), F.col(f"b.{c}")).alias(out)
+                for c, out, _ in checks
+            ],
         )
-        .where(F.col("hamming") <= hamming_max)
+        .where(within)
         .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def phash_duplicate_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    cells: int = 64,
+    bands: int = 4,
+    hamming_max: int = 6,
+    max_bucket_size: int | None = 1024,
+) -> DataFrame:
+    """Perceptual near-duplicate pairs: banded aHash candidates,
+    Hamming-verified — MinHash-LSH's structure with aHash bits, through
+    the shared :func:`_hamming_pairs` stage (the same 100 TB fence as
+    ``minhash_lsh_candidates``: bucketed candidates, never all-pairs).
+
+    Output: (id_a, id_b, hamming) with id_a < id_b, one row per
+    verified pair.
+    """
+    return _hamming_pairs(
+        df, text_col, id_col, cells, bands,
+        [("phash_bands", "hamming", hamming_max)], max_bucket_size,
     )
 
 
@@ -916,50 +983,11 @@ def dhash_duplicate_pairs(
 ) -> DataFrame:
     """dHash near-duplicate pairs: banded gradient-signature candidates,
     Hamming-verified — the pair-level twin of
-    :func:`phash_duplicate_pairs` (r10 graded dHash only at the
-    signature layer; this closes the pair path). Same bucketed
-    candidate join and exact zip_with+bit_count verify; output
-    (id_a, id_b, hamming) with id_a < id_b."""
-    sigs = dhash_band_signatures(
-        df, text_col, id_col, cells, bands
-    ).localCheckpoint(eager=False)
-    return _banded_hamming_pairs(
-        sigs, id_col, "dhash_bands", hamming_max, max_bucket_size
-    )
-
-
-def perceptual_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cells: int = 64,
-    bands: int = 4,
-) -> DataFrame:
-    """ONE-scan (id, phash_bands, dhash_bands) frame: both perceptual
-    signatures computed in the same projection, so the combined gate
-    pays a single corpus pass instead of two scans + an id join. Values
-    are bit-identical to the standalone signature functions (same
-    gather, same band algebra — shared helpers)."""
-    if cells % bands:
-        raise ValueError("cells must be divisible by bands")
-    txt = F.col(text_col)
-
-    from synthea2omop_etl_spark.operators.skew import spread_if_narrow
-
-    return (
-        spread_if_narrow(df)
-        .where(F.length(txt) > 0)
-        .select(
-            F.col(id_col).alias(id_col),
-            bind_once(
-                _byte_grid(txt, cells),
-                lambda g: _ahash_words(g, cells, bands),
-            ).alias("phash_bands"),
-            bind_once(
-                _byte_grid(txt, cells + 1),
-                lambda g: _dhash_words(g, cells, bands),
-            ).alias("dhash_bands"),
-        )
+    :func:`phash_duplicate_pairs` through the same :func:`_hamming_pairs`
+    stage; output (id_a, id_b, hamming) with id_a < id_b."""
+    return _hamming_pairs(
+        df, text_col, id_col, cells, bands,
+        [("dhash_bands", "hamming", hamming_max)], max_bucket_size,
     )
 
 
@@ -979,60 +1007,21 @@ def perceptual_duplicate_pairs(
     (dHash) agree, which kills aHash's same-mean/different-shape false
     positives and dHash's different-level/same-shape ones.
 
-    Candidate generation is the UNION of both bandings (phash band
-    words in slots 0..bands-1, dhash words in slots bands..2*bands-1,
-    one posexplode over the concatenated arrays, equi-join on
-    (slot, word)): recall is at least each single-family banding's,
-    and the fan-out stays band-bucketed — never all-pairs. Buckets
-    beyond ``max_bucket_size`` entries are dropped (the flat-payload
-    all-zero attractor exists in BOTH families — see
-    :func:`_cap_hot_buckets`). Both exact Hamming distances are then
-    verified over the full signatures.
+    :func:`_hamming_pairs` with both checks: candidates are the UNION of
+    both bandings (phash words in slots 0..bands-1, dhash words in slots
+    bands..2*bands-1), so recall is at least each single-family
+    banding's; both exact Hamming distances are verified.
 
     Output: (id_a, id_b, hamming_a, hamming_d) with id_a < id_b, pairs
     passing BOTH thresholds.
     """
-    sigs = perceptual_signatures(
-        df, text_col, id_col, cells, bands
-    ).localCheckpoint(eager=False)
-    entries = sigs.select(
-        F.col(id_col).alias("doc"),
-        "phash_bands",
-        "dhash_bands",
-        F.posexplode(F.concat("phash_bands", "dhash_bands")).alias(
-            "slot", "word"
-        ),
-    )
-    entries = _cap_hot_buckets(entries, ["slot", "word"], max_bucket_size)
-    a, b = entries.alias("a"), entries.alias("b")
-    # both Hamming verifies run BEFORE the pair dedup so the dedup
-    # Exchange carries only verified (id_a, id_b, h_a, h_d) rows — see
-    # _banded_hamming_pairs (r12, guide §2.3): the old candidate-first
-    # dedup shuffled every occurrence with FOUR signature arrays.
-    # Distances are deterministic per pair, so the set and values are
-    # identical.
-    return (
-        a.join(
-            b,
-            (F.col("a.slot") == F.col("b.slot"))
-            & (F.col("a.word") == F.col("b.word"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            _hamming(
-                F.col("a.phash_bands"), F.col("b.phash_bands")
-            ).alias("hamming_a"),
-            _hamming(
-                F.col("a.dhash_bands"), F.col("b.dhash_bands")
-            ).alias("hamming_d"),
-        )
-        .where(
-            (F.col("hamming_a") <= hamming_max_a)
-            & (F.col("hamming_d") <= hamming_max_d)
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    return _hamming_pairs(
+        df, text_col, id_col, cells, bands,
+        [
+            ("phash_bands", "hamming_a", hamming_max_a),
+            ("dhash_bands", "hamming_d", hamming_max_d),
+        ],
+        max_bucket_size,
     )
 
 

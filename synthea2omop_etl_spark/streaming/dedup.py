@@ -1,39 +1,50 @@
-"""Streaming incremental near-duplicate ADMISSION filter.
+"""Streaming incremental near-duplicate ADMISSION filters (MinHash text
+and aHash perceptual) and their batch twins.
 
 A training-corpus intake pipeline cannot re-run whole-corpus MinHash per
 micro-batch: at 100 TB the admitted corpus is the big side and the batch
-is tiny. This operator maintains the LSH state INCREMENTALLY — the same
+is tiny. These operators maintain the LSH state INCREMENTALLY — the same
 state-maintenance pattern as streaming/itemsets.py — so each batch pays
 O(batch × colliding-band rows), never O(corpus):
 
 State under ``output_dir``:
-- ``corpus/``   — admitted documents ``(doc, text, sh)`` where ``sh`` is
-  the hashed-shingle set (the exact-verify side), hash-bucketed by doc.
-- ``band_index/`` — ``(band_idx, band_hash, doc)`` LSH postings for every
-  admitted doc, hash-bucketed by band_hash. A new batch probes ONLY the
-  buckets its own band hashes fall in (read_bucket_pruned).
+- ``corpus/``   — admitted documents ``(doc, text, payload)``, the exact-
+  verify side, hash-bucketed by doc. The payload is ``sh`` (the hashed-
+  shingle set) for text and ``sig`` (the full aHash band-word array) for
+  the perceptual filter.
+- ``band_index/`` — ``(band_idx, key, doc)`` LSH postings for every
+  admitted doc, hash-bucketed by the key: ``band_hash`` (the MinHash band
+  digest) or ``band_word`` (the aHash band word). A new batch probes ONLY
+  the buckets its own keys fall in (read_bucket_pruned).
 
-Per micro-batch (foreachBatch):
-1. hash→shingle→signature for the batch rows (ONE projection, the
-   bind_once let-binding from llm_ops/dedup.py — no re-inlined md5).
+Both filters run ONE foreachBatch body (``_admission_filter``) built from
+the banded-LSH stages of llm_ops/dedup.py (``_band_candidates``,
+``_pair_payloads``, ``_jaccard``/``_hamming``) and ``_greedy_rejects``;
+a modality only supplies how a batch is signed, its postings, the band
+key, the stored payload and the match predicate. Per micro-batch:
+1. drop exact-text dups (keep min doc id), then sign the rows in ONE
+   projection (bind_once let-bindings — no re-inlined md5).
 2. AGAINST the store FIRST: batch band entries join the (bucket-pruned)
-   band index → candidate (new, admitted) pairs → exact Jaccard verify
-   against the (bucket-pruned) corpus shingle sets → matched docs are
+   band index → candidate (new, admitted) pairs → exact verify against
+   the (bucket-pruned) stored payloads → matched docs are
    store-rejected. This pass runs before the in-batch greedy so a
    store-rejected doc never blocks its in-batch neighbors.
-3. WITHIN-batch: drop exact-text dups (keep min doc id), then TRUE
-   greedy admission in ascending-id order over the verified near-dup
-   graph (band collision + exact Jaccard ≥ threshold): a doc is rejected
-   iff it matches an ADMITTED smaller doc; store-rejected docs are never
-   admitted and never block. So in a chain A~B, B~C (A!~C), C is admitted
-   whether or not A is already in the store and wherever the batch
-   boundary falls — the combined rule equals one-doc-per-batch
+3. WITHIN-batch: TRUE greedy admission in ascending-id order over the
+   verified near-dup graph (band collision + exact verify): a doc is
+   rejected iff it matches an ADMITTED smaller doc; store-rejected docs
+   are never admitted and never block. So in a chain A~B, B~C (A!~C), C
+   is admitted whether or not A is already in the store and wherever the
+   batch boundary falls — the combined rule equals one-doc-per-batch
    sequential admission, independent of partitioning and batch
    boundaries. Runs per connected component (applyInPandas — sequential
    greedy is inherently iterative; the components are tiny, the
    corpus-scale work stays in the LSH joins).
 4. Survivors append via insert_if_absent (keyed, idempotent) to corpus
    and band_index.
+
+The streaming joins are not hot-bucket capped (``_cap_hot_buckets``
+applies to the batch perceptual pair stage only): a cap would change
+which docs a stream admits.
 
 Replay/crash idempotence: a replayed batch re-derives the same
 signatures; its docs are either already admitted (insert_if_absent
@@ -50,6 +61,7 @@ LLM-ops) with the sources/writers.py incremental layers.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -58,52 +70,28 @@ from pyspark.sql.types import StructField, StructType
 
 from synthea2omop_etl_spark.llm_ops.cluster import dedup_clusters
 from synthea2omop_etl_spark.llm_ops.dedup import (
+    _ahash_words,
+    _band_candidates,
+    _byte_grid,
+    _hamming,
+    _jaccard,
+    _minhash_band_entries,
+    _minhash_pack,
+    _pair_payloads,
     bind_once,
-    minhash_signature,
-    shingle_hashes_from,
-    token_hashes,
 )
-from synthea2omop_etl_spark.llm_ops.hashing import poly2
 from synthea2omop_etl_spark.sources.writers import (
     insert_if_absent,
     read_bucket_pruned,
 )
 
 
-def _band_entries(
-    sig_df: DataFrame, num_hashes: int, bands: int
-) -> DataFrame:
-    """(doc, band_idx, band_hash) postings from a (doc, sig) frame — the
-    same r-row polynomial band digest as minhash_lsh_candidates."""
-    r = num_hashes // bands
-
-    def band_digest(b: int) -> Column:
-        out = F.col("sig")[b * r]
-        for j in range(1, r):
-            out = poly2(out, F.col("sig")[b * r + j])
-        return out
-
-    return sig_df.select(
-        "doc",
-        F.posexplode(
-            F.array(*[band_digest(b) for b in range(bands)])
-        ).alias("band_idx", "band_hash"),
-    )
-
-
-def _jaccard(sh_a: str, sh_b: str) -> Column:
-    return F.size(F.array_intersect(sh_a, sh_b)) / F.size(
-        F.array_union(sh_a, sh_b)
-    )
-
-
 def _make_greedy_reject():
     """Factory returning the per-component sequential-greedy rejector
     (closure, so cloudpickle ships it by value — a module-level function
     would be pickled by reference and fail on Python workers when the
-    driver runs from outside the repo). Shared by the MinHash and
-    perceptual admission filters: a doc is rejected iff it matches an
-    ADMITTED smaller doc; store-rejected docs are never admitted and
+    driver runs from outside the repo): a doc is rejected iff it matches
+    an ADMITTED smaller doc; store-rejected docs are never admitted and
     never block."""
 
     def _greedy_reject(pdf):
@@ -148,59 +136,173 @@ def _make_greedy_reject():
     return _greedy_reject
 
 
-def _grouped_greedy_drop(edges, id_type) -> DataFrame:
-    """Run the sequential-greedy rejector over BOUNDED component groups
-    (r12): one applyInPandas call per connected component paid a
-    per-group pandas/Arrow overhead that dominated the stage when the
+def _greedy_rejects(
+    pairs: DataFrame, store_rejected: DataFrame | None = None
+) -> DataFrame:
+    """(doc) rows the ascending-id sequential greedy rejects over a
+    verified (id_a < id_b) pair graph: connected components
+    (dedup_clusters) → store-rejection flags (rej_a, rej_b) per edge →
+    the rejector over BOUNDED component groups. The one greedy admission
+    stage of the streaming filters and the batch twins.
+
+    Grouping (r12): one applyInPandas call per connected component paid
+    a per-group pandas/Arrow overhead that dominated the stage when the
     corpus held thousands of tiny components (event-logged at sf1:
     executorRunTime 15.5 s vs executorCpuTime 1.6 s — the JVM idling on
     per-group Python round-trips, AQE-coalesced onto 2 tasks). The
-    ascending-id greedy over a UNION of disjoint components is
-    identical to running it per component (rejection depends only on a
-    node's own neighbors), so components are hashed into
-    defaultParallelism groups — constant call count, full-width
-    parallel — and the explicit fixed-width repartition satisfies the
-    groupBy clustering so no AQE-coalescible exchange is added. A
-    component always stays whole (grouping is by canonical_id hash)."""
-    n_groups = edges.sparkSession.sparkContext.defaultParallelism
-    grouped = edges.withColumn(
-        "__grp", F.pmod(F.xxhash64("canonical_id"), F.lit(n_groups))
-    ).repartition(n_groups, "__grp")
-    return grouped.groupBy("__grp").applyInPandas(
-        _make_greedy_reject(), StructType([StructField("doc", id_type)])
+    ascending-id greedy over a UNION of disjoint components is identical
+    to running it per component (rejection depends only on a node's own
+    neighbors), so components are hashed into defaultParallelism groups
+    — constant call count, full-width parallel — and the explicit
+    fixed-width repartition satisfies the groupBy clustering so no
+    AQE-coalescible exchange is added. A component always stays whole
+    (grouping is by canonical_id hash)."""
+    comp = dedup_clusters(pairs)  # (doc, canonical_id)
+    edges = pairs.join(comp.withColumnRenamed("doc", "id_a"), "id_a").select(
+        "canonical_id", "id_a", "id_b"
     )
-
-
-def _attach_rejection_flags(
-    edges: DataFrame, store_rejected: DataFrame | None
-) -> DataFrame:
-    """(canonical_id, id_a, id_b) edges + left-joined store-rejection
-    booleans (rej_a, rej_b) — the greedy rejector's input contract."""
     if store_rejected is not None:
         flag = store_rejected.withColumn("rej", F.lit(True))
-        edges = (
-            edges.join(
-                flag.withColumnsRenamed({"doc": "id_a", "rej": "rej_a"}),
-                "id_a",
-                "left",
-            )
-            .join(
-                flag.withColumnsRenamed({"doc": "id_b", "rej": "rej_b"}),
-                "id_b",
-                "left",
-            )
+        edges = edges.join(
+            flag.withColumnsRenamed({"doc": "id_a", "rej": "rej_a"}),
+            "id_a",
+            "left",
+        ).join(
+            flag.withColumnsRenamed({"doc": "id_b", "rej": "rej_b"}),
+            "id_b",
+            "left",
         )
     else:
         edges = edges.withColumns(
             {"rej_a": F.lit(False), "rej_b": F.lit(False)}
         )
-    return edges.select(
+    n_groups = pairs.sparkSession.sparkContext.defaultParallelism
+    grouped = edges.select(
         "canonical_id",
         "id_a",
         "id_b",
         F.coalesce("rej_a", F.lit(False)).alias("rej_a"),
         F.coalesce("rej_b", F.lit(False)).alias("rej_b"),
+        F.pmod(F.xxhash64("canonical_id"), F.lit(n_groups)).alias("__grp"),
+    ).repartition(n_groups, "__grp")
+    return grouped.groupBy("__grp").applyInPandas(
+        _make_greedy_reject(),
+        StructType([StructField("doc", pairs.schema["id_a"].dataType)]),
     )
+
+
+def _admission_filter(
+    stream: DataFrame,
+    output_dir: str,
+    checkpoint_dir: str,
+    text_col: str,
+    id_col: str,
+    n_buckets: int,
+    available_now: bool,
+    sign: Callable[[DataFrame], DataFrame],
+    postings: Callable[[DataFrame], DataFrame],
+    key: str,
+    payload: str,
+    match: Callable[[Column, Column], Column],
+) -> StreamingQuery:
+    """The one foreachBatch body of both admission filters (see the
+    module docstring for the steps). Modality parts: ``sign`` maps
+    (doc, text) rows to (doc, text, ``payload``, …) — its row filter is
+    the admission domain; ``postings`` maps a signed frame to (doc,
+    band_idx, ``key``); ``match`` is the exact verify predicate over two
+    payloads."""
+    corpus_path = os.path.join(output_dir, "corpus")
+    index_path = os.path.join(output_dir, "band_index")
+
+    def process(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        rows = (
+            batch.select(
+                F.col(id_col).alias("doc"), F.col(text_col).alias("text")
+            )
+            .where(F.col("doc").isNotNull() & F.col("text").isNotNull())
+            # exact-text dedup within the batch: smallest id wins (the
+            # same min-per-group rule the admission order below uses)
+            .groupBy("text")
+            .agg(F.min("doc").alias("doc"))
+        )
+        packed = sign(rows).localCheckpoint(eager=True)
+        entries = postings(packed)
+
+        # ---- against the admitted store FIRST (bucket-pruned probes: the
+        # index read touches only the batch's key buckets; the corpus
+        # read only the candidate docs' buckets). Store rejection runs
+        # BEFORE the in-batch greedy so a doc the store rejects never
+        # blocks its in-batch neighbors: if the store holds A and a batch
+        # has B (~A, ~C) and C (!~A), B is store-rejected and C is
+        # admitted — the same outcome as processing one doc per batch.
+        store_rejected: DataFrame | None = None
+        if os.path.isdir(index_path):
+            index = read_bucket_pruned(
+                spark, index_path, key,
+                entries.select(key).distinct(), n_buckets,
+            )
+            cand_store = _band_candidates(entries, key, store=index)
+            stored = read_bucket_pruned(
+                spark, corpus_path, "doc",
+                cand_store.select(F.col("id_b").alias("doc")).distinct(),
+                n_buckets,
+            )
+            store_rejected = (
+                _pair_payloads(cand_store, packed, stored, payload)
+                .where(match(F.col("pa"), F.col("pb")))
+                .select(F.col("id_a").alias("doc"))
+                .distinct()
+                # feeds both the greedy exclusion flags and the anti-join
+                .localCheckpoint(eager=True)
+            )
+
+        # ---- within-batch TRUE greedy admission over the verified
+        # in-batch pair graph (_greedy_rejects): in a chain A~B, B~C
+        # (A!~C), greedy admits A, rejects B, and admits C — C's only
+        # match (B) never entered the corpus. Combined with the store
+        # pass above this is exactly one-doc-per-batch sequential
+        # admission, so the outcome is independent of both partitioning
+        # and batch boundaries.
+        verified = (
+            _pair_payloads(
+                _band_candidates(entries, key), packed, packed, payload
+            )
+            .where(match(F.col("pa"), F.col("pb")))
+            .select("id_a", "id_b")
+            .distinct()
+            .localCheckpoint(eager=True)  # feeds CC rounds AND the group
+        )
+        survivors = packed.join(
+            _greedy_rejects(verified, store_rejected), "doc", "left_anti"
+        )
+        if store_rejected is not None:
+            survivors = survivors.join(store_rejected, "doc", "left_anti")
+
+        survivors = survivors.localCheckpoint(eager=True)
+        insert_if_absent(
+            spark,
+            survivors.select("doc", "text", payload),
+            corpus_path,
+            ["doc"],
+            bucket_key="doc",
+            n_buckets=n_buckets,
+        )
+        insert_if_absent(
+            spark,
+            postings(survivors).select("band_idx", key, "doc"),
+            index_path,
+            ["band_idx", key, "doc"],
+            bucket_key=key,
+            n_buckets=n_buckets,
+        )
+
+    writer = stream.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def incremental_near_dup_filter(
@@ -217,166 +319,42 @@ def incremental_near_dup_filter(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Admit streamed documents unless they near-duplicate (shingle
-    Jaccard ≥ threshold via MinHash-LSH candidates, exactly verified)
-    anything already admitted. See module docstring for the state layout
-    and idempotence argument."""
+    Jaccard ≥ threshold via MinHash-LSH candidates, exactly verified on
+    the rounded Jaccard) anything already admitted. The domain is every
+    non-blank doc, as in :func:`minhash_greedy_admission`: a doc with
+    fewer than ``shingle_n`` tokens has no band postings, pairs with
+    nothing, and is admitted unless an exact-text duplicate. See the
+    module docstring for the state layout and idempotence argument."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
-    corpus_path = os.path.join(output_dir, "corpus")
-    index_path = os.path.join(output_dir, "band_index")
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        rows = (
-            batch.select(
-                F.col(id_col).alias("doc"), F.col(text_col).alias("text")
-            )
-            .where(F.col("doc").isNotNull() & F.col("text").isNotNull())
-            # exact-text dedup within the batch: smallest id wins (the
-            # same min-per-group rule the admission order below uses)
-            .groupBy("text")
-            .agg(F.min("doc").alias("doc"))
-        )
-        packed = rows.select(
-            "doc",
-            "text",
-            bind_once(
-                token_hashes(F.col("text")),
-                lambda th: bind_once(
-                    shingle_hashes_from(th, shingle_n),
-                    lambda sh: F.struct(
-                        F.array_distinct(sh).alias("sh"),
-                        minhash_signature(sh, num_hashes).alias("sig"),
-                    ),
+    def sign(rows: DataFrame) -> DataFrame:
+        return (
+            rows.where(F.length(F.trim("text")) > 0)
+            .select(
+                "doc",
+                "text",
+                _minhash_pack(F.col("text"), num_hashes, shingle_n).alias(
+                    "pack"
                 ),
-            ).alias("pack"),
-        ).select(
-            "doc", "text", F.col("pack.sh").alias("sh"),
-            F.col("pack.sig").alias("sig"),
-        ).where(F.size("sh") > 0).localCheckpoint(eager=True)
-
-        entries = _band_entries(packed, num_hashes, bands)
-
-        # ---- against the admitted store FIRST (bucket-pruned probes: the
-        # index read touches only the batch's band-hash buckets; the
-        # corpus read only the candidate docs' buckets). Store rejection
-        # runs BEFORE the in-batch greedy so a doc the store rejects never
-        # blocks its in-batch neighbors: if the store holds A and a batch
-        # has B (~A, ~C) and C (!~A), B is store-rejected and C is
-        # admitted — the same outcome as processing one doc per batch.
-        store_rejected: DataFrame | None = None
-        if os.path.isdir(index_path):
-            index = read_bucket_pruned(
-                spark, index_path, "band_hash",
-                entries.select("band_hash").distinct(), n_buckets,
             )
-            cand_store = (
-                entries.alias("n")
-                .join(
-                    index.alias("s"),
-                    (F.col("n.band_idx") == F.col("s.band_idx"))
-                    & (F.col("n.band_hash") == F.col("s.band_hash"))
-                    & (F.col("n.doc") != F.col("s.doc")),
-                )
-                .select(
-                    F.col("n.doc").alias("doc"),
-                    F.col("s.doc").alias("admitted_doc"),
-                )
-                .distinct()
+            .select(
+                "doc",
+                "text",
+                F.array_distinct("pack.sh").alias("sh"),
+                F.col("pack.sig").alias("sig"),
             )
-            admitted_sh = read_bucket_pruned(
-                spark, corpus_path, "doc",
-                cand_store.select(
-                    F.col("admitted_doc").alias("doc")
-                ).distinct(),
-                n_buckets,
-            ).select(F.col("doc").alias("admitted_doc"),
-                     F.col("sh").alias("sh_s"))
-            store_rejected = (
-                cand_store.join(admitted_sh, "admitted_doc")
-                .join(packed.select("doc", "sh"), "doc")
-                .where(_jaccard("sh", "sh_s") >= jaccard_threshold)
-                .select("doc")
-                .distinct()
-                # feeds both the greedy exclusion flags and the anti-join
-                .localCheckpoint(eager=True)
-            )
-
-        # ---- within-batch TRUE greedy admission, in ascending-id order:
-        # a doc is rejected iff it verified-near-matches a smaller doc
-        # that was itself ADMITTED (store-rejected docs are never admitted
-        # and never block). In a chain A~B, B~C (A!~C), greedy admits A,
-        # rejects B, and admits C — C's only match (B) never entered the
-        # corpus. Combined with the store pass above this is exactly
-        # one-doc-per-batch sequential admission, so the outcome is
-        # independent of both partitioning and batch boundaries.
-        # Sequential greedy = lexicographically-first maximal independent
-        # set — inherently iterative, so it runs per CONNECTED COMPONENT
-        # via applyInPandas (components of the verified near-dup graph
-        # are tiny and independent; the corpus-scale work stays in the
-        # LSH join above). Deterministic regardless of partitioning.
-        a, b = entries.alias("a"), entries.alias("b")
-        cand_in = (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-            .distinct()
-        )
-        sh = packed.select("doc", "sh")
-        verified = (
-            cand_in.join(
-                sh.withColumnsRenamed({"doc": "id_a", "sh": "sh_a"}), "id_a"
-            )
-            .join(sh.withColumnsRenamed({"doc": "id_b", "sh": "sh_b"}), "id_b")
-            .where(_jaccard("sh_a", "sh_b") >= jaccard_threshold)
-            .select("id_a", "id_b")
-            .distinct()
-            .localCheckpoint(eager=True)  # feeds CC rounds AND the group
-        )
-        comp = dedup_clusters(verified)  # (doc, canonical_id)
-        edges = _attach_rejection_flags(
-            verified.join(
-                comp.withColumnRenamed("doc", "id_a"), "id_a"
-            ).select("canonical_id", "id_a", "id_b"),
-            store_rejected,
         )
 
-        id_type = packed.schema["doc"].dataType
-        drop_in = _grouped_greedy_drop(edges, id_type)
-        survivors = packed.join(drop_in, "doc", "left_anti")
-        if store_rejected is not None:
-            survivors = survivors.join(store_rejected, "doc", "left_anti")
-
-        survivors = survivors.localCheckpoint(eager=True)
-        insert_if_absent(
-            spark,
-            survivors.select("doc", "text", "sh"),
-            corpus_path,
-            ["doc"],
-            bucket_key="doc",
-            n_buckets=n_buckets,
-        )
-        insert_if_absent(
-            spark,
-            _band_entries(survivors, num_hashes, bands).select(
-                "band_idx", "band_hash", "doc"
-            ),
-            index_path,
-            ["band_idx", "band_hash", "doc"],
-            bucket_key="band_hash",
-            n_buckets=n_buckets,
-        )
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _admission_filter(
+        stream, output_dir, checkpoint_dir, text_col, id_col, n_buckets,
+        available_now,
+        sign=sign,
+        postings=lambda f: _minhash_band_entries(f, num_hashes, bands),
+        key="band_hash",
+        payload="sh",
+        match=lambda a, b: _jaccard(a, b) >= jaccard_threshold,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def incremental_perceptual_filter(
@@ -394,173 +372,45 @@ def incremental_perceptual_filter(
     """Streaming PERCEPTUAL admission (r11, VERDICT r10 item 8): admit a
     payload unless its aHash signature is within ``hamming_max`` bits of
     anything already admitted — the phash modality of
-    :func:`incremental_near_dup_filter`, sharing its store layout,
-    store-rejection-first ordering, per-component true-greedy, and
-    replay idempotence (see the module docstring; every argument there
-    carries over with "band word" for "band hash" and "Hamming verify"
-    for "exact Jaccard").
+    :func:`incremental_near_dup_filter`, running the same
+    ``_admission_filter`` body with "band word" for "band hash" and
+    "Hamming verify" for "exact Jaccard".
 
-    State under ``output_dir``:
-    - ``corpus/``     — admitted ``(doc, text, sig)`` where ``sig`` is
-      the full phash band-word array (the Hamming-verify side),
-      hash-bucketed by doc.
-    - ``band_index/`` — ``(band_idx, band_word, doc)`` postings, one per
-      signature band, hash-bucketed by band_word. A batch probes ONLY
-      the buckets its own band words fall in.
+    State under ``output_dir``: ``corpus/`` holds admitted ``(doc, text,
+    sig)`` where ``sig`` is the full aHash band-word array;
+    ``band_index/`` holds ``(band_idx, band_word, doc)`` postings, one
+    per signature band, hash-bucketed by band_word.
 
-    The signature is the same JVM column algebra as
-    ``llm_ops.dedup.phash_band_signatures`` (bind_once-bound byte grid,
+    The signature is the aHash column algebra of
+    ``llm_ops.dedup.perceptual_signatures`` (bind_once-bound byte grid,
     integer mean-threshold bits) — the batch pays one projection, no
     Python, and the per-batch cost is O(batch × colliding-band rows),
     never O(corpus).
     """
-    from synthea2omop_etl_spark.llm_ops.dedup import (
-        _ahash_words,
-        _byte_grid,
-        _hamming,
-    )
-
     if cells % bands:
         raise ValueError("bands must divide cells")
-    corpus_path = os.path.join(output_dir, "corpus")
-    index_path = os.path.join(output_dir, "band_index")
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        rows = (
-            batch.select(
-                F.col(id_col).alias("doc"), F.col(text_col).alias("text")
-            )
-            .where(F.col("doc").isNotNull() & F.col("text").isNotNull())
-            # exact-payload dedup within the batch: smallest id wins
-            .groupBy("text")
-            .agg(F.min("doc").alias("doc"))
+    def sign(rows: DataFrame) -> DataFrame:
+        return rows.where(F.length("text") > 0).select(
+            "doc",
+            "text",
+            bind_once(
+                _byte_grid(F.col("text"), cells),
+                lambda g: _ahash_words(g, cells, bands),
+            ).alias("sig"),
         )
-        packed = (
-            rows.where(F.length("text") > 0)
-            .select(
-                "doc",
-                "text",
-                bind_once(
-                    _byte_grid(F.col("text"), cells),
-                    lambda g: _ahash_words(g, cells, bands),
-                ).alias("sig"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        entries = packed.select(
+
+    return _admission_filter(
+        stream, output_dir, checkpoint_dir, text_col, id_col, n_buckets,
+        available_now,
+        sign=sign,
+        postings=lambda f: f.select(
             "doc", F.posexplode("sig").alias("band_idx", "band_word")
-        )
-
-        # ---- against the admitted store FIRST (bucket-pruned probes;
-        # rejection ordering identical to the MinHash filter)
-        store_rejected: DataFrame | None = None
-        if os.path.isdir(index_path):
-            index = read_bucket_pruned(
-                spark, index_path, "band_word",
-                entries.select("band_word").distinct(), n_buckets,
-            )
-            cand_store = (
-                entries.alias("n")
-                .join(
-                    index.alias("s"),
-                    (F.col("n.band_idx") == F.col("s.band_idx"))
-                    & (F.col("n.band_word") == F.col("s.band_word"))
-                    & (F.col("n.doc") != F.col("s.doc")),
-                )
-                .select(
-                    F.col("n.doc").alias("doc"),
-                    F.col("s.doc").alias("admitted_doc"),
-                )
-                .distinct()
-            )
-            admitted_sig = read_bucket_pruned(
-                spark, corpus_path, "doc",
-                cand_store.select(
-                    F.col("admitted_doc").alias("doc")
-                ).distinct(),
-                n_buckets,
-            ).select(
-                F.col("doc").alias("admitted_doc"),
-                F.col("sig").alias("sig_s"),
-            )
-            store_rejected = (
-                cand_store.join(admitted_sig, "admitted_doc")
-                .join(packed.select("doc", "sig"), "doc")
-                .where(_hamming("sig", "sig_s") <= hamming_max)
-                .select("doc")
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-
-        # ---- within-batch true greedy over the Hamming-verified graph
-        a, b = entries.alias("a"), entries.alias("b")
-        cand_in = (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_word") == F.col("b.band_word"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .select(
-                F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b")
-            )
-            .distinct()
-        )
-        sg = packed.select("doc", "sig")
-        verified = (
-            cand_in.join(
-                sg.withColumnsRenamed({"doc": "id_a", "sig": "sig_a"}),
-                "id_a",
-            )
-            .join(
-                sg.withColumnsRenamed({"doc": "id_b", "sig": "sig_b"}),
-                "id_b",
-            )
-            .where(_hamming("sig_a", "sig_b") <= hamming_max)
-            .select("id_a", "id_b")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        comp = dedup_clusters(verified)
-        edges = _attach_rejection_flags(
-            verified.join(
-                comp.withColumnRenamed("doc", "id_a"), "id_a"
-            ).select("canonical_id", "id_a", "id_b"),
-            store_rejected,
-        )
-        id_type = packed.schema["doc"].dataType
-        drop_in = _grouped_greedy_drop(edges, id_type)
-        survivors = packed.join(drop_in, "doc", "left_anti")
-        if store_rejected is not None:
-            survivors = survivors.join(store_rejected, "doc", "left_anti")
-
-        survivors = survivors.localCheckpoint(eager=True)
-        insert_if_absent(
-            spark,
-            survivors.select("doc", "text", "sig"),
-            corpus_path,
-            ["doc"],
-            bucket_key="doc",
-            n_buckets=n_buckets,
-        )
-        insert_if_absent(
-            spark,
-            survivors.select(
-                F.posexplode("sig").alias("band_idx", "band_word"), "doc"
-            ),
-            index_path,
-            ["band_idx", "band_word", "doc"],
-            bucket_key="band_word",
-            n_buckets=n_buckets,
-        )
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        key="band_word",
+        payload="sig",
+        match=lambda a, b: _hamming(a, b) <= hamming_max,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def perceptual_greedy_admission(
@@ -671,22 +521,12 @@ def admission_component_sizes(
 def _admission_over_pairs(
     base: DataFrame, pairs: DataFrame, id_col: str
 ) -> DataFrame:
-    """Shared admission stage: (id_a < id_b) verified pairs → connected
-    components → per-component-GROUP applyInPandas sequential greedy
-    (the rejector the streaming filters ship) → admitted flags joined
-    back onto the doc domain. Docs in no pair never enter the Python
-    path — they are admitted by the left join."""
+    """Shared batch admission stage: (id_a < id_b) verified pairs →
+    :func:`_greedy_rejects` (the greedy the streaming filters run) →
+    admitted flags joined back onto the doc domain. Docs in no pair
+    never enter the Python path — they are admitted by the left join."""
     pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
-    comp = dedup_clusters(pairs)
-    edges = _attach_rejection_flags(
-        pairs.join(comp.withColumnRenamed("doc", "id_a"), "id_a").select(
-            "canonical_id", "id_a", "id_b"
-        ),
-        None,
-    )
-    id_type = base.schema[id_col].dataType
-    drop = _grouped_greedy_drop(edges, id_type)
-    flag = drop.select(
+    flag = _greedy_rejects(pairs).select(
         F.col("doc").alias(id_col), F.lit(1).alias("__rej")
     )
     return base.join(flag, id_col, "left").select(

@@ -185,3 +185,41 @@ def test_rejects_bands_divisibility(spark, dirs):
         incremental_near_dup_filter(
             stream, out, ckpt, num_hashes=10, bands=4
         )
+
+
+def test_stream_matches_batch_twin(spark, dirs):
+    """The stream admits exactly what its batch twin
+    (minhash_greedy_admission) admits: docs shorter than shingle_n
+    tokens are admitted (no postings, no pairs), a blank doc is outside
+    the domain, and the verify compares the Jaccard rounded to 4 places
+    — 2/3 rounds to 0.6667, which clears 0.66667, so the longer doc of
+    the pair is rejected."""
+    from synthea2omop_etl_spark.streaming.dedup import (
+        minhash_greedy_admission,
+    )
+
+    rows = [
+        (1, "hello world"),
+        (2, "just two"),
+        (3, "one two three four five six seven eight nine ten eleven "
+            "twelve"),
+        (4, "x"),
+        (5, "   "),
+        (6, "alpha beta gamma delta"),
+        (7, "alpha beta gamma delta epsilon"),
+    ]
+    src, out, ckpt = dirs
+    _feed(spark, src, "w1", rows)
+    stream = spark.readStream.schema("doc_id BIGINT, text STRING").parquet(src)
+    q = incremental_near_dup_filter(
+        stream, out, ckpt, jaccard_threshold=0.66667, n_buckets=8
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    twin = minhash_greedy_admission(
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        jaccard_threshold=0.66667,
+    )
+    expected = {r.doc_id for r in twin.collect() if r.admitted == 1}
+    assert expected == {1, 2, 3, 4, 6}
+    assert set(_admitted(spark, out)) == expected
