@@ -3,16 +3,11 @@ from synthea2omop_etl_spark.analytics.achilles_catalog import (  # noqa: F401
     run_default_analyses,
 )
 from synthea2omop_etl_spark.analytics.achilles_lite import (  # noqa: F401
-    age_at_first_observation,
     age_decile_distribution,
-    concept_distribution,
     drug_strength_rollup,
     list_tables,
     monthly_trend,
-    record_counts,
     records_per_person_distribution,
     run_sql,
     table_page,
-    top_k_concepts,
-    visit_duration_distribution,
 )

@@ -32,8 +32,10 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from synthea2omop_etl_spark.derived.eras import condition_era, drug_era
 from synthea2omop_etl_spark.functions import age_in_years
 from synthea2omop_etl_spark.operators.timeseries import _floor_round
+from synthea2omop_etl_spark.schemas import OMOP_FACTS, OmopFact
 
 #: analysis_id → human name (subset of the Achilles default catalog the
 #: reference's query script consumes, plus the standard per-domain trio).
@@ -256,133 +258,23 @@ ANALYSIS_NAMES: dict[int, str] = {
     1506: "Total-cost distribution, by cost domain",
 }
 
-#: (records analysis_id, persons analysis_id, month analysis_id,
-#:  per-person dist analysis_id, concept×gender analysis_id,
-#:  type analysis_id, type-concept col, omop key, concept col, date col)
-#: — per fact domain, the records/persons/month/gender/type COUNT
-#: analyses run as ONE fused grouping-sets pass (see
-#: ``_fused_domain_counts``); the per-person dist keeps its own
-#: aggregate (different reducer).
-_DOMAIN_SPECS = [
-    (201, 200, 202, 203, 204, 205, "visit_type_concept_id",
-     "omop_visit_occurrence", "visit_concept_id", "visit_start_date"),
-    (401, 400, 402, 403, 404, 405, "condition_type_concept_id",
-     "omop_condition_occurrence", "condition_concept_id",
-     "condition_start_date"),
-    (601, 600, 602, 603, 604, 605, "procedure_type_concept_id",
-     "omop_procedure_occurrence", "procedure_concept_id",
-     "procedure_date"),
-    (701, 700, 702, 703, 704, 705, "drug_type_concept_id",
-     "omop_drug_exposure", "drug_concept_id",
-     "drug_exposure_start_date"),
-    # observation/measurement stratify on source_value: the pipeline leaves
-    # concept mapping to operators/concepts.py (3-stage apply), so the
-    # unmapped outputs carry source codes — exactly what Achilles shows
-    # when a vocabulary isn't loaded.
-    (801, 800, 802, 803, 804, 805, "observation_type_concept_id",
-     "omop_observation", "observation_source_value", "observation_date"),
-    (1801, None, 1802, 1803, 1804, 1805, "measurement_type_concept_id",
-     "omop_measurement", "measurement_source_value", "measurement_date"),
-    (2101, 2100, 2102, 2103, 2104, 2105, "device_type_concept_id",
-     "omop_device_exposure", "device_source_value",
-     "device_exposure_start_date"),
-]
+#: the death-proximity ids (511-515, outside the B+offset grid): days from
+#: the last event of each of these fact tables to death
+_DEATH_GAP_IDS = {
+    "condition_occurrence": 511,
+    "drug_exposure": 512,
+    "visit_occurrence": 513,
+    "procedure_occurrence": 514,
+    "observation": 515,
+}
 
-#: (analysis_id, omop key, type-concept column) — the x05 "records by type
-#: concept" analyses over NON-fact tables (the fact domains' type counts
-#: ride the fused pass above).
-_TYPE_SPECS = [
-    (505, "omop_death", "death_type_concept_id"),
-    (119, "omop_observation_period", "period_type_concept_id"),
-]
-
-#: (analysis_id, omop key, concept column, date column) — the x06 "age at
-#: first occurrence distribution, by concept" sub-series.
-_AGE_AT_FIRST_SPECS = [
-    (206, "omop_visit_occurrence", "visit_concept_id", "visit_start_date"),
-    (406, "omop_condition_occurrence", "condition_concept_id", "condition_start_date"),
-    (606, "omop_procedure_occurrence", "procedure_concept_id", "procedure_date"),
-    (706, "omop_drug_exposure", "drug_concept_id", "drug_exposure_start_date"),
-    (806, "omop_observation", "observation_source_value", "observation_date"),
-    (1806, "omop_measurement", "measurement_source_value", "measurement_date"),
-    (2106, "omop_device_exposure", "device_source_value",
-     "device_exposure_start_date"),
-]
-
-#: (analysis_id, omop key, event date column) — the 51x "days from last
-#: domain event to death" dist sub-series (Achilles' death-proximity
-#: family): per deceased person, datediff(death_date, max(event_date)).
-_DEATH_GAP_SPECS = [
-    (511, "omop_condition_occurrence", "condition_start_date"),
-    (512, "omop_drug_exposure", "drug_exposure_start_date"),
-    (513, "omop_visit_occurrence", "visit_start_date"),
-    (514, "omop_procedure_occurrence", "procedure_date"),
-    (515, "omop_observation", "observation_date"),
-]
-
-#: (invalid-person analysis_id, end<start analysis_id (None when the
-#: domain has no end date), omop key, start col, end col) — the x07/x09
-#: data-quality sub-series each Achilles domain family repeats. The
-#: pipeline's own outputs satisfy both invariants by construction (FKs
-#: come from the id maps; era/date logic never inverts), so these emit
-#: count 0 there — they exist for externally-loaded CDM data, exactly
-#: like Achilles.
-_DQ_SPECS = [
-    (207, 209, "omop_visit_occurrence", "visit_start_date",
-     "visit_end_date"),
-    (407, 409, "omop_condition_occurrence", "condition_start_date",
-     "condition_end_date"),
-    (607, None, "omop_procedure_occurrence", "procedure_date", None),
-    (707, 709, "omop_drug_exposure", "drug_exposure_start_date",
-     "drug_exposure_end_date"),
-    (807, None, "omop_observation", "observation_date", None),
-    (1807, None, "omop_measurement", "measurement_date", None),
-    (2107, 2109, "omop_device_exposure", "device_exposure_start_date",
-     "device_exposure_end_date"),
-]
-
-#: (analysis_id, omop key, event date column) — the x10 "records outside
-#: a valid observation period" DQ sub-series: a record is a violation
-#: when its date is inside NONE of its person's observation periods
-#: (anti-join on person + date-containment; the period table is
-#: person-sized, far below any fact table).
-_OUTSIDE_PERIOD_SPECS = [
-    (210, "omop_visit_occurrence", "visit_start_date"),
-    (410, "omop_condition_occurrence", "condition_start_date"),
-    (610, "omop_procedure_occurrence", "procedure_date"),
-    (710, "omop_drug_exposure", "drug_exposure_start_date"),
-    (810, "omop_observation", "observation_date"),
-    (1810, "omop_measurement", "measurement_date"),
-    (2110, "omop_device_exposure", "device_exposure_start_date"),
-    (510, "omop_death", "death_date"),
-]
-
-#: (analysis_id, omop key) — the x13 "records with invalid
-#: visit_occurrence_id" DQ sub-series (non-NULL FK not present in
-#: visit_occurrence; NULL visit links are legitimate, not orphans).
-_INVALID_VISIT_SPECS = [
-    (413, "omop_condition_occurrence"),
-    (613, "omop_procedure_occurrence"),
-    (713, "omop_drug_exposure"),
-    (813, "omop_observation"),
-    (1813, "omop_measurement"),
-]
-
-#: (omop key, date column) — the 1900 temporal record-density sweep
-#: (stratum_1 = CDM table, stratum_2 = yyyyMM).
-_TEMPORAL_SPECS = [
-    ("omop_visit_occurrence", "visit_start_date"),
-    ("omop_condition_occurrence", "condition_start_date"),
-    ("omop_procedure_occurrence", "procedure_date"),
-    ("omop_drug_exposure", "drug_exposure_start_date"),
-    ("omop_observation", "observation_date"),
-    ("omop_measurement", "measurement_date"),
-    ("omop_device_exposure", "device_exposure_start_date"),
-    ("omop_death", "death_date"),
-    ("omop_observation_period", "observation_period_start_date"),
-]
-
-_RESULT_COLS = ["analysis_id", "stratum_1", "stratum_2", "count_value"]
+#: (family base, era table, the fact table an exposure-only dict derives
+#: it from, the derivation) — the era families re-instantiate the fact
+#: grid over derived eras
+_ERA_FAMILIES = (
+    (900, "drug_era", "drug_exposure", drug_era),
+    (1000, "condition_era", "condition_occurrence", condition_era),
+)
 
 
 def _person_scale(df: DataFrame) -> DataFrame:
@@ -426,16 +318,7 @@ def _result(analysis_id: int, df: DataFrame, s1=None, s2=None) -> DataFrame:
 
 
 def _fused_domain_counts(
-    df: DataFrame,
-    gender: DataFrame,
-    rec_id: int,
-    per_id: int | None,
-    mon_id: int,
-    x04_id: int,
-    type_id: int | None,
-    type_col: str | None,
-    concept_col: str,
-    date_col: str,
+    df: DataFrame, gender: DataFrame, fact: OmopFact
 ) -> list[DataFrame]:
     """All of a fact domain's COUNT analyses from ONE grouping-sets pass.
 
@@ -455,16 +338,18 @@ def _fused_domain_counts(
     person-orphan rows from the record counts); the x04 slice filters
     NULL gender, reproducing the previous inner-join semantics exactly.
     """
+    base = fact.achilles_base
+    has_type = fact.type in df.columns
     strata = [
-        F.col(concept_col).cast("string").alias("__c"),
-        _month(date_col).alias("__m"),
+        F.col(fact.stratum).cast("string").alias("__c"),
+        _month(fact.start).alias("__m"),
         (
-            F.col(type_col).cast("string")
-            if type_id and type_col in df.columns
+            F.col(fact.type).cast("string")
+            if has_type
             else F.lit(None).cast("string")
         ).alias("__t"),
     ]
-    base = df.select("person_id", *strata).join(
+    base_rows = df.select("person_id", *strata).join(
         _person_scale(
             gender.select(
                 "person_id", F.col("gender_concept_id").alias("__g")
@@ -474,13 +359,13 @@ def _fused_domain_counts(
         "left",
     )
     sets = [["__c"], ["__m"], ["__c", "__g"]]
-    if type_id and type_col in df.columns:
+    if has_type:
         sets.append(["__t"])
     # grouping_id bit order follows the column argument order (__c, __m,
     # __g, __t), missing column = 1: {__c}→0111=7, {__m}→1011=11,
     # {__c,__g}→0101=5, {__t}→1110=14. Verified by test.
     agg = (
-        base.groupingSets(sets, "__c", "__m", "__g", "__t")
+        base_rows.groupingSets(sets, "__c", "__m", "__g", "__t")
         .agg(
             F.count(F.lit(1)).alias("__n"),
             F.countDistinct("person_id").alias("__np"),
@@ -500,20 +385,21 @@ def _fused_domain_counts(
             F.col(count_col).alias("count_value"),
         )
 
-    out = [rows(7, rec_id, F.col("__c"), None, "__n")]
-    if per_id is not None:
-        out.append(rows(7, per_id, F.col("__c"), None, "__np"))
-    out.append(rows(11, mon_id, F.col("__m"), None, "__n"))
+    out = [rows(7, base + 1, F.col("__c"), None, "__n")]
+    # the grid emits registered ids only: measurement has no 1800 here
+    if base in ANALYSIS_NAMES:
+        out.append(rows(7, base, F.col("__c"), None, "__np"))
+    out.append(rows(11, base + 2, F.col("__m"), None, "__n"))
     out.append(
         agg.where((F.col("__gid") == 5) & F.col("__g").isNotNull()).select(
-            F.lit(x04_id).alias("analysis_id"),
+            F.lit(base + 4).alias("analysis_id"),
             F.col("__c").cast("string").alias("stratum_1"),
             F.col("__g").cast("string").alias("stratum_2"),
             F.col("__n").alias("count_value"),
         )
     )
-    if type_id and type_col in df.columns:
-        out.append(rows(14, type_id, F.col("__t"), None, "__n"))
+    if has_type:
+        out.append(rows(14, base + 5, F.col("__t"), None, "__n"))
     return out
 
 
@@ -585,6 +471,55 @@ def _dist(
     )
 
 
+def _per_person(analysis_id: int, df: DataFrame, mode: str) -> DataFrame:
+    """The x03 shape: records-per-person distribution."""
+    n = df.groupBy("person_id").agg(F.count(F.lit(1)).alias("n"))
+    return _dist(analysis_id, n, "n", mode)
+
+
+def _age_at_first(
+    analysis_id: int, df: DataFrame, concept_col: str, date_col: str,
+    bd: DataFrame, mode: str,
+) -> DataFrame:
+    """The x06 shape: age at first occurrence, by concept. Per
+    person×concept min-date, then a join to the (persons-sized, far
+    smaller than facts) birth-date slice — one shuffle per table."""
+    firsts = df.groupBy("person_id", F.col(concept_col).alias("c")).agg(
+        F.min(date_col).alias("first_date")
+    )
+    return _dist(
+        analysis_id,
+        firsts.join(_person_scale(bd), "person_id").select(
+            "c", age_in_years(F.col("first_date"), F.col("bd")).alias("age")
+        ),
+        "age",
+        mode,
+        s1=F.col("c"),
+    )
+
+
+def _outside_periods(
+    df: DataFrame, date_col: str, op_ranges: DataFrame
+) -> DataFrame:
+    """Records whose date lies inside NONE of their person's observation
+    periods (the x10 / 510 / 909 / 1009 check): one anti-join on person +
+    date-containment against the person-sized period ranges."""
+    return df.join(
+        op_ranges,
+        (df["person_id"] == F.col("__pid"))
+        & (F.col(date_col) >= F.col("__ops"))
+        & (F.col(date_col) <= F.col("__ope")),
+        "left_anti",
+    )
+
+
+def _density(table: str, df: DataFrame, date_col: str) -> DataFrame:
+    """1900 temporal record density: records per CDM table per calendar
+    month (the Atlas data-density report); stratum_1 = table, stratum_2 =
+    yyyyMM — one map-side-combinable aggregate per table."""
+    return _result(1900, df, F.lit(table), _month(date_col))
+
+
 def run_default_analyses(
     omop: dict[str, DataFrame],
     mode: str = "exact",
@@ -620,6 +555,11 @@ def run_default_analyses(
     ]
     dists: list[DataFrame] = []
     person_ids = person.select("person_id")
+    gender = person.select("person_id", "gender_concept_id")
+    bd = person.select(
+        "person_id", F.to_date("birth_datetime").alias("bd")
+    )
+    vo = omop.get("omop_visit_occurrence")
 
     # 7/8/9: person FK validity — emitted only when BOTH the FK column
     # and its dimension table exist in this CDM (registered-empty
@@ -642,13 +582,23 @@ def run_default_analyses(
             )
 
     op = omop.get("omop_observation_period")
+    op_ranges = None
     if op is not None:
+        op_ranges = op.select(
+            F.col("person_id").alias("__pid"),
+            F.col("observation_period_start_date").alias("__ops"),
+            F.col("observation_period_end_date").alias("__ope"),
+        )
+        results.append(_result(119, op, F.col("period_type_concept_id")))
+        results.append(
+            _density(
+                "observation_period", op, "observation_period_start_date"
+            )
+        )
         first = op.groupBy("person_id").agg(
             F.min("observation_period_start_date").alias("first_obs")
         )
-        ages = person.select(
-            "person_id", F.to_date("birth_datetime").alias("bd")
-        ).join(first, "person_id")
+        ages = bd.join(first, "person_id")
         results.append(
             _result(
                 101,
@@ -715,12 +665,7 @@ def run_default_analyses(
         dists.append(
             _dist(
                 106,
-                op.join(
-                    _person_scale(
-                        person.select("person_id", "gender_concept_id")
-                    ),
-                    "person_id",
-                ).select(
+                op.join(_person_scale(gender), "person_id").select(
                     "gender_concept_id",
                     F.datediff(
                         "observation_period_end_date",
@@ -799,14 +744,7 @@ def run_default_analyses(
             )
         )
         # 113: observation periods per person (dist)
-        dists.append(
-            _dist(
-                113,
-                op.groupBy("person_id").agg(F.count(F.lit(1)).alias("n")),
-                "n",
-                mode,
-            )
-        )
+        dists.append(_per_person(113, op, mode))
         # Coverage calendar: explode the BOUNDED year/month sequence each
         # period spans (tens of elements per row, never a cross join) —
         # 109/110 count full-year/full-month continuous coverage, 116/117
@@ -878,24 +816,19 @@ def run_default_analyses(
         )
 
     death = omop.get("omop_death")
+    death_dates = None
     if death is not None:
         results.append(_result(500, death.select("person_id").distinct()))
         results.append(_result(501, death, _month("death_date")))
         # 502: distinct persons with death, by death month (501's person
-        # twin); 504: persons with death by calendar year × gender; 509:
-        # the death table's own invalid-person DQ row (the x07 shape).
-        # 510 (outside a valid observation period) rides the
-        # _OUTSIDE_PERIOD_SPECS sweep below.
+        # twin); 504: persons with death by calendar year × gender; 505:
+        # records by death type; 509/510: the death table's own
+        # invalid-person and outside-observation-period DQ rows.
         results.append(_persons_result(502, death, _month("death_date")))
         results.append(
             _result(
                 504,
-                death.join(
-                    _person_scale(
-                        person.select("person_id", "gender_concept_id")
-                    ),
-                    "person_id",
-                )
+                death.join(_person_scale(gender), "person_id")
                 .select(
                     "person_id",
                     F.year("death_date").alias("__yr"),
@@ -906,9 +839,15 @@ def run_default_analyses(
                 F.col("__g"),
             )
         )
+        results.append(_result(505, death, F.col("death_type_concept_id")))
         results.append(
             _result(509, death.join(person_ids, "person_id", "left_anti"))
         )
+        if op is not None:
+            results.append(
+                _result(510, _outside_periods(death, "death_date", op_ranges))
+            )
+        results.append(_density("death", death, "death_date"))
         # 506: age at death, by gender (dist)
         dists.append(
             _dist(
@@ -933,34 +872,11 @@ def run_default_analyses(
                 s1=F.col("gender_concept_id"),
             )
         )
-        # 511-515: days from each domain's LAST event to death (the
-        # death-proximity dist family). Per fact table: one keyed
-        # max-date aggregate (single shuffle), then a join to the
-        # deaths slice — person-scale, so NO forced broadcast hint
-        # (the r11 rehearsal showed forced hints throw past driver
-        # memory at 100x); AQE broadcasts at runtime while the slice
-        # is actually small.
+        # the 511-515 death-proximity dists join this slice — person-scale,
+        # so NO forced broadcast hint (the r11 rehearsal showed forced
+        # hints throw past driver memory at 100x); AQE broadcasts at
+        # runtime while the slice is actually small.
         death_dates = _person_scale(death.select("person_id", "death_date"))
-        for gid, key, dcol in _DEATH_GAP_SPECS:
-            fact = omop.get(key)
-            if fact is None:
-                continue
-            last = fact.groupBy("person_id").agg(
-                F.max(dcol).alias("last_date")
-            )
-            dists.append(
-                _dist(
-                    gid,
-                    last.join(death_dates, "person_id").select(
-                        F.datediff("death_date", "last_date").alias("d")
-                    ),
-                    "d",
-                    mode,
-                    # a domain with no deceased persons' rows would emit a
-                    # count-0/NULL-stats row from the global groupBy;
-                    # Achilles emits nothing for an empty analysis
-                ).where(F.col("count_value") > 0)
-            )
 
     # 300-series: provider analyses (provider dim is tiny — the visit join
     # broadcasts it; stratum is the specialty source value, like the
@@ -971,12 +887,11 @@ def run_default_analyses(
         results.append(
             _result(301, prov, F.col("specialty_source_value"))
         )
-        vo_p = omop.get("omop_visit_occurrence")
-        if vo_p is not None:
+        if vo is not None:
             results.append(
                 _result(
                     302,
-                    vo_p.join(
+                    vo.join(
                         _person_scale(
                             prov.select(
                                 "provider_id", "specialty_source_value"
@@ -988,105 +903,85 @@ def run_default_analyses(
                 )
             )
 
-    # Per fact domain, ONE fused grouping-sets pass emits the whole count
+    # Per fact table, its family grid B+0 … B+13 (B and the columns come
+    # from OMOP_FACTS). ONE fused grouping-sets pass emits the count
     # family (records/persons by concept, by month, concept×gender, by
     # type) — one fact scan per domain instead of five (the dominant cost
-    # at 100 TB; see _fused_domain_counts). The per-person dist keeps its
-    # own aggregate (different reducer).
-    gender = person.select("person_id", "gender_concept_id")
-    for (rec_id, per_id, mon_id, dist_id, x04_id, type_id, type_col,
-         key, concept_col, date_col) in _DOMAIN_SPECS:
-        df = omop.get(key)
+    # at 100 TB; see _fused_domain_counts); the other analyses keep their
+    # own aggregate or anti-join (different reducers).
+    for table, fact in OMOP_FACTS.items():
+        df = omop.get(f"omop_{table}")
         if df is None:
             continue
-        results.extend(
-            _fused_domain_counts(
-                df, gender, rec_id, per_id, mon_id, x04_id,
-                type_id, type_col, concept_col, date_col,
-            )
+        base = fact.achilles_base
+        results.extend(_fused_domain_counts(df, gender, fact))
+        dists.append(_per_person(base + 3, df, mode))
+        dists.append(
+            _age_at_first(base + 6, df, fact.stratum, fact.start, bd, mode)
         )
-        per_person = df.groupBy("person_id").agg(F.count(F.lit(1)).alias("n"))
-        dists.append(_dist(dist_id, per_person, "n", mode))
-
-    # x05 over the non-fact tables (death / observation_period): one tiny
-    # groupBy each — the fact domains' type counts ride the fused pass
-    for aid, key, type_col in _TYPE_SPECS:
-        df = omop.get(key)
-        if df is not None:
-            results.append(_result(aid, df, F.col(type_col)))
-
-    # x07/x09 data-quality sub-series: records with an invalid person FK
-    # (anti-join against the person ids — Spark picks broadcast vs shuffled
-    # anti by the person side's size) and records whose end date precedes
-    # their start. Aggregating an empty filter still yields the 0-count row
-    # Achilles records for a clean database.
-    for inv_id, rev_id, key, start_col, end_col in _DQ_SPECS:
-        df = omop.get(key)
-        if df is None:
-            continue
+        # x07/x09 data-quality sub-series: records with an invalid person
+        # FK (anti-join against the person ids — Spark picks broadcast vs
+        # shuffled anti by the person side's size) and records whose end
+        # date precedes their start. Aggregating an empty filter still
+        # yields the 0-count row Achilles records for a clean database.
         results.append(
-            _result(inv_id, df.join(person_ids, "person_id", "left_anti"))
+            _result(base + 7, df.join(person_ids, "person_id", "left_anti"))
         )
-        if rev_id is not None:
-            results.append(
-                _result(rev_id, df.where(F.col(end_col) < F.col(start_col)))
-            )
-
-    # x10 sub-series: records OUTSIDE a valid observation period — the
-    # date-containment DQ check each family repeats. One anti-join per
-    # domain against the (person-sized) period ranges: a record survives
-    # the anti iff NO period of its person contains its date. Clean on the
-    # pipeline's own output (periods are derived as the domain-date
-    # envelope) — they bite on externally-loaded CDM data.
-    if op is not None:
-        op_ranges = op.select(
-            F.col("person_id").alias("__pid"),
-            F.col("observation_period_start_date").alias("__ops"),
-            F.col("observation_period_end_date").alias("__ope"),
-        )
-        for aid, key, date_col in _OUTSIDE_PERIOD_SPECS:
-            df = omop.get(key)
-            if df is None:
-                continue
-            outside = df.join(
-                op_ranges,
-                (df["person_id"] == F.col("__pid"))
-                & (F.col(date_col) >= F.col("__ops"))
-                & (F.col(date_col) <= F.col("__ope")),
-                "left_anti",
-            )
-            results.append(_result(aid, outside))
-
-    # x13 sub-series: non-NULL visit FKs not present in visit_occurrence
-    # (NULL links are legitimate left-join outcomes, not orphans). 213 is
-    # the visit table's own dangling-dimension twin (care_site FK).
-    vo_dq = omop.get("omop_visit_occurrence")
-    if vo_dq is not None:
-        vo_ids = vo_dq.select("visit_occurrence_id")
-        for aid, key in _INVALID_VISIT_SPECS:
-            df = omop.get(key)
-            if df is None or "visit_occurrence_id" not in df.columns:
-                continue
+        if fact.end:
             results.append(
                 _result(
-                    aid,
-                    df.where(F.col("visit_occurrence_id").isNotNull()).join(
-                        vo_ids, "visit_occurrence_id", "left_anti"
-                    ),
+                    base + 9, df.where(F.col(fact.end) < F.col(fact.start))
                 )
             )
-        cs_dq = omop.get("omop_care_site")
-        if cs_dq is not None and "care_site_id" in vo_dq.columns:
+        # x10: records OUTSIDE a valid observation period. Clean on the
+        # pipeline's own output (periods are derived as the domain-date
+        # envelope) — they bite on externally-loaded CDM data.
+        if op is not None:
             results.append(
                 _result(
-                    213,
-                    vo_dq.where(F.col("care_site_id").isNotNull()).join(
-                        cs_dq.select("care_site_id"),
-                        "care_site_id",
+                    base + 10, _outside_periods(df, fact.start, op_ranges)
+                )
+            )
+        # x13: non-NULL visit FKs not present in visit_occurrence (NULL
+        # links are legitimate left-join outcomes, not orphans). The visit
+        # table's own 213 checks care_site; the grid has no 2113.
+        if (
+            vo is not None
+            and table != "visit_occurrence"
+            and base + 13 in ANALYSIS_NAMES
+            and "visit_occurrence_id" in df.columns
+        ):
+            results.append(
+                _result(
+                    base + 13,
+                    df.where(F.col("visit_occurrence_id").isNotNull()).join(
+                        vo.select("visit_occurrence_id"),
+                        "visit_occurrence_id",
                         "left_anti",
                     ),
                 )
             )
+        # 511-515: days from the table's LAST event to death. One keyed
+        # max-date aggregate (single shuffle), then a join to the deaths
+        # slice.
+        if death_dates is not None and table in _DEATH_GAP_IDS:
+            last = df.groupBy("person_id").agg(
+                F.max(fact.start).alias("last_date")
+            )
+            dists.append(
+                _dist(
+                    _DEATH_GAP_IDS[table],
+                    last.join(death_dates, "person_id").select(
+                        F.datediff("death_date", "last_date").alias("d")
+                    ),
+                    "d",
+                    mode,
+                    # a domain with no deceased persons' rows would emit a
+                    # count-0/NULL-stats row from the global groupBy;
+                    # Achilles emits nothing for an empty analysis
+                ).where(F.col("count_value") > 0)
+            )
+        results.append(_density(table, df, fact.start))
 
     # 2000-series: multi-domain co-occurrence person counts (the treated-
     # disease denominators Atlas shows). Distinct person sets are
@@ -1141,20 +1036,26 @@ def run_default_analyses(
         )
         results.append(_result(2004, masks, F.col("mask")))
 
+    # 213: the visit table's dangling care_site FKs (its x13 slot);
     # 1200/1201: place-of-service strata via the care_site dim (tiny →
     # broadcast). Without a vocabulary load every place_of_service is the
     # no-matching-concept id — one stratum, exactly what Achilles shows
     # on an unmapped CDM.
-    cs_pos = omop.get("omop_care_site")
-    vo_pos = omop.get("omop_visit_occurrence")
-    if (
-        cs_pos is not None
-        and vo_pos is not None
-        and "care_site_id" in vo_pos.columns
-    ):
-        pos_visits = vo_pos.join(
+    cs = omop.get("omop_care_site")
+    if vo is not None and cs is not None and "care_site_id" in vo.columns:
+        results.append(
+            _result(
+                213,
+                vo.where(F.col("care_site_id").isNotNull()).join(
+                    cs.select("care_site_id"),
+                    "care_site_id",
+                    "left_anti",
+                ),
+            )
+        )
+        pos_visits = vo.join(
             _person_scale(
-                cs_pos.select(
+                cs.select(
                     "care_site_id",
                     F.col("place_of_service_concept_id").alias("__pos"),
                 )
@@ -1163,34 +1064,6 @@ def run_default_analyses(
         )
         results.append(_result(1201, pos_visits, F.col("__pos")))
         results.append(_persons_result(1200, pos_visits, F.col("__pos")))
-
-    # x06 sub-series: age at first occurrence, by concept (dist). Per
-    # person×concept min-date, then a broadcast join to the (persons-sized,
-    # far smaller than facts) birth-date slice — one shuffle per domain.
-    bd = person.select(
-        "person_id", F.to_date("birth_datetime").alias("bd")
-    )
-    for aid, key, concept_col, date_col in _AGE_AT_FIRST_SPECS:
-        df = omop.get(key)
-        if df is None:
-            continue
-        firsts = df.groupBy(
-            "person_id", F.col(concept_col).alias("c")
-        ).agg(F.min(date_col).alias("first_date"))
-        dists.append(
-            _dist(
-                aid,
-                firsts.join(_person_scale(bd), "person_id").select(
-                    "c",
-                    age_in_years(F.col("first_date"), F.col("bd")).alias(
-                        "age"
-                    ),
-                ),
-                "age",
-                mode,
-                s1=F.col("c"),
-            )
-        )
 
     # 715: days-supply distribution (immunization rows carry NULL
     # days_supply by construction — excluded like the 1502/1815 pattern)
@@ -1221,14 +1094,7 @@ def run_default_analyses(
         results.append(
             _result(1302, ppp, _month("payer_plan_period_start_date"))
         )
-        dists.append(
-            _dist(
-                1303,
-                ppp.groupBy("person_id").agg(F.count(F.lit(1)).alias("n")),
-                "n",
-                mode,
-            )
-        )
+        dists.append(_per_person(1303, ppp, mode))
         dists.append(
             _dist(
                 1306,
@@ -1243,185 +1109,43 @@ def run_default_analyses(
             )
         )
 
-    # 900-series: drug-era analyses. The wired pipeline materializes
-    # omop_drug_era; an exposure-only dict still works via on-the-fly
-    # derivation (derived/eras.py).
-    eras = omop.get("omop_drug_era")
-    if eras is None and omop.get("omop_drug_exposure") is not None:
-        from synthea2omop_etl_spark.derived.eras import drug_era
-
-        eras = drug_era(omop["omop_drug_exposure"])
-    if eras is not None:
-        results.append(_result(901, eras, F.col("drug_era_concept_id")))
-        results.append(
-            _persons_result(900, eras, F.col("drug_era_concept_id"))
+    # 900/1000: the fact grid re-instantiated over drug and condition eras.
+    # The wired pipeline materializes both; an exposure-only dict derives
+    # them on the fly (derived/eras.py). The DQ ids (B+8 invalid person,
+    # B+9 outside any observation period, B+10 era end < era start) are 0
+    # on the pipeline's own eras (FKs inherit from the facts, the
+    # gap-merge never inverts dates) — they bite on external data.
+    for base, era, fact_table, derive in _ERA_FAMILIES:
+        eras = omop.get(f"omop_{era}")
+        if eras is None and omop.get(f"omop_{fact_table}") is not None:
+            eras = derive(omop[f"omop_{fact_table}"])
+        if eras is None:
+            continue
+        concept, start, end = (
+            f"{era}_concept_id", f"{era}_start_date", f"{era}_end_date"
         )
-        results.append(_result(920, eras, _month("drug_era_start_date")))
-        results.append(
-            _persons_result(902, eras, _month("drug_era_start_date"))
-        )
-        dists.append(
-            _dist(
-                907,
-                eras.select(
-                    F.datediff(
-                        "drug_era_end_date", "drug_era_start_date"
-                    ).alias("d")
-                ),
-                "d",
-                mode,
-            )
-        )
-        # 903: drug eras per person (the x03 dist shape); 908/909/910:
-        # the era DQ residue — invalid person FK, era start outside any
-        # observation period, era end < era start. All 0 on the
-        # pipeline's own derived eras (FKs inherit from exposures, the
-        # gap-merge never inverts dates) — they bite on external data.
-        dists.append(
-            _dist(
-                903,
-                eras.groupBy("person_id").agg(
-                    F.count(F.lit(1)).alias("n")
-                ),
-                "n",
-                mode,
-            )
-        )
-        results.append(
-            _result(908, eras.join(person_ids, "person_id", "left_anti"))
-        )
+        results += [
+            _persons_result(base, eras, F.col(concept)),
+            _result(base + 1, eras, F.col(concept)),
+            _persons_result(base + 2, eras, _month(start)),
+            _result(base + 8, eras.join(person_ids, "person_id", "left_anti")),
+            _result(base + 10, eras.where(F.col(end) < F.col(start))),
+            _result(base + 20, eras, _month(start)),
+        ]
         if op is not None:
             results.append(
-                _result(
-                    909,
-                    eras.join(
-                        op_ranges,
-                        (eras["person_id"] == F.col("__pid"))
-                        & (F.col("drug_era_start_date") >= F.col("__ops"))
-                        & (F.col("drug_era_start_date") <= F.col("__ope")),
-                        "left_anti",
-                    ),
-                )
+                _result(base + 9, _outside_periods(eras, start, op_ranges))
             )
-        results.append(
-            _result(
-                910,
-                eras.where(
-                    F.col("drug_era_end_date")
-                    < F.col("drug_era_start_date")
-                ),
-            )
-        )
-        # 906: age at first drug era, by drug concept
-        era_first = eras.groupBy(
-            "person_id", F.col("drug_era_concept_id").alias("c")
-        ).agg(F.min("drug_era_start_date").alias("first_date"))
-        dists.append(
+        dists += [
+            _per_person(base + 3, eras, mode),
+            _age_at_first(base + 6, eras, concept, start, bd, mode),
             _dist(
-                906,
-                era_first.join(_person_scale(bd), "person_id").select(
-                    "c",
-                    age_in_years(F.col("first_date"), F.col("bd")).alias(
-                        "age"
-                    ),
-                ),
-                "age",
-                mode,
-                s1=F.col("c"),
-            )
-        )
-
-    # 1000-series: condition-era analyses (same shape over condition eras)
-    ceras = omop.get("omop_condition_era")
-    if ceras is None and omop.get("omop_condition_occurrence") is not None:
-        from synthea2omop_etl_spark.derived.eras import condition_era
-
-        ceras = condition_era(omop["omop_condition_occurrence"])
-    if ceras is not None:
-        results.append(
-            _result(1001, ceras, F.col("condition_era_concept_id"))
-        )
-        results.append(
-            _persons_result(1000, ceras, F.col("condition_era_concept_id"))
-        )
-        results.append(
-            _result(1020, ceras, _month("condition_era_start_date"))
-        )
-        results.append(
-            _persons_result(1002, ceras, _month("condition_era_start_date"))
-        )
-        dists.append(
-            _dist(
-                1007,
-                ceras.select(
-                    F.datediff(
-                        "condition_era_end_date", "condition_era_start_date"
-                    ).alias("d")
-                ),
+                base + 7,
+                eras.select(F.datediff(end, start).alias("d")),
                 "d",
                 mode,
-            )
-        )
-        # 1003/1008/1009/1010: the condition-era twins of 903/908/909/910
-        dists.append(
-            _dist(
-                1003,
-                ceras.groupBy("person_id").agg(
-                    F.count(F.lit(1)).alias("n")
-                ),
-                "n",
-                mode,
-            )
-        )
-        results.append(
-            _result(1008, ceras.join(person_ids, "person_id", "left_anti"))
-        )
-        if op is not None:
-            results.append(
-                _result(
-                    1009,
-                    ceras.join(
-                        op_ranges,
-                        (ceras["person_id"] == F.col("__pid"))
-                        & (
-                            F.col("condition_era_start_date")
-                            >= F.col("__ops")
-                        )
-                        & (
-                            F.col("condition_era_start_date")
-                            <= F.col("__ope")
-                        ),
-                        "left_anti",
-                    ),
-                )
-            )
-        results.append(
-            _result(
-                1010,
-                ceras.where(
-                    F.col("condition_era_end_date")
-                    < F.col("condition_era_start_date")
-                ),
-            )
-        )
-        # 1006: age at first condition era, by condition concept
-        cera_first = ceras.groupBy(
-            "person_id", F.col("condition_era_concept_id").alias("c")
-        ).agg(F.min("condition_era_start_date").alias("first_date"))
-        dists.append(
-            _dist(
-                1006,
-                cera_first.join(_person_scale(bd), "person_id").select(
-                    "c",
-                    age_in_years(F.col("first_date"), F.col("bd")).alias(
-                        "age"
-                    ),
-                ),
-                "age",
-                mode,
-                s1=F.col("c"),
-            )
-        )
+            ),
+        ]
 
     # 1500-series: cost analyses (reference transform_cost output)
     co = omop.get("omop_cost")
@@ -1484,8 +1208,9 @@ def run_default_analyses(
             )
 
     # 1815: numeric measurement value distribution per measurement concept
-    # (stratified on source_value like the 1801 family — see _DOMAIN_SPECS
-    # note: without a vocabulary load the concept ids are all 0)
+    # (stratified on source_value like the 1801 family — see the
+    # OmopFact.stratum note: without a vocabulary load the concept ids are
+    # all 0)
     me = omop.get("omop_measurement")
     if me is not None:
         dists.append(
@@ -1522,8 +1247,7 @@ def run_default_analyses(
             _result(1809, me.join(person_ids, "person_id", "left_anti"))
         )
         # 1810 (outside obs period) and 1813 (invalid visit FK) are
-        # emitted by the _OUTSIDE_PERIOD_SPECS / _INVALID_VISIT_SPECS
-        # sweeps above.
+        # emitted by the fact-family loop above.
         # 1811: records dated after the person's death
         if death is not None:
             results.append(
@@ -1645,7 +1369,6 @@ def run_default_analyses(
         # 1825: unit usage counts
         results.append(_result(1825, me, F.col("unit_source_value")))
 
-    vo = omop.get("omop_visit_occurrence")
     if vo is not None:
         dists.append(
             _dist(
@@ -1683,22 +1406,6 @@ def run_default_analyses(
                 _result(1102, csl, F.substring(F.col("zip"), 1, 3))
             )
             results.append(_result(1103, csl, F.col("state")))
-
-    # 1900: temporal record density — records per CDM table per calendar
-    # month (the Atlas data-density report). stratum_1 = table,
-    # stratum_2 = yyyyMM; each table contributes one map-side-combinable
-    # aggregate, unioned as plan glue.
-    for key, date_col in _TEMPORAL_SPECS:
-        df = omop.get(key)
-        if df is not None:
-            results.append(
-                _result(
-                    1900,
-                    df,
-                    F.lit(key.removeprefix("omop_")),
-                    _month(date_col),
-                )
-            )
 
     achilles_results = reduce(DataFrame.unionByName, results)
     if dists:

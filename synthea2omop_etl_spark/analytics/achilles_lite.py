@@ -1,13 +1,12 @@
 """Achilles-lite: the characterization analytics surface the reference gets
-from OHDSI Achilles + query_achilles_results.sh (SURVEY.md §2.13).
-
-Implements the query shapes the reference exposes:
-- record counts by domain (analysis ids 1,201,401,601,701,801,1801)
-- gender/race/ethnicity distributions w/ concept-name join
-- age-at-first-observation distribution
-- top-k concepts per domain
-- visit duration percentile distribution
-- arbitrary SQL passthrough (the backend /api/db/query equivalent)
+from OHDSI Achilles + query_achilles_results.sh (SURVEY.md §2.13) beyond
+the default catalog (analytics/achilles_catalog.py, which owns the record
+counts, concept distributions, age-at-first-observation and visit-duration
+analyses):
+- arbitrary SQL passthrough (the backend /api/db/query equivalent), table
+  inventory and paging (/api/db/tables, /api/db/data)
+- age-decile, records-per-person and monthly-trend shapes, and the
+  drug_strength ingredient rollup
 
 Everything is groupBy/agg/join/orderBy/limit + percentile over OMOP
 DataFrames — no custom execution.
@@ -19,116 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from synthea2omop_etl_spark.functions import age_in_years
-
-
-def record_counts(tables: dict[str, DataFrame]) -> DataFrame:
-    """One row per domain table: (table_name, n) — analysis-id 1/201/…"""
-    parts = [
-        df.agg(F.lit(name).alias("table_name"), F.count(F.lit(1)).alias("n"))
-        for name, df in tables.items()
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def concept_distribution(
-    df: DataFrame, concept_col: str, concept: DataFrame | None = None
-) -> DataFrame:
-    """Counts per concept id, optionally joined to concept names
-    (query_achilles_results.sh:159-176)."""
-    out = df.groupBy(F.col(concept_col).alias("concept_id")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    if concept is not None:
-        out = out.join(
-            F.broadcast(
-                concept.select("concept_id", "concept_name")
-            ),
-            "concept_id",
-            "left",
-        ).select(
-            "concept_id",
-            F.coalesce("concept_name", F.lit("No matching concept")).alias(
-                "concept_name"
-            ),
-            "n",
-        )
-    return out
-
-
-def age_at_first_observation(
-    person: DataFrame, observation_period: DataFrame
-) -> DataFrame:
-    """Distribution of age at first observation (¬:166-169)."""
-    first = observation_period.groupBy("person_id").agg(
-        F.min("observation_period_start_date").alias("first_obs")
-    )
-    joined = person.select(
-        "person_id", F.to_date("birth_datetime").alias("birth_date")
-    ).join(first, "person_id")
-    return (
-        joined.select(
-            age_in_years(F.col("first_obs"), F.col("birth_date")).alias("age")
-        )
-        .groupBy("age")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def top_k_concepts(
-    df: DataFrame,
-    source_value_col: str,
-    k: int = 20,
-) -> DataFrame:
-    """Top-k by count per domain (¬:181-216), deterministic tiebreak."""
-    return (
-        df.groupBy(F.col(source_value_col).alias("source_value"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("source_value").asc())
-        .limit(k)
-    )
-
-
-def visit_duration_distribution(
-    visit_occurrence: DataFrame,
-    mode: str = "exact",
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """min/p10/p25/median/p75/p90/max of visit length in days (¬:228-230).
-
-    ``mode="exact"`` uses ``percentile`` — a sort-based aggregate that
-    materializes every group's values: correct and oracle-reproducible, but
-    memory-heavy when one group holds billions of rows. ``mode="approx"``
-    is the 100 TB path: ``percentile_approx`` (Greenwald-Khanna sketch,
-    O(accuracy) memory per group, map-side combinable) with rank error
-    ≤ n/accuracy — indistinguishable from exact when a group has fewer
-    than ``accuracy`` rows.
-    """
-    if mode == "exact":
-        pct = [
-            F.expr(f"percentile(d, {q})").alias(a)
-            for q, a in ((0.10, "p10"), (0.25, "p25"), (0.50, "median"),
-                         (0.75, "p75"), (0.90, "p90"))
-        ]
-    elif mode == "approx":
-        pct = [
-            F.percentile_approx("d", q, accuracy).alias(a)
-            for q, a in ((0.10, "p10"), (0.25, "p25"), (0.50, "median"),
-                         (0.75, "p75"), (0.90, "p90"))
-        ]
-    else:
-        raise ValueError(f"unknown mode: {mode!r}")
-    days = visit_occurrence.select(
-        F.datediff("visit_end_date", "visit_start_date").alias("d"),
-        "visit_concept_id",
-    )
-    return days.groupBy("visit_concept_id").agg(
-        F.min("d").alias("min_days"),
-        *pct,
-        F.max("d").alias("max_days"),
-    )
 
 
 def run_sql(
@@ -190,7 +79,7 @@ def table_page(
 # ---------------------------------------------------------------------------
 # Default-catalog breadth: the reference runs OHDSI Achilles with
 # defaultAnalysesOnly=true (achilles_config.json, run_achilles.sh:202-203),
-# whose core shapes beyond the ones above are age-decile person counts
+# whose core shapes include age-decile person counts
 # (analysis 101/102), records-per-person percentile distributions
 # (105/113/203/…), monthly trend series (x02: 202/402/602/702/802), and
 # drug-era rollups that consume drug_strength. All are one groupBy/agg (+

@@ -95,6 +95,36 @@ def cmd_run(args: argparse.Namespace) -> int:
     return 0
 
 
+def _load_omop(
+    omop_dir: str,
+    app_name: str,
+    names: tuple[str, ...] | None = None,
+    need_person: bool = False,
+):
+    """Read the ``omop_<name>`` parquet layers under ``omop_dir`` (every
+    one, or those of ``names`` present) → (spark, {name: DataFrame}).
+
+    Prints an error and returns None — before any Spark session starts —
+    when no layer is found, or with ``need_person`` when omop_person is
+    missing."""
+    present = (
+        {e.removeprefix("omop_") for e in os.listdir(omop_dir)
+         if e.startswith("omop_")}
+        if os.path.isdir(omop_dir)
+        else set()
+    )
+    found = [n for n in (names or sorted(present)) if n in present]
+    if not found or (need_person and "person" not in found):
+        what = "omop_person" if need_person else "omop_* tables"
+        print(f"error: no {what} found under {omop_dir}", file=sys.stderr)
+        return None
+    spark = get_spark(app_name=app_name)
+    return spark, {
+        n: spark.read.parquet(os.path.join(omop_dir, f"omop_{n}"))
+        for n in found
+    }
+
+
 def cmd_validate(args: argparse.Namespace) -> int:
     from synthea2omop_etl_spark.validate import (
         check_date_ranges,
@@ -104,10 +134,10 @@ def cmd_validate(args: argparse.Namespace) -> int:
         validate,
     )
 
-    spark = get_spark(app_name="synthea2omop-validate")
-    t = {
-        name: spark.read.parquet(os.path.join(args.omop, f"omop_{name}"))
-        for name in (
+    loaded = _load_omop(
+        args.omop,
+        "synthea2omop-validate",
+        names=(
             "person",
             "visit_occurrence",
             "condition_occurrence",
@@ -121,9 +151,13 @@ def cmd_validate(args: argparse.Namespace) -> int:
             "payer_plan_period",
             "drug_era",
             "condition_era",
-        )
-        if os.path.exists(os.path.join(args.omop, f"omop_{name}"))
-    }
+        ),
+        need_person=True,
+    )
+    if loaded is None:
+        return 2
+    spark, t = loaded
+    vo = t.get("visit_occurrence")
     dims = {"person", "provider", "care_site"}
     checks = [
         check_record_counts(t),
@@ -136,34 +170,29 @@ def cmd_validate(args: argparse.Namespace) -> int:
             t["person"],
         ),
     ]
-    if "provider" in t:
+    if "provider" in t and vo is not None:
         checks.append(
             check_referential_integrity(
-                {"visit_occurrence": (t["visit_occurrence"], "provider_id")},
+                {"visit_occurrence": (vo, "provider_id")},
                 t["provider"],
                 id_col="provider_id",
                 name="provider_linkage",
                 weight=0.1,
             )
         )
-    if "care_site" in t:
+    if "care_site" in t and vo is not None:
         checks.append(
             check_referential_integrity(
-                {"visit_occurrence": (t["visit_occurrence"], "care_site_id")},
+                {"visit_occurrence": (vo, "care_site_id")},
                 t["care_site"],
                 id_col="care_site_id",
                 name="care_site_linkage",
                 weight=0.1,
             )
         )
-    date_targets = {
-        "visit_occurrence": (
-            t["visit_occurrence"],
-            "visit_start_date",
-            "visit_end_date",
-        )
-    }
+    date_targets = {}
     for name, start, end in (
+        ("visit_occurrence", "visit_start_date", "visit_end_date"),
         ("drug_era", "drug_era_start_date", "drug_era_end_date"),
         ("condition_era", "condition_era_start_date", "condition_era_end_date"),
         ("payer_plan_period", "payer_plan_period_start_date",
@@ -205,19 +234,10 @@ def cmd_analytics(args: argparse.Namespace) -> int:
             file=sys.stderr,
         )
         return 2
-    spark = get_spark(app_name="synthea2omop-analytics")
-    tables = {}
-    for entry in os.listdir(args.omop):
-        if entry.startswith("omop_"):
-            tables[entry.removeprefix("omop_")] = spark.read.parquet(
-                os.path.join(args.omop, entry)
-            )
-    if not tables:
-        print(
-            f"error: no omop_* tables found under {args.omop}",
-            file=sys.stderr,
-        )
+    loaded = _load_omop(args.omop, "synthea2omop-analytics")
+    if loaded is None:
         return 2
+    spark, tables = loaded
     if args.list:
         # /api/db/tables (backend/src/index.js:88-105)
         out = list_tables(tables)
@@ -241,19 +261,10 @@ def cmd_serve(args: argparse.Namespace) -> int:
     the engine's twin of the reference backend (backend/src/index.js)."""
     from synthea2omop_etl_spark.serve import serve
 
-    spark = get_spark(app_name="synthea2omop-serve")
-    tables = {}
-    for entry in os.listdir(args.omop):
-        if entry.startswith("omop_"):
-            tables[entry.removeprefix("omop_")] = spark.read.parquet(
-                os.path.join(args.omop, entry)
-            )
-    if not tables:
-        print(
-            f"error: no omop_* tables found under {args.omop}",
-            file=sys.stderr,
-        )
+    loaded = _load_omop(args.omop, "synthea2omop-serve")
+    if loaded is None:
         return 2
+    spark, tables = loaded
     serve(spark, tables, host=args.host, port=args.port,
           max_rows=args.max_rows, checkpoint_path=args.checkpoint)
     return 0
@@ -267,14 +278,16 @@ def cmd_achilles(args: argparse.Namespace) -> int:
 
     from synthea2omop_etl_spark.analytics import run_default_analyses
 
-    spark = get_spark(app_name="synthea2omop-achilles")
-    omop = {
-        entry: spark.read.parquet(os.path.join(args.omop, entry))
-        for entry in os.listdir(args.omop)
-        if entry.startswith("omop_")
-    }
+    loaded = _load_omop(
+        args.omop, "synthea2omop-achilles", need_person=True
+    )
+    if loaded is None:
+        return 2
+    spark, tables = loaded
     results, dists = run_default_analyses(
-        omop, mode=args.mode, small_cell_count=args.small_cell_count
+        {f"omop_{n}": df for n, df in tables.items()},
+        mode=args.mode,
+        small_cell_count=args.small_cell_count,
     )
     out = args.output or args.omop
     results.write.mode("overwrite").parquet(

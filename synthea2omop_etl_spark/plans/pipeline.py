@@ -48,7 +48,7 @@ from synthea2omop_etl_spark.operators.concepts import (
 )
 from synthea2omop_etl_spark.operators.idmap import build_id_map
 from synthea2omop_etl_spark.operators.typing import apply_typing
-from synthea2omop_etl_spark.schemas import TYPING_SPECS
+from synthea2omop_etl_spark.schemas import OMOP_FACTS, TYPING_SPECS
 
 
 class Checkpoint:
@@ -389,21 +389,15 @@ def _cost_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
 
 def _obs_period_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    domain_dates = [
-        ("omop_visit_occurrence", "visit_start_date", "visit_end_date"),
-        ("omop_condition_occurrence", "condition_start_date", "condition_end_date"),
-        ("omop_drug_exposure", "drug_exposure_start_date", "drug_exposure_end_date"),
-        ("omop_procedure_occurrence", "procedure_date", None),
-        ("omop_measurement", "measurement_date", None),
-        ("omop_observation", "observation_date", None),
-    ]
+    # the reference's envelope unions six domains
+    # (etl_observation_periods.py:81-145): every fact table but devices
     return {
         "omop_observation_period": observation_period(
             ctx["omop_person"],
             [
-                (ctx[key], start, end)
-                for key, start, end in domain_dates
-                if key in ctx
+                (ctx[f"omop_{t}"], f.start, f.end)
+                for t, f in OMOP_FACTS.items()
+                if t != "device_exposure" and f"omop_{t}" in ctx
             ],
         )
     }
@@ -414,13 +408,7 @@ def _obs_period_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
 #: year directories — the physical design SURVEY §4 (a) prescribes for
 #: cluster scale, alongside person_id bucketing)
 YEAR_PARTITION_DATES: dict[str, str] = {
-    "omop_visit_occurrence": "visit_start_date",
-    "omop_condition_occurrence": "condition_start_date",
-    "omop_drug_exposure": "drug_exposure_start_date",
-    "omop_procedure_occurrence": "procedure_date",
-    "omop_measurement": "measurement_date",
-    "omop_observation": "observation_date",
-    "omop_device_exposure": "device_exposure_start_date",
+    f"omop_{t}": f.start for t, f in OMOP_FACTS.items()
 }
 
 

@@ -4766,7 +4766,8 @@ def q_achilles_age_at_first(spark: SparkSession, sf: str) -> DataFrame:
     "Achilles 1900 temporal record-density sweep: per-table monthly "
     "record counts (stratum_1=table, stratum_2=yyyyMM) — each table one "
     "map-side-combinable aggregate, the union driver-side plan glue "
-    "(analytics.achilles_catalog._result + _TEMPORAL_SPECS).",
+    "(analytics.achilles_catalog._density over schemas.OMOP_FACTS, "
+    "death and observation_period).",
 )
 def q_achilles_temporal_density(spark: SparkSession, sf: str) -> DataFrame:
     from synthea2omop_etl_spark.analytics.achilles_catalog import _result
@@ -6479,8 +6480,8 @@ def q_achilles_age_first_dist(spark: SparkSession, sf: str) -> DataFrame:
       WHERE c.c_custkey = o.o_custkey AND c.c_acctbal > 0
     )
     """,
-    "Achilles x07 data-quality shape (analytics/achilles_catalog.py "
-    "_DQ_SPECS): fact records whose person FK resolves to no dim row — "
+    "Achilles x07 data-quality shape (analytics/achilles_catalog.py, "
+    "B+7 over schemas.OMOP_FACTS): fact records whose person FK resolves to no dim row — "
     "LEFT ANTI join against the (here deliberately restricted: positive-"
     "balance) entity set, then the shared _result reducer. The anti-join "
     "build side is the dim; at 100 TB AQE picks broadcast-anti when the "
@@ -6589,7 +6590,8 @@ def q_achilles_small_cell(spark: SparkSession, sf: str) -> DataFrame:
     FROM g
     """,
     "Achilles 511-515 death-proximity shape (analytics/"
-    "achilles_catalog.py _DEATH_GAP_SPECS): days from each domain's LAST "
+    "achilles_catalog.py _DEATH_GAP_IDS over schemas.OMOP_FACTS): days "
+    "from each domain's LAST "
     "event to the terminal event, per entity — one keyed max-date "
     "aggregate per fact table (single shuffle), broadcast join to the "
     "(tiny) terminal-event slice, then the shared _dist reducer. 'days "
@@ -6994,8 +6996,9 @@ def q_boilerplate_lines(spark: SparkSession, sf: str) -> DataFrame:
     GROUP BY 2
     """,
     "Achilles x10 'records outside a valid observation period' DQ shape "
-    "(analytics/achilles_catalog.py _OUTSIDE_PERIOD_SPECS, ids 210/410/"
-    "610/710/810/1810/2110): one anti-join per domain on person + "
+    "(analytics/achilles_catalog.py _outside_periods, B+10 over "
+    "schemas.OMOP_FACTS, ids 210/410/610/710/810/1810/2110): one "
+    "anti-join per domain on person + "
     "date-containment against the (person-sized) period ranges — a "
     "record violates iff NO period of its person contains its date. "
     "'orders outside every year the customer had a finished order' ≙ "

@@ -14,6 +14,8 @@ Fixed concept ids from the reference's config/CASE expressions
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from synthea2omop_etl_spark.operators.typing import (
     SIGNED_NUMERIC_RE,
     TIMESTAMP_RE,
@@ -198,6 +200,61 @@ TYPING_SPECS: dict[str, dict[str, tuple[str, str | None]]] = {
 }
 
 UUID_GUARD = UUID_RE
+
+
+class OmopFact(NamedTuple):
+    """The column roles of one OMOP fact table."""
+
+    pk: str
+    start: str
+    end: str | None
+    concept: str
+    type: str
+    source: str
+    #: Achilles family base B: the table's analyses are B+0 … B+13
+    achilles_base: int
+    #: Achilles stratum: the concept id, or the source value where the
+    #: pipeline leaves concept mapping to operators/concepts.py (without a
+    #: vocabulary load those ids are all 0 — Achilles then shows the codes)
+    stratum: str
+
+
+#: the seven OMOP fact tables in DQD order — one registry for the Achilles
+#: family grid (analytics/achilles_catalog.py), the DQD checks
+#: (validate.py) and the pipeline's year partitions and observation-period
+#: envelope (plans/pipeline.py).
+OMOP_FACTS: dict[str, OmopFact] = {
+    "visit_occurrence": OmopFact(
+        "visit_occurrence_id", "visit_start_date", "visit_end_date",
+        "visit_concept_id", "visit_type_concept_id", "visit_source_value",
+        200, "visit_concept_id"),
+    "condition_occurrence": OmopFact(
+        "condition_occurrence_id", "condition_start_date",
+        "condition_end_date", "condition_concept_id",
+        "condition_type_concept_id", "condition_source_value",
+        400, "condition_concept_id"),
+    "drug_exposure": OmopFact(
+        "drug_exposure_id", "drug_exposure_start_date",
+        "drug_exposure_end_date", "drug_concept_id", "drug_type_concept_id",
+        "drug_source_value", 700, "drug_concept_id"),
+    "procedure_occurrence": OmopFact(
+        "procedure_occurrence_id", "procedure_date", None,
+        "procedure_concept_id", "procedure_type_concept_id",
+        "procedure_source_value", 600, "procedure_concept_id"),
+    "measurement": OmopFact(
+        "measurement_id", "measurement_date", None, "measurement_concept_id",
+        "measurement_type_concept_id", "measurement_source_value",
+        1800, "measurement_source_value"),
+    "observation": OmopFact(
+        "observation_id", "observation_date", None, "observation_concept_id",
+        "observation_type_concept_id", "observation_source_value",
+        800, "observation_source_value"),
+    "device_exposure": OmopFact(
+        "device_exposure_id", "device_exposure_start_date",
+        "device_exposure_end_date", "device_concept_id",
+        "device_type_concept_id", "device_source_value",
+        2100, "device_source_value"),
+}
 
 # --- fixed OMOP concept ids (FIXTURES.md §7) -------------------------------
 GENDER_CONCEPTS = {"M": 8507, "F": 8532}

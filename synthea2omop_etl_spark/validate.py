@@ -17,6 +17,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from synthea2omop_etl_spark.schemas import OMOP_FACTS
+
 Check = tuple[str, bool, float, dict[str, Any]]
 
 
@@ -82,137 +84,61 @@ def check_demographics(person: DataFrame) -> Check:
     )
 
 
-def dqd_results(checks: list[Check], spark=None) -> DataFrame:
-    """Render validation checks in the reference's
-    ``dataqualitydashboard_results`` shape (issue_id, issue_description,
-    prevalence, record_count, failed — query_achilles_results.sh:236-239),
-    so a dashboard built against the reference reads this table unchanged.
-
-    prevalence: 0/1 by pass state; record_count: the failing row count the
-    check counted, where available.
-    """
-    import json as _json
-
-    rows = []
-    for issue_id, (name, ok, _w, details) in enumerate(checks, start=1):
-        record_count = 0
-        prevalence = 0.0 if ok else 1.0
-        if name == "referential_integrity":
-            record_count = sum(details.get("orphans", {}).values())
-        elif name == "date_ranges":
-            record_count = sum(
-                v["end_before_start"] + v["future"] for v in details.values()
-            )
-        elif name == "demographics":
-            record_count = details.get("invalid_gender", 0) + details.get(
-                "invalid_birth_year", 0
-            )
-        rows.append(
-            (
-                issue_id,
-                f"{name}: {_json.dumps(details, default=str)[:200]}",
-                float(prevalence),
-                int(record_count),
-                not ok,
-            )
-        )
-    if spark is None:
-        from synthea2omop_etl_spark.session import get_spark
-
-        spark = get_spark()
-    return spark.createDataFrame(rows, DQD_SCHEMA)
-
-
-#: fact table → per-field DQD spec: primary key, required (non-NULL)
-#: fields, the temporal pair, the standard-concept column and its
-#: expected vocabulary DOMAIN (fkDomain), and the source-value column.
-#: Drives the full check-type catalog below — Completeness
-#: (measureValueCompleteness, standardConceptRecordCompleteness,
-#: sourceValueCompleteness), Conformance (cdmField, cdmDatatype,
-#: isPrimaryKey, isRequired, isForeignKey, fkDomain, fkClass,
-#: isStandardValidConcept), Plausibility (plausibleValueLow/High/LowHigh,
-#: plausibleTemporalAfter, plausibleAfterBirth, plausibleDuringLife,
-#: withinVisitDates) — the taxonomy of the reference's
-#: DataQualityDashboard results table.
+#: fact table → its DQD-only fields: required (non-NULL) fields, plausible
+#: value ranges and the expected vocabulary DOMAIN of its standard concept
+#: (fkDomain). The key, dates, concept and source columns come from
+#: ``schemas.OMOP_FACTS``. Drives the full check-type catalog below —
+#: Completeness (measureValueCompleteness,
+#: standardConceptRecordCompleteness, sourceValueCompleteness),
+#: Conformance (cdmField, cdmDatatype, isPrimaryKey, isRequired,
+#: isForeignKey, fkDomain, fkClass, isStandardValidConcept), Plausibility
+#: (plausibleValueLow/High/LowHigh, plausibleTemporalAfter,
+#: plausibleAfterBirth, plausibleDuringLife, withinVisitDates) — the
+#: taxonomy of the reference's DataQualityDashboard results table.
 DQD_SPECS: dict[str, dict[str, Any]] = {
     "visit_occurrence": {
-        "pk": "visit_occurrence_id",
         "required": ["person_id", "visit_concept_id", "visit_start_date"],
-        "start": "visit_start_date",
-        "end": "visit_end_date",
-        "concept_col": "visit_concept_id",
         "domain": "Visit",
-        "source_col": "visit_source_value",
     },
     "condition_occurrence": {
-        "pk": "condition_occurrence_id",
         "required": ["person_id", "condition_concept_id",
                      "condition_start_date"],
-        "start": "condition_start_date",
-        "end": "condition_end_date",
-        "concept_col": "condition_concept_id",
         "domain": "Condition",
-        "source_col": "condition_source_value",
     },
     "drug_exposure": {
-        "pk": "drug_exposure_id",
         "required": ["person_id", "drug_concept_id",
                      "drug_exposure_start_date"],
-        "start": "drug_exposure_start_date",
-        "end": "drug_exposure_end_date",
         # DQD plausibleValueLow/High for the dosing fields (NULL-safe:
         # immunization rows carry NULL days_supply by construction)
         "values": {"days_supply": (0.0, 365.0), "refills": (0.0, 24.0)},
-        "concept_col": "drug_concept_id",
         "domain": "Drug",
-        # fkClass: drug concepts used in eras must be Ingredient-class in
-        # stock DQD; at exposure level RxNorm clinical drugs are the norm
-        "concept_class": None,
-        "source_col": "drug_source_value",
     },
     "procedure_occurrence": {
-        "pk": "procedure_occurrence_id",
         "required": ["person_id", "procedure_concept_id", "procedure_date"],
-        "start": "procedure_date",
-        "end": None,
-        "concept_col": "procedure_concept_id",
         "domain": "Procedure",
-        "source_col": "procedure_source_value",
     },
     "measurement": {
-        "pk": "measurement_id",
         "required": ["person_id", "measurement_date"],
-        "start": "measurement_date",
-        "end": None,
         # global sanity range; concept-appropriate ranges come from the
         # measurement_ranges= argument (plausibleValueLow/High per concept)
         "values": {"value_as_number": (-1000.0, 100000.0)},
-        "concept_col": "measurement_concept_id",
         "domain": "Measurement",
-        "source_col": "measurement_source_value",
     },
     "observation": {
-        "pk": "observation_id",
         "required": ["person_id", "observation_date"],
-        "start": "observation_date",
-        "end": None,
         "values": {"value_as_number": (-1000.0, 100000.0)},
-        "concept_col": "observation_concept_id",
         "domain": "Observation",
-        "source_col": "observation_source_value",
     },
     "device_exposure": {
-        "pk": "device_exposure_id",
         "required": ["person_id", "device_exposure_start_date"],
-        "start": "device_exposure_start_date",
-        "end": None,  # open-ended device exposures carry NULL end
-        "concept_col": "device_concept_id",
         "domain": "Device",
-        "source_col": "device_source_value",
+        # open-ended device exposures carry NULL end: no end-date checks
+        "open_ended": True,
     },
 }
 
-#: the complete check-type catalog run_dqd_checks emits (the OHDSI
+#: the complete check-type catalog run_dqd_checks emits, check → DQD
+#: category (the OHDSI
 #: DataQualityDashboard check types the reference's
 #: dataqualitydashboard_results table implies,
 #: query_achilles_results.sh:233-238). Vocabulary-dependent types
@@ -221,39 +147,31 @@ DQD_SPECS: dict[str, dict[str, Any]] = {
 #: withinVisitDates) only when those tables are in the input dict; the
 #: CONCEPT-parameterized types (plausibleGender, plausibleUnitConceptIds)
 #: only when their designation maps are supplied.
-DQD_CHECK_TYPES: tuple[str, ...] = (
-    # Conformance
-    "cdmTable",
-    "cdmField",
-    "cdmDatatype",
-    "isPrimaryKey",
-    "isRequired",
-    "isForeignKey",
-    "fkDomain",
-    "fkClass",
-    "isStandardValidConcept",
-    # Completeness
-    "measureValueCompleteness",
-    "measurePersonCompleteness",
-    "measureConditionEraCompleteness",
-    "standardConceptRecordCompleteness",
-    "sourceValueCompleteness",
-    # Plausibility
-    "plausibleValueLow",
-    "plausibleValueHigh",
-    "plausibleValueLowHigh",
-    "plausibleTemporalAfter",
-    "plausibleAfterBirth",
-    "plausibleDuringLife",
-    "withinVisitDates",
-    "plausibleGender",
-    "plausibleUnitConceptIds",
-)
-
-DQD_SCHEMA = (
-    "issue_id int, issue_description string, prevalence double, "
-    "record_count bigint, failed boolean"
-)
+DQD_CHECK_TYPES: dict[str, str] = {
+    "cdmTable": "Conformance",
+    "cdmField": "Conformance",
+    "cdmDatatype": "Conformance",
+    "isPrimaryKey": "Conformance",
+    "isRequired": "Conformance",
+    "isForeignKey": "Conformance",
+    "fkDomain": "Conformance",
+    "fkClass": "Conformance",
+    "isStandardValidConcept": "Conformance",
+    "measureValueCompleteness": "Completeness",
+    "measurePersonCompleteness": "Completeness",
+    "measureConditionEraCompleteness": "Completeness",
+    "standardConceptRecordCompleteness": "Completeness",
+    "sourceValueCompleteness": "Completeness",
+    "plausibleValueLow": "Plausibility",
+    "plausibleValueHigh": "Plausibility",
+    "plausibleValueLowHigh": "Plausibility",
+    "plausibleTemporalAfter": "Plausibility",
+    "plausibleAfterBirth": "Plausibility",
+    "plausibleDuringLife": "Plausibility",
+    "withinVisitDates": "Plausibility",
+    "plausibleGender": "Plausibility",
+    "plausibleUnitConceptIds": "Plausibility",
+}
 
 #: run_dqd_checks output: the OHDSI DataQualityDashboard results columns
 #: (check_name / check_level / category — what a DQD user queries by,
@@ -358,7 +276,6 @@ def run_dqd_checks(
         level: str,
         table: str,
         field: str | None,
-        category: str,
         threshold: float = 0.0,
     ) -> None:
         nonlocal issue_id
@@ -373,7 +290,7 @@ def run_dqd_checks(
                 issue_id,
                 check_name,
                 level,
-                category,
+                DQD_CHECK_TYPES[check_name],
                 table,
                 field,
                 int(violated),
@@ -420,7 +337,6 @@ def run_dqd_checks(
         level="FIELD",
         table="person",
         field="year_of_birth",
-        category="Plausibility",
     )
 
     # shared slices for the cross-table plausibility checks
@@ -447,6 +363,9 @@ def run_dqd_checks(
 
     for name, spec in DQD_SPECS.items():
         df = tables.get(name)
+        fact = OMOP_FACTS[name]
+        pk, start, cc, sc = fact.pk, fact.start, fact.concept, fact.source
+        end = None if spec.get("open_ended") else fact.end
         # cdmTable (TABLE, Conformance): the CDM table exists in the layer
         emit(
             f"{name}.* cdmTable [Conformance]",
@@ -456,16 +375,15 @@ def run_dqd_checks(
             level="TABLE",
             table=name,
             field=None,
-            category="Conformance",
         )
         if df is None:
             continue
         # cdmField / cdmDatatype (FIELD, Conformance): expected columns
         # exist and the pk carries an integral type — schema inspection,
         # no jobs
-        expected_fields = [spec["pk"], spec["start"]] + spec["required"]
-        if spec["end"]:
-            expected_fields.append(spec["end"])
+        expected_fields = [pk, start] + spec["required"]
+        if end:
+            expected_fields.append(end)
         for c in dict.fromkeys(expected_fields):
             emit(
                 f"{name}.{c} cdmField [Conformance]",
@@ -475,18 +393,16 @@ def run_dqd_checks(
                 level="FIELD",
                 table=name,
                 field=c,
-                category="Conformance",
             )
-        pk_type = dict(df.dtypes).get(spec["pk"], "missing")
+        pk_type = dict(df.dtypes).get(pk, "missing")
         emit(
-            f"{name}.{spec['pk']} cdmDatatype [Conformance]",
+            f"{name}.{pk} cdmDatatype [Conformance]",
             0 if pk_type in ("bigint", "int", "smallint", "tinyint") else 1,
             1,
             check_name="cdmDatatype",
             level="FIELD",
             table=name,
-            field=spec["pk"],
-            category="Conformance",
+            field=pk,
         )
         value_checks: list[tuple[str, str, float, float]] = [
             (c, f"__rng_{c}", lo, hi)
@@ -506,14 +422,13 @@ def run_dqd_checks(
                 )
         aggs = [
             F.count(F.lit(1)).alias("__n"),
-            F.countDistinct(spec["pk"]).alias("__pk_distinct"),
+            F.countDistinct(pk).alias("__pk_distinct"),
             # isRequired: the pk itself must never be NULL
             F.sum(
-                F.when(F.col(spec["pk"]).isNull(), 1).otherwise(0)
+                F.when(F.col(pk).isNull(), 1).otherwise(0)
             ).alias("__null_pk"),
         ]
-        cc = spec.get("concept_col")
-        if cc and cc in df.columns:
+        if cc in df.columns:
             # standardConceptRecordCompleteness: unmapped (= 0) fraction
             aggs.append(
                 F.sum(
@@ -522,8 +437,7 @@ def run_dqd_checks(
                     ).otherwise(0)
                 ).alias("__std0")
             )
-        sc = spec.get("source_col")
-        if sc and sc in df.columns:
+        if sc in df.columns:
             aggs.append(
                 F.sum(
                     F.when(
@@ -581,11 +495,11 @@ def run_dqd_checks(
                         F.when(v.isNotNull() & (v > hi), 1).otherwise(0)
                     ).alias(f"{alias}__hi")
                 )
-        if spec["end"]:
+        if end:
             aggs.append(
                 F.sum(
                     F.when(
-                        F.col(spec["end"]) < F.col(spec["start"]), 1
+                        F.col(end) < F.col(start), 1
                     ).otherwise(0)
                 ).alias("__rev")
             )
@@ -600,27 +514,24 @@ def run_dqd_checks(
                 level="FIELD",
                 table=name,
                 field=c,
-                category="Completeness",
             )
         emit(
-            f"{name}.{spec['pk']} isPrimaryKey [Conformance]",
+            f"{name}.{pk} isPrimaryKey [Conformance]",
             n - stat["__pk_distinct"],
             n,
             check_name="isPrimaryKey",
             level="FIELD",
             table=name,
-            field=spec["pk"],
-            category="Conformance",
+            field=pk,
         )
         emit(
-            f"{name}.{spec['pk']} isRequired [Conformance]",
+            f"{name}.{pk} isRequired [Conformance]",
             stat["__null_pk"],
             n,
             check_name="isRequired",
             level="FIELD",
             table=name,
-            field=spec["pk"],
-            category="Conformance",
+            field=pk,
         )
         if "__std0" in stat.asDict():
             # INFORMATIONAL threshold 1.0: vocabulary-less runs are 100%
@@ -635,7 +546,6 @@ def run_dqd_checks(
                 level="FIELD",
                 table=name,
                 field=cc,
-                category="Completeness",
                 threshold=1.0,
             )
         if "__src_null" in stat.asDict():
@@ -647,7 +557,6 @@ def run_dqd_checks(
                 level="FIELD",
                 table=name,
                 field=sc,
-                category="Completeness",
             )
         for c, alias, lo, hi in value_checks:
             concept_scoped = alias.startswith("__rng_c_")
@@ -666,7 +575,6 @@ def run_dqd_checks(
                 level="CONCEPT" if concept_scoped else "FIELD",
                 table=name,
                 field="value_as_number" if concept_scoped else c,
-                category="Plausibility",
             )
             # the stock DQD names split the composite into its two sides
             for side, bound, suffix in (
@@ -687,7 +595,6 @@ def run_dqd_checks(
                     level="CONCEPT" if concept_scoped else "FIELD",
                     table=name,
                     field="value_as_number" if concept_scoped else c,
-                    category="Plausibility",
                 )
         orphans = (
             df.where(F.col("person_id").isNotNull())
@@ -702,34 +609,30 @@ def run_dqd_checks(
             level="FIELD",
             table=name,
             field="person_id",
-            category="Conformance",
         )
-        if spec["end"]:
+        if end:
             emit(
-                f"{name}.{spec['end']} plausibleTemporalAfter "
-                f"{spec['start']} [Plausibility]",
+                f"{name}.{end} plausibleTemporalAfter {start} [Plausibility]",
                 stat["__rev"],
                 n,
                 check_name="plausibleTemporalAfter",
                 level="FIELD",
                 table=name,
-                field=spec["end"],
-                category="Plausibility",
+                field=end,
             )
         before_birth = (
             df.join(F.broadcast(birth), "person_id")
-            .where(F.col(spec["start"]) < F.col("__bd"))
+            .where(F.col(start) < F.col("__bd"))
             .count()
         )
         emit(
-            f"{name}.{spec['start']} plausibleAfterBirth [Plausibility]",
+            f"{name}.{start} plausibleAfterBirth [Plausibility]",
             before_birth,
             n,
             check_name="plausibleAfterBirth",
             level="FIELD",
             table=name,
-            field=spec["start"],
-            category="Plausibility",
+            field=start,
         )
         # plausibleDuringLife: events of deceased persons start no later
         # than death_date + 60 days (the DQD grace window for billing /
@@ -739,22 +642,21 @@ def run_dqd_checks(
                 F.count(F.lit(1)).alias("__ln"),
                 F.sum(
                     F.when(
-                        F.col(spec["start"])
+                        F.col(start)
                         > F.date_add(F.col("__dd"), 60),
                         1,
                     ).otherwise(0)
                 ).alias("__lv"),
             ).collect()[0]
             emit(
-                f"{name}.{spec['start']} plausibleDuringLife "
+                f"{name}.{start} plausibleDuringLife "
                 "[Plausibility]",
                 life["__lv"] or 0,
                 life["__ln"],
                 check_name="plausibleDuringLife",
                 level="FIELD",
                 table=name,
-                field=spec["start"],
-                category="Plausibility",
+                field=start,
             )
         # withinVisitDates: the event's start sits inside its linked
         # visit's [start-1d, end+1d] (open-ended visits clamp to start).
@@ -772,14 +674,14 @@ def run_dqd_checks(
                     F.sum(
                         F.when(
                             (
-                                F.col(spec["start"])
+                                F.col(start)
                                 < F.date_sub(F.col("__vs"), 1)
                             )
                             | (
-                                F.col(spec["start"])
+                                F.col(start)
                                 > F.date_add(
                                     F.coalesce(
-                                        F.col("__ve"), F.col(spec["start"])
+                                        F.col("__ve"), F.col(start)
                                     ),
                                     1,
                                 )
@@ -791,14 +693,13 @@ def run_dqd_checks(
                 .collect()[0]
             )
             emit(
-                f"{name}.{spec['start']} withinVisitDates [Plausibility]",
+                f"{name}.{start} withinVisitDates [Plausibility]",
                 vstat["__vv"] or 0,
                 vstat["__vn"],
                 check_name="withinVisitDates",
                 level="FIELD",
                 table=name,
-                field=spec["start"],
-                category="Plausibility",
+                field=start,
             )
         # TABLE-level family: persons with no record in this fact table
         # (DQD measurePersonCompleteness). Informational at low rates —
@@ -819,7 +720,6 @@ def run_dqd_checks(
             level="TABLE",
             table=name,
             field=None,
-            category="Completeness",
             threshold=0.95,
         )
 
@@ -844,7 +744,6 @@ def run_dqd_checks(
             level="TABLE",
             table="condition_era",
             field=None,
-            category="Completeness",
         )
 
     # Vocabulary-backed Conformance (needs a concept table): fkDomain —
@@ -862,8 +761,8 @@ def run_dqd_checks(
         )
         for name, spec in DQD_SPECS.items():
             df = tables.get(name)
-            cc = spec.get("concept_col")
-            if df is None or not cc or cc not in df.columns:
+            cc = OMOP_FACTS[name].concept
+            if df is None or cc not in df.columns:
                 continue
             used = (
                 df.where(F.col(cc).isNotNull() & (F.col(cc) != 0))
@@ -902,7 +801,6 @@ def run_dqd_checks(
                 level="FIELD",
                 table=name,
                 field=cc,
-                category="Conformance",
             )
             emit(
                 f"{name}.{cc} isStandardValidConcept [Conformance]",
@@ -912,7 +810,6 @@ def run_dqd_checks(
                 level="FIELD",
                 table=name,
                 field=cc,
-                category="Conformance",
             )
         # fkClass: drug_era concept ids must be RxNorm Ingredient class
         # (the stock DQD fkClass target)
@@ -950,7 +847,6 @@ def run_dqd_checks(
                 level="FIELD",
                 table="drug_era",
                 field="drug_era_concept_id",
-                category="Conformance",
             )
 
     # plausibleGender (CONCEPT, Plausibility): gender-specific concepts
@@ -962,10 +858,10 @@ def run_dqd_checks(
         pgender = F.broadcast(
             person.select("person_id", "gender_concept_id")
         )
-        for name, spec in DQD_SPECS.items():
+        for name in DQD_SPECS:
             df = tables.get(name)
-            sc = spec.get("source_col")
-            if df is None or not sc or sc not in df.columns:
+            sc = OMOP_FACTS[name].source
+            if df is None or sc not in df.columns:
                 continue
             hits = df.where(
                 F.col(sc).isin(list(gender_specific_concepts))
@@ -1002,7 +898,6 @@ def run_dqd_checks(
                     level="CONCEPT",
                     table=name,
                     field=sc,
-                    category="Plausibility",
                 )
 
     # plausibleUnitConceptIds (CONCEPT, Plausibility): each measurement
@@ -1038,7 +933,6 @@ def run_dqd_checks(
                 level="CONCEPT",
                 table="measurement",
                 field="unit_source_value",
-                category="Plausibility",
             )
 
     return spark.createDataFrame(rows, DQD_FULL_SCHEMA)

@@ -11,25 +11,54 @@ from synthea2omop_etl_spark.cli import main
 from tests import fixtures_synthea as fx
 
 
+_CORE_CSVS = [
+    ("patients", fx.PATIENT_COLS, fx.PATIENTS),
+    ("encounters", fx.ENCOUNTER_COLS, fx.ENCOUNTERS),
+    ("conditions", fx.CONDITION_COLS, fx.CONDITIONS),
+]
+
+
+def _write_csvs(d, tables) -> None:
+    for name, cols, rows in tables:
+        with open(d / f"{name}.csv", "w", newline="") as f:
+            w = csv.writer(f)
+            w.writerow(cols)
+            w.writerows(rows)
+
+
 @pytest.fixture(scope="module")
 def csv_dir(tmp_path_factory, spark):
     d = tmp_path_factory.mktemp("synthea_csv")
-    for name, cols, rows in [
-        ("patients", fx.PATIENT_COLS, fx.PATIENTS),
-        ("encounters", fx.ENCOUNTER_COLS, fx.ENCOUNTERS),
-        ("conditions", fx.CONDITION_COLS, fx.CONDITIONS),
+    _write_csvs(d, _CORE_CSVS + [
         ("medications", fx.MEDICATION_COLS, fx.MEDICATIONS),
         ("procedures", fx.PROCEDURE_COLS, fx.PROCEDURES),
         ("observations", fx.OBSERVATION_COLS, fx.OBSERVATIONS),
         ("immunizations", fx.IMMUNIZATION_COLS, fx.IMMUNIZATIONS),
         ("organizations", fx.ORGANIZATION_COLS, fx.ORGANIZATIONS),
         ("providers", fx.PROVIDER_COLS, fx.PROVIDERS),
-    ]:
-        with open(d / f"{name}.csv", "w", newline="") as f:
-            w = csv.writer(f)
-            w.writerow(cols)
-            w.writerows(rows)
+    ])
     return d
+
+
+def test_cli_run_validate_smoke(tmp_path, capsys, spark):
+    """Default-tier CLI smoke: run → validate over the patients,
+    encounters and conditions CSVs only (the full run → validate →
+    analytics → achilles chain is the slow-tier test below)."""
+    csv_in = tmp_path / "csv"
+    csv_in.mkdir()
+    _write_csvs(csv_in, _CORE_CSVS)
+    out_dir = str(tmp_path / "omop")
+    assert main(["run", "--input", str(csv_in), "--output", out_dir]) == 0
+    capsys.readouterr()
+    rc = main(["validate", "--omop", out_dir])
+    report = json.loads(capsys.readouterr().out)
+    # exit 1: the fixture deliberately contains an invalid gender
+    assert rc == 1
+    assert not report["checks"]["demographics"]["passed"]
+    assert report["checks"]["referential_integrity"]["passed"]
+    assert any(
+        r["cdm_table_name"] == "condition_occurrence" for r in report["dqd"]
+    )
 
 
 @pytest.mark.slow
@@ -176,6 +205,21 @@ def test_cli_missing_required_input(tmp_path, capsys):
     )
     assert rc == 2
     assert "required input missing" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("layers", [(), ("visit_occurrence",)])
+def test_cli_omop_dir_without_person(layers, tmp_path, capsys):
+    """validate / achilles over a directory without omop_person (empty, or
+    holding another layer only) print an error and exit 2 before any
+    Spark work, as analytics does over an empty directory."""
+    for name in layers:
+        (tmp_path / f"omop_{name}").mkdir()
+    for cmd in ("validate", "achilles"):
+        assert main([cmd, "--omop", str(tmp_path)]) == 2
+        assert "no omop_person found" in capsys.readouterr().err
+    if not layers:
+        assert main(["analytics", "--omop", str(tmp_path), "--list"]) == 2
+        assert "no omop_* tables found" in capsys.readouterr().err
 
 
 def test_cli_curate_parquet_and_jsonl(tmp_path, capsys, spark):

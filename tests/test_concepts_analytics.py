@@ -8,16 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from synthea2omop_etl_spark.analytics import (
-    age_at_first_observation,
     age_decile_distribution,
-    concept_distribution,
     drug_strength_rollup,
     monthly_trend,
-    record_counts,
     records_per_person_distribution,
     run_sql,
-    top_k_concepts,
-    visit_duration_distribution,
 )
 from synthea2omop_etl_spark.operators.concepts import (
     apply_concept_mapping,
@@ -188,59 +183,6 @@ def test_pipeline_without_vocab_all_zero(omop):
         r.measurement_concept_id == 0
         for r in omop["omop_measurement"].collect()
     )
-
-
-def test_record_counts_and_topk(omop):
-    rc = {
-        r.table_name: r.n
-        for r in record_counts(
-            {
-                "person": omop["omop_person"],
-                "condition_occurrence": omop["omop_condition_occurrence"],
-            }
-        ).collect()
-    }
-    assert rc == {"person": 3, "condition_occurrence": 3}
-    top = top_k_concepts(
-        omop["omop_condition_occurrence"], "condition_source_value", k=2
-    ).collect()
-    # all counts tie at 1 → deterministic lexicographic tiebreak
-    assert top[0].source_value == "195662009" and top[0].n == 1
-
-
-def test_distributions(omop):
-    gender = {
-        r.concept_id: r.n
-        for r in concept_distribution(
-            omop["omop_person"], "gender_concept_id"
-        ).collect()
-    }
-    assert gender == {8507: 1, 8532: 1, 0: 1}
-    ages = age_at_first_observation(
-        omop["omop_person"], omop["omop_observation_period"]
-    ).collect()
-    assert sum(r.n for r in ages) == 3
-    vd = visit_duration_distribution(omop["omop_visit_occurrence"]).collect()
-    assert {r.visit_concept_id for r in vd} == {9201, 9202, 9203}
-
-
-def test_visit_duration_approx_mode_matches_exact(omop):
-    """The percentile_approx scale path degenerates to exact when group
-    sizes are below the sketch accuracy — which they always are in tests."""
-    vo = omop["omop_visit_occurrence"]
-    exact = {
-        r.visit_concept_id: r.asDict()
-        for r in visit_duration_distribution(vo, mode="exact").collect()
-    }
-    approx = {
-        r.visit_concept_id: r.asDict()
-        for r in visit_duration_distribution(vo, mode="approx").collect()
-    }
-    assert exact.keys() == approx.keys()
-    for cid, e in exact.items():
-        a = approx[cid]
-        for col in ("min_days", "median", "max_days"):
-            assert abs(e[col] - a[col]) <= 1e-9, (cid, col, e[col], a[col])
 
 
 def test_age_deciles_and_monthly_trend(omop):

@@ -343,25 +343,6 @@ def test_pipeline_immunizations_without_medications(spark):
     assert types == {38000177}
 
 
-def test_dqd_results_shape(spark, omop):
-    """Validation checks rendered in the reference's
-    dataqualitydashboard_results shape (query_achilles_results.sh data
-    quality branch)."""
-    from synthea2omop_etl_spark.validate import dqd_results
-
-    checks = [
-        check_record_counts({"person": omop["omop_person"]}),
-        check_demographics(omop["omop_person"]),  # fails on fixture (P3)
-    ]
-    df = dqd_results(checks, spark)
-    assert df.columns == [
-        "issue_id", "issue_description", "prevalence", "record_count", "failed"
-    ]
-    rows = {r.issue_id: r for r in df.collect()}
-    assert not rows[1].failed
-    assert rows[2].failed and rows[2].record_count == 1  # one invalid gender
-
-
 @pytest.mark.slow
 def test_dqd_check_families(spark, omop):
     """VERDICT r4 #8: the per-table/field DQD engine covers ≥3 check
