@@ -1,11 +1,13 @@
 """patients → omop.person (reference: etl_pipeline/etl_patients.py:217-273;
-lookup-join variant python/enhanced_synthea_to_omop.py:786-859;
-sql/etl/transform_person.sql:3-47).
+sql/etl/transform_person.sql:3-47). The reference's lookup-table variant
+(python/enhanced_synthea_to_omop.py:584-633, 786-859) is not reproduced:
+nothing in the pipeline chose it, and its seeds encode the CASE arms'
+mapping except on race, where they map 'other' (not 'hawaiian') to 8522.
 
 Semantics reproduced:
 - gender/race/ethnicity → fixed concept ids via CASE (unmapped → 0);
   gender matching is case-insensitive with M/F/MALE/FEMALE variants
-  (lookup seed rows, enhanced_synthea_to_omop.py:586-596);
+  (the lookup variant's seed rows, enhanced_synthea_to_omop.py:586-596);
 - birth parts via EXTRACT(YEAR/MONTH/DAY);
 - person_id from the person_map (dense ids over source UUID, §1.3);
 - rows with NULL birthdate are kept (reference inserts them; validation
@@ -25,8 +27,8 @@ from synthea2omop_etl_spark.schemas import (
 )
 
 
-def _case_map(col: str, mapping: dict[str, int], lower: bool = True):
-    c = F.lower(F.col(col)) if lower else F.col(col)
+def _case_map(col: str, mapping: dict[str, int]):
+    c = F.lower(F.col(col))
     expr = None
     for k, v in mapping.items():
         cond = c == k.lower()
@@ -85,109 +87,3 @@ def person(
         *extra,
     )
 
-
-# --- lookup-table variant (enhanced_synthea_to_omop.py:584-633, 786-859) ---
-
-# Seed rows exactly as the reference inserts them (:586-625). Note the
-# reference's own two variants disagree on race 'other' (lookup → 8522,
-# CASE → unmapped); the lookup variant follows its seeds.
-GENDER_LOOKUP_SEED = [
-    ("M", 8507), ("F", 8532), ("MALE", 8507), ("FEMALE", 8532),
-    ("male", 8507), ("female", 8532), ("m", 8507), ("f", 8532),
-]
-RACE_LOOKUP_SEED = [
-    ("white", 8527), ("black", 8516), ("asian", 8515), ("native", 8657),
-    ("other", 8522), ("WHITE", 8527), ("BLACK", 8516), ("ASIAN", 8515),
-    ("NATIVE", 8657), ("OTHER", 8522),
-]
-ETHNICITY_LOOKUP_SEED = [
-    ("hispanic", 38003563), ("nonhispanic", 38003564),
-    ("HISPANIC", 38003563), ("NONHISPANIC", 38003564),
-]
-
-
-def _lookup_df(spark, seed: list[tuple[str, int]]) -> DataFrame:
-    return spark.createDataFrame(seed, "source_value string, concept_id int")
-
-
-def _dedup_lookup(lookup: DataFrame) -> DataFrame:
-    """DISTINCT ON (lower(source_value)) ORDER BY source_value — the
-    reference's per-key first-match rule (:789-811). All case variants of
-    a key map to the same concept, so this only fixes WHICH seed row wins,
-    deterministically."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.lower(F.col("source_value"))).orderBy(
-        F.col("source_value").asc()
-    )
-    return (
-        lookup.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(
-            F.lower(F.col("source_value")).alias("source_key"), "concept_id"
-        )
-    )
-
-
-def person_via_lookup(
-    patients_typed: DataFrame,
-    person_map: DataFrame,
-    gender_lookup: DataFrame | None = None,
-    race_lookup: DataFrame | None = None,
-    ethnicity_lookup: DataFrame | None = None,
-) -> DataFrame:
-    """The reference's second person implementation: demographics resolved
-    by joining seeded lookup TABLES (case-insensitively, first-match
-    dedup) instead of CASE expressions — the variant a deployment extends
-    by inserting rows, not editing SQL. Output schema matches person().
-
-    Lookups are dimension-sized → broadcast; the fact side never shuffles.
-    """
-    spark = patients_typed.sparkSession
-    gl = _dedup_lookup(
-        gender_lookup
-        if gender_lookup is not None
-        else _lookup_df(spark, GENDER_LOOKUP_SEED)
-    )
-    rl = _dedup_lookup(
-        race_lookup
-        if race_lookup is not None
-        else _lookup_df(spark, RACE_LOOKUP_SEED)
-    )
-    el = _dedup_lookup(
-        ethnicity_lookup
-        if ethnicity_lookup is not None
-        else _lookup_df(spark, ETHNICITY_LOOKUP_SEED)
-    )
-    p = patients_typed.join(
-        person_map,
-        patients_typed["Id"] == person_map["patient_uuid"],
-        "inner",
-    )
-    for lookup, src_col, out_col in (
-        (gl, "GENDER", "gender_concept_id"),
-        (rl, "RACE", "race_concept_id"),
-        (el, "ETHNICITY", "ethnicity_concept_id"),
-    ):
-        renamed = lookup.withColumnRenamed("concept_id", out_col)
-        p = p.join(
-            F.broadcast(renamed),
-            F.lower(p[src_col]) == renamed["source_key"],
-            "left",
-        ).drop("source_key")
-    return p.select(
-        F.col("person_id"),
-        F.coalesce("gender_concept_id", F.lit(0)).alias("gender_concept_id"),
-        F.year("BIRTHDATE").alias("year_of_birth"),
-        F.month("BIRTHDATE").alias("month_of_birth"),
-        F.dayofmonth("BIRTHDATE").alias("day_of_birth"),
-        F.col("BIRTHDATE").cast("timestamp").alias("birth_datetime"),
-        F.coalesce("race_concept_id", F.lit(0)).alias("race_concept_id"),
-        F.coalesce("ethnicity_concept_id", F.lit(0)).alias(
-            "ethnicity_concept_id"
-        ),
-        F.col("Id").alias("person_source_value"),
-        F.col("GENDER").alias("gender_source_value"),
-        F.col("RACE").alias("race_source_value"),
-        F.col("ETHNICITY").alias("ethnicity_source_value"),
-    )

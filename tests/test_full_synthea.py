@@ -138,30 +138,6 @@ def test_visit_without_maps_has_null_provider(spark):
     assert all(r.provider_id is None and r.care_site_id is None for r in v)
 
 
-def test_person_lookup_variant_matches_case_variant(spark):
-    """The seeded-lookup-join person implementation must agree with the
-    CASE implementation on every fixture patient (the seeds and the CASE
-    arms encode the same mapping for all values the fixtures produce)."""
-    from synthea2omop_etl_spark.domains.person import person, person_via_lookup
-    from synthea2omop_etl_spark.operators.idmap import build_id_map
-    from tests.fixtures_synthea import PATIENT_COLS, PATIENTS
-
-    patients = apply_typing(
-        spark.createDataFrame(PATIENTS, PATIENT_COLS), TYPING_SPECS["patients"]
-    )
-    pm = build_id_map(
-        patients.selectExpr("Id as patient_uuid"), "patient_uuid", "person_id"
-    )
-    case_rows = {r.person_source_value: r for r in person(patients, pm).collect()}
-    lk_rows = {
-        r.person_source_value: r
-        for r in person_via_lookup(patients, pm).collect()
-    }
-    assert case_rows.keys() == lk_rows.keys()
-    for k, c in case_rows.items():
-        assert c == lk_rows[k], k
-
-
 def test_staging_projection_layer(spark):
     """19-table typed→staging projection (transfer_population_to_staging
     .sql:38-650): snake_case renames, date truncation, year→Jan-1 date."""

@@ -15,7 +15,11 @@ Covers, as the ``repr`` of collected rows:
   them, and over person + condition_occurrence (rows in emitted order,
   issue_id and descriptions included);
 - every layer ``run_pipeline(partition_by_year=True)`` writes (sorted
-  rows) and the written partition directories.
+  rows) and the written partition directories;
+- every OMOP layer of ``run_pipeline(raw_tables_full, vocab_tables=…)``
+  over an inline vocabulary that maps codes of all five concept-mapped
+  facts (condition, procedure, device, drug from RxNorm and CVX, and
+  LOINC measurement/observation), one of them through 'Maps to'.
 """
 
 from __future__ import annotations
@@ -112,6 +116,32 @@ def main(argv: list[str] | None = None) -> int:
             if any(f.endswith(".parquet") for f in files)
         })
         out.write(f"== partition dirs {dirs}\n")
+
+    vocab = {
+        "concept": spark.createDataFrame(
+            [(1001, "Condition", "SNOMED", "S", "44054006", None),
+             (1004, "Condition", "SNOMED", None, "195662009", None),
+             (1005, "Condition", "SNOMED", "S", "195662009-std", None),
+             (1101, "Procedure", "SNOMED", "S", "430193006", None),
+             (1201, "Device", "SNOMED", "S", "337414009", None),
+             (2001, "Drug", "RxNorm", "S", "860975", None),
+             (5001, "Drug", "CVX", "S", "140", None),
+             (4001, "Measurement", "LOINC", "S", "8302-2", None),
+             (4002, "Observation", "LOINC", "S", "72166-2", None)],
+            "concept_id bigint, domain_id string, vocabulary_id string, "
+            "standard_concept string, concept_code string, "
+            "invalid_reason string",
+        ).withColumn("concept_name", F.col("concept_code")),
+        "concept_relationship": spark.createDataFrame(
+            [(1004, 1005, "Maps to", None)],
+            "concept_id_1 bigint, concept_id_2 bigint, "
+            "relationship_id string, invalid_reason string",
+        ),
+    }
+    mapped = run_pipeline(spark, raw_tables_full(spark), vocab_tables=vocab)
+    for key in sorted(mapped):
+        if key.startswith("omop_"):
+            dump(f"mapped layer {key}", mapped[key])
     out.close()
     spark.stop()
     return 0
