@@ -3,7 +3,6 @@ from synthea2omop_etl_spark.analytics.achilles_catalog import (  # noqa: F401
     run_default_analyses,
 )
 from synthea2omop_etl_spark.analytics.achilles_lite import (  # noqa: F401
-    age_decile_distribution,
     drug_strength_rollup,
     list_tables,
     monthly_trend,

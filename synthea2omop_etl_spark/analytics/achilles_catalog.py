@@ -276,6 +276,63 @@ _ERA_FAMILIES = (
     (1000, "condition_era", "condition_occurrence", condition_era),
 )
 
+#: FK-orphan analyses outside the fact grid: (analysis id, table, FK
+#: column, dimension table). Each runs when the table, its FK column and
+#: the dimension table exist — 7, 9 and 1812 are registered-empty on this
+#: pipeline's CDM (no provider/care-site column on person, no measurement
+#: provider), exactly what stock Achilles produces there. 213 is the visit
+#: table's x13 slot (its care site; the other facts' x13 is the visit FK).
+_FK_ORPHANS = (
+    (7, "person", "provider_id", "provider"),
+    (8, "person", "location_id", "location"),
+    (9, "person", "care_site_id", "care_site"),
+    (213, "visit_occurrence", "care_site_id", "care_site"),
+    (1812, "measurement", "provider_id", "provider"),
+)
+
+#: value-distribution analyses: (analysis id, table, value column, stratum
+#: column or None). Each runs when the table and column exist, over the
+#: column's non-NULL slice, so count_value agrees with the row's own
+#: min/percentiles/max (immunization rows carry NULL dosing fields by
+#: construction). The range dists 1816/1817 are registered-empty on a
+#: Synthea-derived CDM; the stock copay/coinsurance/deductible/
+#: amount-allowed cost tail is not-applicable (achilles_default_ids.py
+#: NOT_APPLICABLE). 1815-1817 stratify on the measurement source value like
+#: the 1801 family (see the OmopFact.stratum note: without a vocabulary
+#: load the concept ids are all 0); 1824 is 1815's unstratified twin.
+_VALUE_DISTS = (
+    (715, "drug_exposure", "days_supply", None),
+    (716, "drug_exposure", "refills", None),
+    (717, "drug_exposure", "quantity", None),
+    (1502, "cost", "total_charge", "cost_domain_id"),
+    (1503, "cost", "paid_by_patient", "cost_domain_id"),
+    (1504, "cost", "paid_by_payer", "cost_domain_id"),
+    (1505, "cost", "total_paid", "cost_domain_id"),
+    (1506, "cost", "total_cost", "cost_domain_id"),
+    (1815, "measurement", "value_as_number", "measurement_source_value"),
+    (1816, "measurement", "range_low", "measurement_source_value"),
+    (1817, "measurement", "range_high", "measurement_source_value"),
+    (1824, "measurement", "value_as_number", None),
+)
+
+#: the 2000-series co-occurrence person counts: (analysis id, the tables a
+#: person needs a record in), intersected left to right
+_PERSON_SET_CHAINS = (
+    (2000, ("condition_occurrence", "drug_exposure")),
+    (2001, ("condition_occurrence", "procedure_occurrence")),
+    (2002, ("measurement", "condition_occurrence", "drug_exposure")),
+)
+
+#: the fact tables whose distinct person sets the 2000-2002 chains and the
+#: 2004 domain-presence mask read (mask bit i = table i)
+_PERSON_SET_TABLES = (
+    "visit_occurrence",
+    "condition_occurrence",
+    "drug_exposure",
+    "procedure_occurrence",
+    "measurement",
+)
+
 
 def _person_scale(df: DataFrame) -> DataFrame:
     """Identity marker, NOT a broadcast hint (r11): every frame passed
@@ -477,6 +534,31 @@ def _per_person(analysis_id: int, df: DataFrame, mode: str) -> DataFrame:
     return _dist(analysis_id, n, "n", mode)
 
 
+def _span_dist(
+    analysis_id: int, df: DataFrame, start: str, end: str, mode: str,
+    by: str | None = None,
+) -> DataFrame:
+    """Distribution of the days from ``start`` to ``end`` per row (period,
+    era, visit and death-gap lengths): one global row, or one per ``by``
+    stratum."""
+    return _dist(
+        analysis_id,
+        df.select(*([by] if by else []), F.datediff(end, start).alias("d")),
+        "d",
+        mode,
+        s1=F.col(by) if by else None,
+    )
+
+
+def _orphans(df: DataFrame, fk: str, dim: DataFrame) -> DataFrame:
+    """Rows whose non-NULL ``fk`` is missing from ``dim`` (the x13 / FK
+    validity check). NULL links are legitimate left-join outcomes, not
+    orphans."""
+    return df.where(F.col(fk).isNotNull()).join(
+        dim.select(fk), fk, "left_anti"
+    )
+
+
 def _age_at_first(
     analysis_id: int, df: DataFrame, concept_col: str, date_col: str,
     bd: DataFrame, mode: str,
@@ -556,48 +638,34 @@ def run_default_analyses(
     dists: list[DataFrame] = []
     person_ids = person.select("person_id")
     gender = person.select("person_id", "gender_concept_id")
-    bd = person.select(
-        "person_id", F.to_date("birth_datetime").alias("bd")
+    demo = person.select(
+        "person_id",
+        "gender_concept_id",
+        F.to_date("birth_datetime").alias("bd"),
     )
+    bd = demo.select("person_id", "bd")
     vo = omop.get("omop_visit_occurrence")
 
-    # 7/8/9: person FK validity — emitted only when BOTH the FK column
-    # and its dimension table exist in this CDM (registered-empty
-    # otherwise, exactly what stock Achilles produces on a CDM without
-    # the column). NULL FKs are legitimate, not orphans.
-    for fk_aid, fk_col, dim_key in (
-        (7, "provider_id", "omop_provider"),
-        (8, "location_id", "omop_location"),
-        (9, "care_site_id", "omop_care_site"),
-    ):
-        fk_dim = omop.get(dim_key)
-        if fk_col in person.columns and fk_dim is not None:
-            results.append(
-                _result(
-                    fk_aid,
-                    person.where(F.col(fk_col).isNotNull()).join(
-                        fk_dim.select(fk_col), fk_col, "left_anti"
-                    ),
-                )
-            )
+    # 7/8/9, 213, 1812: FK validity outside the fact grid (_FK_ORPHANS)
+    for aid, table, fk, dim in _FK_ORPHANS:
+        df, dim_df = omop.get(f"omop_{table}"), omop.get(f"omop_{dim}")
+        if df is not None and dim_df is not None and fk in df.columns:
+            results.append(_result(aid, _orphans(df, fk, dim_df)))
 
     op = omop.get("omop_observation_period")
     op_ranges = None
     if op is not None:
+        op_start, op_end = (
+            "observation_period_start_date", "observation_period_end_date"
+        )
         op_ranges = op.select(
             F.col("person_id").alias("__pid"),
-            F.col("observation_period_start_date").alias("__ops"),
-            F.col("observation_period_end_date").alias("__ope"),
+            F.col(op_start).alias("__ops"),
+            F.col(op_end).alias("__ope"),
         )
         results.append(_result(119, op, F.col("period_type_concept_id")))
-        results.append(
-            _density(
-                "observation_period", op, "observation_period_start_date"
-            )
-        )
-        first = op.groupBy("person_id").agg(
-            F.min("observation_period_start_date").alias("first_obs")
-        )
+        results.append(_density("observation_period", op, op_start))
+        first = op.groupBy("person_id").agg(F.min(op_start).alias("first_obs"))
         ages = bd.join(first, "person_id")
         results.append(
             _result(
@@ -606,23 +674,16 @@ def run_default_analyses(
                 F.floor(age_in_years(F.col("first_obs"), F.col("bd")) / 10),
             )
         )
-        results.append(_result(111, op, _month("observation_period_start_date")))
+        results.append(_result(111, op, _month(op_start)))
         # 112: persons by observation period END month
-        results.append(
-            _persons_result(
-                112, op, _month("observation_period_end_date")
-            )
-        )
+        results.append(_persons_result(112, op, _month(op_end)))
         # 108: persons by 30d-increment length of their FIRST observation
         # period. min(struct(start, end)) picks the earliest period's whole
         # row in the same aggregate — no window, one shuffle; the groupBy
         # leaves one row per person so the count IS a person count.
         firstp = op.groupBy("person_id").agg(
             F.min(
-                F.struct(
-                    F.col("observation_period_start_date").alias("s"),
-                    F.col("observation_period_end_date").alias("e"),
-                )
+                F.struct(F.col(op_start).alias("s"), F.col(op_end).alias("e"))
             ).alias("p")
         )
         results.append(
@@ -632,26 +693,9 @@ def run_default_analyses(
                 F.floor(F.datediff(F.col("p.e"), F.col("p.s")) / 30),
             )
         )
-        dists.append(
-            _dist(
-                105,
-                op.select(
-                    F.datediff(
-                        "observation_period_end_date",
-                        "observation_period_start_date",
-                    ).alias("d")
-                ),
-                "d",
-                mode,
-            )
-        )
+        dists.append(_span_dist(105, op, op_start, op_end, mode))
         # 102: gender × age decile at first observation (the two-stratum
         # twin of 101)
-        demo = person.select(
-            "person_id",
-            "gender_concept_id",
-            F.to_date("birth_datetime").alias("bd"),
-        )
         ages_g = demo.join(first, "person_id")
         results.append(
             _result(
@@ -663,18 +707,13 @@ def run_default_analyses(
         )
         # 106: observation period length by gender (dist)
         dists.append(
-            _dist(
+            _span_dist(
                 106,
-                op.join(_person_scale(gender), "person_id").select(
-                    "gender_concept_id",
-                    F.datediff(
-                        "observation_period_end_date",
-                        "observation_period_start_date",
-                    ).alias("d"),
-                ),
-                "d",
+                op.join(_person_scale(gender), "person_id"),
+                op_start,
+                op_end,
                 mode,
-                s1=F.col("gender_concept_id"),
+                by="gender_concept_id",
             )
         )
         # 103/104: age at first observation period, global and by gender
@@ -698,18 +737,13 @@ def run_default_analyses(
             "person_id", F.floor(age_expr / 10).alias("dec")
         )
         dists.append(
-            _dist(
+            _span_dist(
                 107,
-                op.join(_person_scale(per_decile), "person_id").select(
-                    "dec",
-                    F.datediff(
-                        "observation_period_end_date",
-                        "observation_period_start_date",
-                    ).alias("d"),
-                ),
-                "d",
+                op.join(_person_scale(per_decile), "person_id"),
+                op_start,
+                op_end,
                 mode,
-                s1=F.col("dec"),
+                by="dec",
             )
         )
         # 114/115: observation-period data-quality person counts. The
@@ -724,10 +758,7 @@ def run_default_analyses(
                     ),
                     "person_id",
                 )
-                .where(
-                    F.year("observation_period_start_date")
-                    < F.col("year_of_birth")
-                )
+                .where(F.year(op_start) < F.col("year_of_birth"))
                 .select("person_id")
                 .distinct(),
             )
@@ -735,10 +766,7 @@ def run_default_analyses(
         results.append(
             _result(
                 115,
-                op.where(
-                    F.col("observation_period_end_date")
-                    < F.col("observation_period_start_date")
-                )
+                op.where(F.col(op_end) < F.col(op_start))
                 .select("person_id")
                 .distinct(),
             )
@@ -751,14 +779,11 @@ def run_default_analyses(
         # any-day coverage. All four stay one shuffle per analysis.
         years = op.select(
             "person_id",
-            F.col("observation_period_start_date").alias("s"),
-            F.col("observation_period_end_date").alias("e"),
-            F.explode(
-                F.sequence(
-                    F.year("observation_period_start_date"),
-                    F.year("observation_period_end_date"),
-                )
-            ).alias("yr"),
+            F.col(op_start).alias("s"),
+            F.col(op_end).alias("e"),
+            F.explode(F.sequence(F.year(op_start), F.year(op_end))).alias(
+                "yr"
+            ),
         )
         full_years = years.where(
             (F.col("s") <= F.make_date(F.col("yr"), F.lit(1), F.lit(1)))
@@ -767,12 +792,12 @@ def run_default_analyses(
         results.append(_persons_result(109, full_years, F.col("yr")))
         months = op.select(
             "person_id",
-            F.col("observation_period_start_date").alias("s"),
-            F.col("observation_period_end_date").alias("e"),
+            F.col(op_start).alias("s"),
+            F.col(op_end).alias("e"),
             F.explode(
                 F.sequence(
-                    F.trunc(F.col("observation_period_start_date"), "month"),
-                    F.trunc(F.col("observation_period_end_date"), "month"),
+                    F.trunc(F.col(op_start), "month"),
+                    F.trunc(F.col(op_end), "month"),
                     F.expr("interval 1 month"),
                 )
             ).alias("mo"),
@@ -852,16 +877,7 @@ def run_default_analyses(
         dists.append(
             _dist(
                 506,
-                death.join(
-                    _person_scale(
-                        person.select(
-                            "person_id",
-                            "gender_concept_id",
-                            F.to_date("birth_datetime").alias("bd"),
-                        )
-                    ),
-                    "person_id",
-                ).select(
+                death.join(_person_scale(demo), "person_id").select(
                     "gender_concept_id",
                     age_in_years(F.col("death_date"), F.col("bd")).alias(
                         "age"
@@ -942,9 +958,9 @@ def run_default_analyses(
                     base + 10, _outside_periods(df, fact.start, op_ranges)
                 )
             )
-        # x13: non-NULL visit FKs not present in visit_occurrence (NULL
-        # links are legitimate left-join outcomes, not orphans). The visit
-        # table's own 213 checks care_site; the grid has no 2113.
+        # x13: visit FKs not present in visit_occurrence. The visit
+        # table's own 213 checks care_site (_FK_ORPHANS); the grid has no
+        # 2113.
         if (
             vo is not None
             and table != "visit_occurrence"
@@ -952,14 +968,7 @@ def run_default_analyses(
             and "visit_occurrence_id" in df.columns
         ):
             results.append(
-                _result(
-                    base + 13,
-                    df.where(F.col("visit_occurrence_id").isNotNull()).join(
-                        vo.select("visit_occurrence_id"),
-                        "visit_occurrence_id",
-                        "left_anti",
-                    ),
-                )
+                _result(base + 13, _orphans(df, "visit_occurrence_id", vo))
             )
         # 511-515: days from the table's LAST event to death. One keyed
         # max-date aggregate (single shuffle), then a join to the deaths
@@ -969,12 +978,11 @@ def run_default_analyses(
                 F.max(fact.start).alias("last_date")
             )
             dists.append(
-                _dist(
+                _span_dist(
                     _DEATH_GAP_IDS[table],
-                    last.join(death_dates, "person_id").select(
-                        F.datediff("death_date", "last_date").alias("d")
-                    ),
-                    "d",
+                    last.join(death_dates, "person_id"),
+                    "last_date",
+                    "death_date",
                     mode,
                     # a domain with no deceased persons' rows would emit a
                     # count-0/NULL-stats row from the global groupBy;
@@ -987,47 +995,33 @@ def run_default_analyses(
     # disease denominators Atlas shows). Distinct person sets are
     # persons-sized → each intersection is one semi-join chain, no fact
     # table ever re-shuffles.
-    def _persons_of(key: str):
-        df = omop.get(key)
-        return None if df is None else df.select("person_id").distinct()
-    p_cond = _persons_of("omop_condition_occurrence")
-    p_drug = _persons_of("omop_drug_exposure")
-    p_proc = _persons_of("omop_procedure_occurrence")
-    p_meas = _persons_of("omop_measurement")
-    if p_cond is not None and p_drug is not None:
-        results.append(_result(2000, p_cond.join(p_drug, "person_id", "left_semi")))
-    if p_cond is not None and p_proc is not None:
-        results.append(_result(2001, p_cond.join(p_proc, "person_id", "left_semi")))
-    if p_cond is not None and p_drug is not None and p_meas is not None:
-        results.append(
-            _result(
-                2002,
-                p_meas.join(p_cond, "person_id", "left_semi").join(
-                    p_drug, "person_id", "left_semi"
-                ),
+    persons_in = {
+        t: omop[f"omop_{t}"].select("person_id").distinct()
+        for t in _PERSON_SET_TABLES
+        if f"omop_{t}" in omop
+    }
+    for aid, tables in _PERSON_SET_CHAINS:
+        if all(t in persons_in for t in tables):
+            results.append(
+                _result(
+                    aid,
+                    reduce(
+                        lambda a, b: a.join(b, "person_id", "left_semi"),
+                        (persons_in[t] for t in tables),
+                    ),
+                )
             )
-        )
 
     # 2004: persons by domain-presence BITMASK (Achilles' domain-overlap
     # analysis — every subset count in one row set instead of one
     # analysis per pair). Each domain reduces to its distinct person set
     # BEFORE the union, so the mask aggregate shuffles persons-sized
     # slices only, never facts.
-    mask_sides = []
-    for bit, mkey in enumerate((
-        "omop_visit_occurrence",
-        "omop_condition_occurrence",
-        "omop_drug_exposure",
-        "omop_procedure_occurrence",
-        "omop_measurement",
-    )):
-        mdf = omop.get(mkey)
-        if mdf is not None:
-            mask_sides.append(
-                mdf.select("person_id")
-                .distinct()
-                .withColumn("__bit", F.lit(1 << bit))
-            )
+    mask_sides = [
+        persons_in[t].withColumn("__bit", F.lit(1 << bit))
+        for bit, t in enumerate(_PERSON_SET_TABLES)
+        if t in persons_in
+    ]
     if mask_sides:
         masks = (
             reduce(DataFrame.unionByName, mask_sides)
@@ -1036,23 +1030,12 @@ def run_default_analyses(
         )
         results.append(_result(2004, masks, F.col("mask")))
 
-    # 213: the visit table's dangling care_site FKs (its x13 slot);
     # 1200/1201: place-of-service strata via the care_site dim (tiny →
     # broadcast). Without a vocabulary load every place_of_service is the
     # no-matching-concept id — one stratum, exactly what Achilles shows
     # on an unmapped CDM.
     cs = omop.get("omop_care_site")
     if vo is not None and cs is not None and "care_site_id" in vo.columns:
-        results.append(
-            _result(
-                213,
-                vo.where(F.col("care_site_id").isNotNull()).join(
-                    cs.select("care_site_id"),
-                    "care_site_id",
-                    "left_anti",
-                ),
-            )
-        )
         pos_visits = vo.join(
             _person_scale(
                 cs.select(
@@ -1065,22 +1048,18 @@ def run_default_analyses(
         results.append(_result(1201, pos_visits, F.col("__pos")))
         results.append(_persons_result(1200, pos_visits, F.col("__pos")))
 
-    # 715: days-supply distribution (immunization rows carry NULL
-    # days_supply by construction — excluded like the 1502/1815 pattern)
-    de = omop.get("omop_drug_exposure")
-    if de is not None:
-        # 715/716/717: the dosing-field dist trio (days_supply, refills,
-        # quantity) — one single-pass global aggregate each over the
-        # non-null slice (immunization rows carry NULLs by construction)
-        for fid, fcol in (
-            (715, "days_supply"), (716, "refills"), (717, "quantity")
-        ):
+    # 715-717, 1502-1506, 1815-1817, 1824: non-NULL value dists
+    # (_VALUE_DISTS)
+    for aid, table, col, by in _VALUE_DISTS:
+        df = omop.get(f"omop_{table}")
+        if df is not None and col in df.columns:
             dists.append(
                 _dist(
-                    fid,
-                    de.where(F.col(fcol).isNotNull()),
-                    fcol,
+                    aid,
+                    df.where(F.col(col).isNotNull()),
+                    col,
                     mode,
+                    s1=F.col(by) if by else None,
                 )
             )
 
@@ -1096,15 +1075,11 @@ def run_default_analyses(
         )
         dists.append(_per_person(1303, ppp, mode))
         dists.append(
-            _dist(
+            _span_dist(
                 1306,
-                ppp.select(
-                    F.datediff(
-                        "payer_plan_period_end_date",
-                        "payer_plan_period_start_date",
-                    ).alias("d")
-                ),
-                "d",
+                ppp,
+                "payer_plan_period_start_date",
+                "payer_plan_period_end_date",
                 mode,
             )
         )
@@ -1139,12 +1114,7 @@ def run_default_analyses(
         dists += [
             _per_person(base + 3, eras, mode),
             _age_at_first(base + 6, eras, concept, start, bd, mode),
-            _dist(
-                base + 7,
-                eras.select(F.datediff(end, start).alias("d")),
-                "d",
-                mode,
-            ),
+            _span_dist(base + 7, eras, start, end, mode),
         ]
 
     # 1500-series: cost analyses (reference transform_cost output)
@@ -1152,76 +1122,9 @@ def run_default_analyses(
     if co is not None:
         results.append(_result(1500, co))
         results.append(_result(1501, co, F.col("cost_domain_id")))
-        # Non-null filter so count_value agrees with the row's own
-        # min/percentiles/max (the 1815 pattern — an unfiltered input counts
-        # NULL-valued rows the statistics then exclude).
-        dists.append(
-            _dist(
-                1502,
-                co.where(F.col("total_charge").isNotNull()),
-                "total_charge",
-                mode,
-                s1=F.col("cost_domain_id"),
-            )
-        )
-        dists.append(
-            _dist(
-                1503,
-                co.where(F.col("paid_by_patient").isNotNull()),
-                "paid_by_patient",
-                mode,
-                s1=F.col("cost_domain_id"),
-            )
-        )
-        dists.append(
-            _dist(
-                1504,
-                co.where(F.col("paid_by_payer").isNotNull()),
-                "paid_by_payer",
-                mode,
-                s1=F.col("cost_domain_id"),
-            )
-        )
-        if "total_paid" in co.columns:
-            dists.append(
-                _dist(
-                    1505,
-                    co.where(F.col("total_paid").isNotNull()),
-                    "total_paid",
-                    mode,
-                    s1=F.col("cost_domain_id"),
-                )
-            )
-        # 1506: total-cost dist — the last cost column this CDM carries;
-        # the stock copay/coinsurance/deductible/amount-allowed tail is
-        # not-applicable here (columns absent — see
-        # analytics/achilles_default_ids.py NOT_APPLICABLE)
-        if "total_cost" in co.columns:
-            dists.append(
-                _dist(
-                    1506,
-                    co.where(F.col("total_cost").isNotNull()),
-                    "total_cost",
-                    mode,
-                    s1=F.col("cost_domain_id"),
-                )
-            )
 
-    # 1815: numeric measurement value distribution per measurement concept
-    # (stratified on source_value like the 1801 family — see the
-    # OmopFact.stratum note: without a vocabulary load the concept ids are
-    # all 0)
     me = omop.get("omop_measurement")
     if me is not None:
-        dists.append(
-            _dist(
-                1815,
-                me.where(F.col("value_as_number").isNotNull()),
-                "value_as_number",
-                mode,
-                s1=F.col("measurement_source_value"),
-            )
-        )
         # 1814: the complement of 1815's input — records carrying NO
         # numeric value (the measurement-completeness count Achilles
         # pairs with the value dists)
@@ -1249,53 +1152,17 @@ def run_default_analyses(
         # 1810 (outside obs period) and 1813 (invalid visit FK) are
         # emitted by the fact-family loop above.
         # 1811: records dated after the person's death
-        if death is not None:
+        if death_dates is not None:
             results.append(
                 _result(
                     1811,
-                    me.join(
-                        _person_scale(
-                            death.select("person_id", "death_date")
-                        ),
-                        "person_id",
-                    ).where(F.col("measurement_date") > F.col("death_date")),
-                )
-            )
-        # 1812: invalid provider FK — only when the CDM carries one
-        prov_dq = omop.get("omop_provider")
-        if "provider_id" in me.columns and prov_dq is not None:
-            results.append(
-                _result(
-                    1812,
-                    me.where(F.col("provider_id").isNotNull()).join(
-                        prov_dq.select("provider_id"),
-                        "provider_id",
-                        "left_anti",
+                    me.join(death_dates, "person_id").where(
+                        F.col("measurement_date") > F.col("death_date")
                     ),
                 )
             )
-        # 1816/1817: normal-range dists; 1818: below/within/above counts —
-        # range columns don't exist in a Synthea-derived CDM
-        if "range_low" in me.columns:
-            dists.append(
-                _dist(
-                    1816,
-                    me.where(F.col("range_low").isNotNull()),
-                    "range_low",
-                    mode,
-                    s1=F.col("measurement_source_value"),
-                )
-            )
-        if "range_high" in me.columns:
-            dists.append(
-                _dist(
-                    1817,
-                    me.where(F.col("range_high").isNotNull()),
-                    "range_high",
-                    mode,
-                    s1=F.col("measurement_source_value"),
-                )
-            )
+        # 1818: below/within/above normal-range counts — range columns
+        # don't exist in a Synthea-derived CDM
         if "range_low" in me.columns and "range_high" in me.columns:
             banded = me.where(
                 F.col("value_as_number").isNotNull()
@@ -1357,28 +1224,12 @@ def run_default_analyses(
             "person_id", F.year("measurement_date").alias("__y")
         ).agg(F.count(F.lit(1)).alias("n"))
         dists.append(_dist(1823, ppy, "n", mode))
-        # 1824: global numeric value dist (unstratified twin of 1815)
-        dists.append(
-            _dist(
-                1824,
-                me.where(F.col("value_as_number").isNotNull()),
-                "value_as_number",
-                mode,
-            )
-        )
         # 1825: unit usage counts
         results.append(_result(1825, me, F.col("unit_source_value")))
 
     if vo is not None:
         dists.append(
-            _dist(
-                211,
-                vo.select(
-                    F.datediff("visit_end_date", "visit_start_date").alias("d")
-                ),
-                "d",
-                mode,
-            )
+            _span_dist(211, vo, "visit_start_date", "visit_end_date", mode)
         )
 
     # 1100-series: location analyses. The dim is geography-bounded (tiny),
@@ -1389,23 +1240,16 @@ def run_default_analyses(
     locd = omop.get("omop_location")
     if locd is not None:
         loc_slim = _person_scale(locd.select("location_id", "zip", "state"))
-        if "location_id" in person.columns:
-            pl = person.select("person_id", "location_id").join(
-                loc_slim, "location_id"
-            )
-            results.append(
-                _result(1100, pl, F.substring(F.col("zip"), 1, 3))
-            )
-            results.append(_result(1101, pl, F.col("state")))
-        cs = omop.get("omop_care_site")
-        if cs is not None and "location_id" in cs.columns:
-            csl = cs.select("care_site_id", "location_id").join(
-                loc_slim, "location_id"
-            )
-            results.append(
-                _result(1102, csl, F.substring(F.col("zip"), 1, 3))
-            )
-            results.append(_result(1103, csl, F.col("state")))
+        for aid, table in ((1100, "person"), (1102, "care_site")):
+            df = omop.get(f"omop_{table}")
+            if df is not None and "location_id" in df.columns:
+                located = df.select(f"{table}_id", "location_id").join(
+                    loc_slim, "location_id"
+                )
+                results.append(
+                    _result(aid, located, F.substring(F.col("zip"), 1, 3))
+                )
+                results.append(_result(aid + 1, located, F.col("state")))
 
     achilles_results = reduce(DataFrame.unionByName, results)
     if dists:

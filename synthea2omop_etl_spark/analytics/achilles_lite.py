@@ -5,8 +5,8 @@ counts, concept distributions, age-at-first-observation and visit-duration
 analyses):
 - arbitrary SQL passthrough (the backend /api/db/query equivalent), table
   inventory and paging (/api/db/tables, /api/db/data)
-- age-decile, records-per-person and monthly-trend shapes, and the
-  drug_strength ingredient rollup
+- records-per-person and monthly-trend shapes, and the drug_strength
+  ingredient rollup
 
 Everything is groupBy/agg/join/orderBy/limit + percentile over OMOP
 DataFrames — no custom execution.
@@ -16,8 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from synthea2omop_etl_spark.functions import age_in_years
 
 
 def run_sql(
@@ -79,36 +77,12 @@ def table_page(
 # ---------------------------------------------------------------------------
 # Default-catalog breadth: the reference runs OHDSI Achilles with
 # defaultAnalysesOnly=true (achilles_config.json, run_achilles.sh:202-203),
-# whose core shapes include age-decile person counts
-# (analysis 101/102), records-per-person percentile distributions
+# whose core shapes include records-per-person percentile distributions
 # (105/113/203/…), monthly trend series (x02: 202/402/602/702/802), and
 # drug-era rollups that consume drug_strength. All are one groupBy/agg (+
 # an optional broadcast dim join) — map-side-combinable single-shuffle
 # plans that hold at 100 TB.
 # ---------------------------------------------------------------------------
-
-
-def age_decile_distribution(
-    person: DataFrame, observation_period: DataFrame
-) -> DataFrame:
-    """Persons per age decile at first observation (Achilles 101/102):
-    decile = floor(age/10). One broadcastable first-obs aggregate + one
-    count aggregate."""
-    first = observation_period.groupBy("person_id").agg(
-        F.min("observation_period_start_date").alias("first_obs")
-    )
-    joined = person.select(
-        "person_id", F.to_date("birth_datetime").alias("birth_date")
-    ).join(first, "person_id")
-    return (
-        joined.select(
-            F.floor(
-                age_in_years(F.col("first_obs"), F.col("birth_date")) / 10
-            ).cast("int").alias("age_decile")
-        )
-        .groupBy("age_decile")
-        .agg(F.count(F.lit(1)).alias("n_persons"))
-    )
 
 
 def records_per_person_distribution(

@@ -19,11 +19,6 @@ def ilike(col: Column | str, pattern: str) -> Column:
     return _c(col).rlike("(?i)" + pattern.strip("%").replace("%", ".*"))
 
 
-def days_between(end: Column | str, start: Column | str) -> Column:
-    """EXTRACT(DAY FROM ts - ts) → datediff (etl_medications.py:205-208)."""
-    return F.datediff(F.to_date(_c(end)), F.to_date(_c(start)))
-
-
 def date_plus_one_year_minus_day(col: Column | str) -> Column:
     """``d + INTERVAL '1 year - 1 day'`` (sql/etl/synthea-omop-ETL.sql:550)."""
     return F.date_sub(F.add_months(_c(col), 12), 1)

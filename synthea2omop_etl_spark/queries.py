@@ -4070,7 +4070,7 @@ def q_achilles_records_per_person(spark: SparkSession, sf: str) -> DataFrame:
     """,
     "Achilles age-decile histogram shape (101/102): per-entity derived "
     "age → floor(x/10) bucket → count per bucket "
-    "(analytics.age_decile_distribution)",
+    "(analytics.achilles_catalog analysis 101)",
 )
 def q_achilles_age_deciles(spark: SparkSession, sf: str) -> DataFrame:
     span = (

@@ -4,8 +4,7 @@ from synthea2omop_etl_spark.sources.readers import (  # noqa: F401
     read_parquet,
     read_vocabulary_table,
 )
-from synthea2omop_etl_spark.sources.testdata import load_tables, table_path  # noqa: F401
+from synthea2omop_etl_spark.sources.testdata import table_path  # noqa: F401
 from synthea2omop_etl_spark.sources.writers import (  # noqa: F401
     insert_if_absent,
-    write_parquet_layer,
 )

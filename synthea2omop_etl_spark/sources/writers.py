@@ -20,18 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_parquet_layer(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] | None = None,
-) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def write_then_swap(df: DataFrame, target_path: str) -> None:
     """Atomic-ish overwrite: write to a fresh sibling path, then swap.
 

@@ -297,7 +297,7 @@ def run_dqd_checks(
                 float(prevalence),
                 int(denom),
                 float(threshold),
-                desc,
+                f"{desc} [{DQD_CHECK_TYPES[check_name]}]",
                 float(prevalence),
                 int(violated),
                 failed,
@@ -330,7 +330,7 @@ def run_dqd_checks(
         ).alias("__yob"),
     ).collect()[0]
     emit(
-        "person.year_of_birth plausibleValueLowHigh [Plausibility]",
+        "person.year_of_birth plausibleValueLowHigh",
         pstat["__yob"],
         pstat["__n"],
         check_name="plausibleValueLowHigh",
@@ -368,7 +368,7 @@ def run_dqd_checks(
         end = None if spec.get("open_ended") else fact.end
         # cdmTable (TABLE, Conformance): the CDM table exists in the layer
         emit(
-            f"{name}.* cdmTable [Conformance]",
+            f"{name}.* cdmTable",
             0 if df is not None else 1,
             1,
             check_name="cdmTable",
@@ -386,7 +386,7 @@ def run_dqd_checks(
             expected_fields.append(end)
         for c in dict.fromkeys(expected_fields):
             emit(
-                f"{name}.{c} cdmField [Conformance]",
+                f"{name}.{c} cdmField",
                 0 if c in df.columns else 1,
                 1,
                 check_name="cdmField",
@@ -396,7 +396,7 @@ def run_dqd_checks(
             )
         pk_type = dict(df.dtypes).get(pk, "missing")
         emit(
-            f"{name}.{pk} cdmDatatype [Conformance]",
+            f"{name}.{pk} cdmDatatype",
             0 if pk_type in ("bigint", "int", "smallint", "tinyint") else 1,
             1,
             check_name="cdmDatatype",
@@ -507,7 +507,7 @@ def run_dqd_checks(
         n = stat["__n"]
         for c in spec["required"]:
             emit(
-                f"{name}.{c} measureValueCompleteness [Completeness]",
+                f"{name}.{c} measureValueCompleteness",
                 stat[f"__null_{c}"],
                 n,
                 check_name="measureValueCompleteness",
@@ -516,7 +516,7 @@ def run_dqd_checks(
                 field=c,
             )
         emit(
-            f"{name}.{pk} isPrimaryKey [Conformance]",
+            f"{name}.{pk} isPrimaryKey",
             n - stat["__pk_distinct"],
             n,
             check_name="isPrimaryKey",
@@ -525,7 +525,7 @@ def run_dqd_checks(
             field=pk,
         )
         emit(
-            f"{name}.{pk} isRequired [Conformance]",
+            f"{name}.{pk} isRequired",
             stat["__null_pk"],
             n,
             check_name="isRequired",
@@ -538,8 +538,7 @@ def run_dqd_checks(
             # unmapped by design (concept mapping is the separate 3-stage
             # apply) — the prevalence is the signal, not the flag
             emit(
-                f"{name}.{cc} standardConceptRecordCompleteness "
-                "[Completeness]",
+                f"{name}.{cc} standardConceptRecordCompleteness",
                 stat["__std0"],
                 n,
                 check_name="standardConceptRecordCompleteness",
@@ -550,7 +549,7 @@ def run_dqd_checks(
             )
         if "__src_null" in stat.asDict():
             emit(
-                f"{name}.{sc} sourceValueCompleteness [Completeness]",
+                f"{name}.{sc} sourceValueCompleteness",
                 stat["__src_null"],
                 n,
                 check_name="sourceValueCompleteness",
@@ -562,10 +561,9 @@ def run_dqd_checks(
             concept_scoped = alias.startswith("__rng_c_")
             label = (
                 f"{name}.value_as_number ({c}) plausibleValueLowHigh "
-                f"[{lo},{hi}] [Plausibility]"
+                f"[{lo},{hi}]"
                 if concept_scoped
-                else f"{name}.{c} plausibleValueLowHigh [{lo},{hi}] "
-                "[Plausibility]"
+                else f"{name}.{c} plausibleValueLowHigh [{lo},{hi}]"
             )
             emit(
                 label,
@@ -582,10 +580,9 @@ def run_dqd_checks(
                 ("plausibleValueHigh", hi, "__hi"),
             ):
                 side_label = (
-                    f"{name}.value_as_number ({c}) {side} {bound} "
-                    "[Plausibility]"
+                    f"{name}.value_as_number ({c}) {side} {bound}"
                     if concept_scoped
-                    else f"{name}.{c} {side} {bound} [Plausibility]"
+                    else f"{name}.{c} {side} {bound}"
                 )
                 emit(
                     side_label,
@@ -602,7 +599,7 @@ def run_dqd_checks(
             .count()
         )
         emit(
-            f"{name}.person_id isForeignKey [Conformance]",
+            f"{name}.person_id isForeignKey",
             orphans,
             n,
             check_name="isForeignKey",
@@ -612,7 +609,7 @@ def run_dqd_checks(
         )
         if end:
             emit(
-                f"{name}.{end} plausibleTemporalAfter {start} [Plausibility]",
+                f"{name}.{end} plausibleTemporalAfter {start}",
                 stat["__rev"],
                 n,
                 check_name="plausibleTemporalAfter",
@@ -626,7 +623,7 @@ def run_dqd_checks(
             .count()
         )
         emit(
-            f"{name}.{start} plausibleAfterBirth [Plausibility]",
+            f"{name}.{start} plausibleAfterBirth",
             before_birth,
             n,
             check_name="plausibleAfterBirth",
@@ -649,8 +646,7 @@ def run_dqd_checks(
                 ).alias("__lv"),
             ).collect()[0]
             emit(
-                f"{name}.{start} plausibleDuringLife "
-                "[Plausibility]",
+                f"{name}.{start} plausibleDuringLife",
                 life["__lv"] or 0,
                 life["__ln"],
                 check_name="plausibleDuringLife",
@@ -693,7 +689,7 @@ def run_dqd_checks(
                 .collect()[0]
             )
             emit(
-                f"{name}.{start} withinVisitDates [Plausibility]",
+                f"{name}.{start} withinVisitDates",
                 vstat["__vv"] or 0,
                 vstat["__vn"],
                 check_name="withinVisitDates",
@@ -713,7 +709,7 @@ def run_dqd_checks(
             ).count()
         )
         emit(
-            f"{name}.person_id measurePersonCompleteness [Completeness]",
+            f"{name}.person_id measurePersonCompleteness",
             absent,
             n_person,
             check_name="measurePersonCompleteness",
@@ -736,8 +732,7 @@ def run_dqd_checks(
             ce_df.select("person_id").distinct(), "person_id", "left_anti"
         ).count()
         emit(
-            "condition_era.person_id measureConditionEraCompleteness "
-            "[Completeness]",
+            "condition_era.person_id measureConditionEraCompleteness",
             missing_era,
             n_cond,
             check_name="measureConditionEraCompleteness",
@@ -794,7 +789,7 @@ def run_dqd_checks(
                 ).alias("__nonstd"),
             ).collect()[0]
             emit(
-                f"{name}.{cc} fkDomain {spec['domain']} [Conformance]",
+                f"{name}.{cc} fkDomain {spec['domain']}",
                 cstat["__wrong_dom"],
                 cstat["__denom"],
                 check_name="fkDomain",
@@ -803,7 +798,7 @@ def run_dqd_checks(
                 field=cc,
             )
             emit(
-                f"{name}.{cc} isStandardValidConcept [Conformance]",
+                f"{name}.{cc} isStandardValidConcept",
                 cstat["__nonstd"],
                 cstat["__denom"],
                 check_name="isStandardValidConcept",
@@ -839,8 +834,7 @@ def run_dqd_checks(
                 ).alias("__noning"),
             ).collect()[0]
             emit(
-                "drug_era.drug_era_concept_id fkClass Ingredient "
-                "[Conformance]",
+                "drug_era.drug_era_concept_id fkClass Ingredient",
                 kstat["__noning"],
                 kstat["__denom"],
                 check_name="fkClass",
@@ -890,8 +884,7 @@ def run_dqd_checks(
             for r in gstat:
                 i = srcs.index(r["__src"])
                 emit(
-                    f"{name}.{sc} ({r['__src']}) plausibleGender "
-                    "[Plausibility]",
+                    f"{name}.{sc} ({r['__src']}) plausibleGender",
                     r[f"__gv_{i}"],
                     r["__gn"],
                     check_name="plausibleGender",
@@ -926,7 +919,7 @@ def run_dqd_checks(
             ).collect()[0]
             emit(
                 f"measurement.unit_source_value ({src}) "
-                "plausibleUnitConceptIds [Plausibility]",
+                "plausibleUnitConceptIds",
                 ustat["__uv"] or 0,
                 ustat["__un"],
                 check_name="plausibleUnitConceptIds",

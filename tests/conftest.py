@@ -8,11 +8,29 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+
+def _driver_mem_default() -> str:
+    """16g, capped at the host's memory less 4 GiB for the OS and the
+    Python workers: a heap above physical memory is not a heap the JVM
+    can grow into."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(
+                int(line.split()[1])
+                for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{max(1, min(16, kib // 2**20 - 4))}g"
+
+
 # The full suite (~530 tests) shares one JVM for ~25 minutes; with the
-# 8g default the driver heap eventually OOMs on accumulated broadcast /
-# cache residue late in the session (tests pass in isolation). Must be
-# set before the first get_spark() call builds the JVM.
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+# 8g session default the driver heap eventually OOMs on accumulated
+# broadcast / cache residue late in the session (tests pass in
+# isolation). An explicit SPARK_GRAFT_DRIVER_MEM wins. Must be set before
+# the first get_spark() call builds the JVM.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _driver_mem_default())
 
 from synthea2omop_etl_spark.session import get_spark  # noqa: E402
 

@@ -167,6 +167,99 @@ def test_round10_residue_analyses_planted_counts(spark):
     assert dist_ids <= set(ANALYSIS_NAMES)
 
 
+def _fk_range_cdm(spark):
+    """A CDM carrying the columns Synthea output lacks: person provider
+    and care-site FKs, and measurement provider FKs and normal ranges —
+    the column-present branches of 7, 9, 1812 and 1816-1818."""
+    person = spark.createDataFrame(
+        [
+            (1, 8507, 1980, dt.datetime(1980, 3, 1), 5, 1, 10),
+            (2, 8532, 1990, dt.datetime(1990, 7, 1), 77, None, 10),
+            (3, 8507, 2000, dt.datetime(2000, 1, 1), None, 88, 98),
+            (4, 8532, 1970, dt.datetime(1970, 5, 1), 66, 89, None),
+        ],
+        "person_id long, gender_concept_id int, year_of_birth int, "
+        "birth_datetime timestamp, provider_id long, care_site_id long, "
+        "location_id long",
+    ).withColumn("race_concept_id", F.lit(0)).withColumn(
+        "ethnicity_concept_id", F.lit(0)
+    )
+    provider = spark.createDataFrame(
+        [(5, "GP"), (6, "LAB")],
+        "provider_id long, specialty_source_value string",
+    )
+    care_site = spark.createDataFrame(
+        [(1, 8756, 10), (2, 8756, 11)],
+        "care_site_id long, place_of_service_concept_id int, "
+        "location_id long",
+    )
+    location = spark.createDataFrame(
+        [(10, "02139", "MA"), (11, "10001", "NY")],
+        "location_id long, zip string, state string",
+    )
+    measurement = spark.createDataFrame(
+        [
+            # (id, person, date, value, provider, source, low, high)
+            (1, 1, _d("2020-01-05"), 3.0, 5, "L1", 4.0, 8.0),     # below
+            (2, 1, _d("2020-02-05"), 6.0, 6, "L1", 4.0, 8.0),     # within
+            (3, 2, _d("2020-03-05"), 9.0, 55, "L1", 4.0, 9.0),    # within
+            (4, 2, _d("2021-01-05"), 12.0, 56, "L2", 1.0, 10.0),  # above
+            (5, 3, _d("2021-02-05"), None, None, "L2", 1.0, 10.0),
+            (6, 4, _d("2021-03-05"), 2.0, 56, "L2", None, 10.0),
+        ],
+        "measurement_id long, person_id long, measurement_date date, "
+        "value_as_number double, provider_id long, "
+        "measurement_source_value string, range_low double, "
+        "range_high double",
+    ).select(
+        "*",
+        F.lit(0).alias("measurement_concept_id"),
+        F.lit(32817).alias("measurement_type_concept_id"),
+        F.lit("mg").alias("unit_source_value"),
+        F.col("value_as_number").cast("string").alias("value_source_value"),
+    )
+    return {
+        "omop_person": person,
+        "omop_provider": provider,
+        "omop_care_site": care_site,
+        "omop_location": location,
+        "omop_measurement": measurement,
+    }
+
+
+def test_fk_and_range_branches_planted_counts(spark):
+    """7, 9 and 1812 count the non-NULL FKs missing from their dimension
+    table; 1816/1817 are the non-NULL range dists and 1818 bands the rows
+    carrying a value and both ranges."""
+    from synthea2omop_etl_spark.analytics import run_default_analyses
+
+    results, dists = run_default_analyses(_fk_range_cdm(spark))
+    by_id: dict[int, list] = {}
+    for r in results.collect():
+        by_id.setdefault(r.analysis_id, []).append(r)
+
+    def counts(aid):
+        return sorted(
+            (r.stratum_1, r.count_value) for r in by_id[aid]
+        )
+
+    assert counts(7) == [(None, 2)]      # providers 77 and 66
+    assert counts(8) == [(None, 1)]      # location 98
+    assert counts(9) == [(None, 2)]      # care sites 88 and 89
+    assert counts(1812) == [(None, 3)]   # providers 55, 56, 56
+    assert counts(1818) == [("above", 1), ("below", 1), ("within", 2)]
+    assert counts(1100) == [("021", 2)]
+    assert counts(1102) == [("021", 1), ("100", 1)]
+    assert counts(1103) == [("MA", 1), ("NY", 1)]
+
+    d = {(r.analysis_id, r.stratum_1): r for r in dists.collect()}
+    assert (d[1816, "L1"].count_value, d[1816, "L1"].max_value) == (3, 4.0)
+    # the NULL low range of measurement 6 is left out of 1816
+    assert (d[1816, "L2"].count_value, d[1816, "L2"].avg_value) == (2, 1.0)
+    assert (d[1817, "L1"].count_value, d[1817, "L1"].max_value) == (3, 9.0)
+    assert (d[1817, "L2"].count_value, d[1817, "L2"].avg_value) == (3, 10.0)
+
+
 def test_documented_catalog_count_pins_analysis_names():
     """README's '<N> analysis ids' claims must equal len(ANALYSIS_NAMES)
     — the catalog dict is the single source of truth (r10 verdict: docs

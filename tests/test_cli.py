@@ -41,15 +41,15 @@ def csv_dir(tmp_path_factory, spark):
 
 
 def test_cli_run_validate_smoke(tmp_path, capsys, spark):
-    """Default-tier CLI smoke: run → validate over the patients,
-    encounters and conditions CSVs only (the full run → validate →
-    analytics → achilles chain is the slow-tier test below)."""
+    """Default-tier CLI smoke: run → validate → analytics --list over the
+    patients, encounters and conditions CSVs only (the full run →
+    validate → analytics → achilles chain is the slow-tier test below)."""
     csv_in = tmp_path / "csv"
     csv_in.mkdir()
     _write_csvs(csv_in, _CORE_CSVS)
     out_dir = str(tmp_path / "omop")
     assert main(["run", "--input", str(csv_in), "--output", out_dir]) == 0
-    capsys.readouterr()
+    written = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     rc = main(["validate", "--omop", out_dir])
     report = json.loads(capsys.readouterr().out)
     # exit 1: the fixture deliberately contains an invalid gender
@@ -58,6 +58,17 @@ def test_cli_run_validate_smoke(tmp_path, capsys, spark):
     assert report["checks"]["referential_integrity"]["passed"]
     assert any(
         r["cdm_table_name"] == "condition_occurrence" for r in report["dqd"]
+    )
+    assert main(["analytics", "--omop", out_dir, "--list"]) == 0
+    inv = {
+        r["table_name"]: r["n_rows"]
+        for r in map(json.loads, capsys.readouterr().out.splitlines())
+    }
+    assert inv["person"] == written["tables"]["person"] == 3
+    assert (
+        inv["condition_occurrence"]
+        == written["tables"]["condition_occurrence"]
+        > 0
     )
 
 

@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from synthea2omop_etl_spark.analytics import (
-    age_decile_distribution,
     drug_strength_rollup,
     monthly_trend,
     records_per_person_distribution,
@@ -201,11 +200,12 @@ def test_pipeline_without_vocab_all_zero(omop):
 
 
 def test_age_deciles_and_monthly_trend(omop):
-    deciles = age_decile_distribution(
-        omop["omop_person"], omop["omop_observation_period"]
-    ).collect()
-    assert sum(r.n_persons for r in deciles) == 3
-    assert all(r.age_decile >= 0 for r in deciles)
+    from synthea2omop_etl_spark.analytics import run_default_analyses
+
+    results, _ = run_default_analyses(omop)
+    deciles = results.where(F.col("analysis_id") == 101).collect()
+    assert sum(r.count_value for r in deciles) == 3
+    assert all(int(r.stratum_1) >= 0 for r in deciles)
     trend = monthly_trend(
         omop["omop_condition_occurrence"], "condition_start_date"
     ).collect()

@@ -8,8 +8,10 @@ file, so two checkouts can be compared for output identity:
 
 Covers, as the ``repr`` of collected rows:
 - ``run_default_analyses`` results and dists, exact and approx mode, over
-  ``run_pipeline(raw_tables_full)`` and the planted mini CDM of
-  tests/test_achilles_defaults.py (sorted rows);
+  ``run_pipeline(raw_tables_full)``, the planted mini CDM of
+  tests/test_achilles_defaults.py and its FK/range CDM (sorted rows; the
+  FK/range CDM is always read from the tests of this tool's own checkout,
+  so a ``--root`` checkout that predates it is still run over it);
 - ``run_dqd_checks`` over the full fixture with the vocabulary, gender
   and unit arguments of ``test_dqd_full_check_type_catalog``, without
   them, and over person + condition_occurrence (rows in emitted order,
@@ -25,6 +27,7 @@ Covers, as the ``repr`` of collected rows:
 from __future__ import annotations
 
 import argparse
+import importlib.util
 import os
 import sys
 import tempfile
@@ -39,6 +42,13 @@ def main(argv: list[str] | None = None) -> int:
         help="checkout whose package and test fixtures are imported",
     )
     args = ap.parse_args(argv)
+    own_tests = importlib.util.spec_from_file_location(
+        "own_achilles_tests",
+        Path(__file__).resolve().parent.parent
+        / "tests" / "test_achilles_defaults.py",
+    )
+    own = importlib.util.module_from_spec(own_tests)
+    own_tests.loader.exec_module(own)
     out_path = os.path.abspath(args.out)
     sys.path.insert(0, args.root)
     os.chdir(args.root)
@@ -64,7 +74,8 @@ def main(argv: list[str] | None = None) -> int:
         out.flush()
 
     omop = run_pipeline(spark, raw_tables_full(spark))
-    for name, cdm in (("full", omop), ("mini", _mini_cdm(spark))):
+    for name, cdm in (("full", omop), ("mini", _mini_cdm(spark)),
+                      ("fk_range", own._fk_range_cdm(spark))):
         for mode in ("exact", "approx"):
             res, dist = run_default_analyses(cdm, mode=mode)
             dump(f"achilles {name} {mode} results", res)
