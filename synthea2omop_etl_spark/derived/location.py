@@ -38,31 +38,40 @@ _ADDRESS_COLS = [
 ]
 
 
-def _address_slice(df: DataFrame | None) -> DataFrame | None:
-    """Project a source to the normalized (address_1..county) slice, or
-    None when the source carries no address columns at all."""
+def _address_columns(df: DataFrame | None) -> list[F.Column] | None:
+    """The normalized (address_1..county) columns, in ``_ADDRESS_COLS``
+    order, over a source's own case-insensitively matched column names:
+    cast to string, NULL where the source lacks the column. None when the
+    source carries no address column at all."""
     if df is None:
         return None
     by_upper = {c.upper(): c for c in df.columns}
     if not any(src in by_upper for _, src in _ADDRESS_COLS):
         return None
-    cols = [
-        (
-            F.col(by_upper[src]).cast("string")
-            if src in by_upper
-            else F.lit(None).cast("string")
-        ).alias(name)
-        for name, src in _ADDRESS_COLS
+    return [
+        F.col(by_upper[src]).cast("string")
+        if src in by_upper
+        else F.lit(None).cast("string")
+        for _, src in _ADDRESS_COLS
     ]
-    return df.select(*cols)
 
 
-def _address_key() -> F.Column:
+def _address_slice(df: DataFrame | None) -> DataFrame | None:
+    """Project a source to the normalized (address_1..county) slice, or
+    None when the source carries no address columns at all."""
+    cols = _address_columns(df)
+    if cols is None:
+        return None
+    return df.select(*[c.alias(n) for c, (n, _) in zip(cols, _ADDRESS_COLS)])
+
+
+def _address_key(cols: list[F.Column] | None = None) -> F.Column:
     """Deterministic join/sort key over the full address tuple (NULL-safe:
-    coalesce to a sentinel so two half-empty addresses stay distinct)."""
-    return F.concat_ws(
-        "\x01", *[F.coalesce(F.col(n), F.lit("\x00")) for n, _ in _ADDRESS_COLS]
-    )
+    coalesce to a sentinel so two half-empty addresses stay distinct).
+    ``cols`` defaults to the normalized columns by name."""
+    if cols is None:
+        cols = [F.col(n) for n, _ in _ADDRESS_COLS]
+    return F.concat_ws("\x01", *[F.coalesce(c, F.lit("\x00")) for c in cols])
 
 
 def source_address_key(df: DataFrame) -> F.Column | None:
@@ -71,22 +80,8 @@ def source_address_key(df: DataFrame) -> F.Column | None:
     intermediate projection. Lets a domain transform fuse the location
     lookup into its single source scan. None when the source carries no
     address columns."""
-    by_upper = {c.upper(): c for c in df.columns}
-    if not any(src in by_upper for _, src in _ADDRESS_COLS):
-        return None
-    return F.concat_ws(
-        "\x01",
-        *[
-            (
-                F.coalesce(
-                    F.col(by_upper[src]).cast("string"), F.lit("\x00")
-                )
-                if src in by_upper
-                else F.lit("\x00")
-            )
-            for _, src in _ADDRESS_COLS
-        ],
-    )
+    cols = _address_columns(df)
+    return None if cols is None else _address_key(cols)
 
 
 def keyed_locations(locations: DataFrame) -> DataFrame:
@@ -98,14 +93,13 @@ def keyed_locations(locations: DataFrame) -> DataFrame:
     )
 
 
-def location(
+def address_rows(
     patients_typed: DataFrame | None,
     organizations_typed: DataFrame | None = None,
 ) -> DataFrame | None:
-    """Build omop.location (DDL :267-276) from the distinct addresses of
-    patients ∪ organizations. Returns None when neither source carries
-    address columns. location_source_value is the zip (Achilles' stratum
-    source), falling back to city."""
+    """The distinct addresses of patients ∪ organizations as
+    (address_1..county, ``__key``), or None when neither source carries
+    address columns."""
     slices = [
         s
         for s in (
@@ -119,20 +113,36 @@ def location(
     addrs = slices[0]
     for s in slices[1:]:
         addrs = addrs.unionByName(s)
-    distinct = addrs.distinct().withColumn("__key", _address_key())
-    dim = assign_dense_ids(distinct, "__key", id_col="location_id")
-    return dim.select(
-        F.col("location_id").cast("long"),
+    return addrs.distinct().withColumn("__key", _address_key())
+
+
+def location_values() -> list[F.Column | str]:
+    """omop.location's columns after location_id, over
+    :func:`address_rows` output. location_source_value is the zip
+    (Achilles' stratum source), falling back to city."""
+    return [
         "address_1",
         F.lit(None).cast("string").alias("address_2"),
         "city",
         "state",
         "zip",
         "county",
-        F.coalesce(F.col("zip"), F.col("city")).alias(
-            "location_source_value"
-        ),
-    )
+        F.coalesce(F.col("zip"), F.col("city")).alias("location_source_value"),
+    ]
+
+
+def location(
+    patients_typed: DataFrame | None,
+    organizations_typed: DataFrame | None = None,
+) -> DataFrame | None:
+    """Build omop.location (DDL :267-276) from the distinct addresses of
+    patients ∪ organizations, numbered in ``__key`` order. Returns None
+    when neither source carries address columns."""
+    addrs = address_rows(patients_typed, organizations_typed)
+    if addrs is None:
+        return None
+    dim = assign_dense_ids(addrs, "__key", id_col="location_id")
+    return dim.select(F.col("location_id").cast("long"), *location_values())
 
 
 def attach_location_id(
@@ -146,27 +156,18 @@ def attach_location_id(
     row's address through the location dim. The (source id → location_id)
     map is distinct-per-source-row and joins BROADCAST (dim-sized); the
     fact side never shuffles."""
-    if _address_slice(source_typed) is None:
+    key = source_address_key(source_typed)
+    if key is None:
         if "location_id" in out_df.columns:
             return out_df
         return out_df.withColumn("location_id", F.lit(None).cast("long"))
     # map: source id → location_id (one row per source row; key re-derived
     # from the same address expression used to build the dim)
-    by_upper = {c.upper(): c for c in source_typed.columns}
-    key_cols = [
-        (
-            F.col(by_upper[src]).cast("string")
-            if src in by_upper
-            else F.lit(None).cast("string")
-        ).alias(name)
-        for name, src in _ADDRESS_COLS
-    ]
-    loc_keyed = keyed_locations(locations)
     id_map = (
-        source_typed.select(F.col(source_id_col).alias("__src_id"), *key_cols)
-        .withColumn("__key", _address_key())
-        .select("__src_id", "__key")
-        .join(loc_keyed, "__key")
+        source_typed.select(
+            F.col(source_id_col).alias("__src_id"), key.alias("__key")
+        )
+        .join(keyed_locations(locations), "__key")
         .select("__src_id", "location_id")
     )
     joined = out_df.drop("location_id").join(

@@ -13,7 +13,9 @@ no distributed sequence; the engine offers two strategies:
   collect), then ``row_number`` within each partition plus the partition's
   offset. Deterministic (range partitioning + in-partition ordering is a
   total order), dense and fully parallel — this is the 100 TB path. See
-  ``assign_dense_ids`` for when its two branches share one range Exchange.
+  ``_partition_rank``, the one kernel it shares with ``assign_global_rank``
+  and the exact percentiles, for when its two branches share one range
+  Exchange.
 
 Both produce identical results; tests assert so.
 """
@@ -23,6 +25,81 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from synthea2omop_etl_spark.operators.lineage import cut_lineage
+
+
+def _partition_rank(
+    df: DataFrame,
+    order_cols: list[str],
+    rank_col: str,
+    group_cols: tuple[str, ...] = (),
+    total_col: str | None = None,
+) -> DataFrame:
+    """Add ``rank_col`` = 1-based rank of each row by ``order_cols`` within
+    its ``group_cols`` group (the whole frame when there are none): the one
+    partition-offset rank kernel behind ``assign_dense_ids``,
+    ``assign_global_rank`` and ``percentiles.percentile_exact_by_rank``.
+
+    Range-partition by (groups, order), count rows per (partition, group),
+    prefix-sum the counts with a window over that tiny summary (one row per
+    partition and group — bounded, fully lazy: no driver collect, no eager
+    job at plan-build time), then ``row_number`` within each
+    (partition, group) plus its offset. ``total_col``, when set, adds the
+    group's row count N to every row, summed by the same summary window and
+    carried by the same broadcast. Ties in ``order_cols`` get arbitrary
+    adjacent ranks; with a unique key rank == row_number == dense_rank.
+    NULL groups are dropped by the equi-join to their offsets.
+
+    The counts branch and the main branch share ONE range-shuffle Exchange
+    (ReusedExchange) only when ``df`` is the order key alone, as in
+    build_id_map. For a wider frame (with_row_ids) column pruning narrows
+    the counts branch to the key, so it plans its own range Exchange and
+    its own sampling job: two ``Exchange rangepartitioning`` nodes with
+    different plan ids. The ranks stay correct only because both exchanges
+    assign every row the same SPARK_PARTITION_ID()
+    (test_with_row_ids_dense_on_wide_frame guards it); a rewrite must take
+    the per-partition counts and the within-partition index from ONE
+    materialization.
+    """
+    keys = ["__pid", *group_cols]
+    part = df.repartitionByRange(
+        *[F.col(c) for c in (*group_cols, *order_cols)]
+    ).withColumn("__pid", F.spark_partition_id())
+    counts = part.groupBy(*keys).agg(F.count(F.lit(1)).alias("__cnt"))
+    # Without groups the summary window partitions by pmod(__pid, 1) — a
+    # constant-valued but non-foldable expression (a bare literal would be
+    # optimized out of the spec): same single-partition execution over the
+    # summary, but with a non-empty partition spec so WindowExec does not
+    # emit its data-scale single-partition warning for what is a
+    # summary-scale sort.
+    w = Window.partitionBy(
+        *(group_cols or [F.pmod(F.col("__pid"), F.lit(1))])
+    ).orderBy("__pid")
+    summary = [
+        F.coalesce(
+            F.sum("__cnt").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+            F.lit(0),
+        ).alias("__offset")
+    ]
+    if total_col is not None:
+        summary.append(
+            F.sum("__cnt")
+            .over(
+                w.rowsBetween(
+                    Window.unboundedPreceding, Window.unboundedFollowing
+                )
+            )
+            .alias(total_col)
+        )
+    offsets = counts.select(*keys, *summary)
+    w_in = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in order_cols])
+    return (
+        part.join(F.broadcast(offsets), keys)
+        .withColumn(
+            rank_col,
+            (F.row_number().over(w_in) + F.col("__offset")).cast("long"),
+        )
+        .drop("__pid", "__offset")
+    )
 
 
 def assign_dense_ids(
@@ -57,49 +134,10 @@ def assign_dense_ids(
         raise ValueError(f"unknown strategy: {strategy}")
     if materialize_input:
         df = df.transform(cut_lineage)
-
-    # Scale path: range partition by key → per-partition row_number + offset.
-    # (The classic zipWithIndex two-pass, expressed FULLY LAZILY: the
-    # per-partition counts and their prefix sum are a tiny window over one
-    # row per partition — no driver collect(), no eager job at plan-build
-    # time.) The counts branch and the main branch share ONE range-shuffle
-    # Exchange (ReusedExchange) only when ``df`` is the order key alone,
-    # as in build_id_map. For a wider frame (with_row_ids) column pruning
-    # narrows the counts branch to the key, so it plans its own range
-    # Exchange and its own sampling job: two ``Exchange rangepartitioning``
-    # nodes with different plan ids. The ids stay correct only because
-    # both exchanges assign every row the same SPARK_PARTITION_ID()
-    # (test_with_row_ids_dense_on_wide_frame guards it); a rewrite must
-    # take the per-partition counts and the within-partition index from
-    # ONE materialization.
-    part = df.repartitionByRange(F.col(order_by)).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    counts = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    # partitionBy(pmod(__pid, 1)) — a constant-valued but non-foldable
-    # expression (a bare literal would be optimized out of the spec): same
-    # single-partition execution over the tiny per-partition summary (one
-    # row per partition — bounded by design), but with a non-empty
-    # partition spec so WindowExec does not emit its data-scale
-    # single-partition warning for what is a summary-scale sort.
-    w_off = Window.partitionBy(F.pmod(F.col("__pid"), F.lit(1))).orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__offset"),
-    )
-    w_in = Window.partitionBy("__pid").orderBy(F.col(order_by))
-    return (
-        part.join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            id_col,
-            (F.row_number().over(w_in) + F.col("__offset") + F.lit(offset)).cast(
-                "long"
-            ),
-        )
-        .drop("__pid", "__offset")
-    )
+    ranked = _partition_rank(df, [order_by], id_col)
+    if offset:
+        ranked = ranked.withColumn(id_col, F.col(id_col) + F.lit(offset))
+    return ranked
 
 
 def assign_global_rank(
@@ -110,13 +148,10 @@ def assign_global_rank(
 ) -> DataFrame:
     """Global 1-based rank over a UNIQUE composite total order, scalably.
 
-    The same two-pass machinery as ``assign_dense_ids``'s partitioned
-    strategy, generalized to a composite ordering: range-repartition by the
-    order columns, per-partition ``row_number`` plus a lazily prefix-summed
-    partition offset (a window over one row per partition — bounded, never
-    the data). No global single-task sort, so ranking analytics
-    (ntile / percent_rank / cume_dist) built on the rank survive a 100×
-    scale-up where a bare ``Window.orderBy`` would serialize on one task.
+    The partition-offset rank (``_partition_rank``) over a composite
+    ordering: no global single-task sort, so ranking analytics (ntile /
+    percent_rank / cume_dist) built on the rank survive a 100× scale-up
+    where a bare ``Window.orderBy`` would serialize on one task.
 
     ``order_by`` must be a unique composite key (ties would straddle rank
     semantics — with a unique key, rank == row_number == dense_rank).
@@ -124,32 +159,7 @@ def assign_global_rank(
     broadcast of the same tiny per-partition summary), for rank-normalized
     statistics.
     """
-    cols = [F.col(c) for c in order_by]
-    part = df.repartitionByRange(*cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    counts = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    # non-empty partition spec over the summary rows — see assign_dense_ids
-    w_off = Window.partitionBy(F.pmod(F.col("__pid"), F.lit(1))).orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__offset"),
-    )
-    if total_col is not None:
-        offsets = offsets.crossJoin(
-            counts.agg(F.sum("__cnt").alias(total_col))
-        )
-    w_in = Window.partitionBy("__pid").orderBy(*cols)
-    return (
-        part.join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            rank_col,
-            (F.row_number().over(w_in) + F.col("__offset")).cast("long"),
-        )
-        .drop("__pid", "__offset")
-    )
+    return _partition_rank(df, order_by, rank_col, total_col=total_col)
 
 
 def build_id_map(

@@ -4,13 +4,14 @@ A-Priori 2-itemset step, distributed.
 Which items appear together more often than chance? The building block
 of basket analysis, drug co-prescription surfacing (OMOP: concepts
 sharing a visit), and document co-citation. This is the pairwise step of
-A-Priori: candidate pairs come from a within-basket self-join, so the
-cost is Σ C(k_b, 2) over baskets — driven by BASKET size, never by the
-corpus size.
+A-Priori: candidate pairs are the 2-combinations of each basket's items,
+so the cost is Σ C(k_b, 2) over baskets — driven by BASKET size, never by
+the corpus size.
 
 Scale design:
-- Baskets are deduped to (basket, item) first (one keyed shuffle); the
-  pair join is an equi-join on the basket key — co-located, AQE-planned.
+- Each basket is collected to one sorted array of distinct items (one
+  keyed shuffle); its pairs explode map-side from that array, with no
+  self-join.
 - The quadratic term is fenced: baskets larger than ``max_basket_size``
   are DROPPED (and counted against no pair), the standard practical
   guard — a single 10⁶-item basket would otherwise contribute 5·10¹¹
@@ -34,7 +35,6 @@ def frequent_pairs(
     min_support: int = 2,
     max_basket_size: int = 1000,
     persist_path: str | None = None,
-    pair_strategy: str = "combinations",
 ) -> DataFrame:
     """(item_a, item_b, n_baskets, lift), item_a < item_b, support >=
     ``min_support``; lift = P(ab) / (P(a)·P(b)) over baskets that
@@ -42,128 +42,80 @@ def frequent_pairs(
     ``max_basket_size`` distinct items are excluded entirely.
 
     The deduped+fenced basket layer feeds several consumers (pair
-    generation, item counts, basket total — plus both self-join sides
-    under the self_join strategy); without materialization Catalyst
-    re-derives it per branch — measured 10 source scans for the r10
-    plan. It is therefore cached (executor memory) or, when
+    generation, item counts, basket total); without materialization
+    Catalyst re-derives it per branch — measured 10 source scans for the
+    r10 plan. It is therefore cached (executor memory) or, when
     ``persist_path`` is given, written to parquet and re-read — the
     100 TB contract, same as the curation layers (executor-memory cache
     refills under pressure at scale; a parquet layer fills once and
     scans columnar).
 
     NULL basket keys / items are excluded up front (r13, ADVICE r12):
-    the two strategies treated them differently — ``combinations``'s
-    groupBy kept a NULL-basket group the ``self_join`` equi-join
-    dropped, and ``collect_set`` drops NULL items the distinct (bk, it)
-    layer counted — so the explicit shared pre-filter (mirrored in
-    :func:`duck_frequent_pairs`) makes the strategies byte-identical on
-    any input. A NULL key can't name a basket and a NULL item can't
-    form a pair, so this is the only semantics that both engines and
-    both strategies can agree on."""
+    the groupBy below would keep a NULL-basket group that the
+    self-join of :func:`duck_frequent_pairs` drops, and ``collect_set``
+    drops NULL items its distinct (bk, it) layer counts — so the
+    explicit pre-filter (mirrored in the DuckDB twin) makes the two
+    byte-identical on any input. A NULL key can't name a basket and a
+    NULL item can't form a pair, so this is the only semantics both
+    engines can agree on."""
     df = df.where(
         F.col(basket_col).isNotNull() & F.col(item_col).isNotNull()
     )
-    if pair_strategy == "combinations":
-        # ONE corpus-sized shuffle builds the deduped + fenced basket
-        # layer directly (r12, guide §2.4): groupBy(bk) with
-        # collect_set dedups in the aggregation buffer, array_sort
-        # restores the deterministic order, and the size fence is a
-        # filter on the collected array — where the r10 shape paid
-        # FOUR corpus-scale exchanges ((bk,it) distinct, the fence
-        # groupBy(bk), the fence join-back, and the collect_list
-        # groupBy(bk)), this pays one. n_total / item_counts /
-        # the pair explode all read the basket layer (3 consumers →
-        # cached, or parquet via persist_path — the 100 TB contract),
-        # which is also smaller than the (bk, it) layer it replaces
-        # (one row per basket). Semantics identical: collect_set ==
-        # distinct items; fence on DISTINCT item count; dropped
-        # baskets excluded from every denominator.
-        baskets = (
-            df.groupBy(F.col(basket_col).alias("bk"))
-            .agg(F.array_sort(F.collect_set(item_col)).alias("its"))
-            .where(F.size("its") <= max_basket_size)
-        )
-        if persist_path:
-            baskets.write.mode("overwrite").parquet(persist_path)
-            baskets = baskets.sparkSession.read.parquet(persist_path)
-        else:
-            baskets = baskets.cache()
-        n_total = baskets.agg(F.count(F.lit(1)).alias("__n_baskets"))
-        item_counts = (
-            baskets.select(F.explode("its").alias("it"))
-            .groupBy("it")
-            .agg(F.count(F.lit(1)).alias("__n_item"))
-        )
-        # Map-side pair generation (r10, VERDICT item 5): the C(k,2)
-        # combinations explode MAP-SIDE from the per-basket array (index
-        # lambda + dynamic slice) straight into the pair partial
-        # aggregate — no self-join. The per-row array is bounded by the
-        # max_basket_size fence (C(1000,2) structs ≈ 8 MB worst case).
-        combos = F.flatten(
-            F.transform(
-                F.col("its"),
-                lambda x, i: F.transform(
-                    F.slice(
-                        F.col("its"),
-                        i + 2,
-                        F.greatest(
-                            F.size("its") - i - 1, F.lit(0)
-                        ),
-                    ),
-                    lambda y: F.struct(
-                        x.alias("item_a"), y.alias("item_b")
-                    ),
-                ),
-            )
-        )
-        pairs = (
-            baskets.select(F.explode(combos).alias("p"))
-            .groupBy(
-                F.col("p.item_a").alias("item_a"),
-                F.col("p.item_b").alias("item_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_baskets"))
-            .where(F.col("n_baskets") >= min_support)
-        )
-    elif pair_strategy == "self_join":
-        # the r10 (bk, it) layer shape, kept selectable for A/B (the
-        # strategies-identical test pins byte-equality of the outputs)
-        b0 = df.select(
-            F.col(basket_col).alias("bk"), F.col(item_col).alias("it")
-        ).distinct()
-        keep = (
-            b0.groupBy("bk")
-            .agg(F.count(F.lit(1)).alias("__sz"))
-            .where(F.col("__sz") <= max_basket_size)
-            .select("bk")
-        )
-        b = b0.join(keep, "bk")
-        if persist_path:
-            b.write.mode("overwrite").parquet(persist_path)
-            b = b.sparkSession.read.parquet(persist_path)
-        else:
-            b = b.cache()
-        n_total = b.select("bk").distinct().agg(
-            F.count(F.lit(1)).alias("__n_baskets")
-        )
-        item_counts = b.groupBy("it").agg(
-            F.count(F.lit(1)).alias("__n_item")
-        )
-        a, c = b.alias("a"), b.alias("c")
-        pairs = (
-            a.join(
-                c,
-                (F.col("a.bk") == F.col("c.bk"))
-                & (F.col("a.it") < F.col("c.it")),
-            )
-            .groupBy(
-                F.col("a.it").alias("item_a"), F.col("c.it").alias("item_b")
-            )
-            .agg(F.count(F.lit(1)).alias("n_baskets"))
-            .where(F.col("n_baskets") >= min_support)
-        )
+    # ONE corpus-sized shuffle builds the deduped + fenced basket layer
+    # directly (r12, guide §2.4): groupBy(bk) with collect_set dedups in
+    # the aggregation buffer, array_sort restores the deterministic
+    # order, and the size fence is a filter on the collected array —
+    # where the r10 shape paid FOUR corpus-scale exchanges ((bk,it)
+    # distinct, the fence groupBy(bk), the fence join-back, and the
+    # collect_list groupBy(bk)), this pays one. n_total / item_counts /
+    # the pair explode all read the basket layer (3 consumers → cached,
+    # or parquet via persist_path — the 100 TB contract), which is also
+    # smaller than the (bk, it) layer it replaces (one row per basket).
+    # Semantics identical: collect_set == distinct items; fence on
+    # DISTINCT item count; dropped baskets excluded from every
+    # denominator.
+    baskets = (
+        df.groupBy(F.col(basket_col).alias("bk"))
+        .agg(F.array_sort(F.collect_set(item_col)).alias("its"))
+        .where(F.size("its") <= max_basket_size)
+    )
+    if persist_path:
+        baskets.write.mode("overwrite").parquet(persist_path)
+        baskets = baskets.sparkSession.read.parquet(persist_path)
     else:
-        raise ValueError(f"unknown pair_strategy: {pair_strategy!r}")
+        baskets = baskets.cache()
+    n_total = baskets.agg(F.count(F.lit(1)).alias("__n_baskets"))
+    item_counts = (
+        baskets.select(F.explode("its").alias("it"))
+        .groupBy("it")
+        .agg(F.count(F.lit(1)).alias("__n_item"))
+    )
+    # Map-side pair generation (r10, VERDICT item 5): the C(k,2)
+    # combinations explode MAP-SIDE from the per-basket array (index
+    # lambda + dynamic slice) straight into the pair partial
+    # aggregate — no self-join. The per-row array is bounded by the
+    # max_basket_size fence (C(1000,2) structs ≈ 8 MB worst case).
+    combos = F.flatten(
+        F.transform(
+            F.col("its"),
+            lambda x, i: F.transform(
+                F.slice(
+                    F.col("its"), i + 2,
+                    F.greatest(F.size("its") - i - 1, F.lit(0)),
+                ),
+                lambda y: F.struct(x.alias("item_a"), y.alias("item_b")),
+            ),
+        )
+    )
+    pairs = (
+        baskets.select(F.explode(combos).alias("p"))
+        .groupBy(
+            F.col("p.item_a").alias("item_a"),
+            F.col("p.item_b").alias("item_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_baskets"))
+        .where(F.col("n_baskets") >= min_support)
+    )
     na = item_counts.select(
         F.col("it").alias("item_a"), F.col("__n_item").alias("__na")
     )

@@ -7,12 +7,14 @@ failure mode as an unpartitioned window). ``percentile_approx`` is the
 usual answer, but when EXACT quantiles are required this module computes
 them scalably:
 
-1. range-repartition the rows by (group, value) — each group's rows are
-   contiguous across partitions, each partition sorts only its slice;
-2. per-(partition, group) counts → per-group prefix offsets via a window
-   over the TINY partition×group summary (≤ P·G rows, broadcast back);
-3. per-row global rank within its group = in-partition ``row_number`` +
-   offset — no task ever sees more than its partition;
+1-3. the partition-offset rank kernel (``idmap._partition_rank``)
+   grouped by the group column: range-repartition the rows by (group,
+   value) — each group's rows are contiguous across partitions, each
+   partition sorts only its slice; per-(partition, group) counts →
+   per-group prefix offsets and totals via a window over the TINY
+   partition×group summary (≤ P·G rows, broadcast back); per-row rank
+   within its group = in-partition ``row_number`` + offset — no task ever
+   sees more than its partition;
 4. for each requested quantile q only the two ranks adjacent to the
    interpolation position pos = (n-1)·q are kept (≤ 2·|qs| rows per
    group), and the final interpolation v_lo + frac·(v_hi − v_lo) runs on
@@ -27,8 +29,10 @@ quantile_cont).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from synthea2omop_etl_spark.operators.idmap import _partition_rank
 
 
 def percentile_exact_by_rank(
@@ -53,32 +57,8 @@ def percentile_exact_by_rank(
     rows = df.select(
         F.col(group_col).alias("__g"), F.col(value_col).alias("__v")
     ).where(F.col(value_col).isNotNull())
-    part = rows.repartitionByRange(F.col("__g"), F.col("__v")).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    counts = part.groupBy("__pid", "__g").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    # summary-scale windows (≤ partitions × groups rows) — see idmap.py for
-    # why the partition spec must be non-empty-but-constant elsewhere; here
-    # the spec is the group itself, never a single data-scale partition
-    w_off = Window.partitionBy("__g").orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "__pid",
-        "__g",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
-    )
-    totals = counts.groupBy("__g").agg(F.sum("__cnt").alias("__n"))
-
-    w_in = Window.partitionBy("__pid", "__g").orderBy("__v")
-    ranked = (
-        part.join(F.broadcast(offsets), ["__pid", "__g"])
-        .withColumn(
-            "__rk", (F.row_number().over(w_in) + F.col("__off")).cast("long")
-        )
-        .join(F.broadcast(totals), "__g")
+    ranked = _partition_rank(
+        rows, ["__v"], "__rk", group_cols=("__g",), total_col="__n"
     )
 
     # keep only the ranks adjacent to any interpolation position

@@ -1146,8 +1146,8 @@ QUERIES["km_purchase_survival"] = QuerySpec(
     None,  # assigned below via duck_frequent_pairs
     "frequent-pair mining with lift (the A-Priori 2-itemset step; "
     "operators/itemsets.py): parts co-occurring in >=2 orders, lift vs "
-    "independence. Within-basket self-join on the deduped (basket,item) "
-    "layer — cost is sum C(k,2) over baskets, fenced by max_basket_size; "
+    "independence. Map-side 2-combinations of each basket's distinct-item "
+    "array — cost is sum C(k,2) over baskets, fenced by max_basket_size; "
     "support filter BEFORE the broadcast lift joins",
 )
 def q_part_pair_lift(spark: SparkSession, sf: str) -> DataFrame:

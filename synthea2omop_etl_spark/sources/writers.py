@@ -130,14 +130,15 @@ def read_bucket_pruned(
     key: str,
     probe: DataFrame,
     n_buckets: int = 32,
-) -> DataFrame:
+) -> DataFrame | None:
     """Read a hash-bucketed layer PRUNED to the partitions ``probe``'s keys
     hash into — the incremental-ETL read path: a micro-batch touching 3 of
     1024 buckets scans 3/1024ths of the map instead of all of it. Falls
     back to a full read on layers written without bucket_key (the column
-    is dropped either way, so callers never see it)."""
-    full = spark.read.parquet(path)
-    if BUCKET_COL not in full.columns:
+    is dropped either way, so callers never see it). None when the layer
+    is absent (``_read_layer_or_none``)."""
+    full = _read_layer_or_none(spark, path)
+    if full is None or BUCKET_COL not in full.columns:
         return full
     buckets = _bucket_set(probe, key, n_buckets)
     from pyspark.sql import functions as F

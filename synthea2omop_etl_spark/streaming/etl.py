@@ -23,8 +23,9 @@ micro-batch ids are deterministic (ordered by source UUID).
 
 At scale: each micro-batch is bounded (new files only); the anti-join
 probe side is the batch, and the existing-table side prunes by
-partition/bucket on the key. The one full-table touch is the max-id
-lookup, an aggregate over the (patients-sized, not events-sized) map.
+partition/bucket on the key. The full-table touches are build_id_map's
+anti-join and max-id lookup, over the (patients-sized, not events-sized)
+map's key and id columns.
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ from synthea2omop_etl_spark.operators.idmap import build_id_map
 from synthea2omop_etl_spark.operators.typing import apply_typing
 from synthea2omop_etl_spark.schemas import TYPING_SPECS
 from synthea2omop_etl_spark.sources.writers import (
+    _read_layer_or_none,
     insert_if_absent,
     read_bucket_pruned,
 )
@@ -82,6 +84,49 @@ def read_patients_stream(
     )
 
 
+def _extend_id_layer(
+    spark: SparkSession,
+    keys: DataFrame,
+    path: str,
+    key: str,
+    id_col: str,
+    n_buckets: int,
+    carry_cols: list[str] | None = None,
+) -> DataFrame:
+    """Extend the persistent ``key`` → ``id_col`` layer at ``path`` with
+    the keys of ``keys`` and return the layer pruned to their buckets.
+
+    ``build_id_map`` over the layer as it stands (seen keys keep their
+    ids, new keys number above its max in key order), then
+    ``insert_if_absent`` keyed and hash-bucketed on ``key`` (a replayed
+    batch appends nothing), then ``read_bucket_pruned``. An absent layer
+    is the first batch; a layer that exists but cannot be read fails the
+    batch instead of restarting ids at 1.
+    """
+    ids = build_id_map(
+        keys, key, id_col,
+        existing_map=_read_layer_or_none(spark, path),
+        carry_cols=carry_cols,
+    )
+    insert_if_absent(
+        spark, ids, path, [key], bucket_key=key, n_buckets=n_buckets
+    )
+    layer = read_bucket_pruned(spark, path, key, keys, n_buckets)
+    # absent only when nothing was ever inserted: ``ids`` is then empty
+    return ids if layer is None else layer
+
+
+def _start(
+    stream: DataFrame, process, checkpoint_dir: str, available_now: bool
+) -> StreamingQuery:
+    writer = stream.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def incremental_person_etl(
     stream: DataFrame,
     output_dir: str,
@@ -96,13 +141,20 @@ def incremental_person_etl(
     person transform → insert-if-absent upsert. Both writes are keyed on
     the patient UUID, so replays are no-ops.
 
-    Both layers are hash-bucketed on their key (``__bucket=K/`` partition
-    dirs): every per-batch map re-read prunes to the buckets the batch's
-    keys actually hash into — the header's "existing-table side prunes by
-    partition/bucket" promise made real. The one full-layer touch left is
-    build_id_map's max-id aggregate (column-pruned to the id column).
+    The person map and the location dim are hash-bucketed on their key
+    (``__bucket=K/`` partition dirs): every per-batch re-read prunes to
+    the buckets the batch's keys actually hash into — the header's
+    "existing-table side prunes by partition/bucket" promise made real.
+    The full-layer touches left are build_id_map's anti-join and max-id
+    aggregate (column-pruned to the key and id columns).
     """
     import os
+
+    from synthea2omop_etl_spark.derived.location import (
+        address_rows,
+        attach_location_id,
+        location_values,
+    )
 
     map_path = os.path.join(output_dir, "person_map")
     person_path = os.path.join(output_dir, "omop_person")
@@ -117,90 +169,30 @@ def incremental_person_etl(
         typed = apply_typing(batch, TYPING_SPECS["patients"]).dropDuplicates(
             ["Id"]
         )
-        try:
-            existing = spark.read.parquet(map_path)
-        except Exception:  # first batch: no map yet
-            existing = None
-        pm = build_id_map(
-            typed.selectExpr("Id as patient_uuid"),
-            "patient_uuid",
-            "person_id",
-            existing_map=existing,
-        )
-        insert_if_absent(
-            spark, pm, map_path, ["patient_uuid"],
-            bucket_key="patient_uuid", n_buckets=n_buckets,
-        )
-        # transform against the WRITTEN map (ids are now durable); the
-        # batch only needs ITS patients' ids → bucket-pruned read
-        batch_map = read_bucket_pruned(
-            spark, map_path, "patient_uuid",
-            typed.selectExpr("Id as patient_uuid"), n_buckets,
+        # transform against the WRITTEN map (ids are now durable)
+        batch_map = _extend_id_layer(
+            spark, typed.selectExpr("Id as patient_uuid"), map_path,
+            "patient_uuid", "person_id", n_buckets,
         )
         rows = person_transform(typed, batch_map)
-        # location dim, incrementally: distinct address keys extend a
-        # persistent location map exactly like the person map (stable ids
-        # for seen addresses, dense new ids above the max — arrival-order
-        # semantics; the batch pipeline's ids are global-sort-order, so
-        # ids differ across the two paths but the ADDRESS each person
-        # resolves to is identical).
-        from synthea2omop_etl_spark.derived.location import (
-            attach_location_id,
-            location as build_location,
-        )
-
-        loc = build_location(typed)
-        if loc is not None:
-            from synthea2omop_etl_spark.derived.location import _address_key
-
-            addr_cols = [c for c in loc.columns if c != "location_id"]
-            # _read_layer_or_none distinguishes "layer absent" from a real
-            # read failure — a blanket except here restarted location_id
-            # assignment at offset 0 on any transient error, colliding
-            # fresh ids with committed ones.
-            from synthea2omop_etl_spark.sources.writers import (
-                _read_layer_or_none,
+        # location dim, incrementally: distinct address keys (``__key``,
+        # NULL-safe — an equi-join on the NULLable address columns never
+        # matches NULL=NULL) extend a persistent location layer exactly
+        # like the person map (stable ids for seen addresses, dense new
+        # ids above the max — arrival-order semantics; the batch
+        # pipeline's ids are global-sort-order, so ids differ across the
+        # two paths but the ADDRESS each person resolves to is identical).
+        addrs = address_rows(typed)
+        if addrs is not None:
+            addrs = addrs.select("__key", *location_values())
+            locs = _extend_id_layer(
+                spark, addrs, loc_path, "__key", "location_id", n_buckets,
+                carry_cols=addrs.columns[1:],
             )
-
-            existing_loc = _read_layer_or_none(spark, loc_path)
-            offset = (
-                existing_loc.agg(F.max("location_id")).collect()[0][0] or 0
-            ) if existing_loc is not None else 0
-            if existing_loc is not None:
-                from synthea2omop_etl_spark.operators.idmap import (
-                    assign_dense_ids,
-                )
-
-                # anti-join on the NULL-safe derived key, NOT the raw
-                # address columns — an equi-join on a NULLable column
-                # (address_1, county) never matches NULL=NULL, which
-                # re-inserted every half-empty address each wave and
-                # fanned out the attach join downstream
-                new_addrs = loc.select(*addr_cols).withColumn(
-                    "__key", _address_key()
-                ).join(
-                    existing_loc.withColumn(
-                        "__key", _address_key()
-                    ).select("__key"),
-                    "__key", "left_anti",
-                )
-                loc = assign_dense_ids(
-                    new_addrs, "__key", "location_id", offset=offset,
-                ).drop("__key").select("location_id", *addr_cols)
-            # id assignment is deterministic (key-ordered above the durable
-            # max), so a crash-replay recomputes identical rows and the
-            # id-keyed anti-join makes the write a no-op
-            insert_if_absent(spark, loc, loc_path, ["location_id"])
-            full_loc = spark.read.parquet(loc_path)
-            rows = attach_location_id(rows, typed, full_loc)
+            rows = attach_location_id(rows, typed, locs)
         insert_if_absent(spark, rows, person_path, ["person_source_value"])
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, process, checkpoint_dir, available_now)
 
 
 def incremental_visit_etl(
@@ -239,69 +231,39 @@ def incremental_visit_etl(
         )
         # Re-drive encounters held from earlier micro-batches (arrival-order
         # ties broken toward the fresh batch, but rows are identical by Id).
-        try:
-            pending = spark.read.parquet(pending_path)
-            candidates = typed.unionByName(pending).dropDuplicates(["Id"])
-        except Exception:  # no pending layer yet
-            candidates = typed
+        # An unreadable pending layer fails the batch: taking it as "none
+        # pending" would let write_then_swap below drop the held rows.
+        pending = _read_layer_or_none(spark, pending_path)
+        candidates = (
+            typed if pending is None
+            else typed.unionByName(pending).dropDuplicates(["Id"])
+        )
         # A missing person map means NO patient has arrived — every
-        # encounter is an orphan, not a crash (the map read used to throw
-        # and fail the whole streaming query while the file source had
-        # already checkpointed the batch as consumed). The read prunes to
-        # the hash buckets of the batch's PATIENT keys (bucketed layer).
-        try:
-            person_map = read_bucket_pruned(
-                spark, pm_path, "patient_uuid",
-                candidates.selectExpr("PATIENT as patient_uuid"), n_buckets,
-            )
-        except Exception:
+        # encounter is an orphan, not a crash (the file source has already
+        # checkpointed the batch as consumed). The read prunes to the hash
+        # buckets of the batch's PATIENT keys (bucketed layer).
+        person_map = read_bucket_pruned(
+            spark, pm_path, "patient_uuid",
+            candidates.selectExpr("PATIENT as patient_uuid"), n_buckets,
+        )
+        if person_map is None:
             person_map = spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField("patient_uuid", T.StringType()),
-                        T.StructField("person_id", T.LongType()),
-                    ]
-                ),
+                [], "patient_uuid string, person_id long"
             )
         pm_keys = person_map.select(F.col("patient_uuid").alias("PATIENT"))
         matched = candidates.join(pm_keys, on="PATIENT", how="left_semi")
         orphans = candidates.join(pm_keys, on="PATIENT", how="left_anti")
-        try:
-            existing = spark.read.parquet(vm_path)
-        except Exception:
-            existing = None
         # Ids are assigned on MATERIALIZATION (patient present), so a held
         # encounter numbers after everything that landed while it waited —
         # the same arrival-order semantics as the reference's sequence.
-        vm = build_id_map(
-            matched.selectExpr("Id as encounter_uuid"),
-            "encounter_uuid",
-            "visit_occurrence_id",
-            existing_map=existing,
+        batch_vm = _extend_id_layer(
+            spark, matched.selectExpr("Id as encounter_uuid"), vm_path,
+            "encounter_uuid", "visit_occurrence_id", n_buckets,
         )
-        insert_if_absent(
-            spark, vm, vm_path, ["encounter_uuid"],
-            bucket_key="encounter_uuid", n_buckets=n_buckets,
-        )
-        try:
-            # the transform only needs THIS batch's encounter ids →
-            # bucket-pruned read of the just-extended map
-            batch_vm = read_bucket_pruned(
-                spark, vm_path, "encounter_uuid",
-                matched.selectExpr("Id as encounter_uuid"), n_buckets,
-            )
-        except Exception:  # nothing materialized yet (all-orphan batch)
-            batch_vm = vm
         rows = visit_occurrence(matched, batch_vm, person_map, None, None)
         insert_if_absent(spark, rows, visit_path, ["visit_source_value"])
         # Persist the new holding set last: on a crash-replay the matched
         # rows above no-op via insert_if_absent and this set is recomputed.
         write_then_swap(orphans, pending_path)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, process, checkpoint_dir, available_now)

@@ -112,7 +112,10 @@ def incremental_frequent_pairs(
         )
         state = read_bucket_pruned(
             spark, items_path, "bk", rows.select("bk").distinct(), n_buckets
-        ).join(rows.select("bk").distinct(), "bk", "left_semi")
+        )
+        if state is None:
+            return  # no non-NULL (basket, item) row has landed yet
+        state = state.join(rows.select("bk").distinct(), "bk", "left_semi")
         fresh = state.where(F.col("__added_batch") == batch_id).select(
             "bk", "it"
         )

@@ -24,7 +24,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from synthea2omop_etl_spark.operators.scd import scd2_apply, scd2_init
-from synthea2omop_etl_spark.sources.writers import write_then_swap
+from synthea2omop_etl_spark.sources.writers import (
+    _read_layer_or_none,
+    write_then_swap,
+)
 
 
 def stream_scd2(
@@ -44,10 +47,9 @@ def stream_scd2(
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         slim = batch.select(key, *tracked)
-        try:
-            dim = spark.read.parquet(dim_path)
-        except Exception:
-            dim = None
+        # absent → bootstrap; unreadable → fail the batch (bootstrapping
+        # from one batch would let write_then_swap drop the history)
+        dim = _read_layer_or_none(spark, dim_path)
         # ONE scalar aggregate per micro-batch: the batch's effective time
         # and (when the dimension exists) its high-water-mark come back in
         # a single 1×2 row via a cross join of two single-row aggregates —

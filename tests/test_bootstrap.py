@@ -257,39 +257,39 @@ def test_rank_sum_robust_to_outlier_where_mean_is_not(spark):
 
 
 def test_frequent_pairs_strategies_identical(spark):
-    """r10: map-side combinations explode and the within-basket
-    self-join produce byte-identical pair/lift tables (the hash-graded
-    contract is strategy-independent)."""
-    from synthea2omop_etl_spark.operators.itemsets import frequent_pairs
+    """The map-side combinations explode of frequent_pairs and the
+    within-basket self-join of its DuckDB twin (duck_frequent_pairs)
+    produce the same pair/lift table over the same rows."""
+    from synthea2omop_etl_spark.operators.itemsets import (
+        duck_frequent_pairs,
+        frequent_pairs,
+    )
     from synthea2omop_etl_spark.sources.testdata import load_table
+    from tests.oracle_utils import compare_results, duckdb_connection
 
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    combo = sorted(
-        tuple(r)
-        for r in frequent_pairs(
-            li, "l_orderkey", "l_partkey", 2, pair_strategy="combinations"
-        ).collect()
+    sf = "/root/testdata/sf0.001"
+    got = frequent_pairs(
+        load_table(spark, sf, "lineitem"), "l_orderkey", "l_partkey", 2
     )
-    sj = sorted(
-        tuple(r)
-        for r in frequent_pairs(
-            li, "l_orderkey", "l_partkey", 2, pair_strategy="self_join"
-        ).collect()
+    cur = duckdb_connection(sf).execute(
+        duck_frequent_pairs("lineitem", "l_orderkey", "l_partkey", 2)
     )
-    assert combo == sj and combo
-    import pytest
-
-    with pytest.raises(ValueError, match="pair_strategy"):
-        frequent_pairs(li, "l_orderkey", "l_partkey", pair_strategy="x")
+    want = cur.fetchall()
+    assert want
+    assert compare_results(got, want, [d[0] for d in cur.description]) == []
 
 
 def test_frequent_pairs_strategies_identical_with_nulls(spark):
-    """r13 (ADVICE r12): NULL basket keys / items are excluded up front
-    in BOTH strategies — previously combinations' groupBy kept a
-    NULL-basket group the self_join equi-join dropped, and collect_set
-    dropped NULL items the distinct layer counted, breaking the
-    byte-equality contract on NULL-bearing data."""
-    from synthea2omop_etl_spark.operators.itemsets import frequent_pairs
+    """r13 (ADVICE r12): NULL basket keys / items are excluded up front —
+    a groupBy keeps a NULL-basket group that the DuckDB twin's self-join
+    drops, and collect_set drops NULL items its distinct layer counts,
+    so without the pre-filter the two disagree on NULL-bearing data."""
+    import duckdb
+
+    from synthea2omop_etl_spark.operators.itemsets import (
+        duck_frequent_pairs,
+        frequent_pairs,
+    )
 
     rows = [
         (1, "a"), (1, "b"), (1, None),          # NULL item inside a basket
@@ -299,18 +299,16 @@ def test_frequent_pairs_strategies_identical_with_nulls(spark):
     ]
     df = spark.createDataFrame(rows, "basket int, item string")
     combo = sorted(
-        tuple(r)
-        for r in frequent_pairs(
-            df, "basket", "item", 2, pair_strategy="combinations"
-        ).collect()
+        tuple(r) for r in frequent_pairs(df, "basket", "item", 2).collect()
     )
-    sj = sorted(
-        tuple(r)
-        for r in frequent_pairs(
-            df, "basket", "item", 2, pair_strategy="self_join"
-        ).collect()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE baskets (basket INTEGER, item VARCHAR)")
+    con.executemany("INSERT INTO baskets VALUES (?, ?)", rows)
+    duck = sorted(
+        con.execute(duck_frequent_pairs("baskets", "basket", "item", 2))
+        .fetchall()
     )
-    assert combo == sj
+    assert combo == duck
     # NULL rows contribute nothing: N=2 baskets (1, 2 — basket 3 holds
     # only a NULL item and vanishes), pair (a, b) support 2, lift
     # 2*2/(2*2) = 1.0.

@@ -113,6 +113,79 @@ def test_with_row_ids_dense_on_wide_frame(spark):
     assert tuple(got) == (n, n, 1, n)
 
 
+def test_partition_rank_spans_range_partitions(spark):
+    """At the graded scales AQE coalesces the rank kernel's range shuffle
+    to one partition, so every prefix offset there is 0. Here coalescing
+    is off and the shuffle keeps several partitions (the coalesced case
+    is test_with_row_ids_dense_on_wide_frame's): the global rank and its
+    total must equal row_number() and count over a bare Window.orderBy on
+    a composite key, and grouped exact percentiles over groups that span
+    partitions must equal the builtin aggregate."""
+    from pyspark.sql import Window
+
+    from synthea2omop_etl_spark.operators.idmap import assign_global_rank
+    from synthea2omop_etl_spark.operators.percentiles import (
+        percentile_exact_by_rank,
+    )
+
+    n = 200_000
+    df = spark.range(n).select(
+        (F.col("id") % 997).alias("a"),
+        F.col("id").alias("b"),
+        (F.col("id") % 3).alias("g"),
+        (F.sin(F.col("id")) * 1000).alias("v"),
+    )
+
+    def sizes(frame, *cols):
+        return [
+            k for k in frame.repartitionByRange(*cols)
+            .rdd.glom().map(len).collect() if k
+        ]
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        rank_parts = sizes(df, "a", "b")
+        pct_parts = sizes(df.select("g", "v"), "g", "v")
+        got = assign_global_rank(df, ["a", "b"], "r", total_col="n").select(
+            "a", "b", "r", "n"
+        )
+        w = Window.orderBy("a", "b")
+        want = df.select(
+            "a",
+            "b",
+            F.row_number().over(w).cast("long").alias("r"),
+            F.count(F.lit(1))
+            .over(w.rowsBetween(Window.unboundedPreceding,
+                                Window.unboundedFollowing))
+            .alias("n"),
+        )
+        missing = want.exceptAll(got).count()
+        extra = got.exceptAll(want).count()
+        qs = [0.10, 0.25, 0.50, 0.75, 0.90]
+        pct = {
+            r["g"]: [r[f"p{int(q * 100)}"] for q in qs]
+            for r in percentile_exact_by_rank(df, "g", "v", qs).collect()
+        }
+        builtin = {
+            r["g"]: list(r["pct"])
+            for r in df.groupBy("g")
+            .agg(F.expr("percentile(v, array(0.10,0.25,0.50,0.75,0.90))")
+                 .alias("pct"))
+            .collect()
+        }
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    # more range partitions than groups: at least one group spans two
+    assert len(rank_parts) > 1 and len(pct_parts) > 3
+    assert (missing, extra) == (0, 0)
+    assert pct == builtin and len(pct) == 3
+
+
 def test_build_id_map_incremental(spark):
     df1 = spark.createDataFrame([("u1",), ("u2",), ("u3",)], ["uuid"])
     m1 = build_id_map(df1, "uuid", "pid")

@@ -150,3 +150,53 @@ def test_streaming_scd2_waves_and_replay(spark, tmp_path):
         tuple(r) for r in spark.read.parquet(dim_path).collect()
     )
     assert after == before
+
+
+def test_streaming_scd2_unreadable_dim_fails_batch(spark, tmp_path):
+    """A dimension layer that exists but cannot be read fails the
+    micro-batch and stays as it is: re-bootstrapping from the one batch
+    would let write_then_swap replace the whole history."""
+    import datetime as dt
+    import glob
+    import shutil
+
+    import pyspark.sql.types as T
+    from pyspark.errors import StreamingQueryException
+
+    from synthea2omop_etl_spark.streaming.scd import stream_scd2
+
+    land = tmp_path / "land"
+    land.mkdir()
+    dim_path = tmp_path / "dim"
+    schema = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("seg", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+    ])
+
+    def wave(name, rows):
+        stage = str(tmp_path / "stage" / name)
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(stage)
+        (part,) = glob.glob(f"{stage}/part-*.parquet")
+        shutil.copy(part, land / f"{name}.parquet")
+
+    def run():
+        stream = spark.readStream.schema(schema).parquet(str(land))
+        return stream_scd2(
+            stream, str(dim_path), str(tmp_path / "ck"), "k", ["seg"]
+        )
+
+    wave("w1", [(1, "A", dt.datetime(2024, 1, 1))])
+    run().awaitTermination(120)
+    for part in dim_path.glob("part-*"):
+        part.write_bytes(b"not a parquet file")
+    files = {
+        p: p.read_bytes() for p in dim_path.rglob("*") if p.is_file()
+    }
+    wave("w2", [(1, "A2", dt.datetime(2024, 2, 1))])
+    q = run()
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert files and {
+        p: p.read_bytes() for p in dim_path.rglob("*") if p.is_file()
+    } == files

@@ -89,6 +89,19 @@ def test_incremental_pairs_match_batch_across_batches(spark, dirs):
     assert got[("bread", "eggs")] == 1 and got[("eggs", "milk")] == 1
 
 
+def test_incremental_pairs_first_batch_all_null(spark, dirs):
+    """A first micro-batch with no non-NULL (basket, item) row writes no
+    basket layer; the batch is a no-op, not a failed query."""
+    src, out, ckpt = dirs
+    _feed(spark, src, "w0", [(1, None), (None, "milk")])
+    _run(spark, src, out, ckpt)
+    assert not os.path.exists(os.path.join(out, "basket_items"))
+    wave1 = [(1, "milk"), (1, "bread")]
+    _feed(spark, src, "w1", wave1)
+    _run(spark, src, out, ckpt)
+    assert _counts(spark, out) == _batch_truth(spark, wave1)
+
+
 def test_incremental_pairs_replay_is_noop(spark, dirs):
     src, out, ckpt = dirs
     wave1 = [(1, "a"), (1, "b"), (2, "a")]
