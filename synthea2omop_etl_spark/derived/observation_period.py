@@ -60,10 +60,7 @@ def observation_period(
         ).alias("observation_period_end_date"),
         F.lit(TYPE_EHR).alias("period_type_concept_id"),
     )
-    return assign_dense_ids(
-        joined, "person_id", "observation_period_id", strategy="partitioned",
-        materialize_input=True,
-    ).select(
+    return assign_dense_ids(joined, "person_id", "observation_period_id").select(
         "observation_period_id",
         "person_id",
         "observation_period_start_date",

@@ -59,9 +59,13 @@ def with_row_ids(df: DataFrame, id_col: str, order_by: list[str]) -> DataFrame:
     within the tie, matching the reference's sequence (whose order within
     a tie is insertion order); tests assert id stability across
     repartitionings.
+
+    ``assign_dense_ids`` picks the plan by size: a frame at most AQE's
+    coalescing floor is numbered in one sorted partition; a larger one
+    goes through the partition-offset kernel, which cuts lineage once,
+    after its range sort.
     """
     key = F.concat_ws("", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in order_by])
-    return assign_dense_ids(
-        df.withColumn("__nk", key), "__nk", id_col, strategy="partitioned",
-        materialize_input=True,
-    ).drop("__nk")
+    return assign_dense_ids(df.withColumn("__nk", key), "__nk", id_col).drop(
+        "__nk"
+    )

@@ -5,9 +5,9 @@ Why lineage is cut at all: iterative operators (connected components,
 BFS, PageRank, k-means, BPE/unigram training, k-center, coverage,
 transitive closure) grow their plan by one join+aggregate per round —
 without truncation round N re-executes rounds 1..N-1 and Catalyst
-re-optimizes an O(N)-deep tree per round. Funnel operators (dense-id
-assignment's ``materialize_input``, source_overlap's reduced layer) cut
-lineage so a multiply-consumed subtree executes once.
+re-optimizes an O(N)-deep tree per round. Funnel operators (the
+partition-offset rank kernel's stamped sort, source_overlap's reduced
+layer) cut lineage so a multiply-consumed subtree executes once.
 
 The default mechanism is ``localCheckpoint``: RDD blocks stored on
 EXECUTORS (memory, spilling to executor disk), no distributed
@@ -22,10 +22,9 @@ deliberately:
   per round. Long multi-hour jobs on preemptible nodes should set
   ``SPARK_GRAFT_CHECKPOINT_DIR`` (below) instead.
 - **Storage.** A cut stores a full copy of the checkpointed frame
-  (per-round label tables are small; ``assign_dense_ids(
-  materialize_input=True)`` stores one copy of the fact table per write
-  — measured cheaper than the double source execution it replaces,
-  r12).
+  (per-round label tables are small; the rank kernel behind dense ids
+  above AQE's coalescing floor stores one sorted copy of its input, which
+  both its counts and its ranks read).
 
 Escape hatch: set ``SPARK_GRAFT_CHECKPOINT_DIR=<fault-tolerant path>``
 and every ``cut_lineage`` call becomes a RELIABLE ``checkpoint()`` into

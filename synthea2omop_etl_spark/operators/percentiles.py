@@ -8,12 +8,13 @@ usual answer, but when EXACT quantiles are required this module computes
 them scalably:
 
 1-3. the partition-offset rank kernel (``idmap._partition_rank``)
-   grouped by the group column: range-repartition the rows by (group,
-   value) — each group's rows are contiguous across partitions, each
-   partition sorts only its slice; per-(partition, group) counts →
-   per-group prefix offsets and totals via a window over the TINY
-   partition×group summary (≤ P·G rows, broadcast back); per-row rank
-   within its group = in-partition ``row_number`` + offset — no task ever
+   grouped by the group column: range-sort the rows by (group, value) —
+   each group's rows are contiguous across partitions, each partition
+   sorts only its slice — and stamp each row's index within its
+   partition; per-(partition, group) counts → per-group prefix offsets
+   and totals via a window over the TINY partition×group summary (≤ P·G
+   rows, broadcast back); per-row rank within its group = in-partition
+   index − the group's first index there + offset + 1 — no task ever
    sees more than its partition;
 4. for each requested quantile q only the two ranks adjacent to the
    interpolation position pos = (n-1)·q are kept (≤ 2·|qs| rows per

@@ -218,10 +218,12 @@ def _location_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
 
 # r13 (VERDICT r12 item 1): the monolithic `domains` step serialized
-# ~7 s of driver-side plan construction (each with_row_ids →
-# localCheckpoint(eager=False) pays optimize + toRdd AT CALL TIME even
-# though no job runs) while executors idled, and no fact write could
-# start until the LAST domain had planned. The step is therefore split:
+# ~7 s of driver-side plan construction while executors idled, and no
+# fact write could start until the LAST domain had planned. (Each
+# with_row_ids above AQE's coalescing floor still cuts lineage after its
+# range sort, which runs the sort's sampler and shuffle AT CALL TIME; a
+# smaller one is numbered in one sorted partition and plans no job at
+# the call.) The step is therefore split:
 # one pipeline step per domain, each materialize()d immediately, so
 # domain k's write runs under domain k+1's planning — planning stays
 # STRICTLY SERIAL on the main thread (pool-building the plans is the r12

@@ -97,17 +97,18 @@ def _extend_id_layer(
     the keys of ``keys`` and return the layer pruned to their buckets.
 
     ``build_id_map`` over the layer as it stands (seen keys keep their
-    ids, new keys number above its max in key order), then
-    ``insert_if_absent`` keyed and hash-bucketed on ``key`` (a replayed
-    batch appends nothing), then ``read_bucket_pruned``. An absent layer
-    is the first batch; a layer that exists but cannot be read fails the
-    batch instead of restarting ids at 1.
+    ids, new keys number above its max in key order), narrowed to the
+    batch's keys, then ``insert_if_absent`` keyed and hash-bucketed on
+    ``key`` (a replayed batch appends nothing; its anti-join probes only
+    the buckets the batch's keys hash into), then ``read_bucket_pruned``.
+    An absent layer is the first batch; a layer that exists but cannot be
+    read fails the batch instead of restarting ids at 1.
     """
     ids = build_id_map(
         keys, key, id_col,
         existing_map=_read_layer_or_none(spark, path),
         carry_cols=carry_cols,
-    )
+    ).join(keys.select(key), key, "left_semi")
     insert_if_absent(
         spark, ids, path, [key], bucket_key=key, n_buckets=n_buckets
     )

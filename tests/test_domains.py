@@ -643,3 +643,48 @@ def test_drug_era_gap_merging(spark):
         "drug_exposure_end_date AS condition_end_date",
     )
     assert len(condition_era(cdf).collect()) == len(eras)
+
+
+@pytest.mark.slow
+def test_pipeline_fact_layers_complete_above_coalescing_floor(spark, tmp_path):
+    """run_pipeline over parquet-written benchgen tables at 5,000
+    patients, where every fact table outgrows AQE's coalescing floor and
+    its dense ids come from the partition-offset kernel: each 1:1 layer
+    has as many rows as its source routes to it, with ids exactly 1..n."""
+    from synthea2omop_etl_spark import benchgen
+    from synthea2omop_etl_spark.operators.split import is_numeric_value
+
+    raw_dir = tmp_path / "raw"
+    tables = benchgen.synth_raw_tables(spark, 5_000)
+    for name, df in tables.items():
+        df.write.parquet(str(raw_dir / name))
+    raw = {name: spark.read.parquet(str(raw_dir / name)) for name in tables}
+    rows = {name: df.count() for name, df in raw.items()}
+    numeric = raw["observations"].where(is_numeric_value("VALUE")).count()
+    out = tmp_path / "omop"
+    run_pipeline(spark, raw, output_dir=str(out))
+    want = {
+        "person": rows["patients"],
+        "visit_occurrence": rows["encounters"],
+        "condition_occurrence": rows["conditions"],
+        "drug_exposure": rows["medications"] + rows["immunizations"],
+        "procedure_occurrence": rows["procedures"],
+        "device_exposure": rows["devices"],
+        "measurement": numeric,
+        "observation": rows["observations"] - numeric,
+        "payer_plan_period": rows["patient_expenses"],
+        "observation_period": rows["patients"],
+        "cost": rows["encounters"] + rows["medications"] + rows["procedures"],
+    }
+    got = {}
+    for table, n in want.items():
+        key = f"{table}_id" if table != "person" else "person_id"
+        stats = spark.read.parquet(str(out / f"omop_{table}")).agg(
+            F.count(F.lit(1)),
+            F.countDistinct(key),
+            F.min(key),
+            F.max(key),
+        ).first()
+        got[table] = tuple(stats)
+        want[table] = (n, n, 1, n)
+    assert got == want

@@ -54,63 +54,96 @@ def test_apply_typing(spark):
     assert dict(typed.dtypes) == {"a": "double", "b": "string", "c": "date"}
 
 
-def test_assign_dense_ids_strategies_agree(spark):
-    df = spark.createDataFrame([(f"k{i:04d}",) for i in range(500)], ["k"])
-    a = assign_dense_ids(df, "k", "id", strategy="row_number")
-    b = assign_dense_ids(df, "k", "id", strategy="partitioned")
-    ra = {r.k: r.id for r in a.collect()}
-    rb = {r.k: r.id for r in b.collect()}
-    assert ra == rb
-    assert sorted(ra.values()) == list(range(1, 501))
+def _with_conf(spark, key, value, action):
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        return action()
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
 
 
-def test_assign_dense_ids_materialize_input_identical(spark):
-    """r12: materialize_input (the lazy localCheckpoint that stops the
-    range-bound sampler re-executing a broadcast-join-only child) must
-    not change a single id — same rank-by-key contract either way."""
-    df = spark.createDataFrame([(f"k{i:04d}", i % 7) for i in range(500)],
-                               ["k", "v"])
-    plain = assign_dense_ids(df, "k", "id", strategy="partitioned")
-    mat = assign_dense_ids(df, "k", "id", strategy="partitioned",
-                           materialize_input=True)
-    rp = {r.k: r.id for r in plain.collect()}
-    rm = {r.k: r.id for r in mat.collect()}
-    assert rp == rm
-    assert sorted(rm.values()) == list(range(1, 501))
+def test_assign_dense_ids_strategies_agree(spark, tmp_path):
+    """Both plans assign_dense_ids picks by size equal a bare
+    ``Window.orderBy`` row_number (+ offset): a parquet-fed frame below
+    AQE's coalescing floor takes the one-partition pass at default
+    settings and the partition-offset kernel with coalescing off."""
+    from pyspark.sql import Window
+
+    from synthea2omop_etl_spark.operators.idmap import _below_coalescing_floor
+
+    path = str(tmp_path / "keys")
+    spark.createDataFrame(
+        [(f"k{i:04d}", i % 7) for i in range(500)], ["k", "v"]
+    ).repartition(3).write.parquet(path)
+    df = spark.read.parquet(path)
+    want = {
+        r.k: r.id
+        for r in df.select(
+            "k", (F.row_number().over(Window.orderBy("k")) + 10).alias("id")
+        ).collect()
+    }
+    assert sorted(want.values()) == list(range(11, 511))
+
+    def ids():
+        return (
+            _below_coalescing_floor(df),
+            {r.k: r.id for r in assign_dense_ids(df, "k", "id", 10).collect()},
+        )
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    assert ids() == (True, want)
+    assert _with_conf(spark, key, "false", ids) == (False, want)
 
 
-def test_with_row_ids_dense_on_wide_frame(spark):
-    """On a frame wider than its key, the dense-id counts branch is pruned
-    to the key and plans its own range exchange apart from the main
-    branch; the ids must stay exactly 1..n with small advisory partitions
-    too."""
+def test_with_row_ids_dense_on_wide_frame(spark, tmp_path):
+    """Every column of a parquet-fed frame wider than its key, written
+    out and read back: no column pruning narrows the dense-id input, so
+    a counts branch planned apart from the rows (two range exchanges,
+    coalesced and sampled apart) would drop rows or repeat ids. The ids
+    must stay exactly 1..n at default settings, with small advisory
+    partitions, and with coalescing off."""
     from synthea2omop_etl_spark.domains._common import with_row_ids
 
     n = 200_000
-    wide = spark.range(n).select(
+    src = str(tmp_path / "wide")
+    spark.range(n).select(
         F.col("id").cast("string").alias("k"),
         *[
             F.sha2(F.concat(F.col("id").cast("string"), F.lit(str(j))), 256)
             .alias(f"pad{j}")
             for j in range(4)
         ],
-    )
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    before = spark.conf.get(key, None)
-    spark.conf.set(key, "256k")
-    try:
-        got = with_row_ids(wide, "rid", ["k"]).agg(
+    ).write.parquet(src)
+    wide = spark.read.parquet(src)
+
+    def written(tag):
+        out = str(tmp_path / tag)
+        with_row_ids(wide, "rid", ["k"]).write.parquet(out)
+        back = spark.read.parquet(out)
+        got = back.agg(
             F.count(F.lit(1)).alias("rows"),
             F.countDistinct("rid").alias("ids"),
+            F.countDistinct("k").alias("keys"),
             F.min("rid").alias("lo"),
             F.max("rid").alias("hi"),
         ).first()
-    finally:
-        if before is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, before)
-    assert tuple(got) == (n, n, 1, n)
+        pads = back.join(wide, ["k", "pad0", "pad1", "pad2", "pad3"]).count()
+        return (*got, pads)
+
+    want = (n, n, n, 1, n, n)
+    assert written("default") == want
+    assert _with_conf(
+        spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k",
+        lambda: written("advisory"),
+    ) == want
+    assert _with_conf(
+        spark, "spark.sql.adaptive.coalescePartitions.enabled", "false",
+        lambda: written("uncoalesced"),
+    ) == want
 
 
 def test_partition_rank_spans_range_partitions(spark):

@@ -246,32 +246,75 @@ def test_ancestor_rollup_broadcasts_hierarchy(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_dense_id_range_exchange_reused_at_runtime(spark):
-    """The partitioned dense-id strategy's counts branch and main branch
-    share ONE range-shuffle Exchange: AQE stage reuse must kick in so the
-    upstream pipeline executes once, not twice. (Only visible in the FINAL
-    adaptive plan — pre-execution prints show two exchanges.)"""
+def _final_exchanges(ran: str) -> list[tuple[str, str]]:
+    """(partitioning, input columns) of every shuffle Exchange in the
+    final adaptive plans of ``_plans_run``'s formatted descriptions (each
+    node's details are listed once per plan they appear in, so count on
+    the final plan's tree)."""
+    out = []
+    for desc in ran.split("== Physical Plan ==")[1:]:
+        tree = desc.split("== Final Plan ==", 1)[-1].split(
+            "== Initial Plan ==", 1
+        )[0]
+        for n in re.findall(r"\WExchange \((\d+)\)", tree):
+            m = re.search(
+                rf"\n\({n}\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
+                r"Arguments: (\w+)",
+                desc,
+            )
+            out.append((m.group(2), m.group(1)))
+    return out
+
+
+def test_dense_id_one_range_exchange(spark):
+    """Above the coalescing floor the dense-id kernel shuffles the rows
+    once: ONE range exchange, whose sorted rows are stamped and cut once;
+    the counts and the ids both read that cut, and the only hash shuffles
+    carry the per-partition summary, never a row. Below the floor (the
+    graded sizes at default settings) the ids come from one sorted
+    partition: no range exchange, no lineage cut."""
     from synthea2omop_etl_spark.queries import QUERIES
 
-    df = QUERIES["dense_supplier_ids"].spark(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan
-    assert plan.count("ReusedExchange") >= 1, plan[:2000]
+    def ran():
+        return _plans_run(
+            spark,
+            lambda: QUERIES["dense_supplier_ids"].spark(spark, SF).collect(),
+        )
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        kernel = ran()
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    exchanges = _final_exchanges(kernel)
+    assert [k for k, _ in exchanges].count("rangepartitioning") == 1, exchanges
+    assert all(
+        "s_name" not in cols for k, cols in exchanges if k == "hashpartitioning"
+    ), exchanges
+    assert "row_number" not in kernel
+    one_pass = ran()
+    assert "rangepartitioning" not in one_pass
+    assert "Scan ExistingRDD" not in one_pass
 
 
 def test_global_rank_has_no_unpartitioned_data_window(spark):
-    """order_quartiles must not sort the data through a single-task
-    window: its only windows run per range partition, and the summary
-    prefix-sum window sees one row per partition."""
-    plan = _plan(spark, "order_quartiles")
-    # the data-scale window partitions by __pid; no empty-spec WindowExec
-    # over the orders scan (the summary window's spec is pmod(__pid, 1))
-    import re
-
-    for line in plan.splitlines():
-        if "Window" in line and "row_number" in line:
-            assert "__pid" in line, line
+    """order_quartiles ranks without a data-scale window of any kind: the
+    kernel's only window is the prefix sum over the per-partition summary
+    (one row per partition), and the in-partition index comes from the
+    stamped sort, not a row_number window."""
+    ran = _plans_run(
+        spark, lambda: QUERIES["order_quartiles"].spark(spark, SF).collect()
+    )
+    windows = re.findall(r"\n\(\d+\) Window\nInput \[\d+\]: \[([^\]]*)\]", ran)
+    assert windows
+    for cols in windows:
+        assert "__cnt" in cols and "o_orderkey" not in cols, cols
+    assert "row_number" not in ran
 
 
 def test_year_partitioned_output_prunes(spark, tmp_path):

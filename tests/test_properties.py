@@ -66,15 +66,36 @@ def test_cast_or_null_matches_duckdb_try_cast(spark, vals):
 )
 @SLOW
 def test_dense_ids_are_rank_in_sorted_order(spark, keys):
-    """Partitioned strategy ids == 1-based rank of the key in sorted order,
-    independent of input order/partitioning."""
-    df = spark.createDataFrame([(k,) for k in keys], "k string").repartition(5)
-    got = {
-        r.k: r.id
-        for r in assign_dense_ids(df, "k", "id", strategy="partitioned").collect()
-    }
-    want = {k: i + 1 for i, k in enumerate(sorted(keys))}
-    assert got == want
+    """Dense ids == a bare ``Window.orderBy`` row_number of the key,
+    independent of input order/partitioning: at default settings (a
+    parquet-fed frame this small is numbered in one sorted partition) and
+    with coalescing off (the partition-offset kernel)."""
+    import tempfile
+
+    from pyspark.sql import Window
+
+    with tempfile.TemporaryDirectory() as tmp:
+        spark.createDataFrame([(k,) for k in keys], "k string").repartition(
+            5
+        ).write.mode("overwrite").parquet(tmp + "/k")
+        df = spark.read.parquet(tmp + "/k")
+        want = {
+            r.k: r.id
+            for r in df.select(
+                "k", F.row_number().over(Window.orderBy("k")).alias("id")
+            ).collect()
+        }
+        got = []
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        for coalesce in ("true", "false"):
+            spark.conf.set(key, coalesce)
+            try:
+                got.append(
+                    {r.k: r.id for r in assign_dense_ids(df, "k", "id").collect()}
+                )
+            finally:
+                spark.conf.unset(key)
+    assert got == [want, want]
 
 
 @given(vals=st.lists(st.one_of(value_strings, st.none()), min_size=1, max_size=30))

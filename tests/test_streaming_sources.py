@@ -454,6 +454,43 @@ def test_incremental_person_etl_stable_ids(spark, tmp_path):
     )
 
 
+def test_extend_id_layer_probes_only_batch_buckets(spark, tmp_path):
+    """Extending a bucketed id layer hands insert_if_absent the batch's
+    keys, not build_id_map's whole existing ∪ new map: the anti-join's
+    ``__bucket`` PartitionFilters hold only the buckets the batch's keys
+    hash into, seen keys keep their ids and a new key numbers above the
+    layer's max."""
+    import re
+
+    from synthea2omop_etl_spark.sources.writers import _bucket_set
+    from synthea2omop_etl_spark.streaming.etl import _extend_id_layer
+    from tests.test_plan_quality import _plans_run
+
+    path, n = str(tmp_path / "map"), 8
+    seen = spark.createDataFrame([(f"u{i:03d}",) for i in range(200)], ["k"])
+    _extend_id_layer(spark, seen, path, "k", "id", n)
+    old = {r.k: r.id for r in spark.read.parquet(path).collect()}
+    batch = spark.createDataFrame([("u007",), ("u100",), ("new",)], ["k"])
+    buckets = {str(b) for b in _bucket_set(batch, "k", n)}
+    assert len(buckets) < n
+    got = {}
+    ran = _plans_run(
+        spark,
+        lambda: got.update(
+            (r.k, r.id)
+            for r in _extend_id_layer(spark, batch, path, "k", "id", n).collect()
+        ),
+    )
+    probes = re.findall(r"PartitionFilters: \[[^\n]*?__bucket#\d+ IN \(([^)]*)\)", ran)
+    assert probes
+    for probe in probes:
+        assert set(probe.split(",")) <= buckets, (probe, buckets)
+    # the returned layer is pruned to the batch's buckets
+    assert got == {**{k: v for k, v in old.items() if k in got}, "new": 201}
+    assert {"u007", "u100"} <= got.keys()
+    assert spark.read.parquet(path).count() == 201
+
+
 def test_incremental_person_etl_in_batch_duplicates(spark, tmp_path):
     """ADVICE r4 (medium): the SAME patient Id appearing twice WITHIN one
     micro-batch (two landed files consumed by a single availableNow trigger,
